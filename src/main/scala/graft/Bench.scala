@@ -3,36 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // see GraftSession.localSpark: the inferred explode null-guard
-      // duplicates gram-lambda evaluation into few-task scan stages
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // see GraftSession.localSpark: keep byte-small compute-dense
-      // post-shuffle stages parallel (floor only binds on tiny shuffles)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // 60 queries × several codegen'd stages overflow the default
-      // 100-entry generated-class cache, so pass 2 re-compiles (and
-      // re-JITs) evicted classes — the min-of-2 then measures janino, not
-      // the query. Static conf: must be set before the session starts.
-      // Raised 2000 → 8000 in round 10: at 177 timed queries × ~10
-      // generated classes each, the suite sits right at the 2000-entry
-      // edge, and crossing it re-prices the heaviest-codegen query
-      // (p_dedup_simhash_portable) at 2× — the same
-      // interpreted-generated-code cliff SCALING.md attributes for the
-      // driver readings, one level up.
-      .config("spark.sql.codegen.cache.maxEntries", "8000")
-      .config("spark.sql.warehouse.dir",
-        "/tmp/graft-bench-warehouse-" + java.util.UUID.randomUUID().toString.take(8))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    System.setProperty("spark.sql.warehouse.dir", graft.io.Fixtures.scratch("graft-bench-warehouse-"))
+    val spark = GraftSession.localSpark(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // Warm-up: absorb one-time JVM/codegen/filesystem/broadcast init so
     // per-query numbers measure the queries, not session startup.
     Tables.registerAll(spark, sfDir)
@@ -106,7 +78,7 @@ object Bench {
       "p_cc_pair_mining", "p_dedup_minhash_incremental")
     val multiples = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULTIPLES", "1,3,10")
       .split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
-    val scaleRoot = "/tmp/graft-bench-scale-" + java.util.UUID.randomUUID().toString.take(8)
+    val scaleRoot = graft.io.Fixtures.scratch("graft-bench-scale-")
     // Materialize every multiple's corpus FIRST, then time each query's
     // multiples back-to-back (query-outer, multiple-inner). The flag below
     // is a RATIO between the ×1 and ×10 points; with the old
@@ -159,21 +131,19 @@ object Bench {
     scaleRootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(scaleRootPath, true)
 
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\n\\r\\t]", " ") + "\""
     // 3-decimal seconds: full double repr would double the line length,
     // and the driver's artifact keeps only a 2000-char window of it
     def jnum(v: Double) = f"$v%.3f"
     val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + jnum(v) }.mkString("{", ",", "}")
+      .map { case (k, v) => Json.str(k) + ":" + jnum(v) }.mkString("{", ",", "}")
     val errJson = errors.toSeq.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+      .map { case (k, v) => Json.str(k) + ":" + Json.str(v) }.mkString("{", ",", "}")
     val curveJson = curve.map { case (m, (rows, times)) =>
-      jstr(s"x$m") + ":{\"rows_documents\":" + rows + ",\"queries\":" +
-        times.map { case (k, v) => jstr(k) + ":" + jnum(v) }.mkString("{", ",", "}") + "}"
+      Json.str(s"x$m") + ":{\"rows_documents\":" + rows + ",\"queries\":" +
+        times.map { case (k, v) => Json.str(k) + ":" + jnum(v) }.mkString("{", ",", "}") + "}"
     }.mkString("{", ",", "}")
     val flagsJson = scaleFlags.map { case (n, (r, f)) =>
-      jstr(n) + ":{\"per_row_ratio\":" + f"$r%.3f" + ",\"flag\":" + f + "}"
+      Json.str(n) + ":{\"per_row_ratio\":" + f"$r%.3f" + ",\"flag\":" + f + "}"
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // Field order is deliberate (round-6 verdict): headline + per-query
@@ -196,7 +166,7 @@ object Bench {
     // window that truncates the full map line below. Additions only: the
     // headline, the full line and the sidecar keep their exact shapes.
     results.toSeq.sortBy(_._1).foreach { case (k, v) =>
-      println(s"""{"q":${jstr(k)},"sec":${jnum(v)}}""")
+      println(s"""{"q":${Json.str(k)},"sec":${jnum(v)}}""")
     }
     println(headline)
     println(line)

@@ -719,10 +719,12 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // the 174-query Verify surface generates more whole-stage-codegen
-      // classes than the 100-entry default (and sits at the old
-      // 2000-entry edge) — evictions re-run janino mid-suite (see the
-      // Bench.scala comment)
+      // the Verify/Bench surface (~220 queries × ~10 generated classes
+      // each) overflows the 100-entry generated-class cache, so a later
+      // pass re-compiles (and re-JITs) evicted classes and measures
+      // janino, not the query. 2000 sat right at the edge: crossing it
+      // re-priced the heaviest-codegen query (p_dedup_simhash_portable)
+      // at 2×. Static conf: must be set before the session starts.
       .config("spark.sql.codegen.cache.maxEntries", "8000")
       // InferFiltersFromGenerate adds `size(e) > 0 AND isnotnull(e)`
       // under every explode, and predicate pushdown then substitutes the
@@ -743,9 +745,8 @@ object GraftSession {
       // poor proxy for compute density at these sizes; a 64k floor keeps
       // parallelismFirst semantics down to tiny shuffles. Scale-safe: the
       // floor only binds when a WHOLE shuffle is under ~2 MB/core — at
-      // production sizes it is a no-op. Parameterized for cluster tuning.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+      // production sizes it is a no-op.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

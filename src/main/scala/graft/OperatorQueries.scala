@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.checks.Checks
 import graft.core._
-import graft.io.Flatten
+import graft.io.{Fixtures, Flatten}
 
 /** Operator-semantic verification queries: each runs a real GraftSession
   * operator pipeline (write tables, roundtrip files, merge, check …) and
@@ -22,9 +22,6 @@ object OperatorQueries {
     new GraftSession(spark)
   }
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   // ---------------------------------------------------------------
   // loadFile / exportToFile roundtrips
   // ---------------------------------------------------------------
@@ -32,7 +29,7 @@ object OperatorQueries {
   /** exportToFile(csv, single file) → loadFile(csv, inferSchema) parity. */
   def loadCsvRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val g = gs(spark, sfDir)
-    val dir = tmpDir("graft_csv")
+    val dir = Fixtures.scratch("graft_csv")
     val src = spark.table("part").select("p_partkey", "p_name", "p_brand", "p_size")
     g.exportToFile(src, FileRef(s"$dir/part.csv"), singleFile = true)
     val back = g.loadFile(FileRef(s"$dir/part.csv"))
@@ -46,7 +43,7 @@ object OperatorQueries {
   /** exportToFile(parquet directory — the cluster-scale path) → read back. */
   def exportParquetRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val g = gs(spark, sfDir)
-    val dir = tmpDir("graft_pq")
+    val dir = Fixtures.scratch("graft_pq")
     g.exportToFile(spark.table("customer"), FileRef(s"$dir/customer_out", Some(FileFormat.Parquet)),
       singleFile = false)
     g.loadFile(FileRef(s"$dir/customer_out", Some(FileFormat.Parquet))).orderBy("c_custkey")
@@ -58,7 +55,7 @@ object OperatorQueries {
     * then read distributed. */
   def loadHttp(spark: SparkSession, sfDir: String): DataFrame = {
     val g = gs(spark, sfDir)
-    val dir = tmpDir("graft_http")
+    val dir = Fixtures.scratch("graft_http")
     val src = spark.table("customer").select("c_custkey", "c_name", "c_nationkey", "c_mktsegment")
     g.exportToFile(src, FileRef(s"$dir/customer.csv"), singleFile = true)
     val server = com.sun.net.httpserver.HttpServer.create(
@@ -93,7 +90,7 @@ object OperatorQueries {
     * materialization. */
   def loadSftp(spark: SparkSession, sfDir: String): DataFrame = {
     val g = gs(spark, sfDir)
-    val dir = tmpDir("graft_sftp_fixture")
+    val dir = Fixtures.scratch("graft_sftp_fixture")
     val src = spark.table("supplier").select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
     g.exportToFile(src, FileRef(s"$dir/supplier.csv"), singleFile = true)
     val prev = spark.conf.getOption("spark.graft.sftpFetchCmd")
@@ -122,7 +119,7 @@ object OperatorQueries {
     * distributed read, table materialization. */
   def loadGdrive(spark: SparkSession, sfDir: String): DataFrame = {
     val g = gs(spark, sfDir)
-    val dir = tmpDir("graft_gdrive_fixture")
+    val dir = Fixtures.scratch("graft_gdrive_fixture")
     val src = spark.table("nation").select("n_nationkey", "n_name", "n_regionkey")
     g.exportToFile(src, FileRef(s"$dir/reports/nation.csv"), singleFile = true)
     val prev = spark.conf.getOption("spark.graft.gdriveFetchCmd")
@@ -144,7 +141,7 @@ object OperatorQueries {
     * (files/types/ndjson.py:54-96 parity). */
   def loadNdjsonFlatten(spark: SparkSession, sfDir: String): DataFrame = {
     val g = gs(spark, sfDir)
-    val dir = tmpDir("graft_ndjson")
+    val dir = Fixtures.scratch("graft_ndjson")
     // Build nested NDJSON: {event_id, payload:{user_id, info:{event_type, value}}}
     spark.table("events")
       .select(col("event_id"),
@@ -382,7 +379,7 @@ object OperatorQueries {
     * nulls-last, unlike Postgres). */
   def transformDialectPg5(spark: SparkSession, sfDir: String): DataFrame = {
     val g = gs(spark, sfDir)
-    val f = java.nio.file.Files.createTempFile("graft-pg5", ".sql")
+    val f = java.nio.file.Paths.get(Fixtures.scratch("graft-pg5"), "query.sql")
     // od computes in a subquery: Spark windows cannot reference a
     // same-SELECT lateral alias (the generated row_number would throw
     // UNSUPPORTED_FEATURE.LATERAL_COLUMN_ALIAS_IN_WINDOW — a loud,
@@ -477,7 +474,7 @@ object OperatorQueries {
     * The 25-row collect is by-contract (nation is a fixed 25-row dim). */
   def fileListOp(spark: SparkSession, sfDir: String): DataFrame = {
     val g = gs(spark, sfDir)
-    val dir = tmpDir("graft_flist")
+    val dir = Fixtures.scratch("graft_flist")
     val keys = spark.table("nation")
       .select(col("n_nationkey").cast("bigint")).collect().map(_.getLong(0))
     keys.foreach { k =>
@@ -501,7 +498,7 @@ object OperatorQueries {
     * table exactly. */
   def exportAliasRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val g = gs(spark, sfDir)
-    val dir = tmpDir("graft_alias")
+    val dir = Fixtures.scratch("graft_alias")
     g.exportTableToFile(TableRef("nation"), FileRef(s"$dir/nation.csv"),
       singleFile = true)
     val once = g.loadFile(FileRef(s"$dir/nation.csv"))
@@ -827,7 +824,7 @@ object OperatorQueries {
     * parity; the reference reads it via pandas/xlrd). */
   def loadXlsRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val g = gs(spark, sfDir)
-    val dir = tmpDir("graft_xls")
+    val dir = Fixtures.scratch("graft_xls")
     val src = spark.table("customer")
       .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
     g.exportToFile(src, FileRef(s"$dir/customer.xls"))
@@ -843,7 +840,7 @@ object OperatorQueries {
     * BOF, so the same loadFile path consumes it. */
   def loadXls5Roundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val g = gs(spark, sfDir)
-    val dir = tmpDir("graft_xls5")
+    val dir = Fixtures.scratch("graft_xls5")
     val src = spark.table("customer")
       .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
     graft.io.ExcelBiff.writeXls5(src, s"$dir/customer5.xls")
@@ -863,7 +860,7 @@ object OperatorQueries {
     * path. */
   def loadXmlRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val g = gs(spark, sfDir)
-    val dir = tmpDir("graft_xml")
+    val dir = Fixtures.scratch("graft_xml")
     val src = spark.table("nation").select("n_nationkey", "n_name", "n_regionkey")
     g.exportToFile(src, FileRef(s"$dir/nation.xml"))
     g.loadFile(FileRef(s"$dir/nation.xml"))
@@ -947,10 +944,7 @@ object OperatorQueries {
     * from #small-files opens to #buckets. */
   def compactSmallFiles(spark: SparkSession, sfDir: String): DataFrame = {
     gs(spark, sfDir)
-    val root = graft.io.TempDirs.registerForCleanup(java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-compact-" + spark.sparkContext.applicationId + "-" +
-        sfDir.replaceAll("[^A-Za-z0-9.-]", "_"))).toString
+    val root = Fixtures.path(spark, sfDir, "compact")
     val src = spark.table("documents").select("doc_id", "text")
     src.repartition(48).write.mode("overwrite").parquet(s"$root/fragmented")
     def parquetFiles(p: String): Int = {

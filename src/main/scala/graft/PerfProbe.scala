@@ -73,13 +73,11 @@ object PerfProbe {
     }
     if (stages) spark.sparkContext.addSparkListener(listener)
     // --scale:m — time the queries against an m× synthetic corpus (the
-    // Bench scale-curve construction), materialized once under /tmp and
+    // Bench scale-curve construction), materialized once to a scratch dir
     // deleted on exit
     val scaledDir: Option[String] =
       args.find(_.startsWith("--scale:")).map(_.stripPrefix("--scale:").toInt).map { m =>
-        val dir = "/tmp/graft-perfprobe-x" + m + "-" +
-          java.util.UUID.randomUUID().toString.take(8)
-        graft.io.TempDirs.registerForCleanup(java.nio.file.Paths.get(dir))
+        val dir = graft.io.Fixtures.scratch("graft-perfprobe-x" + m + "-")
         graft.ops.Scale.scaleDocuments(Tables.read(spark, sfDir, "documents"), m)
           .write.mode("overwrite").parquet(s"$dir/documents.parquet")
         graft.ops.Scale.scaleEmbeddings(Tables.read(spark, sfDir, "embeddings"), m, dim = 64)

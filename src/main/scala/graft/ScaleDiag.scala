@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.Dedup
 
@@ -17,20 +16,11 @@ import graft.functions.Dedup
 object ScaleDiag {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "8000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.localSpark(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val multiples = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULTIPLES", "1,3,10")
       .split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
-    val scaleRoot = "/tmp/graft-scalediag-" + java.util.UUID.randomUUID().toString.take(8)
+    val scaleRoot = graft.io.Fixtures.scratch("graft-scalediag-")
 
     // try/finally: a diagnostic for a suspected pathological query is the
     // run most likely to die mid-loop — don't leak multi-GB scaled

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.io.Fixtures
 import graft.streaming.Streams
 
 /** Streaming verification queries: real Structured Streaming runs (file
@@ -12,68 +13,62 @@ import graft.streaming.Streams
   */
 object StreamingQueries {
 
-  private val stagedDirs = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Staging is memoized per sfDir; read-only consumers share the base
-    * directory, mutating consumers (sessionizeStream appends sentinel
-    * files) take a private copy via [[stagedSource]]. */
+  /** The events stream's base files, staged once per (app, sfDir) and
+    * shared by the read-only consumers; the mutating consumer
+    * (sessionizeStream appends sentinel files) takes a private overlay
+    * via [[stagedSource]]. */
   private def stageEventDir(spark: SparkSession, sfDir: String): String =
-    stagedDirs.getOrElseUpdate(sfDir, stageEventDirImpl(spark, sfDir))
+    Fixtures.staged(spark, sfDir, "stream-events") { out =>
+      // one read feeds the percentile plus both halves' writes
+      val events = Tables.read(spark, sfDir, "events").cache()
+      // Split by event time, not id: micro-batches must arrive in rough time
+      // order or the second batch falls below the watermark and is dropped —
+      // exactly like a production file stream tailing time-partitioned drops.
+      // unix_micros states the intent (epoch comparison) and requires the
+      // normalized TimestampType from Tables.read — a raw NTZ/long ts would
+      // fail here loudly instead of silently shifting the split point
+      val median = events.selectExpr("percentile_approx(unix_micros(ts), 0.5)")
+        .collect()(0).getLong(0)
+      // 2 files per half → 4 micro-batches at maxFilesPerTrigger=1: enough
+      // to prove multi-batch watermark/state semantics without paying ~64
+      // state-store snapshots (one per source part file otherwise)
+      events.where(unix_micros(col("ts")) <= median)
+        .coalesce(2).write.mode("overwrite").parquet(s"$out/f0")
+      events.where(unix_micros(col("ts")) > median)
+        .coalesce(2).write.mode("overwrite").parquet(s"$out/f1")
+      events.unpersist(false)
+      // flatten into one dir of files
+      val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      var i = 0
+      Seq("f0", "f1").foreach { sub =>
+        fs.listStatus(new org.apache.hadoop.fs.Path(s"$out/$sub"))
+          .filter(_.getPath.getName.startsWith("part-"))
+          .foreach { st =>
+            fs.rename(st.getPath, new org.apache.hadoop.fs.Path(s"$out/batch$i.parquet"))
+            // FileStreamSource orders by modification time: make the
+            // time-ordered ingestion explicit rather than trusting write
+            // timing (an mtime tie would process late files first and drop
+            // them below the watermark)
+            new java.io.File(s"$out/batch$i.parquet").setLastModified(1000000000000L + i * 60000L)
+            i += 1
+          }
+      }
+    }
 
+  /** A per-invocation OVERLAY of the events stream's base files: the
+    * mutating consumer appends sentinel files, so it cannot share the base
+    * directory — but the base FILES are immutable, so hard links (same
+    * inode, no byte copy) stand in for a full copy where the filesystem
+    * allows; only the sentinel files are ever new bytes. Links and
+    * fallback copies both keep the base's mtimes, which are pinned in
+    * name order, so ingestion order is preserved as-is. */
   private def stagedSource(spark: SparkSession, sfDir: String, caller: String): String = {
-    val base = stagedDirs.getOrElseUpdate(sfDir, stageEventDirImpl(spark, sfDir))
-    // per-invocation OVERLAY dir: the mutating consumer appends sentinel
-    // files, so it cannot share the base directory — but the base FILES
-    // are immutable, so hard links (same inode, no byte copy) stand in
-    // for the full per-invocation copy; only the sentinel files are ever
-    // new bytes. mtimes ride the shared inode and the base's are already
-    // pinned in name order, so ingestion order is preserved as-is.
-    val out = java.nio.file.Paths.get(
-      graft.io.TempDirs.createTracked(s"graft_stream_$caller").toString)
+    val base = stageEventDir(spark, sfDir)
+    val out = java.nio.file.Paths.get(Fixtures.scratch(s"graft_stream_$caller"))
     new java.io.File(base).listFiles().filter(_.isFile).foreach { f =>
-      java.nio.file.Files.createLink(out.resolve(f.getName), f.toPath)
+      Fixtures.linkOrCopy(f.toPath, out.resolve(f.getName))
     }
     out.toString
-  }
-
-  private def stageEventDirImpl(spark: SparkSession, sfDir: String): String = {
-    val dir = graft.io.TempDirs.createTracked("graft_stream_src").toString
-    // one read feeds the percentile plus both halves' writes
-    val events = Tables.read(spark, sfDir, "events").cache()
-    // Split by event time, not id: micro-batches must arrive in rough time
-    // order or the second batch falls below the watermark and is dropped —
-    // exactly like a production file stream tailing time-partitioned drops.
-    // unix_micros states the intent (epoch comparison) and requires the
-    // normalized TimestampType from Tables.read — a raw NTZ/long ts would
-    // fail here loudly instead of silently shifting the split point
-    val median = events.selectExpr("percentile_approx(unix_micros(ts), 0.5)")
-      .collect()(0).getLong(0)
-    // 2 files per half → 4 micro-batches at maxFilesPerTrigger=1: enough
-    // to prove multi-batch watermark/state semantics without paying ~64
-    // state-store snapshots (one per source part file otherwise)
-    events.where(unix_micros(col("ts")) <= median)
-      .coalesce(2).write.mode("overwrite").parquet(s"$dir/f0")
-    events.where(unix_micros(col("ts")) > median)
-      .coalesce(2).write.mode("overwrite").parquet(s"$dir/f1")
-    events.unpersist(false)
-    // flatten into one dir of files
-    val out = graft.io.TempDirs.createTracked("graft_stream_in").toString
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    var i = 0
-    Seq("f0", "f1").foreach { sub =>
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/$sub"))
-        .filter(_.getPath.getName.startsWith("part-"))
-        .foreach { st =>
-          fs.rename(st.getPath, new org.apache.hadoop.fs.Path(s"$out/batch$i.parquet"))
-          // FileStreamSource orders by modification time: make the
-          // time-ordered ingestion explicit rather than trusting write
-          // timing (an mtime tie would process late files first and drop
-          // them below the watermark)
-          new java.io.File(s"$out/batch$i.parquet").setLastModified(1000000000000L + i * 60000L)
-          i += 1
-        }
-    }
-    out
   }
 
   /** Run `body` with a reduced shuffle-partition count: stateful streaming
@@ -129,12 +124,12 @@ object StreamingQueries {
       // the event-time timeouts in a follow-up batch. The sentinel FILES
       // are a deterministic function of the dataset (far = max event ts),
       // so they stage once per (app, sfDir) and each invocation overlays
-      // them into its private dir as hard links — the two per-invocation
-      // 1-row parquet write jobs were fixture encoding, not the operator.
+      // them into its private dir — the two per-invocation 1-row parquet
+      // write jobs were fixture encoding, not the operator.
+      val sentinels = stagedSessionSentinels(spark, sfDir)
       (0 until 2).foreach { i =>
-        val staged = stagedSessionSentinels(spark, sfDir)(i)
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(s"$dir/zz_sentinel$i.parquet"), staged)
+        Fixtures.linkOrCopy(java.nio.file.Paths.get(s"$sentinels/sentinel$i.parquet"),
+          java.nio.file.Paths.get(s"$dir/zz_sentinel$i.parquet"))
         q.processAllAvailable()
       }
     } finally q.stop()
@@ -143,58 +138,47 @@ object StreamingQueries {
       .orderBy("user_id", "session_start")
   }
 
-  /** The sessionize sentinel files — two 1-row parquet files whose events
-    * sit far past the dataset's max event time (watermark advancers).
+  /** The sessionize sentinel files `sentinel0.parquet` and
+    * `sentinel1.parquet` — two 1-row parquet files whose events sit far
+    * past the dataset's max event time (watermark advancers).
     * Deterministic per dataset, so staged ONCE per (app, sfDir) and
-    * hard-linked into each invocation's private source dir; mtimes are
+    * overlaid into each invocation's private source dir; mtimes are
     * pinned AFTER the base batch files so listing order stays the
     * ingestion order. */
-  private val sessionSentinelDirs =
-    scala.collection.concurrent.TrieMap[(String, String), IndexedSeq[java.nio.file.Path]]()
-
-  private def stagedSessionSentinels(
-      spark: SparkSession, sfDir: String): IndexedSeq[java.nio.file.Path] =
-    sessionSentinelDirs.getOrElseUpdate(
-      (spark.sparkContext.applicationId, sfDir), {
-        import spark.implicits._
-        val far = Tables.read(spark, sfDir, "events").select(max(col("ts"))).collect()(0)
-          .getTimestamp(0).getTime
-        val dir = graft.io.TempDirs.createTracked("graft_stream_sentinels").toString
-        val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-        Seq(
-          Streams.Event(99999901L, new java.sql.Timestamp(far + 86400000L), 9999991L, "view", 0.0),
-          Streams.Event(99999902L, new java.sql.Timestamp(far + 86400000L * 2), 9999992L, "view", 0.0))
-          .zipWithIndex.map { case (e, i) =>
-            Seq(e).toDF().coalesce(1).write.mode("overwrite").parquet(s"$dir/s$i")
-            val part = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/s$i"))
-              .filter(_.getPath.getName.startsWith("part-")).head
-            val out = new java.io.File(s"$dir/sentinel$i.parquet")
-            fs.rename(part.getPath, new org.apache.hadoop.fs.Path(out.getPath))
-            out.setLastModified(1000000000000L + (4 + i) * 60000L)
-            out.toPath
-          }.toIndexedSeq
-      })
+  private def stagedSessionSentinels(spark: SparkSession, sfDir: String): String =
+    Fixtures.staged(spark, sfDir, "stream-sentinels") { dir =>
+      import spark.implicits._
+      val far = Tables.read(spark, sfDir, "events").select(max(col("ts"))).collect()(0)
+        .getTimestamp(0).getTime
+      val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      Seq(
+        Streams.Event(99999901L, new java.sql.Timestamp(far + 86400000L), 9999991L, "view", 0.0),
+        Streams.Event(99999902L, new java.sql.Timestamp(far + 86400000L * 2), 9999992L, "view", 0.0))
+        .zipWithIndex.foreach { case (e, i) =>
+          Seq(e).toDF().coalesce(1).write.mode("overwrite").parquet(s"$dir/s$i")
+          val part = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/s$i"))
+            .filter(_.getPath.getName.startsWith("part-")).head
+          val out = new java.io.File(s"$dir/sentinel$i.parquet")
+          fs.rename(part.getPath, new org.apache.hadoop.fs.Path(out.getPath))
+          out.setLastModified(1000000000000L + (4 + i) * 60000L)
+        }
+    }
 
   /** Stage `first`/`second` as two mtime-ordered parquet files so
     * `maxFilesPerTrigger=1` replays them as two micro-batches — the
     * cross-batch-state harness shared by the streaming dedup queries.
     *
-    * Staged ONCE per (app, sfDir, prefix) and served from the artifact on
-    * every later call (the [[graft.PipelineQueries]] `stagedParquet`
-    * pattern): the staged files are the stream's input FIXTURE, not the
-    * operator under test — re-encoding them per invocation priced two
-    * extra write jobs into every streaming row. Content per key is a
+    * Staged ONCE per (app, sfDir, name) and served from the artifact on
+    * every later call: the staged files are the stream's input FIXTURE,
+    * not the operator under test — re-encoding them per invocation priced
+    * two extra write jobs into every streaming row. Content per key is a
     * deterministic function of the test tables, every consumer is
     * read-only (the one mutating consumer, sessionize, goes through its
     * own private [[stagedSource]] copy), and each call site uses a unique
-    * prefix. */
-  private val twoBatchDirs = scala.collection.concurrent.TrieMap[(String, String, String), String]()
-
+    * name. */
   private def stageTwoBatches(spark: SparkSession, sfDir: String,
-      first: => DataFrame, second: => DataFrame, prefix: String): String = {
-    val key = (spark.sparkContext.applicationId, sfDir, prefix)
-    def stage(): String = {
-      val dir = graft.io.TempDirs.createTracked(prefix).toString
+      first: => DataFrame, second: => DataFrame, name: String): String =
+    Fixtures.staged(spark, sfDir, name) { dir =>
       first.coalesce(1).write.mode("overwrite").parquet(s"$dir/b0")
       second.coalesce(1).write.mode("overwrite").parquet(s"$dir/b1")
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
@@ -206,16 +190,7 @@ object StreamingQueries {
             new java.io.File(s"$dir/in$i.parquet").setLastModified(1000000000000L + i * 60000L)
           }
       }
-      dir
     }
-    val dir = twoBatchDirs.getOrElseUpdate(key, stage())
-    // an external tmp reaper may remove the dir in a long-lived session —
-    // validate the artifact is still complete before serving it, re-stage
-    // on miss (the memo holds FIXTURE paths, never results)
-    if (new java.io.File(s"$dir/in0.parquet").isFile &&
-        new java.io.File(s"$dir/in1.parquet").isFile) dir
-    else { val fresh = stage(); twoBatchDirs.put(key, fresh); fresh }
-  }
 
   /** Streaming Count-Min: the d×w counter table
     * ([[graft.functions.Sketch.cmsTable]]) as a stateful streaming
@@ -230,7 +205,7 @@ object StreamingQueries {
       .select("doc_id", "source", "text")
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
-      "graft_stream_cms")
+      "stream-cms")
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val items = stream.select(
@@ -264,7 +239,7 @@ object StreamingQueries {
     val dir = stageTwoBatches(spark, sfDir,
       rights.unionByName(lefts.where(col("left_id") % 2 === 0)),
       lefts.where(col("left_id") % 2 === 1),
-      "graft_stream_asof")
+      "stream-asof")
     val schema = rights.schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
@@ -289,7 +264,7 @@ object StreamingQueries {
     val docs = Tables.read(spark, sfDir, "documents").select("doc_id", "text")
     val dir = stageTwoBatches(spark, sfDir,
       docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 === 1),
-      "graft_stream_decon")
+      "stream-decon")
     val ref = docs.where(col("doc_id") % 7 === 0)
       .select(col("text").as("__rtext")).dropDuplicates("__rtext")
     val stream = spark.readStream.schema(docs.schema)
@@ -309,7 +284,7 @@ object StreamingQueries {
     val corpus = PipelineQueries.qualityCorpus(spark, sfDir)
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
-      "graft_stream_quality")
+      "stream-quality")
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val kept = graft.functions.TextAnalysis.qualityFilter(
@@ -329,7 +304,7 @@ object StreamingQueries {
     val corpus = Tables.read(spark, sfDir, "documents").select("doc_id", "text")
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
-      "graft_stream_classifier")
+      "stream-classifier")
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val scored = graft.functions.Classifier.scoreQualityFused(stream, "doc_id", "text")
@@ -348,7 +323,7 @@ object StreamingQueries {
     val corpus = PipelineQueries.piiCorpus(spark, sfDir)
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
-      "graft_stream_pii")
+      "stream-pii")
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val scrubbed = graft.functions.TextAnalysis.scrubPii(stream, "doc_id", "text")
@@ -367,7 +342,7 @@ object StreamingQueries {
     val corpus = PipelineQueries.mojibakeCorpus(spark, sfDir)
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
-      "graft_stream_moji")
+      "stream-moji")
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val fixed = stream.select(col("doc_id"),
@@ -398,7 +373,7 @@ object StreamingQueries {
       .select("doc_id", "source", "text")
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
-      "graft_stream_sketch")
+      "stream-sketch")
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val items = stream.select(col("source"),
@@ -423,7 +398,7 @@ object StreamingQueries {
       .select("doc_id", "source", "text")
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
-      "graft_stream_hll")
+      "stream-hll")
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val items = stream.select(col("source"),
@@ -449,7 +424,7 @@ object StreamingQueries {
       .select("doc_id", "lang", "text")
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
-      "graft_stream_quantile")
+      "stream-quantile")
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val out = PipelineQueries.sketchQuantilesAgg(stream)
@@ -468,7 +443,7 @@ object StreamingQueries {
     val corpus = PipelineQueries.urlPolicyCorpus(spark, sfDir)
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
-      "graft_stream_urlpol")
+      "stream-urlpol")
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val gated = PipelineQueries.urlPolicyVerdicts(spark, stream)
@@ -488,7 +463,7 @@ object StreamingQueries {
     val corpus = Tables.read(spark, sfDir, "documents")
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
-      "graft_stream_profile")
+      "stream-profile")
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val out = PipelineQueries.profileApproxAgg(stream)
@@ -510,7 +485,7 @@ object StreamingQueries {
     // different batches, so the dedup state genuinely crosses batches
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") < 100000), corpus.where(col("doc_id") >= 100000),
-      "graft_stream_dedup")
+      "stream-dedup")
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val deduped = stream
@@ -536,7 +511,7 @@ object StreamingQueries {
     val d = Tables.read(spark, sfDir, "documents").select("doc_id", "text")
     val (bases, copies) = PipelineQueries.anchoredSimhashCorpus(d)
     val corpus = bases.unionByName(copies)
-    val dir = stageTwoBatches(spark, sfDir, bases, copies, "graft_stream_neardup")
+    val dir = stageTwoBatches(spark, sfDir, bases, copies, "stream-neardup")
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val pairs = Streams.simhashPairsStream(stream, "doc_id", "text", maxHamming = 3)
@@ -557,7 +532,7 @@ object StreamingQueries {
   def dedupMediaStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
     val (bases, copies) = PipelineQueries.mediaDedupInputs(spark, sfDir)
     val corpus = bases.unionByName(copies)
-    val dir = stageTwoBatches(spark, sfDir, bases, copies, "graft_stream_media")
+    val dir = stageTwoBatches(spark, sfDir, bases, copies, "stream-media")
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val hashed = stream.select(col("media_id").as("doc_id"),
@@ -616,7 +591,7 @@ object StreamingQueries {
     val (_, cids, matrix) = Similarity.kmeansFit(e, "vec_id", "embedding", 16, 2, 16)
     val dir = stageTwoBatches(spark, sfDir,
       e.where(col("vec_id") % 2 === 0), e.where(col("vec_id") % 2 === 1),
-      "graft_stream_annassign")
+      "stream-annassign")
     val stream = spark.readStream.schema(e.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val routed = Similarity.assignCells(stream, "vec_id", "embedding", cids, matrix)

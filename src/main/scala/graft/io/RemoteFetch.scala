@@ -134,10 +134,7 @@ object RemoteFetch {
   def fetchViaCommand(
       spark: org.apache.spark.sql.SparkSession, url: String, template: String): String = {
     val uri = URI.create(url)
-    val dir = Files.createTempDirectory("graft_fetch_")
-    dir.toFile.deleteOnExit()
-    val dest: Path = dir.resolve(fileName(uri))
-    dest.toFile.deleteOnExit()
+    val dest: Path = Path.of(Fixtures.scratch("graft_fetch_"), fileName(uri))
     val user = Option(uri.getUserInfo).getOrElse("")
     val host = Option(uri.getHost).getOrElse("")
     val userhost = if (user.nonEmpty) s"$user@$host" else host
@@ -172,13 +169,10 @@ object RemoteFetch {
       readTimeoutMs: Int = 120000): String = {
     rejectUnsupported(url)
     val uri = URI.create(url)
-    val dir = Files.createTempDirectory("graft_remote_")
-    dir.toFile.deleteOnExit()
-    val dest: Path = dir.resolve(fileName(uri))
+    val dest: Path = Path.of(Fixtures.scratch("graft_remote_"), fileName(uri))
     val (in, close) = openStream(uri, connectTimeoutMs, readTimeoutMs)
     try Files.copy(in, dest)
     finally { in.close(); close() }
-    dest.toFile.deleteOnExit()
     dest.toString
   }
 
@@ -212,7 +206,7 @@ object RemoteFetch {
     } finally {
       out.close(); in.close(); close()
     }
-    // best-effort staging GC, mirroring fetchToLocal's deleteOnExit: the
+    // best-effort staging GC, mirroring fetchToLocal's scratch dir: the
     // per-fetch UUID directory is removed when this JVM exits (Hadoop
     // runs its deleteOnExit set in a shutdown hook), so repeated fetches
     // don't accumulate on the shared filesystem across job runs

@@ -2635,12 +2635,10 @@ class PipelineSpec extends GraftSuite {
     assert(s1 == fresh)
   }
 
-  /** The exact on-disk path [[PipelineQueries.stagedParquet]] writes for
-    * (this app, `sfDir`, `name`) — mirrors its key construction. */
+  /** The on-disk path [[PipelineQueries.stagedParquet]] stages
+    * (this app, `sfDir`, `name`) at. */
   private def stagedDir(sfDir: String, name: String): String =
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-media-$name-" + spark.sparkContext.applicationId + "-" +
-        sfDir.replaceAll("[^A-Za-z0-9.-]", "_")).toString
+    graft.io.Fixtures.path(spark, sfDir, name)
 
   test("stagedMedia: the staged media artifact is byte-identical to a fresh synthesis") {
     val sfDir = "/root/testdata/sf0.001"
