@@ -1364,7 +1364,9 @@ object PipelineQueries {
     * perplexity double rides the same counts and is pinned in-suite
     * (log-sum floats don't hash-compare across engines). */
   def lmScoreQ(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = docs(spark, sfDir)
+    // one spread input for the LM build and the scoring: the documents
+    // arrive as one row group, and each pass would otherwise run in 1 task
+    val d = graft.ops.Scale.spreadIfNarrow(docs(spark, sfDir))
     val lm = graft.functions.LanguageModel.buildBigramLm(
       d, "text", vocabSize = 20, maxBigrams = 300)
     graft.functions.LanguageModel.scoreDocs(d, "doc_id", "text", lm)
@@ -1386,7 +1388,7 @@ object PipelineQueries {
     * shuffle beyond the window's lang partitioning. */
   def ccnetBucketsQ(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d = docs(spark, sfDir)
+    val d = graft.ops.Scale.spreadIfNarrow(docs(spark, sfDir)) // as in lmScoreQ
     val lm = graft.functions.LanguageModel.buildBigramLm(
       d, "text", vocabSize = 20, maxBigrams = 300)
     val sig = graft.functions.LanguageModel.scoreDocs(d, "doc_id", "text", lm)

@@ -2266,6 +2266,19 @@ class PipelineSpec extends GraftSuite {
     assert(out7 == out)
   }
 
+  test("k-means assignment fails loudly on an empty centroid set") {
+    import graft.functions.Similarity
+    val df = Seq(0L -> Array(1.0f, 0.0f), 1L -> Array(0.0f, 1.0f)).toDF("vec_id", "embedding")
+    val noCells = intercept[IllegalArgumentException] {
+      Similarity.assignCells(df, "vec_id", "embedding", Array.empty[Int], Seq.empty)
+    }
+    assert(noCells.getMessage.contains("kmeansAssignCol: empty centroid set"))
+    val noSeeds = intercept[IllegalArgumentException] {
+      Similarity.buildIvfIndex(df, "vec_id", "embedding", nCentroids = 0)
+    }
+    assert(noSeeds.getMessage.contains("nearestCid: empty centroid set"))
+  }
+
   test("scrubPii: typed redaction with per-category counts, near-misses survive") {
     val out = TextAnalysis.scrubPii(Seq(
       (1L, "mail alice@foo.org or bob.smith+x@bar.co now"),

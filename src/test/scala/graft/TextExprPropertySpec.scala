@@ -107,6 +107,22 @@ object TextExprPropertySpec extends Properties("TextExprs") {
     }
   }
 
+  property("BigramPairsExpr.pairs == in-vocab adjacent pairs of the split tokens") = {
+    val vocab = new java.util.HashSet[UTF8String]()
+    Seq("a", "b", "cat", "•").foreach(w => vocab.add(UTF8String.fromString(w)))
+    Prop.forAll(textGen) { t =>
+      val toks = t.split("[ \\t\\n\\x0B\\f\\r]+").filter(_.nonEmpty).toList
+      val inV = (w: String) => vocab.contains(UTF8String.fromString(w))
+      val expected = toks.zip(toks.drop(1)).filter { case (x, y) => inV(x) && inV(y) }
+      val got = graft.functions.BigramPairsExpr.pairs(t.getBytes("UTF-8"), vocab)
+      val pairs = (0 until got.numElements()).map { i =>
+        val r = got.getStruct(i, 2)
+        (r.getUTF8String(0).toString, r.getUTF8String(1).toString)
+      }
+      pairs == expected
+    }
+  }
+
   // include multi-byte codepoints AND combining sequences: the dHash
   // grid must count CODEPOINTS (the declared contract unit), not UTF-16
   // units, bytes, or grapheme clusters — "é" and the ZWJ emoji pin
