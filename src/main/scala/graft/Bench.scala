@@ -51,31 +51,7 @@ object Bench {
     // scaled dir, one timed pass each. Near-linear growth on the
     // bucket-min/decontaminate rows is the expected signature — superlinear
     // growth here means a plan regressed to all-pairs behavior.
-    val scaleQueries = Seq(
-      "p_dedup_exact", "p_dedup_minhash_scale", "p_decontaminate", "p_dedup_embedding",
-      "p_decontaminate_bloom", "p_dedup_paragraph", "p_ann_bruteforce", "p_ann_ivf",
-      "p_ann_ivf_free",
-      "p_dedup_cc", "p_dedup_semantic", "p_quality_filter", "p_lm_score",
-      "p_ann_rerank", "p_dedup_span_scrub",
-      "p_embed_kmeans", "p_dsir_weights", "p_tfidf_terms", "p_dedup_media",
-      "p_dedup_edit", "p_quality_classifier", "p_sample_epochs",
-      "p_dedup_image_px", "p_sketch_quantiles", "p_ann_pq", "p_dedup_audio_px",
-      "p_dedup_video_px", "p_dedup_jpeg_px",
-      // round-10 additions (round-9 verdict task 6): the composite ANN
-      // index and the certification twins carry the largest per-round
-      // costs on the board — their linearity is now machine-checked too
-      "p_ann_ivfpq", "p_dedup_minhash_portable", "p_dedup_simhash_portable",
-      "p_dedup_jpeg_color", "p_dedup_jpeg_progressive",
-      // round-11: the HLL register sketch and the CMS counter build join
-      // the curve — expected near-flat fixed-state aggregation like the
-      // KMV rows
-      "p_sketch_hll", "p_sketch_cms",
-      // round-12: the CC family now reads a staged pair artifact, so the
-      // FRESH mine is tracked separately (p_dedup_cc on the curve now
-      // measures stage-once + propagate; p_cc_pair_mining carries the
-      // mining-linearity signal the CC rows used to); the incremental
-      // near-dup row joins too — per-dump work must stay O(dump)
-      "p_cc_pair_mining", "p_dedup_minhash_incremental")
+    val curveQueries = SparkEntry.all.filter(_.curve)
     val multiples = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULTIPLES", "1,3,10")
       .split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
     val scaleRoot = graft.io.Fixtures.scratch("graft-bench-scale-")
@@ -100,17 +76,16 @@ object Bench {
     // two phantom regressions (rounds 4/5 flagged 16.95 s / 10.03 s at
     // ×10 for a query whose min-of-2 truth was 3.56 s — shared-host
     // noise, not a plan change).
-    val perQuery = scaleQueries.map { n =>
-      n -> multiples.map { m =>
+    val perQuery = curveQueries.map { q =>
+      q.name -> multiples.map { m =>
         val dir = dirs(m)._1
-        val a = runOnce(s"scale_x${m}_$n", (s, _) => benchQueries(n)(s, dir))
-        val b = runOnce(s"scale_x${m}_$n", (s, _) => benchQueries(n)(s, dir))
+        val a = runOnce(s"scale_x${m}_${q.name}", (s, _) => q.run(s, dir))
+        val b = runOnce(s"scale_x${m}_${q.name}", (s, _) => q.run(s, dir))
         m -> math.min(a, b)
       }.toMap
     }
     val curve = multiples.map { m =>
-      m -> (dirs(m)._2, scaleQueries.map(n =>
-        n -> perQuery.find(_._1 == n).get._2(m)))
+      m -> (dirs(m)._2, perQuery.map { case (n, times) => n -> times(m) })
     }
     // Per-query scaling verdict: wall-clock ratio between the largest and
     // smallest multiple, normalized by the data ratio — 1.0 = perfectly
@@ -120,10 +95,8 @@ object Bench {
       if (multiples.size < 2) Seq.empty
       else {
         val mLo = multiples.min; val mHi = multiples.max
-        val tLo = curve.find(_._1 == mLo).get._2._2.toMap
-        val tHi = curve.find(_._1 == mHi).get._2._2.toMap
-        scaleQueries.map { n =>
-          val r = (tHi(n) / math.max(tLo(n), 1e-9)) / (mHi.toDouble / mLo)
+        perQuery.map { case (n, times) =>
+          val r = (times(mHi) / math.max(times(mLo), 1e-9)) / (mHi.toDouble / mLo)
           n -> (r, r > 2.0)
         }
       }

@@ -82,7 +82,7 @@ object OperatorQueries {
 
   /** loadFile from an sftp:// URL (files/locations/sftp.py parity). The
     * wire protocol is delegated to the configured fetch command
-    * (`spark.graft.sftpFetchCmd`; the OpenSSH client by default) — here a
+    * (`spark.graft.fetchCmd.sftp`; the OpenSSH client by default) — here a
     * local-copy transport stands in for sshd, which cannot run in the test
     * container, so everything EXCEPT the SSH byte transfer is the
     * production path: URL parse, template substitution, external process
@@ -93,14 +93,14 @@ object OperatorQueries {
     val dir = Fixtures.scratch("graft_sftp_fixture")
     val src = spark.table("supplier").select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
     g.exportToFile(src, FileRef(s"$dir/supplier.csv"), singleFile = true)
-    val prev = spark.conf.getOption("spark.graft.sftpFetchCmd")
-    spark.conf.set("spark.graft.sftpFetchCmd", s"cp $dir{path} {dest}")
+    val prev = spark.conf.getOption("spark.graft.fetchCmd.sftp")
+    spark.conf.set("spark.graft.fetchCmd.sftp", s"cp $dir{path} {dest}")
     try
       g.loadFile(FileRef("sftp://tester@127.0.0.1:2222/supplier.csv"),
         Some(TableRef("op_sftp_t")), IfExists.Replace)
     finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.sftpFetchCmd", v)
-      case None => spark.conf.unset("spark.graft.sftpFetchCmd")
+      case Some(v) => spark.conf.set("spark.graft.fetchCmd.sftp", v)
+      case None => spark.conf.unset("spark.graft.fetchCmd.sftp")
     }
     spark.table("op_sftp_t")
       .select(col("s_suppkey").cast("bigint"), col("s_name"),
@@ -110,7 +110,7 @@ object OperatorQueries {
 
   /** loadFile from a gdrive:// URL (files/locations/google/gdrive.py
     * parity). The transport is the configured fetch command
-    * (`spark.graft.gdriveFetchCmd`; the rclone CLI by default) — here a
+    * (`spark.graft.fetchCmd.gdrive`; the rclone CLI by default) — here a
     * local-copy transport stands in for rclone, which has no Drive
     * remote in the test container, so everything EXCEPT the Drive byte
     * transfer is the production path: URL parse, `{hostpath}` template
@@ -122,14 +122,14 @@ object OperatorQueries {
     val dir = Fixtures.scratch("graft_gdrive_fixture")
     val src = spark.table("nation").select("n_nationkey", "n_name", "n_regionkey")
     g.exportToFile(src, FileRef(s"$dir/reports/nation.csv"), singleFile = true)
-    val prev = spark.conf.getOption("spark.graft.gdriveFetchCmd")
-    spark.conf.set("spark.graft.gdriveFetchCmd", s"cp $dir/{hostpath} {dest}")
+    val prev = spark.conf.getOption("spark.graft.fetchCmd.gdrive")
+    spark.conf.set("spark.graft.fetchCmd.gdrive", s"cp $dir/{hostpath} {dest}")
     try
       g.loadFile(FileRef("gdrive://reports/nation.csv"),
         Some(TableRef("op_gdrive_t")), IfExists.Replace)
     finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.gdriveFetchCmd", v)
-      case None => spark.conf.unset("spark.graft.gdriveFetchCmd")
+      case Some(v) => spark.conf.set("spark.graft.fetchCmd.gdrive", v)
+      case None => spark.conf.unset("spark.graft.fetchCmd.gdrive")
     }
     spark.table("op_gdrive_t")
       .select(col("n_nationkey").cast("bigint"), col("n_name"),
@@ -1007,68 +1007,16 @@ object OperatorQueries {
   // registry
   // ---------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "op_bucketed_join" -> (bucketedJoin _),
-    "op_salted_join" -> (saltedJoinOp _),
-    "op_profile_table" -> (profileTableOp _),
-    "op_profile_events" -> (profileEventsOp _),
-    "op_compact_small_files" -> (compactSmallFiles _),
-    "op_topk_sample" -> (topkSample _),
-    "op_load_xls_roundtrip" -> (loadXlsRoundtrip _),
-    "op_load_xls5_roundtrip" -> (loadXls5Roundtrip _),
-    "op_load_xml_roundtrip" -> (loadXmlRoundtrip _),
-    "op_load_csv_roundtrip" -> (loadCsvRoundtrip _),
-    "op_load_http" -> (loadHttp _),
-    "op_load_sftp" -> (loadSftp _),
-    "op_load_gdrive" -> (loadGdrive _),
-    "op_export_parquet_roundtrip" -> (exportParquetRoundtrip _),
-    "op_load_ndjson_flatten" -> (loadNdjsonFlatten _),
-    "op_flatten_projection" -> (flattenProjection _),
-    "op_transform_ctas" -> (transformCtas _),
-    "op_transform_dialect" -> (transformDialect _),
-    "op_transform_dialect_sf" -> (transformDialectSf _),
-    "op_transform_dialect_bq" -> (transformDialectBq _),
-    "op_transform_dialect_pg2" -> (transformDialectPg2 _),
-    "op_transform_dialect_pg3" -> (transformDialectPg3 _),
-    "op_transform_dialect_pg4" -> (transformDialectPg4 _),
-    "op_transform_dialect_rs" -> (transformDialectRs _),
-    "op_transform_dialect_ms" -> (transformDialectMs _),
-    "op_transform_dialect_sf2" -> (transformDialectSf2 _),
-    "op_transform_dialect_ms2" -> (transformDialectMs2 _),
-    "op_transform_dialect_ms3" -> (transformDialectMs3 _),
-    "op_transform_dialect_pg5" -> (transformDialectPg5 _),
-    "op_file_list" -> (fileListOp _),
-    "op_export_alias_roundtrip" -> (exportAliasRoundtrip _),
-    "op_raw_sql_handler" -> (rawSqlHandlerOp _),
-    "op_transform_df_arg" -> (transformDfArg _),
-    "op_value_list" -> (valueList _),
-    "op_dataframe_op" -> (dataframeOp _),
-    "op_append" -> (appendOp _),
-    "op_merge_ignore" -> (mergeIgnore _),
-    "op_scd2_merge" -> (scd2MergeOp _),
-    "op_merge_update" -> (mergeUpdate _),
-    "op_merge_exception" -> (mergeException _),
-    "op_load_append" -> (loadAppend _),
-    "op_percentiles" -> (percentiles _),
-    "op_pivot" -> (pivotOp _),
-    "op_explode_tokens" -> (explodeTokens _),
-    "op_check_column" -> (checkColumnOp _),
-    "op_check_table" -> (checkTableOp _),
-    "op_cleanup_lifecycle" -> (cleanupLifecycle _),
-    "op_partitioned_write" -> (partitionedWrite _),
-    "op_partition_overwrite" -> (partitionOverwrite _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "op_bucketed_join" ->
+  val all: Seq[Query] = Seq(
+    Query("op_bucketed_join", bucketedJoin, Some(
       """SELECT c.c_mktsegment, cast(count(*) as bigint) AS n_orders,
         |  cast(sum(cast(round(o_totalprice * 100) as bigint)) as bigint) AS total_cents
         |FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-        |GROUP BY c.c_mktsegment ORDER BY c_mktsegment""".stripMargin,
+        |GROUP BY c.c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
 
     // the plain unsalted join — hash-match proves saltedJoin preserves
     // join semantics exactly (cardinality, grouping, sums)
-    "op_salted_join" ->
+    Query("op_salted_join", saltedJoinOp, Some(
       """WITH ev AS (
         |  SELECT event_id,
         |    CASE WHEN event_id % 10 < 7 THEN 1 ELSE event_id % 96 + 1 END AS k
@@ -1077,22 +1025,22 @@ object OperatorQueries {
         |SELECT ev.k AS k, cast(count(*) as bigint) AS n_events,
         |  cast(sum(event_id) as bigint) AS sum_eid, min(p_brand) AS brand
         |FROM ev JOIN dim ON ev.k = dim.k
-        |GROUP BY ev.k ORDER BY ev.k""".stripMargin,
+        |GROUP BY ev.k ORDER BY ev.k""".stripMargin)),
 
     // the deterministic bucket rule replayed directly — the engine side
     // additionally require()s the physical file counts (≥32 → 4)
-    "op_compact_small_files" ->
+    Query("op_compact_small_files", compactSmallFiles, Some(
       """SELECT cast(doc_id % 4 as int) AS file_id,
         |  cast(count(*) as bigint) AS n_rows,
         |  cast(min(doc_id) as bigint) AS min_id,
         |  cast(max(doc_id) as bigint) AS max_id
-        |FROM documents GROUP BY doc_id % 4 ORDER BY file_id""".stripMargin,
+        |FROM documents GROUP BY doc_id % 4 ORDER BY file_id""".stripMargin)),
 
     // one UNION ALL branch per documents column, mirroring
     // Profile.profileTable's metric set (n_distinct excludes NULLs on
     // both engines; min/max rendered via cast to varchar; avg_len is a
     // single division of exact integer sums)
-    "op_profile_table" ->
+    Query("op_profile_table", profileTableOp, Some(
       """SELECT * FROM (
         |  SELECT 'doc_id' AS column_name,
         |    cast(count(*) FILTER (WHERE doc_id IS NULL) as bigint) AS n_nulls,
@@ -1125,11 +1073,11 @@ object OperatorQueries {
         |    cast(min(n_chars) as varchar), cast(max(n_chars) as varchar),
         |    cast(NULL as double)
         |  FROM documents) p
-        |ORDER BY column_name""".stripMargin,
+        |ORDER BY column_name""".stripMargin)),
 
     // ts (timestamp) and value (double) take the non-portable-render
     // branch: nulls/distincts only, min/max NULL by design
-    "op_profile_events" ->
+    Query("op_profile_events", profileEventsOp, Some(
       """SELECT * FROM (
         |  SELECT 'event_id' AS column_name,
         |    cast(count(*) FILTER (WHERE event_id IS NULL) as bigint) AS n_nulls,
@@ -1166,57 +1114,57 @@ object OperatorQueries {
         |    cast(min(props) as varchar), cast(max(props) as varchar),
         |    avg(length(props))
         |  FROM events) p
-        |ORDER BY column_name""".stripMargin,
+        |ORDER BY column_name""".stripMargin)),
 
-    "op_topk_sample" ->
+    Query("op_topk_sample", topkSample, Some(
       """SELECT c_nationkey, c_custkey FROM (
         |  SELECT c_nationkey, c_custkey,
         |    row_number() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS rk
         |  FROM customer) t
-        |WHERE rk <= 3 ORDER BY c_nationkey, c_custkey""".stripMargin,
+        |WHERE rk <= 3 ORDER BY c_nationkey, c_custkey""".stripMargin)),
 
-    "op_load_csv_roundtrip" ->
-      "SELECT p_partkey, p_name, p_brand, p_size FROM part ORDER BY p_partkey",
+    Query("op_load_csv_roundtrip", loadCsvRoundtrip, Some(
+      "SELECT p_partkey, p_name, p_brand, p_size FROM part ORDER BY p_partkey")),
 
-    "op_load_xls_roundtrip" ->
-      "SELECT c_custkey, c_name, c_mktsegment, c_acctbal FROM customer ORDER BY c_custkey",
+    Query("op_load_xls_roundtrip", loadXlsRoundtrip, Some(
+      "SELECT c_custkey, c_name, c_mktsegment, c_acctbal FROM customer ORDER BY c_custkey")),
 
-    "op_load_xls5_roundtrip" ->
-      "SELECT c_custkey, c_name, c_mktsegment, c_acctbal FROM customer ORDER BY c_custkey",
+    Query("op_load_xls5_roundtrip", loadXls5Roundtrip, Some(
+      "SELECT c_custkey, c_name, c_mktsegment, c_acctbal FROM customer ORDER BY c_custkey")),
 
-    "op_load_xml_roundtrip" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
+    Query("op_load_xml_roundtrip", loadXmlRoundtrip, Some(
+      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey")),
 
-    "op_load_http" ->
-      "SELECT c_custkey, c_name, c_nationkey, c_mktsegment FROM customer ORDER BY c_custkey",
+    Query("op_load_http", loadHttp, Some(
+      "SELECT c_custkey, c_name, c_nationkey, c_mktsegment FROM customer ORDER BY c_custkey")),
 
-    "op_load_sftp" ->
-      "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier ORDER BY s_suppkey",
+    Query("op_load_sftp", loadSftp, Some(
+      "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier ORDER BY s_suppkey")),
 
-    "op_load_gdrive" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
+    Query("op_load_gdrive", loadGdrive, Some(
+      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey")),
 
-    "op_export_parquet_roundtrip" ->
-      "SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment FROM customer ORDER BY c_custkey",
+    Query("op_export_parquet_roundtrip", exportParquetRoundtrip, Some(
+      "SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment FROM customer ORDER BY c_custkey")),
 
-    "op_load_ndjson_flatten" ->
+    Query("op_load_ndjson_flatten", loadNdjsonFlatten, Some(
       """SELECT event_id, user_id AS payload_user_id, event_type AS payload_info_event_type,
         |  value AS payload_info_value
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin)),
 
-    "op_flatten_projection" ->
+    Query("op_flatten_projection", flattenProjection, Some(
       """SELECT event_id, user_id AS evt_user_id, event_type AS evt_info_event_type,
         |  value AS evt_info_value
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin)),
 
-    "op_transform_ctas" ->
+    Query("op_transform_ctas", transformCtas, Some(
       """SELECT o_custkey, cast(count(*) as bigint) AS n_orders,
         |  cast(sum(cast(round(o_totalprice * 100) as bigint)) as bigint) AS total_cents
-        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
+        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin)),
 
     // the Postgres-flavored transform restated dialect-neutrally: same
     // month bucketing, regex filter, ILIKE filter, integer-cents sums
-    "op_transform_dialect" ->
+    Query("op_transform_dialect", transformDialect, Some(
       """SELECT c_mktsegment,
         |  strftime(o_orderdate, '%Y-%m') AS month,
         |  cast(count(*) as bigint) AS n_orders,
@@ -1225,10 +1173,10 @@ object OperatorQueries {
         |WHERE regexp_matches(o_orderpriority, '^1')
         |  AND lower(c_mktsegment) LIKE '%a%'
         |GROUP BY c_mktsegment, strftime(o_orderdate, '%Y-%m')
-        |ORDER BY c_mktsegment, month""".stripMargin,
+        |ORDER BY c_mktsegment, month""".stripMargin)),
 
     // the Snowflake-flavored transform restated dialect-neutrally
-    "op_transform_dialect_sf" ->
+    Query("op_transform_dialect_sf", transformDialectSf, Some(
       """SELECT o_orderstatus,
         |  strftime(o_orderdate, '%Y-%m') AS month,
         |  cast(count(*) as bigint) AS n,
@@ -1236,10 +1184,10 @@ object OperatorQueries {
         |  cast(max(date_diff('day', DATE '1995-01-01', o_orderdate)) as bigint) AS max_days
         |FROM orders
         |GROUP BY o_orderstatus, strftime(o_orderdate, '%Y-%m')
-        |ORDER BY o_orderstatus, month""".stripMargin,
+        |ORDER BY o_orderstatus, month""".stripMargin)),
 
     // the BigQuery-flavored transform restated dialect-neutrally
-    "op_transform_dialect_bq" ->
+    Query("op_transform_dialect_bq", transformDialectBq, Some(
       """SELECT o_orderstatus,
         |  strftime(o_orderdate, '%Y-%m') AS month,
         |  cast(count(*) as bigint) AS n,
@@ -1247,12 +1195,12 @@ object OperatorQueries {
         |    o_orderdate + INTERVAL 30 DAY)) as bigint) AS max_days
         |FROM orders
         |GROUP BY o_orderstatus, strftime(o_orderdate, '%Y-%m')
-        |ORDER BY o_orderstatus, month""".stripMargin,
+        |ORDER BY o_orderstatus, month""".stripMargin)),
 
     // the second Postgres-flavored transform (escape layer) restated
     // dialect-neutrally: DuckDB strings are standard-conforming and its
     // regex engine accepts the same (?i)/class syntax
-    "op_transform_dialect_pg2" ->
+    Query("op_transform_dialect_pg2", transformDialectPg2, Some(
       """SELECT o_orderstatus,
         |  cast(count(*) as bigint) AS n,
         |  cast(sum(CASE WHEN regexp_matches(o_orderpriority, '^\d-') THEN 1 ELSE 0 END) as bigint) AS n_digit,
@@ -1261,25 +1209,25 @@ object OperatorQueries {
         |  max(cast(o_orderpriority as varchar)) AS max_prio
         |FROM orders
         |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
+        |ORDER BY o_orderstatus""".stripMargin)),
 
     // the third Postgres-flavored transform: DuckDB runs generate_series
     // natively; SIMILAR TO is NOT replayed verbatim because DuckDB's
     // SIMILAR TO takes a plain regex (no %→.* wildcard mapping, unlike
     // Postgres) — the oracle replays the documented conversion instead
     // (anchored full-match regex with % mapped to .*)
-    "op_transform_dialect_pg3" ->
+    Query("op_transform_dialect_pg3", transformDialectPg3, Some(
       """SELECT cast(g.i as bigint) AS bucket,
         |  cast(sum(CASE WHEN regexp_full_match(o.o_orderpriority, '(?:(1|3)-.*)') THEN 1 ELSE 0 END) as bigint) AS n_prio13,
         |  cast(count(*) as bigint) AS n
         |FROM generate_series(0, 4) AS g(i)
         |JOIN orders o ON (o.o_orderkey % 5) = g.i
         |GROUP BY g.i
-        |ORDER BY bucket""".stripMargin,
+        |ORDER BY bucket""".stripMargin)),
 
     // the fourth Postgres-flavored transform: DuckDB supports DISTINCT ON
     // natively, so the oracle replays the untranslated spelling
-    "op_transform_dialect_pg4" ->
+    Query("op_transform_dialect_pg4", transformDialectPg4, Some(
       """SELECT o_custkey, o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS day
         |FROM (
         |  SELECT DISTINCT ON (o_custkey) o_custkey, o_orderkey, o_orderdate
@@ -1287,20 +1235,20 @@ object OperatorQueries {
         |  WHERE o_custkey % 100 = 7
         |  ORDER BY o_custkey, o_orderdate DESC, o_orderkey DESC
         |)
-        |ORDER BY o_custkey""".stripMargin,
+        |ORDER BY o_custkey""".stripMargin)),
 
     // the Redshift-flavored transform restated dialect-neutrally
-    "op_transform_dialect_rs" ->
+    Query("op_transform_dialect_rs", transformDialectRs, Some(
       """SELECT r_name,
         |  string_agg(n_name, ',' ORDER BY n_name) AS nations,
         |  cast(date_part('month', DATE '1996-07-15') as bigint) AS m,
         |  cast(date_diff('year', DATE '1993-12-31', DATE '1996-01-02') as bigint) AS yrs
         |FROM nation JOIN region ON n_regionkey = r_regionkey
         |GROUP BY r_name
-        |ORDER BY r_name""".stripMargin,
+        |ORDER BY r_name""".stripMargin)),
 
     // the T-SQL-flavored transform restated dialect-neutrally
-    "op_transform_dialect_ms" ->
+    Query("op_transform_dialect_ms", transformDialectMs, Some(
       """SELECT o_orderstatus,
         |  cast(count(*) as bigint) AS n,
         |  cast(length(min(o_orderpriority)) as bigint) AS prio_len,
@@ -1310,44 +1258,44 @@ object OperatorQueries {
         |FROM orders
         |GROUP BY o_orderstatus
         |ORDER BY o_orderstatus
-        |LIMIT 2""".stripMargin,
+        |LIMIT 2""".stripMargin)),
 
     // QUALIFY replayed through DuckDB's NATIVE QUALIFY — the oracle
     // evaluates the clause itself, our engine path the restatement
-    "op_transform_dialect_sf2" ->
+    Query("op_transform_dialect_sf2", transformDialectSf2, Some(
       """SELECT o_custkey, o_orderkey
         |FROM orders WHERE o_custkey % 50 = 7
         |QUALIFY row_number() OVER (
         |  PARTITION BY o_custkey
         |  ORDER BY o_orderdate DESC, o_orderkey) = 1
-        |ORDER BY o_custkey""".stripMargin,
+        |ORDER BY o_custkey""".stripMargin)),
 
     // TOP n WITH TIES restated as the rank() window it is equivalent
     // to — DuckDB evaluates the standard form natively; the result SET
     // is tie-order-independent by construction
-    "op_transform_dialect_ms2" ->
+    Query("op_transform_dialect_ms2", transformDialectMs2, Some(
       """SELECT okey, o_orderpriority FROM (
         |  SELECT cast(o_orderkey as bigint) AS okey, o_orderpriority,
         |    rank() OVER (ORDER BY o_orderpriority) AS rk
         |  FROM orders WHERE o_custkey % 100 = 7
-        |) WHERE rk <= 5 ORDER BY okey""".stripMargin,
+        |) WHERE rk <= 5 ORDER BY okey""".stripMargin)),
 
     // TOP n PERCENT: CEILING(count * n / 100) rows of the row_number
     // total order — the T-SQL round-up rule, written out
-    "op_transform_dialect_ms3" ->
+    Query("op_transform_dialect_ms3", transformDialectMs3, Some(
       """SELECT o_orderkey, o_orderstatus FROM (
         |  SELECT o_orderkey, o_orderstatus,
         |    row_number() OVER (ORDER BY o_orderkey) AS rn,
         |    count(*) OVER () AS ct
         |  FROM orders WHERE o_custkey % 100 = 7
-        |) WHERE rn <= CEILING(ct * 10 / 100.0) ORDER BY o_orderkey""".stripMargin,
+        |) WHERE rn <= CEILING(ct * 10 / 100.0) ORDER BY o_orderkey""".stripMargin)),
 
     // the fifth Postgres-flavored transform (shipped as a .sql FILE):
     // DuckDB replays DISTINCT ON natively; Postgres's DESC NULLS-FIRST
     // default is written EXPLICITLY because DuckDB's own default_null_order
     // (nulls_last) diverges from Postgres under DESC — the explicit form
     // states the semantics our translation must reproduce from the bare SQL
-    "op_transform_dialect_pg5" ->
+    Query("op_transform_dialect_pg5", transformDialectPg5, Some(
       """SELECT o_custkey, o_orderkey, strftime(od, '%Y-%m-%d') AS od_day
         |FROM (
         |  SELECT DISTINCT ON (o_custkey) o_custkey, o_orderkey,
@@ -1356,46 +1304,46 @@ object OperatorQueries {
         |  WHERE o_custkey % 50 = 3
         |  ORDER BY o_custkey, od DESC NULLS FIRST, o_orderkey
         |)
-        |ORDER BY o_custkey""".stripMargin,
+        |ORDER BY o_custkey""".stripMargin)),
 
-    "op_file_list" ->
-      "SELECT cast(n_nationkey as bigint) AS n_nationkey FROM nation ORDER BY n_nationkey",
+    Query("op_file_list", fileListOp, Some(
+      "SELECT cast(n_nationkey as bigint) AS n_nationkey FROM nation ORDER BY n_nationkey")),
 
-    "op_export_alias_roundtrip" ->
+    Query("op_export_alias_roundtrip", exportAliasRoundtrip, Some(
       """SELECT cast(n_nationkey as bigint) AS n_nationkey, n_name,
         |  cast(n_regionkey as bigint) AS n_regionkey
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
+        |FROM nation ORDER BY n_nationkey""".stripMargin)),
 
-    "op_raw_sql_handler" ->
+    Query("op_raw_sql_handler", rawSqlHandlerOp, Some(
       """SELECT c_mktsegment, n FROM (
         |  SELECT c_mktsegment, cast(count(*) as bigint) AS n
         |  FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment LIMIT 3
-        |) ORDER BY c_mktsegment""".stripMargin,
+        |) ORDER BY c_mktsegment""".stripMargin)),
 
-    "op_transform_df_arg" ->
+    Query("op_transform_df_arg", transformDfArg, Some(
       """WITH f AS (SELECT o_custkey, count(*) AS n FROM orders GROUP BY o_custkey HAVING count(*) >= 10)
         |SELECT c.c_mktsegment, cast(count(*) as bigint) AS n_cust
         |FROM customer c JOIN f ON c.c_custkey = f.o_custkey
-        |GROUP BY c.c_mktsegment ORDER BY c_mktsegment""".stripMargin,
+        |GROUP BY c.c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
 
-    "op_value_list" ->
-      "SELECT DISTINCT o_orderstatus FROM orders ORDER BY o_orderstatus",
+    Query("op_value_list", valueList, Some(
+      "SELECT DISTINCT o_orderstatus FROM orders ORDER BY o_orderstatus")),
 
-    "op_dataframe_op" ->
+    Query("op_dataframe_op", dataframeOp, Some(
       """SELECT l_returnflag, cast(count(*) as bigint) AS n,
         |  cast(sum(cast(round(l_extendedprice * 100) as bigint)) as bigint) AS price_cents
         |FROM lineitem WHERE l_discount > 0.05
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
-    "op_append" ->
+    Query("op_append", appendOp, Some(
       """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders WHERE o_orderkey % 3 = 0
         |UNION ALL
         |SELECT o_orderkey, NULL, NULL, o_totalprice FROM orders WHERE o_orderkey % 3 = 1
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin)),
 
     // the four-way SCD2 decision replayed from the same predicates:
     // untouched history, kept-current, closed-current, inserts
-    "op_scd2_merge" ->
+    Query("op_scd2_merge", scd2MergeOp, Some(
       """WITH cur AS (
         |  SELECT c_custkey, c_mktsegment, CAST(c_nationkey AS BIGINT) AS c_nationkey
         |  FROM customer WHERE c_custkey % 4 < 3),
@@ -1433,39 +1381,39 @@ object OperatorQueries {
         |    DATE '2021-06-01', CAST(NULL AS DATE), true
         |  FROM src WHERE c_custkey IN (SELECT c_custkey FROM changed)
         |     OR c_custkey NOT IN (SELECT c_custkey FROM cur)
-        |) scd ORDER BY c_custkey, valid_from, is_current""".stripMargin,
+        |) scd ORDER BY c_custkey, valid_from, is_current""".stripMargin)),
 
-    "op_merge_ignore" ->
+    Query("op_merge_ignore", mergeIgnore, Some(
       """WITH t AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders WHERE o_orderkey % 10 < 5),
         |     s AS (SELECT o_orderkey AS src_key, o_totalprice + 1000 AS src_price FROM orders WHERE o_orderkey % 10 BETWEEN 3 AND 7)
         |SELECT * FROM t
         |UNION ALL
         |SELECT s.src_key, NULL, NULL, s.src_price FROM s
         |WHERE NOT EXISTS (SELECT 1 FROM t WHERE t.o_orderkey = s.src_key)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin)),
 
-    "op_merge_update" ->
+    Query("op_merge_update", mergeUpdate, Some(
       """WITH t AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders WHERE o_orderkey % 10 < 5),
         |     s AS (SELECT o_orderkey AS src_key, o_totalprice + 1000 AS src_price FROM orders WHERE o_orderkey % 10 BETWEEN 3 AND 7)
         |SELECT coalesce(t.o_orderkey, s.src_key) AS o_orderkey,
         |  t.o_custkey, t.o_orderstatus,
         |  CASE WHEN s.src_key IS NOT NULL THEN s.src_price ELSE t.o_totalprice END AS o_totalprice
         |FROM t FULL OUTER JOIN s ON t.o_orderkey = s.src_key
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin)),
 
-    "op_merge_exception" ->
+    Query("op_merge_exception", mergeException, Some(
       """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders WHERE o_orderkey % 10 < 5
         |UNION ALL
         |SELECT o_orderkey, NULL, NULL, o_totalprice + 1000 FROM orders WHERE o_orderkey % 10 >= 5
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin)),
 
-    "op_load_append" ->
+    Query("op_load_append", loadAppend, Some(
       """SELECT n_nationkey, n_name, n_regionkey, copy_n FROM (
         |  SELECT *, cast(row_number() OVER (PARTITION BY n_nationkey ORDER BY n_name) as int) AS copy_n
         |  FROM (SELECT * FROM nation UNION ALL SELECT * FROM nation) u) t
-        |ORDER BY n_nationkey, copy_n""".stripMargin,
+        |ORDER BY n_nationkey, copy_n""".stripMargin)),
 
-    "op_percentiles" ->
+    Query("op_percentiles", percentiles, Some(
       """SELECT c_mktsegment,
         |  quantile_cont(cents, 0.25) AS p25,
         |  quantile_cont(cents, 0.5) AS p50,
@@ -1475,45 +1423,45 @@ object OperatorQueries {
         |  SELECT c_mktsegment, cast(round(o_totalprice * 100) as bigint) AS cents
         |  FROM orders JOIN customer ON o_custkey = c_custkey) t
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
+        |ORDER BY c_mktsegment""".stripMargin)),
 
-    "op_pivot" ->
+    Query("op_pivot", pivotOp, Some(
       """SELECT o_orderpriority,
         |  cast(count(*) FILTER (o_orderstatus = 'F') as bigint) AS n_f,
         |  cast(count(*) FILTER (o_orderstatus = 'O') as bigint) AS n_o,
         |  cast(count(*) FILTER (o_orderstatus = 'P') as bigint) AS n_p
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
 
-    "op_explode_tokens" ->
+    Query("op_explode_tokens", explodeTokens, Some(
       """SELECT tok, cast(count(*) as bigint) AS n, cast(count(DISTINCT doc_id) as bigint) AS n_docs
         |FROM (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok FROM documents)
-        |GROUP BY tok ORDER BY n DESC, tok LIMIT 20""".stripMargin,
+        |GROUP BY tok ORDER BY n DESC, tok LIMIT 20""".stripMargin)),
 
-    "op_check_column" ->
+    Query("op_check_column", checkColumnOp, Some(
       """SELECT cast(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) as double) AS l_quantity_null_check,
         |  cast(count(DISTINCT l_returnflag) as double) AS l_returnflag_distinct_check,
         |  cast(count(l_orderkey) - count(DISTINCT l_orderkey) as double) AS l_orderkey_unique_check,
         |  cast(min(l_quantity) as double) AS l_quantity_min,
         |  cast(max(l_quantity) as double) AS l_quantity_max
-        |FROM lineitem""".stripMargin,
+        |FROM lineitem""".stripMargin)),
 
-    "op_check_table" ->
+    Query("op_check_table", checkTableOp, Some(
       """SELECT cast(min(CASE WHEN l_quantity > 0 THEN 1 ELSE 0 END) as bigint) AS quantity_positive,
         |  cast(min(CASE WHEN l_extendedprice BETWEEN 900 AND 105000 THEN 1 ELSE 0 END) as bigint) AS price_in_range,
         |  cast(min(CASE WHEN l_discount <= 0.1 THEN 1 ELSE 0 END) as bigint) AS discount_small,
         |  cast(min(CASE WHEN l_returnflag IN ('A','N','R') THEN 1 ELSE 0 END) as bigint) AS flag_known
-        |FROM lineitem WHERE l_linestatus = 'F'""".stripMargin,
+        |FROM lineitem WHERE l_linestatus = 'F'""".stripMargin)),
 
-    "op_cleanup_lifecycle" ->
-      "SELECT cast(2 as bigint) AS tmp_before, cast(2 as bigint) AS dropped, cast(0 as bigint) AS remaining",
+    Query("op_cleanup_lifecycle", cleanupLifecycle, Some(
+      "SELECT cast(2 as bigint) AS tmp_before, cast(2 as bigint) AS dropped, cast(0 as bigint) AS remaining")),
 
-    "op_partitioned_write" ->
+    Query("op_partitioned_write", partitionedWrite, Some(
       """SELECT o_orderstatus, cast(count(*) as bigint) AS n,
         |  cast(sum(cast(round(o_totalprice * 100) as bigint)) as bigint) AS cents
         |FROM orders WHERE year(o_orderdate) = 1995
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
 
-    "op_partition_overwrite" ->
+    Query("op_partition_overwrite", partitionOverwrite, Some(
       """WITH t AS (
         |  SELECT cast(year(o_orderdate) AS int) AS o_year,
         |    CASE WHEN year(o_orderdate) = 1995 THEN o_totalprice * 2
@@ -1521,6 +1469,6 @@ object OperatorQueries {
         |  FROM orders)
         |SELECT o_year, cast(count(*) as bigint) AS n,
         |  cast(sum(cast(round(p * 100) as bigint)) as bigint) AS cents
-        |FROM t GROUP BY o_year ORDER BY o_year""".stripMargin,
+        |FROM t GROUP BY o_year ORDER BY o_year""".stripMargin)),
   )
 }

@@ -330,7 +330,7 @@ object PipelineQueries {
 
   /** The UNSTAGED incremental keep computation over ANY (doc_id,
     * __bucket) relation — the full two-batch run in one invocation,
-    * used by the production-hash bench twin ([[benchOnlyQueries]]) and
+    * used by the production-hash bench twin (`p_dedup_incremental_fast`) and
     * as the staged path's equality witness in PipelineSpec. */
   private[graft] def incrementalKeepFromBuckets(
       spark: SparkSession, buckets: DataFrame): DataFrame = {
@@ -3467,208 +3467,6 @@ object PipelineQueries {
       .orderBy("lang")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p_pipeline_e2e" -> (pipelineE2e _),
-    "p_pipeline_full" -> (pipelineFull _),
-    "p_dedup_exact" -> (dedupExact _),
-    "p_dedup_minhash" -> (dedupMinHash _),
-    "p_dedup_minhash_keep" -> (dedupMinHashKeep _),
-    "p_dedup_minhash_portable" -> (dedupMinHashPortable _),
-    "p_dedup_minhash_incremental" -> (dedupMinHashIncremental _),
-    "p_dedup_simhash_portable" -> (dedupSimHashPortable _),
-    "p_sketch_vocab" -> (sketchVocab _),
-    "p_sketch_overlap" -> (sketchOverlap _),
-    "p_sketch_quantiles" -> (sketchQuantiles _),
-    "p_sketch_hll" -> (sketchHll _),
-    "p_profile_approx" -> (profileApproxQ _),
-    "p_sketch_hll_rollup" -> (sketchHllRollup _),
-    "p_boilerplate_strip" -> (boilerplateStrip _),
-    "p_sketch_cms" -> (sketchCms _),
-    "p_join_cardinality" -> (joinCardinality _),
-    "p_dedup_cc" -> (dedupCcKeep _),
-    "p_dedup_cc_labels" -> (dedupCcLabels _),
-    "p_dedup_cc_longest" -> (dedupCcLongest _),
-    "p_dedup_cluster_sizes" -> (dedupClusterSizes _),
-    "p_dedup_report" -> (dedupReport _),
-    "p_dedup_recall_canary" -> (dedupRecallCanary _),
-    "p_decontaminate" -> (decontaminate _),
-    "p_decontaminate_bloom" -> (decontaminateBloom _),
-    "p_dedup_paragraph" -> (dedupParagraph _),
-    "p_dedup_simhash_keep" -> (dedupSimHashKeep _),
-    "p_dedup_simhash_pairs" -> (dedupSimHashPairs _),
-    "p_dedup_ngram" -> (dedupNgram _),
-    "p_dedup_embedding" -> (dedupEmbedding _),
-    "p_dedup_semantic" -> (dedupSemantic _),
-    "p_dedup_semantic_exhaustive" -> (dedupSemanticExhaustive _),
-    "p_ann_bruteforce" -> (annBruteForce _),
-    "p_decontaminate_semantic" -> (decontaminateSemantic _),
-    "p_tar_shards" -> (tarShardsQ _),
-    "p_ann_ivf_exhaustive" -> (annIvfExhaustive _),
-    "p_ann_ivf" -> (annIvf _),
-    "p_ann_index_persist" -> (annIndexPersist _),
-    "p_ann_pq" -> (annPq _),
-    "p_ann_ivfpq" -> (annIvfPq _),
-    "p_ann_filtered" -> (annFiltered _),
-    "p_ann_pq_rerank" -> (annPqRerank _),
-    "p_embed_quantize" -> (embedQuantize _),
-    "p_ann_quantized" -> (annQuantized _),
-    "p_ann_rerank" -> (annRerank _),
-    "p_text_quality" -> (textQuality _),
-    "p_quality_filter" -> (qualityFilterQ _),
-    "p_text_line_dedup" -> (textLineDedup _),
-    "p_text_nfc" -> (textNfcQ _),
-    "p_lm_score" -> (lmScoreQ _),
-    "p_ccnet_buckets" -> (ccnetBucketsQ _),
-    "p_source_overlap" -> (sourceOverlapQ _),
-    "p_dup_span" -> (dupSpanQ _),
-    "p_dedup_span_scrub" -> (dedupSpanScrub _),
-    "p_c4_line_filter" -> (c4LineFilterQ _),
-    "p_embed_profile" -> (embedProfileQ _),
-    "p_decontaminate_ngram" -> (decontaminateNgram _),
-    "p_domain_stats" -> (domainStatsQ _),
-    "p_embed_centroids" -> (embedCentroids _),
-    "p_embed_kmeans" -> (embedKmeans _),
-    "p_sample_cluster" -> (sampleCluster _),
-    "p_url_canonical" -> (urlCanonical _),
-    "p_dedup_url" -> (dedupUrl _),
-    "p_url_policy" -> (urlPolicyQ _),
-    "p_dedup_url_best" -> (dedupUrlBest _),
-    "p_tfidf_terms" -> (tfidfTerms _),
-    "p_dsir_features" -> (dsirFeatures _),
-    "p_dsir_weights" -> (dsirWeights _),
-    "p_dedup_image" -> (dedupImage _),
-    "p_dedup_image_px" -> (dedupImagePx _),
-    "p_dedup_png_px" -> (dedupPngPx _),
-    "p_dedup_audio_px" -> (dedupAudioPx _),
-    "p_dedup_video_px" -> (dedupVideoPx _),
-    "p_dedup_jpeg_px" -> (dedupJpegPx _),
-    "p_dedup_jpeg_color" -> (dedupJpegColor _),
-    "p_dedup_jpeg_progressive" -> (dedupJpegProgressive _),
-    "p_media_resize_px" -> (mediaResizePx _),
-    "p_audio_resample_px" -> (audioResamplePx _),
-    "p_zorder_layout" -> (zorderLayout _),
-    "p_zorder_prune" -> (zorderPrune _),
-    "p_hybrid_search" -> (hybridSearch _),
-    "p_dedup_media" -> (dedupMedia _),
-    "p_bm25_search" -> (bm25Search _),
-    "p_token_quantiles" -> (tokenQuantiles _),
-    "p_cluster_report" -> (clusterReport _),
-    "p_quality_by_lang" -> (qualityByLang _),
-    "p_bpe_learn" -> (bpeLearn _),
-    "p_bpe_tokenize" -> (bpeTokenize _),
-    "p_dedup_edit" -> (dedupEdit _),
-    "p_inverted_index" -> (invertedIndexQ _),
-    "p_snapshot_diff" -> (snapshotDiffQ _),
-    "p_length_histogram" -> (lengthHistogramQ _),
-    "p_pack_bpe" -> (packBpe _),
-    "p_domain_rank" -> (domainRank _),
-    "p_domain_hits" -> (domainHits _),
-    "p_domain_components" -> (domainComponents _),
-    "p_pipeline_curate" -> (pipelineCurate _),
-    "p_dedup_incremental" -> (dedupIncremental _),
-    "p_top_tokens" -> (topTokens _),
-    "p_top_tokens_scale" -> (topTokensScale _),
-    "p_pack_sequences" -> (packSequences _),
-    "p_pack_materialize" -> (packMaterialize _),
-    "p_sample_stratified" -> (sampleStratified _),
-    "p_split_train_val" -> (splitTrainVal _),
-    "p_sample_token_budget" -> (sampleTokenBudget _),
-    "p_sample_mix_weighted" -> (sampleMixWeighted _),
-    "p_sample_temperature" -> (sampleTemperature _),
-    "p_sample_epochs" -> (sampleEpochs _),
-    "p_quality_classifier" -> (qualityClassifier _),
-    "p_classifier_eval" -> (classifierEval _),
-    "p_shard_manifest" -> (shardManifest _),
-    "p_pipeline_release" -> (pipelineRelease _),
-    "p_sample_cluster_budget" -> (sampleClusterBudget _),
-    "p_vocab_coverage" -> (vocabCoverageQ _),
-    "p_corpus_report" -> (corpusReportQ _),
-    "p_corpus_drift" -> (corpusDriftQ _),
-    "p_shuffle_order" -> (shuffleOrder _),
-    "p_text_lang_fingerprint" -> (textLangFingerprint _),
-    "p_text_clean" -> (textClean _),
-    "p_pii_scrub" -> (piiScrub _),
-    "p_pii_report" -> (piiReport _),
-    "p_text_html_strip" -> (textHtmlStrip _),
-    "p_fix_mojibake" -> (fixMojibakeQ _),
-    "p_chunk_documents" -> (chunkDocuments _),
-    "p_url_filter" -> (urlFilter _),
-    "p_event_features" -> (eventFeatures _),
-    "p_asof_join" -> (asofJoin _),
-    "p_asof_forward" -> (asofForward _),
-    "p_range_join" -> (rangeJoin _),
-    "p_interval_join" -> (intervalJoin _),
-    "p_multimodal" -> (multimodal _),
-    "p_media_resize" -> (mediaResize _),
-    "p_frame_sample" -> (frameSample _),
-  )
-
-  /** Bench-only variants (NOT in the driver's correctness contract):
-    * each runs the organic-corpus / production-parameter form of a code
-    * path whose designed-corpus sibling is hash-matched in [[queries]],
-    * and each is genuinely un-oracle-able in DuckDB —
-    *  - `p_dedup_minhash_scale`: banding over fused xxhash64 MinHash
-    *    signatures (not DuckDB-computable); `p_dedup_minhash` /
-    *    `p_dedup_minhash_keep` hash-match the identical shingle →
-    *    signature → band → bucket-min → verify → keep chain, and
-    *    `p_dedup_minhash_portable` hash-matches the same banding
-    *    ARITHMETIC on the organic corpus via portable md5 min-hashes
-    *    (the round-7 verdict's preferred closure).
-    *  - `p_dedup_simhash`: 64-bit xxhash64 sign-sums;
-    *    `p_dedup_simhash_keep` + the full pair set
-    *    `p_dedup_simhash_pairs` hash-match the same machinery, and
-    *    `p_dedup_simhash_portable` hash-matches the sign-sum/banding/
-    *    Hamming arithmetic on the organic corpus via md5 token bits.
-    *  - `p_ann_ivf_free` (nProbe = 4, order-free build): probed-cell
-    *    choice depends on centroid bits produced by a partition-order FP
-    *    partial aggregate ([[Similarity.lloydRefine]]'s VecSumAgg), so no
-    *    engine-external replay can exist for THIS build. The oracled
-    *    `p_ann_ivf` runs the same probe machinery on the deterministic
-    *    kmeansFit index (every round, the probed-cell choice, and the
-    *    in-cell ranking replayed — a fully hash-matched APPROXIMATE
-    *    search); `p_ann_ivf_exhaustive` additionally pins the order-free
-    *    build+search at nProbe = nCentroids, and recall ≥ 7/10 at
-    *    nProbe = 4 is pinned in PipelineSpec.
-    * They stay in the benchmark suite and the scale curve so their
-    * wall-clocks and linearity remain tracked per round. */
-  val benchOnlyQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p_dedup_minhash_scale" -> (dedupMinHashScale _),
-    "p_dedup_simhash" -> (dedupSimHash _),
-    "p_ann_ivf_free" -> (annIvfFree _),
-    // the FRESH CC pair mine (bypasses the staged artifact the four
-    // CC-family contract rows share) — keeps the mining's wall-clock
-    // and scale-curve linearity independently tracked now that
-    // p_dedup_cc & co. read the once-per-app staged pairs; count-shaped
-    // output so the noop sink can't prune the verify join. Triangulated
-    // by the contract rows, which hash-match the same pairs' closure.
-    // eager in-lambda materialization (write + read-back of the small
-    // pair relation) so the persisted shingle sets release HERE, not at
-    // the harness's clearCache — repeated bench/scale-curve invocations
-    // leave no cached blocks behind
-    "p_cc_pair_mining" -> ((s: SparkSession, dir: String) => {
-      val (_, pairs, sets) = mineCcCorpusAndPairs(s, dir)
-      val out = Fixtures.scratch("graft-ccmine-")
-      pairs.orderBy("id_a", "id_b")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
-      sets.unpersist()
-      s.read.parquet(out).orderBy("id_a", "id_b")
-    }),
-    // the incremental dedup run over the PRODUCTION (fused xxhash64)
-    // banding — identical run shape to the certified portable-md5 row
-    // (shared incrementalKeepFromBuckets), different hash family, so
-    // its keep-set has no external replay; prices what the certified
-    // twin's md5 arithmetic costs vs the engine path
-    "p_dedup_incremental_fast" -> ((s: SparkSession, dir: String) => {
-      incrementalKeepFromBuckets(s, graft.functions.Dedup.bandBuckets(
-        docsWithNearDups(s, dir), "doc_id", "text",
-        shingleSize = 3, numHashes = 16, bands = 8).cache())
-    }),
-    // the unstaged full two-batch exact-dedup run (store build + dump):
-    // the contract row p_dedup_incremental stages batch 0, this twin
-    // keeps the full-run pricing on the board
-    "p_dedup_incremental_fresh" -> (dedupIncrementalFresh _),
-  )
-
   /** Word-3-shingle set expression shared by the minhash oracle. */
   private val shingleSetsSql =
     """SELECT doc_id,
@@ -4162,14 +3960,76 @@ object PipelineQueries {
       |WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.98
       |ORDER BY id_a, id_b""".stripMargin
 
-  /** DuckDB oracles, one per [[queries]] entry — the declared contract is
-    * fully oracled (the three genuinely un-oracle-able organic-corpus
-    * variants were moved to [[benchOnlyQueries]], each triangulated by a
-    * hash-matched sibling here; see that map's scaladoc). */
-  val oracleSql: Map[String, String] = Map(
+  /** The pipeline family, each row with its DuckDB oracle. The six rows
+    * with `oracle = None` come first: they are bench-only, outside the
+    * driver's correctness contract. Each runs the organic-corpus /
+    * production-parameter form of a code path whose designed-corpus
+    * sibling is hash-matched below, and each is genuinely un-oracle-able
+    * in DuckDB —
+    *  - `p_dedup_minhash_scale`: banding over fused xxhash64 MinHash
+    *    signatures (not DuckDB-computable); `p_dedup_minhash` /
+    *    `p_dedup_minhash_keep` hash-match the identical shingle →
+    *    signature → band → bucket-min → verify → keep chain, and
+    *    `p_dedup_minhash_portable` hash-matches the same banding
+    *    ARITHMETIC on the organic corpus via portable md5 min-hashes.
+    *  - `p_dedup_simhash`: 64-bit xxhash64 sign-sums;
+    *    `p_dedup_simhash_keep` + the full pair set
+    *    `p_dedup_simhash_pairs` hash-match the same machinery, and
+    *    `p_dedup_simhash_portable` hash-matches the sign-sum/banding/
+    *    Hamming arithmetic on the organic corpus via md5 token bits.
+    *  - `p_ann_ivf_free` (nProbe = 4, order-free build): probed-cell
+    *    choice depends on centroid bits produced by a partition-order FP
+    *    partial aggregate ([[Similarity.lloydRefine]]'s VecSumAgg), so no
+    *    engine-external replay can exist for THIS build. The oracled
+    *    `p_ann_ivf` runs the same probe machinery on the deterministic
+    *    kmeansFit index (every round, the probed-cell choice, and the
+    *    in-cell ranking replayed — a fully hash-matched APPROXIMATE
+    *    search); `p_ann_ivf_exhaustive` additionally pins the order-free
+    *    build+search at nProbe = nCentroids, and recall ≥ 7/10 at
+    *    nProbe = 4 is pinned in PipelineSpec.
+    *  - `p_cc_pair_mining`, `p_dedup_incremental_fast` and
+    *    `p_dedup_incremental_fresh`: see their comments.
+    * Bench still times them, so their wall-clocks (and, for the rows with
+    * `curve = true`, their linearity) stay tracked. */
+  val all: Seq[Query] = Seq(
+    Query("p_dedup_minhash_scale", dedupMinHashScale, None, curve = true),
+    Query("p_dedup_simhash", dedupSimHash, None),
+    Query("p_ann_ivf_free", annIvfFree, None, curve = true),
+    // the FRESH CC pair mine (bypasses the staged artifact the four
+    // CC-family contract rows share) — keeps the mining's wall-clock
+    // and scale-curve linearity independently tracked now that
+    // p_dedup_cc & co. read the once-per-app staged pairs; count-shaped
+    // output so the noop sink can't prune the verify join. Triangulated
+    // by the contract rows, which hash-match the same pairs' closure.
+    // eager in-lambda materialization (write + read-back of the small
+    // pair relation) so the persisted shingle sets release HERE, not at
+    // the harness's clearCache — repeated bench/scale-curve invocations
+    // leave no cached blocks behind
+    Query("p_cc_pair_mining", (s, dir) => {
+      val (_, pairs, sets) = mineCcCorpusAndPairs(s, dir)
+      val out = Fixtures.scratch("graft-ccmine-")
+      pairs.orderBy("id_a", "id_b")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
+      sets.unpersist()
+      s.read.parquet(out).orderBy("id_a", "id_b")
+    }, None, curve = true),
+    // the incremental dedup run over the PRODUCTION (fused xxhash64)
+    // banding — identical run shape to the certified portable-md5 row
+    // (shared incrementalKeepFromBuckets), different hash family, so
+    // its keep-set has no external replay; prices what the certified
+    // twin's md5 arithmetic costs vs the engine path
+    Query("p_dedup_incremental_fast", (s, dir) =>
+      incrementalKeepFromBuckets(s, graft.functions.Dedup.bandBuckets(
+        docsWithNearDups(s, dir), "doc_id", "text",
+        shingleSize = 3, numHashes = 16, bands = 8).cache()), None),
+    // the unstaged full two-batch exact-dedup run (store build + dump):
+    // the contract row p_dedup_incremental stages batch 0, this twin
+    // keeps the full-run pricing on the board
+    Query("p_dedup_incremental_fresh", dedupIncrementalFresh, None),
+
     // nProbe = nCentroids ⇒ exhaustive search ⇒ identical to brute force,
     // so the IVF path shares the brute-force oracle verbatim.
-    "p_ann_ivf_exhaustive" ->
+    Query("p_ann_ivf_exhaustive", annIvfExhaustive, Some(
       """WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 5),
         |s AS (SELECT q.qid, e.vec_id,
         |        list_cosine_similarity(q.qv, e.embedding) AS cos
@@ -4179,19 +4039,19 @@ object PipelineQueries {
         |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rank
         |  FROM s) t
         |WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
+        |ORDER BY qid, rank""".stripMargin)),
 
-    "p_ann_pq" ->
-      (s"""${pqWithSql(m = 4, subDim = 16, k = 16, rounds = 2, blockSize = 16)},
+    Query("p_ann_pq", annPq, curve = true, oracle = Some(
+      s"""${pqWithSql(m = 4, subDim = 16, k = 16, rounds = 2, blockSize = 16)},
          |ranked AS (
          |  SELECT qid, vec_id, adc,
          |    row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) AS rank
          |  FROM sc)
          |SELECT qid, vec_id, adc, CAST(rank AS BIGINT) AS rank
-         |FROM ranked WHERE rank <= 10 ORDER BY qid, rank""".stripMargin),
+         |FROM ranked WHERE rank <= 10 ORDER BY qid, rank""".stripMargin)),
 
-    "p_ann_pq_rerank" ->
-      (s"""${pqWithSql(m = 4, subDim = 16, k = 16, rounds = 2, blockSize = 16)},
+    Query("p_ann_pq_rerank", annPqRerank, Some(
+      s"""${pqWithSql(m = 4, subDim = 16, k = 16, rounds = 2, blockSize = 16)},
          |cand AS (
          |  SELECT qid, vec_id FROM (
          |    SELECT qid, vec_id,
@@ -4206,22 +4066,22 @@ object PipelineQueries {
          |    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rank
          |  FROM rr)
          |SELECT qid, vec_id, cosine, CAST(rank AS BIGINT) AS rank
-         |FROM ranked WHERE rank <= 10 ORDER BY qid, rank""".stripMargin),
+         |FROM ranked WHERE rank <= 10 ORDER BY qid, rank""".stripMargin)),
 
-    "p_ann_ivfpq" ->
-      (s"""${ivfPqWithSql(nCells = 16, coarseRounds = 2, nProbe = 4,
+    Query("p_ann_ivfpq", annIvfPq, curve = true, oracle = Some(
+      s"""${ivfPqWithSql(nCells = 16, coarseRounds = 2, nProbe = 4,
                m = 4, subDim = 16, k = 16, rounds = 2, blockSize = 16)},
          |ranked AS (
          |  SELECT qid, vec_id, adc,
          |    row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) AS rank
          |  FROM sc)
          |SELECT qid, vec_id, adc, CAST(rank AS BIGINT) AS rank
-         |FROM ranked WHERE rank <= 10 ORDER BY qid, rank""".stripMargin),
+         |FROM ranked WHERE rank <= 10 ORDER BY qid, rank""".stripMargin)),
 
     // the identical index build + probe replay as p_ann_ivf, with the
     // member predicate applied post-probe — one index, any filter
-    "p_ann_filtered" ->
-      (s"""${kmeansWithSql(k = 16, rounds = 2, blockSize = 16)},
+    Query("p_ann_filtered", annFiltered, Some(
+      s"""${kmeansWithSql(k = 16, rounds = 2, blockSize = 16)},
         |probes AS (
         |  SELECT qid, qv, cell FROM (
         |    SELECT q.vec_id AS qid, q.v AS qv, c.cid AS cell,
@@ -4236,18 +4096,18 @@ object PipelineQueries {
         |  FROM probes p JOIN a2 a ON p.cell = a.cid
         |  WHERE a.vec_id % 7 <> 0)
         |SELECT qid, vec_id, cast(rank AS bigint) AS rank FROM cand
-        |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin),
+        |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin)),
 
-    "p_ann_ivf" -> annIvfOracleSql,
+    Query("p_ann_ivf", annIvf, curve = true, oracle = Some(annIvfOracleSql)),
 
     // bit-identical lifecycle: the persisted-artifact search runs the
     // SAME probe/score/rank stage over parquet-round-tripped doubles,
     // so the in-memory index's oracle certifies the artifact path too
-    "p_ann_index_persist" -> annIvfOracleSql,
+    Query("p_ann_index_persist", annIndexPersist, Some(annIvfOracleSql)),
 
-    "p_dedup_minhash" -> keepFirstJaccardOracle(shingleSetsSql, 0.6),
+    Query("p_dedup_minhash", dedupMinHash, Some(keepFirstJaccardOracle(shingleSetsSql, 0.6))),
 
-    "p_dedup_simhash_portable" ->
+    Query("p_dedup_simhash_portable", dedupSimHashPortable, curve = true, oracle = Some(
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
         |  UNION ALL
@@ -4285,9 +4145,9 @@ object PipelineQueries {
         |                    strpos('0123456789abcdef', substr(y.sim, i, 1)) - 1))),
         |    (acc, h) -> acc + h) <= 3)
         |SELECT c.doc_id FROM corpus c LEFT JOIN losers l ON c.doc_id = l.doc_id
-        |WHERE l.doc_id IS NULL ORDER BY c.doc_id""".stripMargin,
+        |WHERE l.doc_id IS NULL ORDER BY c.doc_id""".stripMargin)),
 
-    "p_dedup_minhash_portable" ->
+    Query("p_dedup_minhash_portable", dedupMinHashPortable, curve = true, oracle = Some(
       s"""WITH corpus AS (
          |  SELECT doc_id, text FROM documents
          |  UNION ALL
@@ -4315,11 +4175,11 @@ object PipelineQueries {
          |  WHERE len(list_intersect(x.s, y.s))::double
          |        / (len(x.s) + len(y.s) - len(list_intersect(x.s, y.s))) >= 0.6)
          |SELECT c.doc_id FROM corpus c LEFT JOIN losers l ON c.doc_id = l.doc_id
-         |WHERE l.doc_id IS NULL ORDER BY c.doc_id""".stripMargin,
+         |WHERE l.doc_id IS NULL ORDER BY c.doc_id""".stripMargin)),
 
     // the full incremental run replayed: both batches' md5 signatures,
     // the kept-doc fingerprint store, cross-batch and within-batch drops
-    "p_dedup_minhash_incremental" ->
+    Query("p_dedup_minhash_incremental", dedupMinHashIncremental, curve = true, oracle = Some(
       s"""WITH corpus AS (
          |  SELECT doc_id, text FROM documents
          |  UNION ALL
@@ -4355,9 +4215,9 @@ object PipelineQueries {
          |SELECT doc_id, cast(0 as bigint) AS batch FROM kept0
          |UNION ALL
          |SELECT doc_id, cast(1 as bigint) AS batch FROM kept1
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin)),
 
-    "p_dedup_recall_canary" ->
+    Query("p_dedup_recall_canary", dedupRecallCanary, Some(
       s"""WITH corpus AS (
          |  SELECT doc_id, text FROM documents
          |  UNION ALL
@@ -4374,23 +4234,23 @@ object PipelineQueries {
          |  cast((SELECT count(*) FROM documents WHERE doc_id % 11 = 0) AS bigint) AS n_canaries,
          |  cast((SELECT count(*) FROM qualified) AS bigint) AS n_caught,
          |  (SELECT count(*) FROM qualified)::double
-         |    / (SELECT count(*) FROM documents WHERE doc_id % 11 = 0) AS recall""".stripMargin,
+         |    / (SELECT count(*) FROM documents WHERE doc_id % 11 = 0) AS recall""".stripMargin)),
 
-    "p_dedup_ngram" -> keepFirstJaccardOracle(ngramSetsSql, 0.55),
+    Query("p_dedup_ngram", dedupNgram, Some(keepFirstJaccardOracle(ngramSetsSql, 0.55))),
 
     // Keep-set is a pure function of the constructed mutation map (see
     // dedupSimHashKeep): every base doc survives except doc_id % 15 = 0,
     // whose copy took the lower id doc_id - 100000.
-    "p_dedup_simhash_keep" ->
+    Query("p_dedup_simhash_keep", dedupSimHashKeep, Some(
       """SELECT CASE WHEN doc_id % 3 = 0 AND doc_id % 5 = 0
         |            THEN doc_id - 100000 ELSE doc_id END AS doc_id
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // Pair set is a pure function of the same mutation map (see
     // dedupSimHashPairs): one (base, copy) pair at hamming 0 per
     // doc_id % 3 = 0, copy id = doc_id - 100000 when doc_id % 15 = 0
     // (lower than its base) else doc_id + 100000.
-    "p_dedup_simhash_pairs" ->
+    Query("p_dedup_simhash_pairs", dedupSimHashPairs, Some(
       """SELECT LEAST(doc_id, copy_id) AS id_a,
         |       GREATEST(doc_id, copy_id) AS id_b,
         |       0 AS hamming
@@ -4398,43 +4258,43 @@ object PipelineQueries {
         |        CASE WHEN doc_id % 5 = 0 THEN doc_id - 100000
         |             ELSE doc_id + 100000 END AS copy_id
         |      FROM documents WHERE doc_id % 3 = 0)
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin)),
 
     // Same mutation map as the simhash keep-set (see dedupMinHashKeep:
     // token tagging makes the pair structure exact by construction).
-    "p_dedup_minhash_keep" ->
+    Query("p_dedup_minhash_keep", dedupMinHashKeep, Some(
       """SELECT CASE WHEN doc_id % 3 = 0 AND doc_id % 5 = 0
         |            THEN doc_id - 100000 ELSE doc_id END AS doc_id
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // Chains collapse to their base: every constructed end/mid is in a
     // component whose minimum is the base id (see dedupCcKeep).
-    "p_dedup_cc" ->
-      "SELECT doc_id FROM documents ORDER BY doc_id",
+    Query("p_dedup_cc", dedupCcKeep, curve = true, oracle = Some(
+      "SELECT doc_id FROM documents ORDER BY doc_id")),
 
     // The label RELATION over the same chain corpus: ends/mids label
     // their base; everything else labels itself (see dedupCcLabels).
     // mutation-map oracle: the mid (B+400000) strictly out-tokens its
     // chain-mates, so quality-aware keep = singletons + every mid
-    "p_dedup_cc_longest" ->
+    Query("p_dedup_cc_longest", dedupCcLongest, Some(
       """SELECT doc_id FROM (
         |  SELECT doc_id FROM documents WHERE doc_id % 9 <> 0
         |  UNION ALL
         |  SELECT doc_id + 400000 AS doc_id FROM documents WHERE doc_id % 9 = 0)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "p_dedup_cc_labels" ->
+    Query("p_dedup_cc_labels", dedupCcLabels, Some(
       """WITH corpus AS (
         |  SELECT doc_id, doc_id AS label FROM documents
         |  UNION ALL
         |  SELECT doc_id + 300000, doc_id FROM documents WHERE doc_id % 9 = 0
         |  UNION ALL
         |  SELECT doc_id + 400000, doc_id FROM documents WHERE doc_id % 9 = 0)
-        |SELECT doc_id, label FROM corpus ORDER BY doc_id""".stripMargin,
+        |SELECT doc_id, label FROM corpus ORDER BY doc_id""".stripMargin)),
 
     // label multiset from the proven cc_labels mutation map, rolled into
     // a size histogram
-    "p_dedup_cluster_sizes" ->
+    Query("p_dedup_cluster_sizes", dedupClusterSizes, Some(
       """WITH corpus AS (
         |  SELECT doc_id, doc_id AS label FROM documents
         |  UNION ALL
@@ -4444,11 +4304,11 @@ object PipelineQueries {
         |s AS (SELECT label, count(*) AS sz FROM corpus GROUP BY label)
         |SELECT cast(sz AS bigint) AS cluster_size,
         |  cast(count(*) AS bigint) AS n_clusters
-        |FROM s GROUP BY sz ORDER BY 1""".stripMargin,
+        |FROM s GROUP BY sz ORDER BY 1""".stripMargin)),
 
     // keep-min-per-text survivors rolled up per source (the
     // p_dedup_exact contract), one exact-integer division
-    "p_dedup_report" ->
+    Query("p_dedup_report", dedupReport, Some(
       """WITH u AS (
         |  SELECT doc_id, text, source FROM documents
         |  UNION ALL SELECT doc_id + 100000, text, source FROM documents),
@@ -4459,19 +4319,19 @@ object PipelineQueries {
         |SELECT source, cast(count(*) AS bigint) AS n_docs,
         |  cast(sum(kept) AS bigint) AS n_unique,
         |  cast(count(*) - sum(kept) AS double) / count(*) AS dup_rate
-        |FROM sel GROUP BY source ORDER BY source""".stripMargin,
+        |FROM sel GROUP BY source ORDER BY source""".stripMargin)),
 
     // Bloom prefilter changes the plan, never the result: text-equality
     // anti-join semantics (see Dedup.bloomDecontaminate).
-    "p_decontaminate_bloom" ->
+    Query("p_decontaminate_bloom", decontaminateBloom, curve = true, oracle = Some(
       """SELECT d.doc_id FROM documents d
         |WHERE NOT EXISTS (SELECT 1 FROM documents r
         |                  WHERE r.doc_id % 7 = 0 AND r.text = d.text)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // First occurrence by (doc_id, pos) survives per distinct paragraph
     // string; docs reassemble from survivors in original order.
-    "p_dedup_paragraph" ->
+    Query("p_dedup_paragraph", dedupParagraph, curve = true, oracle = Some(
       """WITH corpus AS (
         |  SELECT doc_id, text ||
         |    CASE WHEN doc_id % 5 = 0 THEN e'\n\nsubscribe to our newsletter zz' ELSE '' END ||
@@ -4488,9 +4348,9 @@ object PipelineQueries {
         |FROM corpus c LEFT JOIN (
         |  SELECT doc_id, string_agg(para, e'\n\n' ORDER BY pos) AS text
         |  FROM k WHERE rn = 1 GROUP BY doc_id) r USING (doc_id)
-        |ORDER BY c.doc_id""".stripMargin,
+        |ORDER BY c.doc_id""".stripMargin)),
 
-    "p_decontaminate" ->
+    Query("p_decontaminate", decontaminate, curve = true, oracle = Some(
       """WITH mk AS (
         |  SELECT doc_id, list_distinct(
         |    CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
@@ -4501,23 +4361,23 @@ object PipelineQueries {
         |SELECT l.doc_id AS id_a, r.ref_id AS id_b
         |FROM l JOIN r ON len(list_intersect(l.s, r.s))::double
         |  / (len(l.s) + len(r.s) - len(list_intersect(l.s, r.s))) >= 0.6
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin)),
 
-    "p_dedup_embedding" -> embeddingPairsOracle,
+    Query("p_dedup_embedding", dedupEmbedding, curve = true, oracle = Some(embeddingPairsOracle)),
 
     // One k-means cell ⇒ cluster-then-prune ≡ exact all-pairs cosine:
     // the SemDeDup path shares the embedding-pairs oracle verbatim.
-    "p_dedup_semantic_exhaustive" -> embeddingPairsOracle,
+    Query("p_dedup_semantic_exhaustive", dedupSemanticExhaustive, Some(embeddingPairsOracle)),
 
     // Keep-set is a pure function of the exact-copy construction: every
     // copy (vec_id + 100000, identical vector ⇒ provably identical cell)
     // pairs with its base at cosine 1.0 and is dropped by keep-first;
     // no natural pair reaches 0.98 (closest: 0.513).
-    "p_dedup_semantic" ->
-      "SELECT vec_id FROM embeddings ORDER BY vec_id",
+    Query("p_dedup_semantic", dedupSemantic, curve = true, oracle = Some(
+      "SELECT vec_id FROM embeddings ORDER BY vec_id")),
 
-    "p_text_lang_fingerprint" ->
-      (s"""WITH toks AS (
+    Query("p_text_lang_fingerprint", textLangFingerprint, Some(
+      s"""WITH toks AS (
         |  SELECT doc_id, text, string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents),
         |sc AS (
         |  $langScoresSql),
@@ -4532,10 +4392,10 @@ object PipelineQueries {
         |SELECT b.doc_id, CASE WHEN b.hits <= 0 THEN 'und' ELSE b.lang END AS lang_pred,
         |  cast(f.n_same_fp as bigint) AS n_same_fp
         |FROM best b JOIN fp f ON b.doc_id = f.doc_id
-        |WHERE b.rn = 1 ORDER BY b.doc_id""".stripMargin),
+        |WHERE b.rn = 1 ORDER BY b.doc_id""".stripMargin)),
 
-    "p_text_clean" ->
-      (s"""WITH decorated AS (
+    Query("p_text_clean", textClean, Some(
+      s"""WITH decorated AS (
         |  $decoratedSql),
         |toked AS (
         |  SELECT doc_id, text, string_split_regex(lower(trim(text)), '\\s+') AS toks FROM decorated)
@@ -4552,14 +4412,14 @@ object PipelineQueries {
         |         list_transform(range(1, len(toks)-1), i -> array_to_string(toks[i:i+2], ' '))))::double
         |         / greatest(len(toks) - 2, 0) END AS rep3
         |FROM toked
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin)),
 
-    "p_url_canonical" ->
-      (s"""WITH $urlCanonSql
-        |SELECT doc_id, url, canon_url FROM canon ORDER BY doc_id""".stripMargin),
+    Query("p_url_canonical", urlCanonical, Some(
+      s"""WITH $urlCanonSql
+        |SELECT doc_id, url, canon_url FROM canon ORDER BY doc_id""".stripMargin)),
 
     // fixture construction + host/ext parse + every policy rule replayed
-    "p_url_policy" ->
+    Query("p_url_policy", urlPolicyQ, Some(
       """WITH uc AS (
         |  SELECT doc_id, 'https://' ||
         |    CASE WHEN doc_id % 5 = 0 THEN 'news' || cast(doc_id % 7 as varchar) || '.example.com'
@@ -4584,18 +4444,18 @@ object PipelineQueries {
         |  NOT (host IN ('spam.casino.biz', 'malware.example.net')
         |    OR host LIKE '%casino.biz'
         |    OR ext IN ('exe', 'jpg', 'zip')) AS keep
-        |FROM parsed ORDER BY doc_id""".stripMargin,
+        |FROM parsed ORDER BY doc_id""".stripMargin)),
 
-    "p_dedup_url" ->
-      (s"""WITH $urlCanonSql
+    Query("p_dedup_url", dedupUrl, Some(
+      s"""WITH $urlCanonSql
         |SELECT doc_id, canon_url FROM (
         |  SELECT doc_id, canon_url,
         |    min(doc_id) OVER (PARTITION BY canon_url) AS m
         |  FROM canon) t
-        |WHERE doc_id = m ORDER BY doc_id""".stripMargin),
+        |WHERE doc_id = m ORDER BY doc_id""".stripMargin)),
 
-    "p_dedup_url_best" ->
-      (s"""WITH $urlCanonSql,
+    Query("p_dedup_url_best", dedupUrlBest, Some(
+      s"""WITH $urlCanonSql,
         |wt AS (
         |  SELECT c.doc_id, c.canon_url,
         |    cast(CASE WHEN length(trim(d.text)) = 0 THEN 0
@@ -4606,9 +4466,9 @@ object PipelineQueries {
         |    row_number() OVER (PARTITION BY canon_url
         |      ORDER BY ntok DESC, doc_id) AS rn
         |  FROM wt) t
-        |WHERE rn = 1 ORDER BY doc_id""".stripMargin),
+        |WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
 
-    "p_tfidf_terms" ->
+    Query("p_tfidf_terms", tfidfTerms, curve = true, oracle = Some(
       """WITH toks AS (
         |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS token
         |  FROM documents),
@@ -4626,13 +4486,13 @@ object PipelineQueries {
         |  SELECT *, row_number() OVER (PARTITION BY doc_id
         |    ORDER BY score DESC, token) AS rank
         |  FROM sc) r
-        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
+        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin)),
 
     // the KMV sketch replay: distinct 15-hex md5 prefixes per group,
     // k smallest by lexicographic hex order (≡ numeric order at fixed
     // width), the k-th converted to a 60-bit integer for the estimator
     // (one exact 63·2^60 product, one correctly-rounded division)
-    "p_sketch_vocab" ->
+    Query("p_sketch_vocab", sketchVocab, Some(
       s"""WITH $sketchGramsSql,
         |h AS (SELECT DISTINCT source, substr(md5(gm), 1, 15) AS hx FROM sgrams),
         |r AS (SELECT source, hx,
@@ -4644,9 +4504,9 @@ object PipelineQueries {
         |  CASE WHEN nk < 64 THEN cast(nk AS double)
         |    ELSE 63.0 * 1152921504606846976.0 / cast(max_kmin AS double) END
         |    AS est_distinct
-        |FROM ki ORDER BY source""".stripMargin,
+        |FROM ki ORDER BY source""".stripMargin)),
 
-    "p_sketch_overlap" ->
+    Query("p_sketch_overlap", sketchOverlap, Some(
       s"""WITH $sketchGramsSql,
         |hs AS (SELECT DISTINCT (CAST(substr(source, 4) AS INT) % 2) AS side,
         |  substr(md5(gm), 1, 15) AS hx FROM sgrams),
@@ -4672,13 +4532,13 @@ object PipelineQueries {
         |SELECT cast(n_a AS bigint) AS n_a, cast(n_b AS bigint) AS n_b,
         |  cast(k_union AS bigint) AS k_union, cast(k_inter AS bigint) AS k_inter,
         |  jac AS jaccard_est, ue AS union_est, jac * ue AS inter_est
-        |FROM se""".stripMargin,
+        |FROM se""".stripMargin)),
 
     // the packed bottom-k-by-hash sample replayed relationally: the same
     // 36-bit md5(doc_id) prefix, the same (hash << 24 | clamped value)
     // packing, DISTINCT + row_number for the k-min SET semantics, and the
     // same nearest-lower integer ranks over the sorted sample values
-    "p_sketch_quantiles" ->
+    Query("p_sketch_quantiles", sketchQuantiles, curve = true, oracle = Some(
       """WITH base AS (
         |  SELECT lang, doc_id,
         |    CASE WHEN length(trim(text)) = 0 THEN 0
@@ -4702,7 +4562,7 @@ object PipelineQueries {
         |  cast(vals[CAST(1 + (50 * (m - 1)) // 100 AS INT)] AS bigint) AS p50,
         |  cast(vals[CAST(1 + (75 * (m - 1)) // 100 AS INT)] AS bigint) AS p75,
         |  cast(vals[CAST(1 + (90 * (m - 1)) // 100 AS INT)] AS bigint) AS p90
-        |FROM km ORDER BY lang""".stripMargin,
+        |FROM km ORDER BY lang""".stripMargin)),
 
     // the HLL registers replayed relationally: the same 60-bit md5 prefix,
     // top-8-bit bucket, leading-zero rho via unpadded bin() length, the
@@ -4712,7 +4572,7 @@ object PipelineQueries {
     // bit-identical on both sides)
     // per-column HLL register replay (the p_sketch_hll chain, ungrouped,
     // value = cast(col as varchar), NULLs excluded like the engine agg)
-    "p_profile_approx" -> {
+    Query("p_profile_approx", profileApproxQ, Some {
       val p = 8
       val m = 1 << p
       val numer = Sketch.hllAlpha(p) * m.toDouble * m.toDouble * Math.pow(2.0, 61 - p)
@@ -4753,7 +4613,7 @@ object PipelineQueries {
           "SELECT column_name, n_nulls, n_regs_set, est_distinct FROM (\n",
           "\nUNION ALL\n",
           "\n) ORDER BY column_name")
-    },
+    }),
 
     // integer-only surface (round-12): the driver-board round-11 failure
     // was oracle-ENGINE-VERSION drift on the double estimate / HUGEINT
@@ -4761,7 +4621,7 @@ object PipelineQueries {
     // explicit BIGINT — the harmonic sum cast down (it is < 2^61 by
     // construction) and the estimate in micro-units via HUGEINT integral
     // division of two exact integers + a literal BIGINT correction table
-    "p_sketch_hll" -> {
+    Query("p_sketch_hll", sketchHll, curve = true, oracle = Some {
       val p = 8
       val m = 1 << p
       val numerMicro = Sketch.hllNumerMicro(p).toPlainString
@@ -4793,13 +4653,13 @@ object PipelineQueries {
         |    THEN ($corrList)[CAST($m - n_set AS INT)] ELSE raw_micro END
         |    AS BIGINT) AS est_distinct_micro
         |FROM est ORDER BY source""".stripMargin
-    },
+    }),
 
     // the Count-Min counters replayed relationally: the same "row:item"
     // md5 bucket hash, the same d×w counter aggregation over ALL gram
     // occurrences, exact top-20 selection with the same tie rule, and
     // min-of-d-counters point estimates — pure integer arithmetic
-    "p_sketch_cms" -> {
+    Query("p_sketch_cms", sketchCms, curve = true, oracle = Some(
       s"""WITH $sketchGramsSql,
         |rws AS (SELECT unnest([0, 1, 2, 3]) AS r),
         |hb AS (SELECT rws.r,
@@ -4817,12 +4677,11 @@ object PipelineQueries {
         |SELECT gm, CAST(true_cnt AS BIGINT) AS true_cnt,
         |  CAST(cms_est AS BIGINT) AS cms_est,
         |  CAST(cms_est - true_cnt AS BIGINT) AS overcount
-        |FROM est ORDER BY gm""".stripMargin
-    },
+        |FROM est ORDER BY gm""".stripMargin)),
 
     // both CMS counter tables + the min-of-row dot products + the exact
     // join size replayed relationally — pure integer arithmetic
-    "p_join_cardinality" -> {
+    Query("p_join_cardinality", joinCardinality, Some(
       s"""WITH l AS (SELECT CAST(user_id AS VARCHAR) AS k FROM events
         |  WHERE event_type IN ('view', 'click')),
         |r AS (SELECT CAST(user_id AS VARCHAR) AS k FROM events
@@ -4845,16 +4704,15 @@ object PipelineQueries {
         |SELECT CAST(true_join_size AS BIGINT) AS true_join_size,
         |  CAST(join_est AS BIGINT) AS join_est,
         |  CAST(join_est - true_join_size AS BIGINT) AS overcount
-        |FROM tru CROSS JOIN est""".stripMargin
-    },
+        |FROM tru CROSS JOIN est""".stripMargin)),
 
-    "p_dsir_features" ->
-      (s"""WITH $dsirFeatsSql
+    Query("p_dsir_features", dsirFeatures, Some(
+      s"""WITH $dsirFeatsSql
         |SELECT doc_id, bucket, cast(cnt AS bigint) AS cnt
-        |FROM feats ORDER BY doc_id, bucket""".stripMargin),
+        |FROM feats ORDER BY doc_id, bucket""".stripMargin)),
 
-    "p_dsir_weights" ->
-      (s"""WITH $dsirFeatsSql,
+    Query("p_dsir_weights", dsirWeights, curve = true, oracle = Some(
+      s"""WITH $dsirFeatsSql,
         |rawb AS (SELECT bucket, sum(cnt) AS r FROM feats GROUP BY bucket),
         |tgtb AS (
         |  SELECT f.bucket, sum(f.cnt) AS t
@@ -4868,13 +4726,13 @@ object PipelineQueries {
         |  list_reduce(list(cast(f.cnt AS double) * wt.w ORDER BY f.bucket),
         |    (a, b) -> a + b) / cast(sum(f.cnt) AS double) AS importance
         |FROM feats f JOIN wt ON f.bucket = wt.bucket
-        |GROUP BY f.doc_id ORDER BY f.doc_id""".stripMargin),
+        |GROUP BY f.doc_id ORDER BY f.doc_id""".stripMargin)),
 
     // the dHash bits recomputed from source text — integer cell sums over
     // codepoint chunks (floor boundaries k·L/72), cross-multiplied mean
     // comparisons, exactly the PayloadDHashExpr arithmetic — then exact
     // all-pairs Hamming and the keep-first rule
-    "p_dedup_image" -> perceptualDedupOracle("doc_id % 3 = 0"),
+    Query("p_dedup_image", dedupImage, Some(perceptualDedupOracle("doc_id % 3 = 0"))),
 
     // pixel-path replay: the oracle never inflates zlib — it recomputes
     // the dHash bits from the same generative 27×16 luma rule
@@ -4882,7 +4740,7 @@ object PipelineQueries {
     // certifies the real decode chain (chunk walk, inflate, all five
     // scanline filters, luma, 8×9 grid). Cells are all 6 pixels here, so
     // the cross-multiplied mean comparison reduces to a plain sum compare.
-    "p_dedup_image_px" ->
+    Query("p_dedup_image_px", dedupImagePx, curve = true, oracle = Some(
       """WITH base AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
         |corpus AS (
@@ -4917,13 +4775,13 @@ object PipelineQueries {
         |  FROM bits a JOIN bits b ON a.media_id < b.media_id
         |  WHERE list_sum(list_transform(range(1, 65), j -> abs(a.bb[j] - b.bb[j]))) <= 3)
         |SELECT c.media_id FROM corpus c LEFT JOIN losers ON c.media_id = losers.id_b
-        |WHERE losers.id_b IS NULL ORDER BY media_id""".stripMargin,
+        |WHERE losers.id_b IS NULL ORDER BY media_id""".stripMargin)),
 
     // the PNG-surface triple (gray / permuted-palette / Adam7) replayed
     // from the same generative pixel rule: the palette permutation and
     // the interlace are CONTAINER facts the pixel rule never sees, so a
     // hash-match proves the decoder inverted both
-    "p_dedup_png_px" ->
+    Query("p_dedup_png_px", dedupPngPx, Some(
       """WITH base AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
         |corpus AS (
@@ -4960,7 +4818,7 @@ object PipelineQueries {
         |  FROM bits a JOIN bits b ON a.media_id < b.media_id
         |  WHERE list_sum(list_transform(range(1, 65), j -> abs(a.bb[j] - b.bb[j]))) <= 3)
         |SELECT c.media_id FROM corpus c LEFT JOIN losers ON c.media_id = losers.id_b
-        |WHERE losers.id_b IS NULL ORDER BY media_id""".stripMargin,
+        |WHERE losers.id_b IS NULL ORDER BY media_id""".stripMargin)),
 
     // sample-path replay: the oracle recomputes the dHash bits from the
     // CODEPOINT rule the samples were built from — exact because the
@@ -4976,7 +4834,7 @@ object PipelineQueries {
     // certifies fmt parse across both format tags and all four sample
     // widths, LIST skip, sign-extension, float scaling, mixdown, and
     // binning.
-    "p_dedup_audio_px" ->
+    Query("p_dedup_audio_px", dedupAudioPx, curve = true, oracle = Some(
       """WITH base AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 1),
         |corpus AS (
@@ -5010,7 +4868,7 @@ object PipelineQueries {
         |  FROM bits a JOIN bits b ON a.media_id < b.media_id
         |  WHERE list_sum(list_transform(range(1, 65), j -> abs(a.bb[j] - b.bb[j]))) <= 3)
         |SELECT c.media_id FROM corpus c LEFT JOIN losers ON c.media_id = losers.id_b
-        |WHERE losers.id_b IS NULL ORDER BY media_id""".stripMargin,
+        |WHERE losers.id_b IS NULL ORDER BY media_id""".stripMargin)),
 
     // resize replay: the oracle recomputes the 9×6 box means from the
     // generative pixel rule — floor division by each box's TRUE size
@@ -5018,7 +4876,7 @@ object PipelineQueries {
     // matches the engine's resample exactly; the engine path decodes a
     // per-id (level, filter)-varied PNG, downsamples, re-encodes, and
     // decodes again, so the hash-match certifies all four stages
-    "p_media_resize_px" ->
+    Query("p_media_resize_px", mediaResizePx, Some(
       """WITH base AS (
         |  SELECT doc_id AS media_id, text FROM documents WHERE doc_id % 3 = 0),
         |codes AS (
@@ -5042,14 +4900,14 @@ object PipelineQueries {
         |  FROM pxs)
         |SELECT media_id, cast(9 as int) AS out_w, cast(6 as int) AS out_h,
         |  coalesce(array_to_string(list_transform(r, v -> cast(v as varchar)), ','), '') AS px
-        |FROM rs ORDER BY media_id""".stripMargin,
+        |FROM rs ORDER BY media_id""".stripMargin)),
 
     // z-order replay: the bit interleave is pure integer shifts/masks,
     // identical in both engines; per-file min/max bounds over the
     // top-4-z-bits assignment are the lakehouse writer's file
     // statistics, recomputed exactly
-    "p_zorder_layout" ->
-      (s"""WITH e AS (
+    Query("p_zorder_layout", zorderLayout, Some(
+      s"""WITH e AS (
          |  SELECT (user_id * 40503) & 65535 AS x,
          |         (event_id * 40503) & 65535 AS y FROM events),
          |zv AS (
@@ -5060,15 +4918,15 @@ object PipelineQueries {
          |  FROM e)
          |SELECT z >> 28 AS file_id, cast(count(*) as bigint) AS n,
          |  min(x) AS x_min, max(x) AS x_max, min(y) AS y_min, max(y) AS y_max
-         |FROM zv GROUP BY file_id ORDER BY file_id""".stripMargin),
+         |FROM zv GROUP BY file_id ORDER BY file_id""".stripMargin)),
 
     // read-side replay: the oracle recomputes file assignment from the
     // same bit interleave, rebuilds the per-file max stats, applies the
     // SAME stats-only candidate filter, and counts predicate matches
     // inside candidates — matching the engine's stats-pruned scan
     // proves pruning loses no qualifying rows
-    "p_zorder_prune" ->
-      (s"""WITH e AS (
+    Query("p_zorder_prune", zorderPrune, Some(
+      s"""WITH e AS (
          |  SELECT (user_id * 40503) & 65535 AS x,
          |         (event_id * 40503) & 65535 AS y FROM events),
          |f AS MATERIALIZED (
@@ -5088,7 +4946,7 @@ object PipelineQueries {
          |  cast(c.n_file_rows AS bigint) AS n_file_rows,
          |  cast(coalesce(m.n_match, 0) AS bigint) AS n_match
          |FROM cand c LEFT JOIN m ON c.file_id = m.file_id
-         |ORDER BY file_id""".stripMargin),
+         |ORDER BY file_id""".stripMargin)),
 
     // resample replay: the oracle derives the PCM samples from the
     // affine codepoint rule LITERALLY, then applies the same floor-mean
@@ -5098,7 +4956,7 @@ object PipelineQueries {
     // first) — floor division does not commute with the affine map, so
     // averaging codepoints first would diverge; the engine path runs
     // stereo decode → mixdown → decimate → re-encode → decode
-    "p_audio_resample_px" ->
+    Query("p_audio_resample_px", audioResamplePx, Some(
       """WITH base AS (
         |  SELECT doc_id AS media_id, text FROM documents WHERE doc_id % 3 = 1),
         |s AS (
@@ -5120,7 +4978,7 @@ object PipelineQueries {
         |  FROM w)
         |SELECT media_id, cast((n + 3) // 4 as int) AS n_samples,
         |  coalesce(array_to_string(list_transform(dn, v -> cast(v as varchar)), ','), '') AS samples
-        |FROM d ORDER BY media_id""".stripMargin,
+        |FROM d ORDER BY media_id""".stripMargin)),
 
     // entropy-path replay: the oracle recomputes the 2D dHash bits from
     // the codepoint BLOCK rule the DC coefficients were built from —
@@ -5132,7 +4990,7 @@ object PipelineQueries {
     // DQT/DHT/SOF0/DRI/SOS parse, canonical code build, bit-serial
     // decode, DC prediction with restart resets, dequant, IDCT, and
     // edge-block cropping end to end.
-    "p_dedup_jpeg_px" ->
+    Query("p_dedup_jpeg_px", dedupJpegPx, curve = true, oracle = Some(
       """WITH base AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
         |corpus AS (
@@ -5168,7 +5026,7 @@ object PipelineQueries {
         |  FROM bits a JOIN bits b ON a.media_id < b.media_id
         |  WHERE list_sum(list_transform(range(1, 65), j -> abs(a.bb[j] - b.bb[j]))) <= 3)
         |SELECT c.media_id FROM corpus c LEFT JOIN losers ON c.media_id = losers.id_b
-        |WHERE losers.id_b IS NULL ORDER BY media_id""".stripMargin,
+        |WHERE losers.id_b IS NULL ORDER BY media_id""".stripMargin)),
 
     // color-path replay: the oracle recomputes the dHash bits from the
     // codepoint LUMA and CHROMA rules, composing the final pixel through
@@ -5181,7 +5039,7 @@ object PipelineQueries {
     // at Hamming 0, certifying multi-component SOF/SOS parse, MCU
     // de-interleave, per-component predictors and tables, chroma
     // upsample, and the color transform end to end.
-    "p_dedup_jpeg_color" -> jpegColorLumaOracle(slice = 2, off1 = 1000000, off2 = 2000000),
+    Query("p_dedup_jpeg_color", dedupJpegColor, curve = true, oracle = Some(jpegColorLumaOracle(slice = 2, off1 = 1000000, off2 = 2000000))),
 
     // progressive replay: the PIXEL rule is identical to the color
     // oracle (the progressive twins carry the same composed-luma /
@@ -5190,7 +5048,7 @@ object PipelineQueries {
     // hash-match therefore certifies that multi-scan successive-
     // approximation decoding reaches the same pixels as the sequential
     // path on a different corpus slice and offsets.
-    "p_dedup_jpeg_progressive" -> jpegColorLumaOracle(slice = 1, off1 = 1000000, off2 = 2000000),
+    Query("p_dedup_jpeg_progressive", dedupJpegProgressive, curve = true, oracle = Some(jpegColorLumaOracle(slice = 1, off1 = 1000000, off2 = 2000000))),
 
     // frame-path replay: the oracle recomputes the 2D dHash bits from
     // the codepoint FRAME rule the DIB pixels were built from — exact
@@ -5201,7 +5059,7 @@ object PipelineQueries {
     // idx1 index, buffer-size hint), so every (base, base+900000) pairs
     // at Hamming 0; the hash-match certifies strf parse, movi walk,
     // bottom-up unflip, BGR order, and row padding end to end.
-    "p_dedup_video_px" ->
+    Query("p_dedup_video_px", dedupVideoPx, curve = true, oracle = Some(
       """WITH base AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 2),
         |corpus AS (
@@ -5238,15 +5096,15 @@ object PipelineQueries {
         |  FROM bits a JOIN bits b ON a.media_id < b.media_id
         |  WHERE list_sum(list_transform(range(1, 65), j -> abs(a.bb[j] - b.bb[j]))) <= 3)
         |SELECT c.media_id FROM corpus c LEFT JOIN losers ON c.media_id = losers.id_b
-        |WHERE losers.id_b IS NULL ORDER BY media_id""".stripMargin,
+        |WHERE losers.id_b IS NULL ORDER BY media_id""".stripMargin)),
 
     // the same replay over ALL modalities — PNG tEXt and JPEG COM
     // payloads walk through the codepoint dHash, WAV rows decode REAL
     // PCM samples (bit-identical to the codepoint replay by the affine
     // argument above), AVI movi payloads walk through the codepoint dHash
-    "p_dedup_media" -> perceptualDedupOracle("1 = 1"),
+    Query("p_dedup_media", dedupMedia, curve = true, oracle = Some(perceptualDedupOracle("1 = 1"))),
 
-    "p_bm25_search" ->
+    Query("p_bm25_search", bm25Search, Some(
       """WITH toks AS (
         |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS token
         |  FROM documents),
@@ -5269,13 +5127,13 @@ object PipelineQueries {
         |  SELECT doc_id, score,
         |    row_number() OVER (ORDER BY score DESC, doc_id) AS rank
         |  FROM scored) r
-        |WHERE rank <= 20 ORDER BY rank""".stripMargin,
+        |WHERE rank <= 20 ORDER BY rank""".stripMargin)),
 
     // hybrid fusion replay: both legs are the EXISTING certified
     // rankings (the BM25 block and the cosine block verbatim), and the
     // fusion is rank-only — each contribution one IEEE division, each
     // doc at most two terms, so the doubles replay exactly
-    "p_hybrid_search" ->
+    Query("p_hybrid_search", hybridSearch, Some(
       """WITH toks AS (
         |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS token
         |  FROM documents),
@@ -5317,9 +5175,9 @@ object PipelineQueries {
         |  SELECT doc_id, rrf, n_legs,
         |    row_number() OVER (ORDER BY rrf DESC, doc_id) AS rank
         |  FROM f) z
-        |WHERE rank <= 15 ORDER BY rank""".stripMargin,
+        |WHERE rank <= 15 ORDER BY rank""".stripMargin)),
 
-    "p_token_quantiles" ->
+    Query("p_token_quantiles", tokenQuantiles, Some(
       """WITH tc AS (
         |  SELECT CASE WHEN length(trim(text)) = 0 THEN 0
         |    ELSE len(string_split_regex(trim(text), '\s+')) END AS v
@@ -5341,10 +5199,10 @@ object PipelineQueries {
         |UNION ALL
         |SELECT cast(0.99 AS double), (SELECT cast(min(v) AS bigint) FROM cum
         |  WHERE cum >= greatest(1, cast(ceil(cast(0.99 AS double) * (SELECT n FROM nn)) AS bigint)))
-        |ORDER BY q""".stripMargin,
+        |ORDER BY q""".stripMargin)),
 
-    "p_cluster_report" ->
-      (s"""${kmeansWithSql(k = 5, rounds = 3, blockSize = 16)},
+    Query("p_cluster_report", clusterReport, Some(
+      s"""${kmeansWithSql(k = 5, rounds = 3, blockSize = 16)},
         |lj AS (
         |  SELECT a.cid, e.label FROM a3 a JOIN embeddings e ON a.vec_id = e.vec_id),
         |lc AS (SELECT cid, label, count(*) AS lc FROM lj GROUP BY cid, label),
@@ -5361,14 +5219,14 @@ object PipelineQueries {
         |    cast(count(DISTINCT label) AS bigint) AS n_labels
         |  FROM lj GROUP BY cid) s
         |JOIN top ON s.cid = top.cid
-        |ORDER BY cid""".stripMargin),
+        |ORDER BY cid""".stripMargin)),
 
     // the repair replayed as a replace-chain over the fixture's finite
     // digraph alphabet (generated from the SAME MojiPairs/MojiTail the
     // engine fixture uses, so they cannot drift); the engine path is the
     // general Latin-1 → strict-UTF-8 round-trip
-    "p_fix_mojibake" ->
-      (s"""WITH deco AS (
+    Query("p_fix_mojibake", fixMojibakeQ, Some(
+      s"""WITH deco AS (
         |  SELECT doc_id,
         |    CASE WHEN doc_id % 7 = 0 THEN text || '$MojiTail' ELSE text END AS text
         |  FROM documents)
@@ -5377,17 +5235,17 @@ object PipelineQueries {
         |  cast(length(text) - length(${MojiPairs.foldLeft("text") {
               case (acc, (bad, good)) => s"replace($acc, '$bad', '$good')" }}) as bigint)
         |    AS n_repaired
-        |FROM deco ORDER BY doc_id""".stripMargin),
+        |FROM deco ORDER BY doc_id""".stripMargin)),
 
-    "p_pii_scrub" ->
-      (s"""WITH pc AS (
+    Query("p_pii_scrub", piiScrub, Some(
+      s"""WITH pc AS (
         |  $piiCorpusSql)
         |SELECT * FROM (
         |  $piiScrubbedSql) s
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin)),
 
-    "p_pii_report" ->
-      (s"""WITH pc AS (
+    Query("p_pii_report", piiReport, Some(
+      s"""WITH pc AS (
         |  $piiCorpusSql),
         |scrubbed AS (
         |  $piiScrubbedSql)
@@ -5396,11 +5254,11 @@ object PipelineQueries {
         |  cast(sum(n_phone) AS bigint) AS total_phone,
         |  cast(sum(CASE WHEN n_email + n_ip + n_phone > 0 THEN 1 ELSE 0 END) AS bigint) AS docs_with_pii,
         |  cast(count(*) AS bigint) AS n_docs
-        |FROM scrubbed""".stripMargin),
+        |FROM scrubbed""".stripMargin)),
 
     // Identical RE2 regexp chain as TextAnalysis.stripHtml (comments →
     // script/style blocks → tags → entities with amp last → whitespace).
-    "p_text_html_strip" ->
+    Query("p_text_html_strip", textHtmlStrip, Some(
       """WITH deco AS (
         |  SELECT doc_id,
         |    '<html><head><title>doc</title><style>p { color: red; }</style></head><body><!-- auto-generated -->' || chr(10) || '<p class="main">' ||
@@ -5419,12 +5277,12 @@ object PipelineQueries {
         |s5 AS (SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(t,
         |         '&#39;', '''', 'g'), '&nbsp;', ' ', 'g'), '&amp;', '&', 'g') AS t FROM s4)
         |SELECT doc_id, trim(regexp_replace(t, '\s+', ' ', 'g')) AS text
-        |FROM s5 ORDER BY doc_id""".stripMargin,
+        |FROM s5 ORDER BY doc_id""".stripMargin)),
 
     // the same stages as the Spark chain, replayed in SQL: decorate →
     // URL blocklist → HTML strip → token gate → keep-first dedup →
     // token-budget sample → pack → materialize.
-    "p_pipeline_full" ->
+    Query("p_pipeline_full", pipelineFull, Some(
       """WITH deco AS (
         |  SELECT doc_id, lang,
         |    '<p>' || text || '</p>' ||
@@ -5469,11 +5327,11 @@ object PipelineQueries {
         |  cast(sum(ntok) as bigint) AS seq_tokens,
         |  cast(count(*) as bigint) AS n_docs
         |FROM sq GROUP BY lang, seq_id
-        |ORDER BY lang, seq_id""".stripMargin,
+        |ORDER BY lang, seq_id""".stripMargin)),
 
     // dom blocked iff equal to an entry or under it at a label boundary;
     // LIKE '%.' || b is exactly the exploded dot-suffix equi-join.
-    "p_url_filter" ->
+    Query("p_url_filter", urlFilter, Some(
       """WITH deco AS (
         |  SELECT doc_id, text ||
         |    CASE WHEN doc_id % 4 = 0 THEN ' see https://sub.badsite.com/page?x=1 now'
@@ -5486,11 +5344,11 @@ object PipelineQueries {
         |blocked AS (SELECT * FROM (VALUES ('badsite.com'), ('tracker.net')) b(bd)),
         |hit AS (SELECT DISTINCT doc_id FROM doms JOIN blocked ON dom = bd OR dom LIKE '%.' || bd)
         |SELECT d.doc_id FROM deco d LEFT JOIN hit h USING (doc_id)
-        |WHERE h.doc_id IS NULL ORDER BY doc_id""".stripMargin,
+        |WHERE h.doc_id IS NULL ORDER BY doc_id""".stripMargin)),
 
     // chunk i covers tokens [i*24+1, i*24+32] (1-based inclusive), the
     // same arithmetic as TextAnalysis.chunkByTokens(32, overlap=8).
-    "p_chunk_documents" ->
+    Query("p_chunk_documents", chunkDocuments, Some(
       """WITH t AS (
         |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
         |n AS (
@@ -5501,26 +5359,26 @@ object PipelineQueries {
         |SELECT doc_id, cast(i AS bigint) AS chunk_id,
         |  array_to_string(toks[i*24+1 : i*24+32], ' ') AS chunk_text,
         |  cast(len(toks[i*24+1 : i*24+32]) AS bigint) AS chunk_tokens
-        |FROM e ORDER BY doc_id, chunk_id""".stripMargin,
+        |FROM e ORDER BY doc_id, chunk_id""".stripMargin)),
 
-    "p_top_tokens" ->
+    Query("p_top_tokens", topTokens, Some(
       """SELECT token, cast(count(*) as bigint) AS n
         |FROM (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS token FROM documents)
         |WHERE len(token) > 0
         |GROUP BY token
         |ORDER BY n DESC, token
-        |LIMIT 50""".stripMargin,
+        |LIMIT 50""".stripMargin)),
 
     // the scale path must reproduce the exact ranking
-    "p_top_tokens_scale" ->
+    Query("p_top_tokens_scale", topTokensScale, Some(
       """SELECT token, cast(count(*) as bigint) AS n
         |FROM (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS token FROM documents)
         |WHERE len(token) > 0
         |GROUP BY token
         |ORDER BY n DESC, token
-        |LIMIT 10""".stripMargin,
+        |LIMIT 10""".stripMargin)),
 
-    "p_pack_sequences" ->
+    Query("p_pack_sequences", packSequences, Some(
       """WITH t AS (
         |  SELECT doc_id, lang,
         |    cast(len(string_split_regex(trim(text), '\s+')) as bigint) AS ntok
@@ -5534,26 +5392,26 @@ object PipelineQueries {
         |SELECT doc_id, lang, seq_id,
         |  cast(row_number() OVER (PARTITION BY lang, seq_id ORDER BY doc_id) - 1 as bigint) AS seq_pos
         |FROM s
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // same packing window as p_pack_sequences, then string_agg in slot
     // order around the EOD separator.
-    "p_pack_materialize" -> packMaterializeOracle,
+    Query("p_pack_materialize", packMaterialize, Some(packMaterializeOracle)),
 
     // the manifest over the SAME materialized sequences: per-lang shard
     // counts, token totals, and an order-stable md5 over the sequence
     // texts — both engines hash the identical byte stream
-    "p_shard_manifest" ->
-      (s"""WITH m AS (
+    Query("p_shard_manifest", shardManifest, Some(
+      s"""WITH m AS (
         |  $packMaterializeOracle)
         |SELECT lang, cast(count(*) AS bigint) AS n_seqs,
         |  cast(sum(seq_tokens) AS bigint) AS total_tokens,
         |  md5(string_agg(seq_text, '|#|' ORDER BY seq_id)) AS content_md5
-        |FROM m GROUP BY lang ORDER BY lang""".stripMargin),
+        |FROM m GROUP BY lang ORDER BY lang""".stripMargin)),
 
     // vocabulary = corpus top-12 tokens by (count desc, token); coverage
     // = hits/ntok, one double division (see TextAnalysis.vocabCoverage).
-    "p_vocab_coverage" ->
+    Query("p_vocab_coverage", vocabCoverageQ, Some(
       """WITH vocab AS (
         |  SELECT tok FROM (
         |    SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
@@ -5574,18 +5432,18 @@ object PipelineQueries {
         |  CASE WHEN len(toks) = 0 THEN 0.0
         |       ELSE cast(coalesce(h.vh, 0) AS double) / len(toks) END AS coverage
         |FROM t LEFT JOIN h ON t.doc_id = h.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
+        |ORDER BY t.doc_id""".stripMargin)),
 
     // the scalable global ordinal must equal the one-window definition
-    "p_shuffle_order" ->
+    Query("p_shuffle_order", shuffleOrder, Some(
       """SELECT doc_id, lang,
         |  cast(row_number() OVER (ORDER BY md5(cast(doc_id AS varchar)), doc_id) - 1
         |       AS bigint) AS shuffle_pos
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // integer aggregates + one double division; DISTINCT text equals the
     // engine's distinct 64-bit hash up to ~2^-64
-    "p_corpus_report" ->
+    Query("p_corpus_report", corpusReportQ, Some(
       """WITH deco AS (
         |  SELECT lang, text ||
         |    CASE WHEN doc_id % 6 = 0 THEN ' see https://example.org/ref now' ELSE '' END AS text
@@ -5604,11 +5462,11 @@ object PipelineQueries {
         |  cast(sum(ntok) as double) / count(*) AS avg_tokens,
         |  cast(count(DISTINCT text) as bigint) AS n_distinct_texts,
         |  cast(sum(has_url) as bigint) AS n_docs_with_urls
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM t GROUP BY lang ORDER BY lang""".stripMargin)),
 
     // greedy prefix per language in portable-md5 order: keep rows whose
     // running token total stays <= 1500 (same window as the Spark plan).
-    "p_sample_token_budget" ->
+    Query("p_sample_token_budget", sampleTokenBudget, Some(
       """WITH t AS (
         |  SELECT doc_id, lang,
         |    cast(len(string_split_regex(trim(text), '\s+')) as bigint) AS ntok
@@ -5620,11 +5478,11 @@ object PipelineQueries {
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
         |  FROM t)
         |SELECT doc_id, lang, ntok FROM c WHERE cum <= 1500
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // 60/30/10 of 3000 tokens across en/zh/de, floor-rounded per
     // stratum; es/fr weight zero → dropped (see sampleMixWeighted).
-    "p_sample_mix_weighted" ->
+    Query("p_sample_mix_weighted", sampleMixWeighted, Some(
       """WITH t AS (
         |  SELECT doc_id, lang,
         |    cast(len(string_split_regex(trim(text), '\s+')) as bigint) AS ntok
@@ -5638,12 +5496,12 @@ object PipelineQueries {
         |SELECT doc_id, lang, ntok FROM c
         |WHERE cum <= (CASE lang WHEN 'en' THEN 1800 WHEN 'zh' THEN 900
         |                        WHEN 'de' THEN 300 ELSE 0 END)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // the five-stage release chain replayed end to end: PII scrub →
     // keep-min text dedup → √-budget mixing → packing → manifest md5
-    "p_pipeline_release" ->
-      (s"""WITH pc AS (
+    Query("p_pipeline_release", pipelineRelease, Some(
+      s"""WITH pc AS (
         |  $piiCorpusSql),
         |jl AS (
         |  SELECT s.doc_id, s.text, d.lang
@@ -5696,12 +5554,12 @@ object PipelineQueries {
         |SELECT lang, cast(count(*) AS bigint) AS n_seqs,
         |  cast(sum(seq_tokens) AS bigint) AS total_tokens,
         |  md5(string_agg(seq_text, '|#|' ORDER BY seq_id)) AS content_md5
-        |FROM mz GROUP BY lang ORDER BY lang""".stripMargin),
+        |FROM mz GROUP BY lang ORDER BY lang""".stripMargin)),
 
     // the k-means replay composed with the √-budget blocks; the fold
     // orders by the STRINGIFIED cid, mirroring the Scala stratum sort
-    "p_sample_cluster_budget" ->
-      (s"""${kmeansWithSql(k = 5, rounds = 3, blockSize = 16)},
+    Query("p_sample_cluster_budget", sampleClusterBudget, Some(
+      s"""${kmeansWithSql(k = 5, rounds = 3, blockSize = 16)},
         |tq AS (SELECT vec_id AS doc_id, cast(cid AS int) AS cid FROM a3),
         |t AS (
         |  SELECT d.doc_id, tq.cid,
@@ -5725,9 +5583,9 @@ object PipelineQueries {
         |  FROM t)
         |SELECT cm.doc_id, cm.cid, cm.ntok
         |FROM cm JOIN bud ON cm.cid = bud.cid WHERE cm.cum <= bud.b
-        |ORDER BY cm.doc_id""".stripMargin),
+        |ORDER BY cm.doc_id""".stripMargin)),
 
-    "p_sample_temperature" ->
+    Query("p_sample_temperature", sampleTemperature, Some(
       """WITH t AS (
         |  SELECT doc_id, lang,
         |    cast(len(string_split_regex(trim(text), '\s+')) as bigint) AS ntok
@@ -5749,10 +5607,10 @@ object PipelineQueries {
         |  FROM t)
         |SELECT c.doc_id, c.lang, c.ntok FROM c JOIN bud ON c.lang = bud.lang
         |WHERE c.cum <= bud.b
-        |ORDER BY c.doc_id""".stripMargin,
+        |ORDER BY c.doc_id""".stripMargin)),
 
-    "p_quality_classifier" ->
-      (s"""WITH w(b, wt) AS (VALUES ${graft.functions.Classifier.weightsSqlValues}),""" +
+    Query("p_quality_classifier", qualityClassifier, curve = true, oracle = Some(
+      s"""WITH w(b, wt) AS (VALUES ${graft.functions.Classifier.weightsSqlValues}),""" +
        raw"""
         |toks AS (
         |  SELECT doc_id,
@@ -5767,12 +5625,12 @@ object PipelineQueries {
         |  coalesce(s.s, 0) + ${graft.functions.Classifier.QualityModel._2} AS score,
         |  (coalesce(s.s, 0) + ${graft.functions.Classifier.QualityModel._2}) > 0 AS keep
         |FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id
-        |ORDER BY d.doc_id""".stripMargin),
+        |ORDER BY d.doc_id""".stripMargin)),
 
     // the same decorate → score-from-weight-literals → confusion counts:
     // every stage integer, accuracy one correctly-rounded division
-    "p_classifier_eval" ->
-      (s"""WITH w(b, wt) AS (VALUES ${graft.functions.Classifier.weightsSqlValues}),""" +
+    Query("p_classifier_eval", classifierEval, Some(
+      s"""WITH w(b, wt) AS (VALUES ${graft.functions.Classifier.weightsSqlValues}),""" +
        s"""
         |deco AS (
         |  SELECT doc_id, doc_id % 2 = 1 AS is_pos,
@@ -5804,9 +5662,9 @@ object PipelineQueries {
         |  FROM scored)
         |SELECT n_pos, n_neg, tp, fp, tn, fn,
         |  cast(tp + tn AS double) / cast(n_pos + n_neg AS double) AS accuracy
-        |FROM conf""".stripMargin),
+        |FROM conf""".stripMargin)),
 
-    "p_sample_epochs" ->
+    Query("p_sample_epochs", sampleEpochs, curve = true, oracle = Some(
       """WITH t AS (
         |  SELECT doc_id, lang,
         |    (CASE lang WHEN 'de' THEN 2 WHEN 'fr' THEN 0 WHEN 'zh' THEN 0
@@ -5819,35 +5677,35 @@ object PipelineQueries {
         |  FROM documents)
         |SELECT * FROM (
         |  SELECT doc_id, lang, unnest(range(0, n)) AS epoch FROM t) u
-        |ORDER BY doc_id, epoch""".stripMargin,
+        |ORDER BY doc_id, epoch""".stripMargin)),
 
-    "p_sample_stratified" ->
+    Query("p_sample_stratified", sampleStratified, Some(
       """SELECT doc_id, lang FROM (
         |  SELECT doc_id, lang,
         |    row_number() OVER (PARTITION BY lang
         |      ORDER BY md5(cast(doc_id AS varchar)), doc_id) AS rk
         |  FROM documents) t
         |WHERE rk <= 20
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // 90/5/5 by first-two-hex-char md5 bucket: 230/256 ('e6') and
     // 243/256 ('f3') — the exact string comparisons hashSplit emits.
-    "p_split_train_val" ->
+    Query("p_split_train_val", splitTrainVal, Some(
       """SELECT doc_id, lang,
         |  CASE WHEN substr(md5(cast(doc_id AS varchar)), 1, 2) < 'e6' THEN 'train'
         |       WHEN substr(md5(cast(doc_id AS varchar)), 1, 2) < 'f3' THEN 'val'
         |       ELSE 'test' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
-    "p_range_join" ->
+    Query("p_range_join", rangeJoin, Some(
       """WITH v AS (SELECT user_id, ts FROM events WHERE event_type = 'view'),
         |p AS (SELECT event_id AS pid, user_id, ts AS s, ts + INTERVAL 1 HOUR AS e
         |      FROM events WHERE event_type = 'purchase')
         |SELECT p.pid, cast(count(*) as bigint) AS n_views
         |FROM p JOIN v ON v.user_id = p.user_id AND v.ts >= p.s AND v.ts <= p.e
         |GROUP BY p.pid
-        |ORDER BY p.pid""".stripMargin,
-    "p_interval_join" ->
+        |ORDER BY p.pid""".stripMargin)),
+    Query("p_interval_join", intervalJoin, Some(
       """WITH v AS (SELECT user_id, ts AS vs, ts + INTERVAL 1 HOUR AS ve
         |      FROM events WHERE event_type = 'view'),
         |p AS (SELECT event_id AS pid, user_id, ts AS ps, ts + INTERVAL 2 HOUR AS pe
@@ -5855,21 +5713,21 @@ object PipelineQueries {
         |SELECT p.pid, cast(count(*) as bigint) AS n_overlaps
         |FROM p JOIN v ON v.user_id = p.user_id AND p.ps <= v.ve AND v.vs <= p.pe
         |GROUP BY p.pid
-        |ORDER BY p.pid""".stripMargin,
-    "p_asof_join" ->
+        |ORDER BY p.pid""".stripMargin)),
+    Query("p_asof_join", asofJoin, Some(
       """WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type IN ('view','click')),
         |r AS (SELECT user_id, ts AS rts, value AS purchase_value FROM events WHERE event_type = 'purchase')
         |SELECT l.event_id, l.user_id, r.purchase_value
         |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.rts
-        |ORDER BY l.event_id""".stripMargin,
-    "p_asof_forward" ->
+        |ORDER BY l.event_id""".stripMargin)),
+    Query("p_asof_forward", asofForward, Some(
       """WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type IN ('view','click')),
         |r AS (SELECT user_id, ts AS rts, value AS next_purchase_value FROM events WHERE event_type = 'purchase')
         |SELECT l.event_id, l.user_id, r.next_purchase_value
         |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts <= r.rts
-        |ORDER BY l.event_id""".stripMargin,
+        |ORDER BY l.event_id""".stripMargin)),
 
-    "p_pipeline_e2e" ->
+    Query("p_pipeline_e2e", pipelineE2e, Some(
       """WITH u AS (
         |  SELECT doc_id, text, lang FROM documents
         |  UNION ALL
@@ -5884,21 +5742,21 @@ object PipelineQueries {
         |  cast(count(*) as bigint) AS n_docs,
         |  cast(sum(cast(length(text) as bigint)) as bigint) AS total_chars,
         |  cast(cast(sum(ntok) as double) / count(*) as double) AS avg_tokens
-        |FROM k GROUP BY lang ORDER BY lang""".stripMargin,
-    "p_dedup_exact" ->
+        |FROM k GROUP BY lang ORDER BY lang""".stripMargin)),
+    Query("p_dedup_exact", dedupExact, curve = true, oracle = Some(
       """WITH u AS (
         |  SELECT doc_id, text, lang, source FROM documents
         |  UNION ALL
         |  SELECT doc_id + 100000, text, lang, source FROM documents),
         |m AS (SELECT min(doc_id) AS doc_id FROM u GROUP BY text)
         |SELECT u.doc_id, u.lang, u.source FROM u JOIN m ON u.doc_id = m.doc_id
-        |ORDER BY u.doc_id""".stripMargin,
+        |ORDER BY u.doc_id""".stripMargin)),
 
     // the quantization chain replayed with the same association:
     // ((x−mn)·255)/(mx−mn), round, clamp — mn/mx as double lifts of the
     // float min/max; codes comma-joined (integer stringification is
     // engine-independent), coalesce for the []→NULL DuckDB gotcha
-    "p_embed_quantize" ->
+    Query("p_embed_quantize", embedQuantize, Some(
       """WITH m AS (
         |  SELECT vec_id, embedding,
         |    cast(list_min(embedding) as double) AS mn,
@@ -5910,12 +5768,12 @@ object PipelineQueries {
         |         ELSE list_transform(embedding, x ->
         |           least(255, cast(round((cast(x as double) - mn) * 255.0 / (mx - mn)) as int)))
         |    END, ','), '') AS codes
-        |FROM m ORDER BY vec_id""".stripMargin,
+        |FROM m ORDER BY vec_id""".stripMargin)),
 
     // quantize → dequantize → cosine(dot/(‖a‖·‖b‖), left-to-right sums)
     // → rank, all replayed on the same doubles; ties (identical codes)
     // break on vec_id in both engines
-    "p_ann_quantized" ->
+    Query("p_ann_quantized", annQuantized, Some(
       """WITH m AS (
         |  SELECT vec_id, embedding,
         |    cast(list_min(embedding) as double) AS mn,
@@ -5939,11 +5797,11 @@ object PipelineQueries {
         |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rank
         |  FROM s) t
         |WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
+        |ORDER BY qid, rank""".stripMargin)),
 
     // both stages replayed: dequantized-cosine coarse top-50, then
     // float-cosine rerank over the candidate slice, rank ≤ 10
-    "p_ann_rerank" ->
+    Query("p_ann_rerank", annRerank, curve = true, oracle = Some(
       """WITH m AS (
         |  SELECT vec_id, embedding,
         |    cast(list_min(embedding) as double) AS mn,
@@ -5976,13 +5834,13 @@ object PipelineQueries {
         |  JOIN embeddings e ON c.vec_id = e.vec_id
         |  JOIN fq ON c.qid = fq.qid) t
         |WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
+        |ORDER BY qid, rank""".stripMargin)),
 
     // the same decoration, normalized-line frequencies, 0.9 threshold,
     // anti-join, and pos-ordered reassembly — the oracle groups by the
     // normalized line TEXT where the engine groups by its 64-bit
     // fingerprint (identical counts up to ~2^-64 collisions)
-    "p_boilerplate_strip" ->
+    Query("p_boilerplate_strip", boilerplateStrip, Some(
       """WITH deco AS (
         |  SELECT doc_id, source,
         |    text || chr(10) || source || ' nav home about contact'
@@ -6010,13 +5868,13 @@ object PipelineQueries {
         |  FROM kept GROUP BY doc_id)
         |SELECT d.doc_id, d.source, coalesce(re.text, '') AS text
         |FROM deco d LEFT JOIN re ON re.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin)),
 
     // the GLOBAL register construction replayed (one group, same md5
     // bucket/rho rules and literals as p_sketch_hll); the flag column is
     // the engine-side assertion that the shard-rollup path produced the
     // identical registers
-    "p_sketch_hll_rollup" -> {
+    Query("p_sketch_hll_rollup", sketchHllRollup, Some {
       val p = 8
       val m = 1 << p
       // integer-only surface — see the p_sketch_hll oracle note
@@ -6049,14 +5907,14 @@ object PipelineQueries {
         |    AS BIGINT) AS est_distinct_micro,
         |  TRUE AS rollup_equals_direct
         |FROM est""".stripMargin
-    },
+    }),
 
     // the shard buckets + the ustar block arithmetic replayed: one
     // 512-byte header per member, content zero-padded to 512, two zero
     // trailer blocks — the engine reports the REAL archive lengths, the
     // oracle derives them from the spec
-    "p_tar_shards" ->
-      (s"""WITH d AS (SELECT doc_id, coalesce(text, '') AS text,
+    Query("p_tar_shards", tarShardsQ, Some(
+      s"""WITH d AS (SELECT doc_id, coalesce(text, '') AS text,
         |  ${hex15FoldSql("CAST(doc_id AS VARCHAR)")} % 16 AS shard_id
         |  FROM documents)
         |SELECT CAST(shard_id AS BIGINT) AS shard_id,
@@ -6064,20 +5922,20 @@ object PipelineQueries {
         |  CAST(sum(strlen(text)) AS BIGINT) AS payload_bytes,
         |  CAST(sum(512 + 512 * ((strlen(text) + 511) // 512)) + 1024 AS BIGINT)
         |    AS tar_bytes
-        |FROM d GROUP BY shard_id ORDER BY shard_id""".stripMargin),
+        |FROM d GROUP BY shard_id ORDER BY shard_id""".stripMargin)),
 
     // max cosine vs the broadcast eval set + threshold: the leak rows
     // (the eval vectors themselves) read ≈ 1.0 and drop on both engines;
     // natural cosines in this corpus sit far below 0.9, so the
     // float-vs-double cosine difference cannot flip a decision
-    "p_decontaminate_semantic" ->
+    Query("p_decontaminate_semantic", decontaminateSemantic, Some(
       """WITH ev AS (SELECT embedding AS evv FROM embeddings WHERE vec_id % 7 = 0),
         |sc AS (SELECT e.vec_id,
         |         max(list_cosine_similarity(e.embedding, ev.evv)) AS mx
         |       FROM embeddings e CROSS JOIN ev GROUP BY e.vec_id)
-        |SELECT vec_id FROM sc WHERE mx < 0.9 ORDER BY vec_id""".stripMargin,
+        |SELECT vec_id FROM sc WHERE mx < 0.9 ORDER BY vec_id""".stripMargin)),
 
-    "p_ann_bruteforce" ->
+    Query("p_ann_bruteforce", annBruteForce, curve = true, oracle = Some(
       """WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 5),
         |s AS (SELECT q.qid, e.vec_id,
         |        list_cosine_similarity(q.qv, e.embedding) AS cos
@@ -6087,13 +5945,13 @@ object PipelineQueries {
         |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rank
         |  FROM s) t
         |WHERE rank <= 10
-        |ORDER BY qid, rank""".stripMargin,
+        |ORDER BY qid, rank""".stripMargin)),
 
     // qualityFilterQ's decoration + every signal replayed in SQL: same
     // split/line/gram constructions as the Spark side, integer counts or
     // single divisions of exact integers throughout, so doubles match
     // bit-for-bit and the pass verdict is the same conjunction.
-    "p_quality_filter" ->
+    Query("p_quality_filter", qualityFilterQ, curve = true, oracle = Some(
       """WITH deco AS (
         |  SELECT doc_id, text ||
         |    CASE WHEN doc_id % 5 = 0 THEN chr(10)||'- alpha item'||chr(10)||'- beta item'||chr(10)||'- gamma item'
@@ -6135,11 +5993,11 @@ object PipelineQueries {
         |   AND dup_line_ratio <= 0.4
         |   AND rep_ngram <= 0.05
         |   AND n_stopwords >= 2) AS pass
-        |FROM calc ORDER BY doc_id""".stripMargin,
+        |FROM calc ORDER BY doc_id""".stripMargin)),
 
     // first-batch-wins then min-id, as one window over (batch, doc_id);
     // normalization matches fingerprint64 (lower, whitespace collapse)
-    "p_dedup_incremental" ->
+    Query("p_dedup_incremental", dedupIncremental, Some(
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL SELECT doc_id + 100001, text FROM documents),
@@ -6148,12 +6006,12 @@ object PipelineQueries {
         |         doc_id % 2 AS b
         |  FROM corpus),
         |r AS (SELECT doc_id, row_number() OVER (PARTITION BY nt ORDER BY b, doc_id) AS rn FROM norm)
-        |SELECT doc_id FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin,
+        |SELECT doc_id FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
 
     // the three proven oracle blocks chained: quality calc → pass set,
     // LM (vocab/btop from RAW documents) signals over gated docs,
     // dup-span over the full decorated corpus, final integer gates
-    "p_pipeline_curate" ->
+    Query("p_pipeline_curate", pipelineCurate, Some(
       """WITH deco AS (
         |  SELECT doc_id, text ||
         |    CASE WHEN doc_id % 5 = 0 THEN chr(10)||'- alpha item'||chr(10)||'- beta item'||chr(10)||'- gamma item'
@@ -6245,11 +6103,11 @@ object PipelineQueries {
         |SELECT doc_id, oov_tokens, hit_bigrams, n_bigrams, n_grams, dup_grams, dup_fraction
         |FROM fin
         |WHERE dup_fraction < 0.8 AND oov_tokens * 2 <= n_bigrams + 1
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // position grams with multiplicity, doc-frequency over the per-doc
     // distinct relation, coverage = positions hitting a df>=2 gram
-    "p_dup_span" ->
+    Query("p_dup_span", dupSpanQ, Some(
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL SELECT doc_id + 100000, text FROM documents WHERE doc_id % 4 = 0),
@@ -6266,13 +6124,13 @@ object PipelineQueries {
         |  cast(coalesce(d.dup_grams, 0) as bigint) AS dup_grams,
         |  cast(coalesce(d.dup_grams, 0) as double) / p.n_grams AS dup_fraction
         |FROM per p LEFT JOIN dupper d ON p.doc_id = d.doc_id
-        |ORDER BY p.doc_id""".stripMargin,
+        |ORDER BY p.doc_id""".stripMargin)),
 
     // candidates replayed as exact all-pairs char-12-gram Jaccard (the
     // p_dedup_ngram contract: LSH at 64 hashes / 32 bands recovers every
     // pair above threshold on this corpus), verified with the identical
     // integer Levenshtein on the raw text
-    "p_dedup_edit" ->
+    Query("p_dedup_edit", dedupEdit, curve = true, oracle = Some(
       s"""WITH corpus AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0
         |  UNION ALL
@@ -6290,10 +6148,10 @@ object PipelineQueries {
         |JOIN corpus ca ON ca.doc_id = p.id_a
         |JOIN corpus cb ON cb.doc_id = p.id_b
         |WHERE levenshtein(ca.text, cb.text) <= 30
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin)),
 
     // full-outer presence + text-equality statuses; unchanged rows dropped
-    "p_snapshot_diff" ->
+    Query("p_snapshot_diff", snapshotDiffQ, Some(
       """WITH a AS (SELECT doc_id, text FROM documents),
         |b AS (
         |  SELECT doc_id,
@@ -6309,32 +6167,32 @@ object PipelineQueries {
         |         ELSE 'unchanged' END AS status
         |  FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id)
         |SELECT doc_id, status FROM j WHERE status <> 'unchanged'
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // width-10 exact integer buckets over whitespace token counts
-    "p_length_histogram" ->
+    Query("p_length_histogram", lengthHistogramQ, Some(
       """SELECT (n // 10) * 10 AS bucket_lo, cast(count(*) AS bigint) AS n_docs
         |FROM (SELECT CASE WHEN length(trim(text)) = 0 THEN 0
         |        ELSE len(string_split_regex(trim(text), '\s+')) END AS n
         |      FROM documents)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // per-doc-distinct tokens, doc-frequency floor, ordered postings
     // comma-joined (integer stringification is engine-independent)
-    "p_inverted_index" ->
+    Query("p_inverted_index", invertedIndexQ, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(list_distinct(string_split_regex(lower(trim(text)), '\s+'))) AS token
         |  FROM documents)
         |SELECT token, cast(count(*) AS bigint) AS df,
         |  string_agg(cast(doc_id AS varchar), ',' ORDER BY doc_id) AS postings
         |FROM tok GROUP BY token HAVING count(*) >= 50
-        |ORDER BY token""".stripMargin,
+        |ORDER BY token""".stripMargin)),
 
     // replay gram ownership with STRING grams (Spark uses xxhash64 — the
     // usual ~2^-64 collision contract), rebuild kept_text with the same
     // 0-based indexed mask; coalesce because DuckDB's array_to_string of
     // an empty list is NULL where Spark's array_join is ''
-    "p_dedup_span_scrub" ->
+    Query("p_dedup_span_scrub", dedupSpanScrub, curve = true, oracle = Some(
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL SELECT doc_id + 100000, text FROM documents WHERE doc_id % 4 = 0),
@@ -6357,11 +6215,11 @@ object PipelineQueries {
         |SELECT doc_id, cast(len(toks) AS bigint) AS n_tokens,
         |  cast(len(toks) - len(kt) AS bigint) AS removed_tokens,
         |  coalesce(array_to_string(kt, ' '), '') AS kept_text
-        |FROM kept ORDER BY doc_id""".stripMargin,
+        |FROM kept ORDER BY doc_id""".stripMargin)),
 
     // same decoration lines and keep predicate (terminal punctuation,
     // >=5 words, no blocklist substring) as the Spark side
-    "p_c4_line_filter" ->
+    Query("p_c4_line_filter", c4LineFilterQ, Some(
       """WITH deco AS (
         |  SELECT doc_id,
         |    text || chr(10) || 'enable javascript to view this site today.' || chr(10) ||
@@ -6383,12 +6241,12 @@ object PipelineQueries {
         |SELECT doc_id, cast(len(lines) AS bigint) AS n_lines,
         |  cast(len(kept) AS bigint) AS kept_lines,
         |  coalesce(array_to_string(kept, chr(10)), '') AS kept_text
-        |FROM f ORDER BY doc_id""".stripMargin,
+        |FROM f ORDER BY doc_id""".stripMargin)),
 
     // 13-gram rule: docs shorter than 13 tokens contribute their whole
     // text as one gram (verbatim short eval items still match); grams
     // distinct per doc, so n_hit_grams counts distinct shared grams
-    "p_decontaminate_ngram" ->
+    Query("p_decontaminate_ngram", decontaminateNgram, Some(
       """WITH evald AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 7),
         |train AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 7
@@ -6403,10 +6261,10 @@ object PipelineQueries {
         |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM train)))
         |SELECT doc_id, cast(count(*) AS bigint) AS n_hit_grams
         |FROM tg JOIN eg USING (g)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
     // same URL decoration + host regexes as p_url_filter's oracle
-    "p_domain_stats" ->
+    Query("p_domain_stats", domainStatsQ, Some(
       """WITH deco AS (
         |  SELECT doc_id, text ||
         |    CASE WHEN doc_id % 4 = 0 THEN ' see https://sub.badsite.com/page?x=1 now'
@@ -6418,28 +6276,28 @@ object PipelineQueries {
         |doms AS (SELECT doc_id, lower(regexp_extract(url, 'https?://(?:[^@/\s]*@)?([^:/\s?#]+)', 1)) AS domain FROM urls)
         |SELECT domain, cast(count(DISTINCT doc_id) AS bigint) AS n_docs,
         |  cast(count(*) AS bigint) AS n_urls
-        |FROM doms GROUP BY domain ORDER BY domain""".stripMargin,
+        |FROM doms GROUP BY domain ORDER BY domain""".stripMargin)),
 
     // the SAME two-level ordered fold as meanPoolExact: vectors fold in
     // vec_id order within id-div-16 blocks, block sums fold in block
     // order — the FP operation sequence is identical, so the centroid
     // doubles compare bit-exactly
-    "p_embed_kmeans" ->
-      (s"""${kmeansWithSql(k = 5, rounds = 3, blockSize = 16)}
+    Query("p_embed_kmeans", embedKmeans, curve = true, oracle = Some(
+      s"""${kmeansWithSql(k = 5, rounds = 3, blockSize = 16)}
         |SELECT vec_id, cast(cid AS int) AS cid FROM a3
-        |ORDER BY vec_id""".stripMargin),
+        |ORDER BY vec_id""".stripMargin)),
 
-    "p_sample_cluster" ->
-      (s"""${kmeansWithSql(k = 5, rounds = 3, blockSize = 16)}
+    Query("p_sample_cluster", sampleCluster, Some(
+      s"""${kmeansWithSql(k = 5, rounds = 3, blockSize = 16)}
         |SELECT vec_id, cast(cid AS int) AS cid FROM (
         |  SELECT vec_id, cid, row_number() OVER (PARTITION BY cid
         |    ORDER BY md5(cast(vec_id AS varchar)), vec_id) AS rn
         |  FROM a3) t
-        |WHERE rn <= 25 ORDER BY vec_id""".stripMargin),
+        |WHERE rn <= 25 ORDER BY vec_id""".stripMargin)),
 
     // centroids exploded to (label, n, dim, value) scalar rows — the
     // parallel unnest(range(len))/unnest(centroid) pair aligns in DuckDB
-    "p_embed_centroids" ->
+    Query("p_embed_centroids", embedCentroids, Some(
       """WITH v AS (
         |  SELECT label, vec_id, vec_id // 16 AS blk,
         |    list_transform(embedding, x -> cast(x AS double)) AS v
@@ -6457,11 +6315,11 @@ object PipelineQueries {
         |SELECT label, cast(n AS bigint) AS n,
         |  unnest(range(len(s))) AS dim,
         |  unnest(list_transform(s, x -> x / cast(n AS double))) AS value
-        |FROM tot ORDER BY label, dim""".stripMargin,
+        |FROM tot ORDER BY label, dim""".stripMargin)),
 
     // the proven quality calc block rolled up per language (integer
     // counts + one division of exact integers)
-    "p_quality_by_lang" ->
+    Query("p_quality_by_lang", qualityByLang, Some(
       """WITH deco AS (
         |  SELECT doc_id, text ||
         |    CASE WHEN doc_id % 5 = 0 THEN chr(10)||'- alpha item'||chr(10)||'- beta item'||chr(10)||'- gamma item'
@@ -6509,22 +6367,22 @@ object PipelineQueries {
         |  cast(sum(n_tokens) AS bigint) AS total_tokens,
         |  cast(sum(CASE WHEN pass THEN 1 ELSE 0 END) AS double) / count(*) AS pass_rate
         |FROM gate g JOIN documents d USING (doc_id)
-        |GROUP BY d.lang ORDER BY d.lang""".stripMargin,
+        |GROUP BY d.lang ORDER BY d.lang""".stripMargin)),
 
     // exact per-dimension stats (no float summation) — float->double
     // casts are value-preserving in both engines
-    "p_embed_profile" ->
+    Query("p_embed_profile", embedProfileQ, Some(
       """SELECT i - 1 AS dim, cast(count(*) AS bigint) AS n,
         |  cast(sum(CASE WHEN embedding[i] > 0 THEN 1 ELSE 0 END) AS bigint) AS n_pos,
         |  cast(min(embedding[i]) AS double) AS min_v,
         |  cast(max(embedding[i]) AS double) AS max_v
         |FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // word-3-shingle overlap per source pair: same shingle rule as the
     // minhash oracle (short docs → whole text), distinct per source,
     // inner self-join, integer counts + one double division
-    "p_source_overlap" ->
+    Query("p_source_overlap", sourceOverlapQ, Some(
       """WITH toked AS (
         |  SELECT source, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents),
         |grams AS (
@@ -6543,14 +6401,14 @@ object PipelineQueries {
         |FROM shared s
         |JOIN sizes na ON s.source_a = na.source
         |JOIN sizes nb ON s.source_b = nb.source
-        |ORDER BY source_a, source_b""".stripMargin,
+        |ORDER BY source_a, source_b""".stripMargin)),
 
     // the LM rebuilt relationally with the same tie-broken selections
     // (count desc, token asc; count desc, w1, w2), then per-doc signals
     // via left joins against vocab and the bigram table (CTE prefix
     // shared with p_ccnet_buckets)
-    "p_lm_score" ->
-      (s"""WITH $lmSignalCtesSql
+    Query("p_lm_score", lmScoreQ, curve = true, oracle = Some(
+      s"""WITH $lmSignalCtesSql
         |SELECT t.doc_id,
         |  cast(coalesce(o.oov_tokens, 0) as bigint) AS oov_tokens,
         |  cast(coalesce(s.invocab_bigrams, 0) as bigint) AS invocab_bigrams,
@@ -6559,12 +6417,12 @@ object PipelineQueries {
         |FROM toked t
         |LEFT JOIN oov o ON t.doc_id = o.doc_id
         |LEFT JOIN psig s ON t.doc_id = s.doc_id
-        |ORDER BY t.doc_id""".stripMargin),
+        |ORDER BY t.doc_id""".stripMargin)),
 
     // CCNet terciles: the shared LM-signal CTEs, one exact division, a
     // deterministically tie-broken ntile per language
-    "p_ccnet_buckets" ->
-      (s"""WITH $lmSignalCtesSql,
+    Query("p_ccnet_buckets", ccnetBucketsQ, Some(
+      s"""WITH $lmSignalCtesSql,
         |sig AS (
         |  SELECT t.doc_id,
         |    cast(coalesce(s.hit_bigrams, 0) as double)
@@ -6576,12 +6434,12 @@ object PipelineQueries {
         |SELECT doc_id, lang, lm_hit_rate,
         |  CASE ntile(3) OVER (PARTITION BY lang ORDER BY lm_hit_rate DESC, doc_id)
         |    WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-        |FROM j ORDER BY doc_id""".stripMargin),
+        |FROM j ORDER BY doc_id""".stripMargin)),
 
     // raw-side and gated-side per-lang volumes, full-outer joined; the
     // pass set is the proven quality conjunction; ratios are single
     // divisions of exact integers
-    "p_corpus_drift" ->
+    Query("p_corpus_drift", corpusDriftQ, Some(
       """WITH deco AS (
         |  SELECT doc_id, text ||
         |    CASE WHEN doc_id % 5 = 0 THEN chr(10)||'- alpha item'||chr(10)||'- beta item'||chr(10)||'- gamma item'
@@ -6646,22 +6504,22 @@ object PipelineQueries {
         |  abs(CASE WHEN coalesce(n_docs_a, 0) = 0 THEN 0.0
         |       ELSE cast(coalesce(n_docs_b, 0) as double) / n_docs_a END - 1.0) > 0.5 AS drift_flag
         |FROM sa FULL OUTER JOIN sb ON sa.lang = sb.lang
-        |ORDER BY lang""".stripMargin,
+        |ORDER BY lang""".stripMargin)),
 
     // peer-inclusive RANGE frame over event time, exact cents integers
-    "p_event_features" ->
+    Query("p_event_features", eventFeatures, Some(
       """SELECT event_id, user_id, ts,
         |  cast(count(*) OVER w as bigint) AS n_30m,
         |  cast(sum(cast(round(value * 100) as bigint)) OVER w as bigint) AS cents_30m
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts
         |  RANGE BETWEEN INTERVAL 30 MINUTE PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
     // identical decomposed codepoints (the shared Scala constants),
     // DuckDB's nfc_normalize = the same Unicode canonical composition
-    "p_text_nfc" ->
-      (s"""WITH deco AS (
+    Query("p_text_nfc", textNfcQ, Some(
+      s"""WITH deco AS (
         |  SELECT doc_id, text ||
         |    CASE WHEN doc_id % 3 = 0 THEN '$NfcDeco0'
         |         WHEN doc_id % 3 = 1 THEN '$NfcDeco1'
@@ -6670,11 +6528,11 @@ object PipelineQueries {
         |SELECT doc_id, nfc_normalize(text) AS nfc_text,
         |  cast(length(text) as bigint) AS len_raw,
         |  cast(length(nfc_normalize(text)) as bigint) AS len_nfc
-        |FROM deco ORDER BY doc_id""".stripMargin),
+        |FROM deco ORDER BY doc_id""".stripMargin)),
 
     // same first-occurrence rule: keep line i iff its first index is i
     // (DuckDB lambda index and list_position are both 1-based)
-    "p_text_line_dedup" ->
+    Query("p_text_line_dedup", textLineDedup, Some(
       """WITH deco AS (
         |  SELECT doc_id,
         |    'site nav | home | about' || chr(10) || text || chr(10) ||
@@ -6684,10 +6542,10 @@ object PipelineQueries {
         |SELECT doc_id,
         |  array_to_string(list_filter(string_split(text, chr(10)),
         |    (l, i) -> list_position(string_split(text, chr(10)), l) = i), chr(10)) AS text_dedup
-        |FROM deco ORDER BY doc_id""".stripMargin,
+        |FROM deco ORDER BY doc_id""".stripMargin)),
 
-    "p_text_quality" ->
-      ("""SELECT doc_id,
+    Query("p_text_quality", textQuality, Some(
+      """SELECT doc_id,
         |  cast(length(text) as bigint) AS n_chars_m,
         |  cast(length(string_split_regex(trim(text), '\s+')) as bigint) AS n_tokens,
         |  cast(list_sum(list_transform(string_split_regex(trim(text), '\s+'),
@@ -6697,11 +6555,11 @@ object PipelineQueries {
       TextAnalysis.EnStopwords.map(w => s"'$w'").mkString(",") +
       """], lower(x)))) as bigint) AS stopword_hits
         |FROM documents
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin)),
 
     // aspect-fit into 64×64 from the synthesized dims (w = id%640+1,
     // h = id%480+1); scale/floor in double on both engines
-    "p_media_resize" ->
+    Query("p_media_resize", mediaResize, Some(
       """WITH img AS (
         |  SELECT doc_id AS media_id,
         |    cast(doc_id % 640 + 1 as double) AS w,
@@ -6711,12 +6569,12 @@ object PipelineQueries {
         |SELECT media_id,
         |  cast(greatest(1, floor(w * sc)) as int) AS decoded_width,
         |  cast(greatest(1, floor(h * sc)) as int) AS decoded_height
-        |FROM s ORDER BY media_id""".stripMargin,
+        |FROM s ORDER BY media_id""".stripMargin)),
 
     // video rows are doc_id % 3 = 2 with frames = max(1, n_chars/4) at
     // 40 ms/frame (see mediaFromDocuments); every-5th-frame indices and
     // integer timestamps must match the byte-parsed header arithmetic.
-    "p_frame_sample" ->
+    Query("p_frame_sample", frameSample, Some(
       """WITH v AS (
         |  SELECT doc_id AS media_id, greatest(1, n_chars // 4) AS frames
         |  FROM documents WHERE doc_id % 3 = 2),
@@ -6724,7 +6582,7 @@ object PipelineQueries {
         |SELECT media_id, cast(i AS int) AS frame_index,
         |  cast(i * 40 AS bigint) AS timestamp_ms,
         |  cast(frames AS int) AS n_frames_total
-        |FROM e ORDER BY media_id, frame_index""".stripMargin,
+        |FROM e ORDER BY media_id, frame_index""".stripMargin)),
 
     // image payloads are synthesized PNG (even ids, 57B overhead) / JPEG
     // (odd ids, 27B overhead) containers with the text embedded; audio
@@ -6736,7 +6594,7 @@ object PipelineQueries {
     // deliberately ≠ the duration_ms metadata). Decoded dims/rates/frame
     // counts/durations come from the engine PARSING those bytes, so a
     // parse bug (or a metadata echo) diverges from the formulas below.
-    "p_multimodal" ->
+    Query("p_multimodal", multimodal, Some(
       """SELECT doc_id AS media_id,
         |  CASE cast(doc_id % 3 as int) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
         |  cast(CASE WHEN doc_id % 3 = 1
@@ -6758,27 +6616,26 @@ object PipelineQueries {
         |       WHEN doc_id % 3 = 2 THEN greatest(1, n_chars // 4) * 40
         |       ELSE 0 END as bigint) AS decoded_duration_ms
         |FROM documents
-        |ORDER BY media_id""".stripMargin,
-  ) ++ Map(
-    "p_bpe_learn" -> (bpeStagesSql(8).stripSuffix(",") +
+        |ORDER BY media_id""".stripMargin)),
+    Query("p_bpe_learn", bpeLearn, Some(bpeStagesSql(8).stripSuffix(",") +
       (0 until 8).map(i =>
         s"SELECT $i AS rk, l AS lhs, r AS rhs, cast(cnt AS bigint) AS cnt FROM best$i")
-        .mkString("\n", "\nUNION ALL ", "\nORDER BY rk")),
-    "p_bpe_tokenize" -> (bpeStagesSql(8) +
+        .mkString("\n", "\nUNION ALL ", "\nORDER BY rk"))),
+    Query("p_bpe_tokenize", bpeTokenize, Some(bpeStagesSql(8) +
       """
         |dtok AS (SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
         |         FROM documents)
         |SELECT doc_id,
         |  cast(sum(len(string_split(trim(s.seg), '  '))) AS bigint) AS n_bpe_tokens
         |FROM dtok JOIN seg8 s ON dtok.w = s.word
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-    "p_domain_rank" -> domainRankOracleSql(5),
-    "p_domain_hits" -> domainHitsOracleSql(4),
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    Query("p_domain_rank", domainRank, Some(domainRankOracleSql(5))),
+    Query("p_domain_hits", domainHits, Some(domainHitsOracleSql(4))),
 
     // an INDEPENDENT definition of connected components: recursive-CTE
     // reachability closure + min over the undirected edge set — no
     // propagation rounds, so it can't share a bug with componentMin
-    "p_domain_components" ->
+    Query("p_domain_components", domainComponents, Some(
       """WITH RECURSIVE deco AS (
         |  SELECT doc_id, text || ' https://g' || (doc_id % 4) || 'a.example.org/x https://g' ||
         |    (doc_id % 4) || 'b.example.org/y' ||
@@ -6798,10 +6655,10 @@ object PipelineQueries {
         |  UNION
         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)
         |SELECT a AS node, min(b) AS label FROM reach
-        |GROUP BY a ORDER BY node""".stripMargin,
+        |GROUP BY a ORDER BY node""".stripMargin)),
     // BPE per-doc counts (the p_bpe_tokenize replay) driving the
     // p_pack_sequences window at budget 2000
-    "p_pack_bpe" -> (bpeStagesSql(8) +
+    Query("p_pack_bpe", packBpe, Some(bpeStagesSql(8) +
       """
         |dtok AS (SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
         |         FROM documents),
@@ -6817,7 +6674,8 @@ object PipelineQueries {
         |s AS (SELECT doc_id, lang, ntok, cast(floor(pre / 2000.0) as bigint) AS seq_id FROM c)
         |SELECT doc_id, lang, ntok, seq_id,
         |  cast(row_number() OVER (PARTITION BY lang, seq_id ORDER BY doc_id) - 1 as bigint) AS seq_pos
-        |FROM s ORDER BY doc_id""".stripMargin))
+        |FROM s ORDER BY doc_id""".stripMargin)),
+  )
 
   /** Relational replay of `k` integer-PageRank rounds over the URL-pair
     * domain graph (same extraction regexes as p_url_filter's oracle;

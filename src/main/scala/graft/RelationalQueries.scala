@@ -21,8 +21,15 @@ object RelationalQueries {
   private val cents = "cast(round(%s * 100) as bigint)"
   private def c(col: String) = cents.format(col)
 
-  /** name → (ANSI SQL run by both engines). */
-  val all: Seq[(String, String)] = Seq(
+  /** A relational row: Spark runs `sql` through the transform path, and the
+    * oracle is the same string. */
+  private def relational(name: String, sql: String): Query =
+    Query(name, (spark, sfDir) => {
+      Tables.registerAll(spark, sfDir)
+      new GraftSession(spark).sql(sql)
+    }, Some(sql))
+
+  val all: Seq[Query] = Seq(
 
     // TPC-H Q1 shape: scan-heavy grouped aggregation with partial aggs.
     "q1_agg" ->
@@ -184,7 +191,5 @@ object RelationalQueries {
          |WHERE p_size <= 20
          |GROUP BY r_name
          |ORDER BY r_name""".stripMargin,
-  )
-
-  val byName: Map[String, String] = all.toMap
+  ).map { case (name, sql) => relational(name, sql) }
 }

@@ -2,45 +2,48 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One runnable query: `run(spark, sfDir)` builds its result. `oracle` is
+  * the DuckDB-equivalent SQL; a row is in the driver's correctness
+  * contract exactly when it has one, and bench-only when it is `None`.
+  * `curve` puts the row on [[Bench]]'s scale curve. */
+final case class Query(
+    name: String,
+    run: (SparkSession, String) => DataFrame,
+    oracle: Option[String],
+    curve: Boolean = false)
+
+/** Driver contract — see SURVEY.md §7.
   *
-  * `queries` covers SURVEY §2's operator inventory: the relational
-  * pass-through surface ([[RelationalQueries]], executed through the
-  * transform/run_raw_sql templating path) and the operator-semantic suite
-  * ([[OperatorQueries]], exercising loadFile/export/append/merge/checks/
-  * flatten/dedup/similarity/text machinery). `oracleSql` carries the
-  * DuckDB-equivalent SQL for every SQL-expressible query.
+  * [[all]] declares every query once, family by family: the relational
+  * pass-through surface ([[RelationalQueries]], run through the
+  * transform/run_raw_sql templating path), the operator-semantic suite
+  * ([[OperatorQueries]]: loadFile/export/append/merge/checks/flatten and
+  * friends), the curation pipelines ([[PipelineQueries]]) and their
+  * streaming twins ([[StreamingQueries]]). The three maps the driver,
+  * [[Verify]] and [[Bench]] read are derived from it.
   */
 object SparkEntry {
+
+  val all: Seq[Query] =
+    RelationalQueries.all ++ OperatorQueries.all ++ PipelineQueries.all ++
+      StreamingQueries.all
+
+  /** The correctness contract: every row with an oracle. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.collect { case q if q.oracle.isDefined => q.name -> q.run }.toMap
+
+  /** Rows [[Bench]] times but the driver does not check: each is
+    * un-oracle-able in DuckDB and triangulated by a hash-matched sibling
+    * in [[queries]] (see [[PipelineQueries.all]]). */
+  val benchOnlyQueries: Map[String, (SparkSession, String) => DataFrame] =
+    all.collect { case q if q.oracle.isEmpty => q.name -> q.run }.toMap
+
+  val oracleSql: Map[String, String] =
+    all.collect { case Query(name, _, Some(sql), _) => name -> sql }.toMap
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     val sfDir = "/root/testdata/sf0.001"
-    Tables.registerAll(spark, sfDir)
-    new GraftSession(spark).sql(RelationalQueries.byName("q3_join_agg"))
+    queries("q3_join_agg")(spark, sfDir)
   }
-
-  private def relational: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.all.map { case (name, sql) =>
-      name -> ((s: SparkSession, dir: String) => {
-        Tables.registerAll(s, dir)
-        new GraftSession(s).sql(sql)
-      })
-    }.toMap
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    relational ++ OperatorQueries.queries ++ PipelineQueries.queries ++
-      StreamingQueries.queries
-
-  /** Benchmark-only queries — run (and scale-curve-tracked) by
-    * [[Bench]] but excluded from the driver's correctness contract:
-    * each is un-oracle-able in DuckDB and triangulated by a
-    * hash-matched sibling in [[queries]]
-    * (see [[PipelineQueries.benchOnlyQueries]]). */
-  def benchOnlyQueries: Map[String, (SparkSession, String) => DataFrame] =
-    PipelineQueries.benchOnlyQueries
-
-  def oracleSql: Map[String, String] =
-    RelationalQueries.byName ++ OperatorQueries.oracleSql ++
-      PipelineQueries.oracleSql ++ StreamingQueries.oracleSql
 }

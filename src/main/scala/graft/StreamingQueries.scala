@@ -600,29 +600,6 @@ object StreamingQueries {
       .select("vec_id", "cell").orderBy("vec_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s_stream_stream_join" -> (streamStreamJoin _),
-    "s_window_agg" -> (streamWindowAgg _),
-    "s_sessionize_batch" -> (sessionizeBatch _),
-    "s_sessionize_stream" -> (sessionizeStream _),
-    "s_quality_stream" -> (qualityStream _),
-    "s_classifier_stream" -> (classifierStream _),
-    "s_pii_stream" -> (piiScrubStream _),
-    "s_fix_mojibake_stream" -> (fixMojibakeStream _),
-    "s_profile_stream" -> (profileApproxStream _),
-    "s_url_policy_stream" -> (urlPolicyStream _),
-    "s_dedup_stream" -> (dedupStream _),
-    "s_dedup_neardup_stream" -> (dedupNearDupStream _),
-    "s_dedup_media_stream" -> (dedupMediaStream _),
-    "s_decontaminate_stream" -> (decontaminateStream _),
-    "s_sketch_stream" -> (sketchStream _),
-    "s_hll_stream" -> (hllStream _),
-    "s_quantile_stream" -> (quantileStream _),
-    "s_asof_stream" -> (asofStream _),
-    "s_cms_stream" -> (cmsStream _),
-    "s_ann_assign_stream" -> (annAssignStream _),
-  )
-
   private val sessionizeOracle =
     """WITH fl AS (
       |  SELECT user_id, ts, value,
@@ -643,76 +620,82 @@ object StreamingQueries {
       |GROUP BY user_id, sid
       |ORDER BY user_id, session_start""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "s_window_agg" ->
+  /** The oracle of the batch query `name`, read from [[PipelineQueries.all]]
+    * rather than [[SparkEntry]], whose initialisation forces this object. */
+  private def batchOracle(name: String): String =
+    PipelineQueries.all.find(_.name == name).flatMap(_.oracle)
+      .getOrElse(throw new NoSuchElementException(s"no batch oracle for $name"))
+
+  val all: Seq[Query] = Seq(
+    Query("s_window_agg", streamWindowAgg, Some(
       """SELECT date_trunc('hour', ts) AS window_start, event_type,
         |  cast(count(*) as bigint) AS n,
         |  cast(sum(cast(round(value * 100) as bigint)) as bigint) AS value_cents
         |FROM events
         |GROUP BY date_trunc('hour', ts), event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-    "s_sessionize_batch" -> sessionizeOracle,
-    "s_sessionize_stream" -> sessionizeOracle,
+        |ORDER BY window_start, event_type""".stripMargin)),
+    Query("s_sessionize_batch", sessionizeBatch, Some(sessionizeOracle)),
+    Query("s_sessionize_stream", sessionizeStream, Some(sessionizeOracle)),
     // the IDENTICAL batch replay — streaming must converge to the batch
     // keep-set on the same corpus
-    "s_dedup_media_stream" -> PipelineQueries.perceptualDedupOracle("1 = 1"),
+    Query("s_dedup_media_stream", dedupMediaStream, Some(PipelineQueries.perceptualDedupOracle("1 = 1"))),
     // the batch k-means build + final assignment: the stream routes each
     // arriving vector against the SAME driver-resident index, so the
     // drained result must equal the batch a2 relation cell-for-cell
-    "s_ann_assign_stream" ->
-      (s"""${PipelineQueries.kmeansWithSql(k = 16, rounds = 2, blockSize = 16)}
-         |SELECT vec_id, cast(cid as int) AS cell FROM a2 ORDER BY vec_id""".stripMargin),
-    "s_stream_stream_join" ->
+    Query("s_ann_assign_stream", annAssignStream, Some(
+      s"""${PipelineQueries.kmeansWithSql(k = 16, rounds = 2, blockSize = 16)}
+         |SELECT vec_id, cast(cid as int) AS cell FROM a2 ORDER BY vec_id""".stripMargin)),
+    Query("s_stream_stream_join", streamStreamJoin, Some(
       """WITH v AS (SELECT event_id AS view_id, user_id, ts AS vts FROM events WHERE event_type = 'view'),
         |p AS (SELECT event_id AS purchase_id, user_id, ts AS pts FROM events WHERE event_type = 'purchase')
         |SELECT v.view_id, p.purchase_id
         |FROM v JOIN p ON v.user_id = p.user_id AND p.pts >= v.vts AND p.pts <= v.vts + INTERVAL 1 HOUR
-        |ORDER BY view_id, purchase_id""".stripMargin,
+        |ORDER BY view_id, purchase_id""".stripMargin)),
 
     // identical mutation-map oracle as p_dedup_simhash_keep: the streaming
     // LSH must find exactly the constructed pairs across the batch split
-    "s_dedup_neardup_stream" ->
+    Query("s_dedup_neardup_stream", dedupNearDupStream, Some(
       """SELECT CASE WHEN doc_id % 3 = 0 AND doc_id % 5 = 0
         |            THEN doc_id - 100000 ELSE doc_id END AS doc_id
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // the batch quality-gate oracle, projected to its pass set — the
     // stateless stream must reproduce it exactly
-    "s_quality_stream" ->
+    Query("s_quality_stream", qualityStream, Some(
       s"""SELECT doc_id FROM (
-         |${PipelineQueries.oracleSql("p_quality_filter")}
-         |) WHERE pass ORDER BY doc_id""".stripMargin,
+         |${batchOracle("p_quality_filter")}
+         |) WHERE pass ORDER BY doc_id""".stripMargin)),
 
     // the batch classifier oracle verbatim — the fused streaming scorer
     // must reproduce the relational scorer row-for-row
-    "s_classifier_stream" -> PipelineQueries.oracleSql("p_quality_classifier"),
+    Query("s_classifier_stream", classifierStream, Some(batchOracle("p_quality_classifier"))),
 
     // the batch PII-scrub oracle verbatim — stateless stream == batch
-    "s_pii_stream" -> PipelineQueries.oracleSql("p_pii_scrub"),
+    Query("s_pii_stream", piiScrubStream, Some(batchOracle("p_pii_scrub"))),
 
     // stateless projection → drained stream equals batch exactly
-    "s_fix_mojibake_stream" -> PipelineQueries.oracleSql("p_fix_mojibake"),
+    Query("s_fix_mojibake_stream", fixMojibakeStream, Some(batchOracle("p_fix_mojibake"))),
 
     // register-max + counter sums are batch-split invariant → the
     // drained stream equals the batch profile, same oracle
-    "s_profile_stream" -> PipelineQueries.oracleSql("p_profile_approx"),
+    Query("s_profile_stream", profileApproxStream, Some(batchOracle("p_profile_approx"))),
 
     // stream-static blocklist join + stateless rules → equals batch
-    "s_url_policy_stream" -> PipelineQueries.oracleSql("p_url_policy"),
+    Query("s_url_policy_stream", urlPolicyStream, Some(batchOracle("p_url_policy"))),
 
     // the batch sketch oracle verbatim — the k-min SET is batch-split
     // invariant, so the drained stream must equal the batch sketch
     // cell-for-cell (max_kmin and the estimator double included)
-    "s_sketch_stream" -> PipelineQueries.oracleSql("p_sketch_vocab"),
-    "s_hll_stream" -> PipelineQueries.oracleSql("p_sketch_hll"),
+    Query("s_sketch_stream", sketchStream, Some(batchOracle("p_sketch_vocab"))),
+    Query("s_hll_stream", hllStream, Some(batchOracle("p_sketch_hll"))),
     // k-min (hash, value) packs are batch-split invariant → the drained
     // stream equals the batch quantile report, same oracle
-    "s_quantile_stream" -> PipelineQueries.oracleSql("p_sketch_quantiles"),
-    "s_asof_stream" -> PipelineQueries.oracleSql("p_asof_join"),
+    Query("s_quantile_stream", quantileStream, Some(batchOracle("p_sketch_quantiles"))),
+    Query("s_asof_stream", asofStream, Some(batchOracle("p_asof_join"))),
     // the drained streaming counter table == the batch CMS counters: the
     // oracle replays the row:item md5 buckets and counts over ALL gram
     // occurrences (multiplicity kept), exactly the p_sketch_cms `cm` CTE
-    "s_cms_stream" -> {
+    Query("s_cms_stream", cmsStream, Some(
       s"""WITH ${PipelineQueries.sketchGramsSql},
         |rws AS (SELECT unnest([0, 1, 2, 3]) AS r),
         |hb AS (SELECT rws.r,
@@ -721,10 +704,9 @@ object StreamingQueries {
         |cm AS (SELECT r, bucket, count(*) AS c FROM hb GROUP BY r, bucket)
         |SELECT CAST(r AS INT) AS cms_row, CAST(bucket AS BIGINT) AS cms_bucket,
         |  CAST(c AS BIGINT) AS cnt
-        |FROM cm ORDER BY cms_row, cms_bucket""".stripMargin
-    },
+        |FROM cm ORDER BY cms_row, cms_bucket""".stripMargin)),
 
-    "s_dedup_stream" ->
+    Query("s_dedup_stream", dedupStream, Some(
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -732,13 +714,13 @@ object StreamingQueries {
         |SELECT min(doc_id) AS doc_id, cast(count(*) as bigint) AS n_copies
         |FROM corpus
         |GROUP BY regexp_replace(lower(trim(text)), '\s+', ' ', 'g')
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // stream-static anti-join == the batch text-equality anti-join
-    "s_decontaminate_stream" ->
+    Query("s_decontaminate_stream", decontaminateStream, Some(
       """SELECT d.doc_id FROM documents d
         |WHERE NOT EXISTS (SELECT 1 FROM documents r
         |                  WHERE r.doc_id % 7 = 0 AND r.text = d.text)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
   )
 }

@@ -284,25 +284,15 @@ object Dedup {
       hash(lit(b), slice(signature, b * rowsPerBand + 1, rowsPerBand))
     }: _*)
 
-  /** Persist `df` unless `spark.graft.cacheIntermediates` is false — the
-    * LSH pipelines cache compact multi-consumed relations (signatures);
-    * long-lived sessions issuing many dedup calls can disable this (or
-    * `spark.catalog.clearCache()` between calls, as the verify/bench
-    * harnesses do) to bound cached-storage growth. */
-  private[functions] def maybeCache(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("spark.graft.cacheIntermediates", "true").toBoolean)
-      df.persist()
-    else df
-
   /** (id, size, signature) of a shingle-set relation via the fused
     * [[MinHashSigExpr]] — compact (numHashes longs per doc) and consumed
-    * by banding and the estimate prefilter, so it is [[maybeCache]]d. */
+    * by banding and the estimate prefilter, so it is persisted. */
   private def sigsOf(withSets: DataFrame, idCol: String, numHashes: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val sigCol = ColumnBridge.column(
       MinHashSigExpr(ColumnBridge.expression(col("sets")), numHashes))
-    maybeCache(withSets.select(col(idCol).as("__id"),
-      size(col("sets")).as("__sz"), sigCol.as("__sig")))
+    withSets.select(col(idCol).as("__id"),
+      size(col("sets")).as("__sz"), sigCol.as("__sig")).persist()
   }
 
   /** Explode a sigs relation into (id, size, band-bucket) rows. */
@@ -593,7 +583,7 @@ object Dedup {
     // minhash/ngram rows over the same machinery).
     val rawSets = charNgramSets(df, idCol, textCol, ngramSize)
       .withColumnRenamed("__id", idCol)
-    val sets = if (stage == null) maybeCache(rawSets) else stage("sets", rawSets)
+    val sets = if (stage == null) rawSets.persist() else stage("sets", rawSets)
     val pairs = nearDupPairsFromSets(sets, idCol, numHashes, bands,
       threshold, maxBucketSize,
       stage = if (stage == null) (_, d) => d else stage)
@@ -771,16 +761,14 @@ object Dedup {
     * approximation of connected-components dedup; chains collapse to their
     * minima transitively across the pair set.) */
   def keepFirstFromPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    // maybeCache: when `df` is a UNION (the near-dup corpora all are),
+    // persist: when `df` is a UNION (the near-dup corpora all are),
     // PushdownLeftSemiOrAntiJoin replicates the anti-join's RIGHT side
     // into every union branch — without a materialization point that
     // re-runs the ENTIRE pair-mining subtree once per branch (measured at
     // ×10: the quadratic in-cell cosine stage of p_dedup_semantic ran
     // twice, 19.5 s CPU each). The loser-id relation is dup-rate-sized
-    // (ids only), the cheapest possible thing to pin; with caching
-    // disabled the duplication returns — documented trade for long-lived
-    // sessions that opt out.
-    val losers = maybeCache(pairs.select(col("id_b").as(idCol)).distinct())
+    // (ids only), the cheapest possible thing to pin.
+    val losers = pairs.select(col("id_b").as(idCol)).distinct().persist()
     df.join(losers, Seq(idCol), "left_anti")
   }
 

@@ -188,8 +188,8 @@ object Similarity {
       maxBucketSize: Int = 10000): DataFrame = {
     // the normalized relation feeds candidate generation and both vector
     // join-backs — cache it (conf-gated like the MinHash signatures)
-    val normed = Dedup.maybeCache(
-      df.select(col(idCol).as("__id"), normalize(col(vecCol)).as("__v")))
+    val normed =
+      df.select(col(idCol).as("__id"), normalize(col(vecCol)).as("__v")).persist()
     val pairs = embeddingCandidatePairs(normed, dim, bits, tables, maxBucketSize)
     // pin the cosine-verification stage's exchange on the second join's
     // own key with an explicit count (the Dedup.estimateAndVerify
@@ -388,7 +388,7 @@ object Similarity {
     // the assigned relation feeds the guard count and BOTH pair sides —
     // cache it (conf-gated like the LSH signatures) so the centroid
     // assignment runs once, not three times
-    val cells = Dedup.maybeCache(index.cells)
+    val cells = index.cells.persist()
     val oversized = cells.groupBy("__cid").agg(count(lit(1)).as("__cn"))
       .where(col("__cn") > maxCellSize).select("__cid")
     val sized = cells.join(broadcast(oversized), Seq("__cid"), "left_anti")
@@ -598,8 +598,8 @@ object Similarity {
       rounds: Int,
       blockSize: Int = 1024): (DataFrame, Array[Int], Seq[Seq[Double]]) = {
     require(k > 0 && rounds > 0, "k and rounds must be positive")
-    val v = Dedup.maybeCache(df.select(col(idCol),
-      transform(normalize(col(vecCol)), x => x.cast("double")).as("__v")))
+    val v = df.select(col(idCol),
+      transform(normalize(col(vecCol)), x => x.cast("double")).as("__v")).persist()
     def renorm(c: Column): Column =
       transform(c, x => x / sqrt(dot(c, c)))
     // Seeds: the k lowest-id vectors, cid = position in id order.
@@ -807,8 +807,8 @@ object Similarity {
       k: Int,
       rounds: Int,
       blockSize: Int): (DataFrame, Seq[(Array[Int], Seq[Seq[Double]])]) = {
-    val v = Dedup.maybeCache(df.select(col(idCol),
-      transform(normalize(col(vecCol)), x => x.cast("double")).as("__v")))
+    val v = df.select(col(idCol),
+      transform(normalize(col(vecCol)), x => x.cast("double")).as("__v")).persist()
     (v, pqFitPrepared(v, idCol, m, subDim, k, rounds, blockSize))
   }
 
@@ -992,11 +992,11 @@ object Similarity {
     val centDf = cids.toSeq.zip(matrix).toDF("__cell", "__cv")
     // residuals against the assigned centroid — cached: consumed m times
     // for codebook training plus once for code assignment
-    val resid = Dedup.maybeCache(
+    val resid =
       v.select(col(idCol), col("__v"), kmeansAssignCol(cids, matrix).cast("int").as("__cell"))
         .join(broadcast(centDf), Seq("__cell"))
         .select(col(idCol), col("__cell"),
-          zip_with(col("__v"), col("__cv"), (x, c) => x - c).as("__v")))
+          zip_with(col("__v"), col("__cv"), (x, c) => x - c).as("__v")).persist()
     val books = pqFitPrepared(resid.select(col(idCol), col("__v")),
       idCol, m, subDim, kCent, pqRounds, blockSize)
     // per-row storage: cell + m residual codes (the compressed corpus)

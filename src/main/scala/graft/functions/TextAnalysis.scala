@@ -891,8 +891,8 @@ object TextAnalysis {
     val rawGrams = ColumnBridge.column(WordGramsExpr(
       ColumnBridge.expression(lower(trim(col(textCol)))), k, distinct = false))
     // every position, with multiplicity — the coverage denominator
-    val positions = Dedup.maybeCache(
-      df.select(col(idCol), explode(transform(rawGrams, g => xxhash64(g))).as("__g")))
+    val positions =
+      df.select(col(idCol), explode(transform(rawGrams, g => xxhash64(g))).as("__g")).persist()
     // grams appearing in ≥ 2 distinct docs (distinct-per-doc first, so a
     // doc repeating its own phrase doesn't count as cross-doc duplication)
     val dupGrams = positions.select(col(idCol), col("__g")).distinct()
@@ -930,11 +930,11 @@ object TextAnalysis {
     // relation with narrow explodes — no gram self-join, the gram hash
     // never shuffles twice. Cached (conf-gated, like the LSH signature
     // relations) because pairs and sizes both consume it.
-    val perGram = Dedup.maybeCache(
+    val perGram =
       df.select(col(srcCol).as("__s"),
           explode(Dedup.wordShingles(col(textCol), k)).as("__g"))
         .distinct()
-        .groupBy("__g").agg(collect_set(col("__s")).as("__ss")))
+        .groupBy("__g").agg(collect_set(col("__s")).as("__ss")).persist()
     val sizes = perGram.select(explode(col("__ss")).as("source_a"))
       .groupBy("source_a").agg(count(lit(1)).as("__na"))
     val shared = perGram
@@ -1071,7 +1071,7 @@ object TextAnalysis {
       posexplode(transform(sequence(lit(0), n - k),
         i => xxhash64(concat_ws(" ", slice(col("__toks"), i + 1, lit(k))))))
         .as(Seq("__pos", "__g")))
-    val positions = Dedup.maybeCache(grams)
+    val positions = grams.persist()
     val dupOwned = positions.select(col(idCol), col("__g")).distinct()
       .groupBy("__g")
       .agg(count(lit(1)).as("__df"), min(col(idCol)).as("__owner"))

@@ -20,16 +20,16 @@ import java.nio.file.{Files, Path}
   * SFTP locations (files/locations/sftp.py) are fetched by delegating the
   * wire protocol to the OpenSSH client installed on the driver host (every
   * mainstream cluster image ships openssh-client): the command is built
-  * from the `spark.graft.sftpFetchCmd` template — default
+  * from the `spark.graft.fetchCmd.sftp` template — default
   * `sftp -q -oBatchMode=yes -P {port} {userhost}:{path} {dest}` — so
   * key-based auth, jump hosts, or an entirely different transfer tool are
   * one conf away, and tests can substitute a stub command. The same
   * mechanism serves Google Drive (google/gdrive.py) — whose OAuth client
   * library the reference delegates to GoogleDriveHook — through the
   * rclone CLI by default ([[DefaultGdriveCmd]]; remote name, auth mode,
-  * or a different tool via `spark.graft.gdriveFetchCmd` /
-  * `spark.graft.fetchCmd.gdrive`), and generalizes: any future routed
-  * scheme gets a command transport from `spark.graft.fetchCmd.<scheme>`.
+  * or a different tool via `spark.graft.fetchCmd.gdrive`), and
+  * generalizes: any future routed scheme gets a command transport from
+  * `spark.graft.fetchCmd.<scheme>`.
   */
 object RemoteFetch {
 
@@ -99,22 +99,18 @@ object RemoteFetch {
     * `gdrive://reports/2024/q1.csv` URL maps to
     * `rclone copyto gdrive:reports/2024/q1.csv <dest>` via the
     * `{hostpath}` token. Different remote name, service-account auth, or
-    * another tool entirely: set `spark.graft.gdriveFetchCmd` (or the
-    * generic `spark.graft.fetchCmd.gdrive`). */
+    * another tool entirely: set `spark.graft.fetchCmd.gdrive`. */
   val DefaultGdriveCmd = "rclone copyto gdrive:{hostpath} {dest}"
 
   /** The command template serving `sch`, if any: the per-scheme conf
-    * `spark.graft.fetchCmd.<scheme>` wins; sftp falls back to
-    * `spark.graft.sftpFetchCmd` then the OpenSSH [[DefaultSftpCmd]];
-    * gdrive falls back to `spark.graft.gdriveFetchCmd` then the rclone
-    * [[DefaultGdriveCmd]]; other schemes have no default. */
+    * `spark.graft.fetchCmd.<scheme>`, else the OpenSSH [[DefaultSftpCmd]]
+    * for sftp and the rclone [[DefaultGdriveCmd]] for gdrive; other
+    * schemes have no default. */
   def commandTemplate(
       spark: org.apache.spark.sql.SparkSession, sch: String): Option[String] =
     spark.conf.getOption(s"spark.graft.fetchCmd.$sch").orElse(sch match {
-      case "sftp" =>
-        Some(spark.conf.getOption("spark.graft.sftpFetchCmd").getOrElse(DefaultSftpCmd))
-      case "gdrive" =>
-        Some(spark.conf.getOption("spark.graft.gdriveFetchCmd").getOrElse(DefaultGdriveCmd))
+      case "sftp" => Some(DefaultSftpCmd)
+      case "gdrive" => Some(DefaultGdriveCmd)
       case _ => None
     })
 

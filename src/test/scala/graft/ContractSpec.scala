@@ -14,6 +14,17 @@ class ContractSpec extends GraftSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
+  test("the registry declares each query once and oracles every contract row") {
+    val names = SparkEntry.all.map(_.name)
+    assert(names.diff(names.distinct).isEmpty,
+      "declared more than once: " + names.diff(names.distinct).distinct.mkString(", "))
+    assert(SparkEntry.queries.size == 216)
+    assert(SparkEntry.benchOnlyQueries.size == 6)
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
+    assert(SparkEntry.queries.keySet.intersect(SparkEntry.benchOnlyQueries.keySet).isEmpty)
+    assert(SparkEntry.all.count(_.curve) == 37)
+  }
+
   test("every declared query emits only atomic top-level columns") {
     val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
       val schema = SparkEntry.queries(name)(spark, sfDir).schema

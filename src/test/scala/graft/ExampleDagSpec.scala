@@ -105,19 +105,19 @@ class ExampleDagSpec extends GraftSuite {
     // failing transport surfaces as a loud IOException with exit code +
     // output, never a silent miss. Full happy paths are op_load_sftp /
     // op_load_gdrive / IoSpec.
-    spark.conf.set("spark.graft.sftpFetchCmd", "false")
+    spark.conf.set("spark.graft.fetchCmd.sftp", "false")
     try {
       val e = intercept[java.io.IOException] {
         g.loadFile(FileRef("sftp://host/path/data.csv"))
       }
       assert(e.getMessage.contains("sftp fetch failed"), e.getMessage)
-    } finally spark.conf.unset("spark.graft.sftpFetchCmd")
-    spark.conf.set("spark.graft.gdriveFetchCmd", "false")
+    } finally spark.conf.unset("spark.graft.fetchCmd.sftp")
+    spark.conf.set("spark.graft.fetchCmd.gdrive", "false")
     try {
       val e = intercept[java.io.IOException] {
         g.loadFile(FileRef("gdrive://folder/data.csv"))
       }
       assert(e.getMessage.contains("gdrive fetch failed"), e.getMessage)
-    } finally spark.conf.unset("spark.graft.gdriveFetchCmd")
+    } finally spark.conf.unset("spark.graft.fetchCmd.gdrive")
   }
 }

@@ -277,16 +277,16 @@ class IoSpec extends GraftSuite {
          |""".stripMargin)
     script.toFile.setExecutable(true)
     val tpl = graft.io.RemoteFetch.DefaultSftpCmd.replace("sftp ", script.toString + " ")
-    spark.conf.set("spark.graft.sftpFetchCmd", tpl)
+    spark.conf.set("spark.graft.fetchCmd.sftp", tpl)
     try {
       val local = graft.io.RemoteFetch.fetch(spark, "sftp://tester@127.0.0.1:2222/data.csv")
       assert(java.nio.file.Files.readString(java.nio.file.Paths.get(local)).contains("2,b"))
       // a failing transport surfaces exit code + output, not a missing file
-      spark.conf.set("spark.graft.sftpFetchCmd", "false")
+      spark.conf.set("spark.graft.fetchCmd.sftp", "false")
       val e = intercept[java.io.IOException](
         graft.io.RemoteFetch.fetch(spark, "sftp://h/x"))
       assert(e.getMessage.contains("sftp fetch failed"), e.getMessage)
-    } finally spark.conf.unset("spark.graft.sftpFetchCmd")
+    } finally spark.conf.unset("spark.graft.fetchCmd.sftp")
     // gdrive default transport: the rclone template — pin the exact argv
     // the DEFAULT template produces ({hostpath} folds the URL host into
     // the rclone remote path), with a stand-in performing the copy
@@ -299,12 +299,12 @@ class IoSpec extends GraftSuite {
          |""".stripMargin)
     gscript.toFile.setExecutable(true)
     val gtpl = graft.io.RemoteFetch.DefaultGdriveCmd.replace("rclone ", gscript.toString + " ")
-    spark.conf.set("spark.graft.gdriveFetchCmd", gtpl)
+    spark.conf.set("spark.graft.fetchCmd.gdrive", gtpl)
     try {
       val gl = graft.io.RemoteFetch.fetch(spark, "gdrive://folder/data.csv")
       assert(java.nio.file.Files.readString(java.nio.file.Paths.get(gl)).contains("2,b"))
-    } finally spark.conf.unset("spark.graft.gdriveFetchCmd")
-    // ...and the generic per-scheme hook takes precedence when configured
+    } finally spark.conf.unset("spark.graft.fetchCmd.gdrive")
+    // ...and any other template under the same key replaces the default
     spark.conf.set("spark.graft.fetchCmd.gdrive", s"cp $root{path} {dest}")
     try {
       val gl = graft.io.RemoteFetch.fetch(spark, "gdrive://folder/data.csv")

@@ -1130,7 +1130,7 @@ class PipelineSpec extends GraftSuite {
   }
 
   test("z-order layout: every file bounded to a quarter-range in BOTH dimensions") {
-    val rows = PipelineQueries.queries("p_zorder_layout")(spark, "/root/testdata/sf0.001")
+    val rows = SparkEntry.queries("p_zorder_layout")(spark, "/root/testdata/sf0.001")
       .collect()
     assert(rows.nonEmpty && rows.length <= 16)
     rows.foreach { r =>
@@ -1149,7 +1149,7 @@ class PipelineSpec extends GraftSuite {
 
   test("z-order pruned scan: partition filter on the scan, strict file subset, no row loss") {
     val sfDir = "/root/testdata/sf0.001"
-    val df = PipelineQueries.queries("p_zorder_prune")(spark, sfDir)
+    val df = SparkEntry.queries("p_zorder_prune")(spark, sfDir)
     // the candidate ids must reach the parquet scan as a PARTITION filter
     // (planning-time directory pruning, not a post-scan predicate)
     val plan = df.queryExecution.explainString(
@@ -1172,7 +1172,7 @@ class PipelineSpec extends GraftSuite {
   }
 
   test("classifier eval: held-out decorated split scores above the accuracy floor") {
-    val row = PipelineQueries.queries("p_classifier_eval")(spark, "/root/testdata/sf0.001")
+    val row = SparkEntry.queries("p_classifier_eval")(spark, "/root/testdata/sf0.001")
       .collect()(0)
     val n = row.getAs[Long]("n_pos") + row.getAs[Long]("n_neg")
     assert(n > 0)
@@ -1625,14 +1625,14 @@ class PipelineSpec extends GraftSuite {
 
   test("dedupIncremental: staged batch-0 equals the fresh two-batch run") {
     val sfDir = "/root/testdata/sf0.001"
-    val s1 = PipelineQueries.queries("p_dedup_incremental")(spark, sfDir)
+    val s1 = SparkEntry.queries("p_dedup_incremental")(spark, sfDir)
       .as[Long].collect().toSeq
     // second invocation serves batch 0 from the staged artifacts —
     // identical result, no double-append self-anti-join
-    val s2 = PipelineQueries.queries("p_dedup_incremental")(spark, sfDir)
+    val s2 = SparkEntry.queries("p_dedup_incremental")(spark, sfDir)
       .as[Long].collect().toSeq
     assert(s1 == s2)
-    val fresh = PipelineQueries.benchOnlyQueries("p_dedup_incremental_fresh")(
+    val fresh = SparkEntry.benchOnlyQueries("p_dedup_incremental_fresh")(
       spark, sfDir).as[Long].collect().toSeq
     assert(s1 == fresh)
   }
@@ -2633,9 +2633,9 @@ class PipelineSpec extends GraftSuite {
     val sfDir = "/root/testdata/sf0.001"
     // staged contract path (first call materializes sets/sigs/banded,
     // second serves from the artifacts)
-    val s1 = PipelineQueries.queries("p_dedup_edit")(spark, sfDir)
+    val s1 = SparkEntry.queries("p_dedup_edit")(spark, sfDir)
       .as[(Long, Long, Long)].collect().toSet
-    val s2 = PipelineQueries.queries("p_dedup_edit")(spark, sfDir)
+    val s2 = SparkEntry.queries("p_dedup_edit")(spark, sfDir)
       .as[(Long, Long, Long)].collect().toSet
     assert(s1 == s2)
     // fresh witness: identical arguments, no staging hook

@@ -33,10 +33,21 @@ class SketchSpec extends GraftSuite {
     assert(a == b)
   }
 
+  /** Run `body` with `spark.sql.ansi.enabled` set to `value`, then put the
+    * key back as it was — unset again when it was unset, so later suites
+    * in the shared session keep the session default. */
+  private def withAnsi[T](value: String)(body: => T): T = {
+    val prev = spark.conf.getOption("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    }
+  }
+
   test("kmvEstimate is total: all-NULL group, NULL sketch, ANSI mode on") {
-    val prev = spark.conf.get("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    try {
+    withAnsi("true") {
       // an all-NULL group folds to an EMPTY sketch → exact estimate 0.0,
       // no out-of-bounds element access under ANSI
       val d = Seq[Option[String]](None, None, None).toDF("v")
@@ -50,11 +61,13 @@ class SketchSpec extends GraftSuite {
         .select(Sketch.kmvEstimate(lit(null).cast("array<bigint>"), 8).as("e"))
         .as[Option[Double]].head()
       assert(n.isEmpty)
-    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
-    // and with ANSI back off, the NULL sketch still yields NULL
-    val off = Seq(1).toDF("x")
-      .select(Sketch.kmvEstimate(lit(null).cast("array<bigint>"), 8).as("e"))
-      .as[Option[Double]].head()
+    }
+    // and with ANSI off, the NULL sketch still yields NULL
+    val off = withAnsi("false") {
+      Seq(1).toDF("x")
+        .select(Sketch.kmvEstimate(lit(null).cast("array<bigint>"), 8).as("e"))
+        .as[Option[Double]].head()
+    }
     assert(off.isEmpty)
   }
 
