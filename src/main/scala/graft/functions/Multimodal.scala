@@ -29,6 +29,14 @@ object Multimodal {
   private[functions] val MaxDecodeBytes: Long = 1L << 26
   private[functions] val MaxDecodePixels: Long = 1L << 24
 
+  /** Unsigned big- and little-endian 16/32-bit reads at `b(i)` (32-bit
+    * values wrap to negative above 2^31 - 1): the byte readers of every
+    * container walk below. */
+  private def be16(b: Array[Byte], i: Int): Int = ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
+  private def be32(b: Array[Byte], i: Int): Int = (be16(b, i) << 16) | be16(b, i + 2)
+  private def le16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
+  private def le32(b: Array[Byte], i: Int): Int = le16(b, i) | (le16(b, i + 2) << 16)
+
   /** A media record: the multimodal table schema. `content` is the opaque
     * payload; `meta` carries source-asserted properties. */
   case class MediaRecord(
@@ -66,34 +74,18 @@ object Multimodal {
   object ImageHeader {
     private val PngSig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
-    private def be32(b: Array[Byte], i: Int): Int =
-      ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) | ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-    private def be16(b: Array[Byte], i: Int): Int =
-      ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-
     /** (width, height) from PNG or JPEG bytes; None if neither parses. */
     def decode(b: Array[Byte]): Option[(Int, Int)] =
       if (b.length >= 24 && b.take(8).sameElements(PngSig) &&
         new String(b.slice(12, 16), "US-ASCII") == "IHDR")
         Some((be32(b, 16), be32(b, 20)))
-      else if (b.length >= 4 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8)
-        jpegSof(b)
-      else None
+      else sofAt(b).map(i => (be16(b, i + 7), be16(b, i + 5)))
 
-    /** Walk JPEG segments to the first SOFn frame header. */
-    private def jpegSof(b: Array[Byte]): Option[(Int, Int)] = {
-      var i = 2
-      while (i + 3 < b.length) {
-        if ((b(i) & 0xff) != 0xff) return None
-        val m = b(i + 1) & 0xff
-        if (m == 0xd8 || (m >= 0xd0 && m <= 0xd7) || m == 0x01) i += 2 // standalone
-        else if ((m >= 0xc0 && m <= 0xcf) && m != 0xc4 && m != 0xc8 && m != 0xcc) {
-          if (i + 8 >= b.length) return None
-          return Some((be16(b, i + 7), be16(b, i + 5))) // (width, height)
-        } else if (m == 0xd9) return None // EOI before any SOF
-        else i += 2 + be16(b, i + 2)
-      }
-      None
+    /** Index of the JPEG's first SOFn marker, when that segment holds the
+      * frame's height and width; found by [[JpegGray.findSegment]]. */
+    private def sofAt(b: Array[Byte]): Option[Int] = {
+      val i = JpegGray.findSegment(b)(JpegGray.isSof)
+      if (i >= 0 && be16(b, i + 2) >= 7) Some(i) else None
     }
 
     /** Rewrite the container's declared dimensions IN PLACE on a copy of
@@ -115,24 +107,13 @@ object Multimodal {
         crc.update(out, 12, 4 + 13) // chunk type + IHDR data
         w32(29, crc.getValue.toInt)
         Some(out)
-      } else if (b.length >= 4 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8) {
+      } else sofAt(b).map { i =>
         require(w <= 0xffff && h <= 0xffff, "jpeg dims are 16-bit")
-        var i = 2
-        while (i + 3 < b.length) {
-          if ((b(i) & 0xff) != 0xff) return None
-          val m = b(i + 1) & 0xff
-          if (m == 0xd8 || (m >= 0xd0 && m <= 0xd7) || m == 0x01) i += 2
-          else if ((m >= 0xc0 && m <= 0xcf) && m != 0xc4 && m != 0xc8 && m != 0xcc) {
-            if (i + 8 >= b.length) return None
-            val out = b.clone()
-            out(i + 5) = (h >>> 8).toByte; out(i + 6) = h.toByte
-            out(i + 7) = (w >>> 8).toByte; out(i + 8) = w.toByte
-            return Some(out)
-          } else if (m == 0xd9) return None
-          else i += 2 + be16(b, i + 2)
-        }
-        None
-      } else None
+        val out = b.clone()
+        out(i + 5) = (h >>> 8).toByte; out(i + 6) = h.toByte
+        out(i + 7) = (w >>> 8).toByte; out(i + 8) = w.toByte
+        out
+      }
     }
 
     // --- synthesis (for the hermetic verify corpus and tests) ---
@@ -195,19 +176,10 @@ object Multimodal {
           i += 12 + len // length + type + data + crc
         }
         None
-      } else if (b.length >= 2 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8) {
-        var i = 2
-        while (i + 4 <= b.length && (b(i) & 0xff) == 0xff) {
-          val marker = b(i + 1) & 0xff
-          if (marker == 0xd9) return None // EOI
-          val len = be16(b, i + 2)
-          if (len < 2) return None // segment lengths include their own 2 bytes
-          if (marker == 0xfe && i + 2 + len <= b.length)
-            return Some(java.util.Arrays.copyOfRange(b, i + 4, i + 2 + len))
-          i += 2 + len
-        }
-        None
-      } else None
+      } else {
+        val i = JpegGray.findSegment(b)(_ == 0xfe) // COM
+        if (i < 0) None else Some(java.util.Arrays.copyOfRange(b, i + 4, i + 2 + be16(b, i + 2)))
+      }
     }
   }
 
@@ -229,8 +201,6 @@ object Multimodal {
     * None (never a wrong answer). */
   object ImagePixels {
     private val PngSig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
-    private def be32(b: Array[Byte], i: Int): Int =
-      ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) | ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
 
     /** Integer luma (ITU-R BT.601 weights, floor division — exact and
       * engine-replayable): gray passes through, RGB(A) folds. */
@@ -304,7 +274,8 @@ object Multimodal {
         var off = 0
         while (off < raw.length && !inf.finished()) {
           val n = inf.inflate(raw, off, raw.length - off)
-          if (n == 0 && inf.needsInput()) return None // truncated stream
+          // a truncated stream, or one that asks for a preset dictionary
+          if (n == 0 && (inf.needsInput() || inf.needsDictionary())) return None
           off += n
         }
         if (off != raw.length) return None
@@ -598,10 +569,6 @@ object Multimodal {
     * from the data chunk length and the byte rate — parsed from the BYTES,
     * not echoed from metadata, same standard as [[ImageHeader]]. */
   object AudioHeader {
-    private def le16(b: Array[Byte], i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    private def le32(b: Array[Byte], i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
 
     /** (sampleRate, channels, durationMs) from WAV bytes; None if the
       * container doesn't parse. Walks chunks so extra chunks (LIST, fact)
@@ -690,10 +657,6 @@ object Multimodal {
     * exact per-frame mean (floor division — replayable;
     * channel-replicated fixtures make it exact by construction). */
   object AudioSamples {
-    private def le16(b: Array[Byte], i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    private def le32(b: Array[Byte], i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
 
     /** Decode a PCM WAV to mono ~16-bit-range samples (per-frame
       * channel mean, floor division). Sample formats: integer PCM at
@@ -932,8 +895,6 @@ object Multimodal {
     * count, dimensions and duration are derived from those BYTES — same
     * standard as [[ImageHeader]]/[[AudioHeader]], no metadata echo. */
   object VideoHeader {
-    private def le32(b: Array[Byte], i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
 
     /** (width, height, totalFrames, durationMs) from AVI bytes; None if
       * the container doesn't parse. Walks top-level chunks and the hdrl
@@ -1051,10 +1012,6 @@ object Multimodal {
     * remains the declared boundary (the legacy header-only AVIs carry
     * no `strl` at all, so they keep their old hash). */
   object VideoFrames {
-    private def le16(b: Array[Byte], i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    private def le32(b: Array[Byte], i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
     /** Same integer BT.601 floor-div luma as [[ImagePixels]] — exact,
       * and the identity on gray (r = g = b) pixels. */
     private def luma(r: Int, g: Int, b: Int): Int = (299 * r + 587 * g + 114 * b) / 1000
@@ -1228,29 +1185,30 @@ object Multimodal {
     }
   }
 
-  /** REAL baseline JPEG decoder (ITU-T T.81 / ISO 10918-1, the public
-    * JPEG standard) for grayscale images — the last container family to
-    * get a decoded-content path. This is a genuine entropy decoder, not
-    * a header walk: DQT/DHT/SOF0/DRI/SOS segment parse, canonical
-    * Huffman table construction from the DHT counts, bit-level entropy
-    * decode with 0xFF00 byte unstuffing, DC prediction with
-    * restart-marker resets, AC run/size + ZRL + EOB decoding, zigzag →
-    * natural reorder, dequantization, a full double-precision 2-D IDCT
-    * (the textbook definition), +128 level shift, clamp, and edge-block
-    * cropping for non-multiple-of-8 dims.
+  /** REAL JPEG codec (ITU-T T.81 / ISO 10918-1, the public JPEG
+    * standard) — a genuine entropy decoder, not a header walk, plus the
+    * three encoders the fixtures are written with. Each concern has one
+    * implementation: [[nextMarker]] walks segments for the decoder and
+    * for the [[ImageHeader]] readers; [[decodeJpegLuma]] decodes
+    * sequential (SOF0) and progressive (SOF2) frames through one marker
+    * loop, one bit reader and one coefficient store (canonical Huffman
+    * tables from the DHT counts, 0xFF00 unstuffing, DC prediction with
+    * restart-marker resets, zigzag → natural order, dequantization, a
+    * full double-precision 2-D IDCT, +128 level shift, clamp, edge-block
+    * cropping); the encoders share one frame-header writer and one bit
+    * writer.
     *
-    * Decoder scope (documented contract): baseline sequential SOF0,
-    * 8-bit precision, exactly one component (grayscale), 1×1 sampling.
-    * Progressive (SOF2), multi-component, and arithmetic-coded streams
-    * return None — never a wrong answer — and fall back to the
-    * COM-payload walk, so every legacy header-only JPEG keeps its old
-    * hash. The perceptual-dedup fixture keeps its oracle exact by
-    * encoding DC-only blocks against a flat q=8 table: the IDCT of a
-    * DC-only block is mathematically flat at `dc·q/8`, which is an
-    * exact integer (so double rounding is unambiguous) — pixel =
-    * dc + 128 replays in SQL while the engine runs the full general
-    * decode path. AC correctness is pinned separately in unit tests
-    * against a naive IDCT reference. */
+    * Decoder scope (documented contract): 8-bit Huffman SOF0 and SOF2
+    * frames, one component (grayscale) or three (YCbCr). Arithmetic,
+    * 12-bit and hierarchical streams return None — never a wrong answer
+    * — and fall back to the COM-payload walk, so every legacy
+    * header-only JPEG keeps its old hash. The perceptual-dedup fixture
+    * keeps its oracle exact by encoding DC-only blocks against a flat
+    * q=8 table: the IDCT of a DC-only block is mathematically flat at
+    * `dc·q/8`, which is an exact integer (so double rounding is
+    * unambiguous) — pixel = dc + 128 replays in SQL while the engine
+    * runs the full general decode path. AC correctness is pinned
+    * separately in unit tests against a naive IDCT reference. */
   object JpegGray {
     /** Zigzag scan order: ZigzagOrder(i) = natural index of the i-th
       * zigzag coefficient (T.81 figure 5). */
@@ -1325,6 +1283,172 @@ object Multimodal {
       t
     }
 
+    // ---- segments ----
+
+    private val Eoi = 0xd9
+
+    /** The one JPEG segment walker. From `i` — just past SOI, past a
+      * segment, or where an entropy-coded segment ends — it skips 0xFF
+      * fill bytes (T.81 B.1.1.2) and steps over the standalone TEM and
+      * RST0–7 markers, then returns the index of the next marker's 0xFF:
+      * EOI, or a segment whose 16-bit length is at least 2 and whose
+      * body `[i + 4, i + 2 + length)` lies inside `b`. -1 when the bytes
+      * at `i` start no such marker. */
+    @annotation.tailrec
+    private def nextMarker(b: Array[Byte], i: Int): Int =
+      if (i + 2 > b.length || (b(i) & 0xff) != 0xff) -1
+      else {
+        val m = b(i + 1) & 0xff
+        if (m == 0xff) nextMarker(b, i + 1)
+        else if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) nextMarker(b, i + 2)
+        else if (m == Eoi) i
+        else if (i + 4 > b.length) -1
+        else {
+          val len = be16(b, i + 2)
+          if (len < 2 || i + 2 + len > b.length) -1 else i
+        }
+      }
+
+    /** Index of the first segment after SOI whose marker satisfies `p`,
+      * walked with [[nextMarker]]; -1 when `b` has no SOI, the walk
+      * fails, or EOI comes first. */
+    private[Multimodal] def findSegment(b: Array[Byte])(p: Int => Boolean): Int = {
+      var i =
+        if (b.length >= 2 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8) nextMarker(b, 2)
+        else -1
+      while (i >= 0 && (b(i + 1) & 0xff) != Eoi && !p(b(i + 1) & 0xff))
+        i = nextMarker(b, i + 2 + be16(b, i + 2))
+      if (i >= 0 && (b(i + 1) & 0xff) != Eoi) i else -1
+    }
+
+    /** SOFn, a frame-header marker: C0–CF except DHT (C4), JPG (C8) and
+      * DAC (CC). */
+    private[Multimodal] def isSof(m: Int): Boolean =
+      m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc
+
+    /** Index of the marker that ends the entropy-coded data at or after
+      * `p`: stuffed 0xFF00 bytes and RSTn markers are passed over; -1
+      * when the data runs to the end of `b`. */
+    private def entropyEnd(b: Array[Byte], p: Int): Int = {
+      var i = p
+      while (i + 1 < b.length) {
+        if ((b(i) & 0xff) != 0xff) i += 1
+        else {
+          val m = b(i + 1) & 0xff
+          if (m == 0x00 || (m >= 0xd0 && m <= 0xd7)) i += 2 else return i
+        }
+      }
+      -1
+    }
+
+    // ---- encoders ----
+
+    private def writeSegment(out: java.io.ByteArrayOutputStream, marker: Int, body: Seq[Int]): Unit = {
+      out.write(0xff); out.write(marker)
+      out.write((body.length + 2) >>> 8); out.write(body.length + 2)
+      body.foreach(v => out.write(v & 0xff))
+    }
+
+    /** MSB-first writer of entropy-coded data with 0xFF00 byte stuffing
+      * (T.81 F.1.2.3): the bit packer of all three encoders. */
+    private final class BitWriter(out: java.io.ByteArrayOutputStream) {
+      private var acc = 0
+      private var nbits = 0
+      def bits(code: Int, len: Int): Unit = {
+        var i = len - 1
+        while (i >= 0) {
+          acc = (acc << 1) | ((code >>> i) & 1); nbits += 1
+          if (nbits == 8) {
+            out.write(acc); if (acc == 0xff) out.write(0x00)
+            acc = 0; nbits = 0
+          }
+          i -= 1
+        }
+      }
+      def symbol(table: HuffSpec, sym: Int): Unit = {
+        val (code, len) = table.encodeTable(sym)
+        bits(code, len)
+      }
+      /** The `t` extra bits of value `v` (T.81 F.1.2.1): a negative `v`
+        * is sent as v + 2^t − 1. */
+      def magnitude(v: Int, t: Int): Unit = if (t > 0) bits(if (v < 0) v + (1 << t) - 1 else v, t)
+      /** Pad the partial byte with 1-bits. */
+      def align(): Unit = if (nbits > 0) bits((1 << (8 - nbits)) - 1, 8 - nbits)
+      def marker(m: Int): Unit = { align(); out.write(0xff); out.write(m) }
+    }
+
+    /** The coefficient planes of one frame to encode: grayscale when `cb`
+      * is empty (one component at 1×1 sampling), else Y at
+      * `hSamp`×`vSamp` and Cb, Cr at 1×1. Each plane is MCU-padded, in
+      * raster block order, 64 ZIGZAG-ordered QUANTIZED coefficients per
+      * block (index 0 is the DC). */
+    private final class Planes(w: Int, h: Int, hSamp: Int, vSamp: Int,
+        y: Seq[Array[Int]], cb: Seq[Array[Int]], cr: Seq[Array[Int]]) {
+      require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff, "jpeg dims are 16-bit")
+      private val color = cb.nonEmpty
+      private val hs = if (color) hSamp else 1
+      private val vs = if (color) vSamp else 1
+      require(hs >= 1 && hs <= 2 && vs >= 1 && vs <= 2, "luma sampling 1-2")
+      private val mcusX = (w + 8 * hs - 1) / (8 * hs)
+      private val mcusY = (h + 8 * vs - 1) / (8 * vs)
+      private val blocks = if (color) Array(y, cb, cr) else Array(y)
+      val ncomp: Int = blocks.length
+      private def compH(c: Int) = if (c == 0) hs else 1
+      private def compV(c: Int) = if (c == 0) vs else 1
+      private def blocksX(c: Int) = mcusX * compH(c)
+      (0 until ncomp).foreach { c =>
+        require(blocks(c).length == blocksX(c) * mcusY * compV(c),
+          s"component $c needs ${blocksX(c)}*${mcusY * compV(c)} blocks")
+        require(blocks(c).forall(_.length == 64), "blocks are 64 zigzag coefficients")
+      }
+
+      /** SOI, APP0 (JFIF), COM carrying `comment`, DQT, the frame header
+        * `sof`, DHT and — when `restartInterval > 0` — DRI. Y reads
+        * quant table 0 and Huffman ids 0, Cb and Cr quant table 1 and
+        * Huffman ids 1: the layout every standard encoder emits. */
+      def writeHeader(out: java.io.ByteArrayOutputStream, sof: Int,
+          qLuma: Array[Int], qChroma: Array[Int],
+          dcLuma: HuffSpec, acLuma: HuffSpec, dcChroma: HuffSpec, acChroma: HuffSpec,
+          restartInterval: Int, comment: Array[Byte]): Unit = {
+        out.write(0xff); out.write(0xd8) // SOI
+        writeSegment(out, 0xe0, Seq('J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
+        writeSegment(out, 0xfe, comment.toSeq.map(_.toInt)) // COM (layout axis)
+        writeSegment(out, 0xdb, 0 +: qLuma.toSeq)
+        if (color) writeSegment(out, 0xdb, 1 +: qChroma.toSeq)
+        writeSegment(out, sof, Seq(8, h >>> 8, h, w >>> 8, w, ncomp) ++
+          (0 until ncomp).flatMap(c => Seq(c + 1, (compH(c) << 4) | compV(c), if (c == 0) 0 else 1)))
+        def dht(tcTh: Int, t: HuffSpec): Unit =
+          writeSegment(out, 0xc4, tcTh +: (t.counts ++ t.symbols).toSeq)
+        dht(0x00, dcLuma); dht(0x10, acLuma)
+        if (color) { dht(0x01, dcChroma); dht(0x11, acChroma) }
+        if (restartInterval > 0) writeSegment(out, 0xdd, Seq(restartInterval >>> 8, restartInterval))
+      }
+
+      /** SOS over frame components `cs` (Y on Huffman ids 0, chroma on 1),
+        * spectral band [ss, se], successive approximation ah/al. */
+      def writeSos(out: java.io.ByteArrayOutputStream, cs: Seq[Int],
+          ss: Int, se: Int, ah: Int, al: Int): Unit =
+        writeSegment(out, 0xda, Seq(cs.length) ++
+          cs.flatMap(c => Seq(c + 1, if (c == 0) 0x00 else 0x11)) ++ Seq(ss, se, (ah << 4) | al))
+
+      /** The data units of a scan over components `cs` as (component,
+        * block), grouped by MCU (T.81 A.2): several components interleave
+        * per MCU, Vc×Hc blocks each in raster order; one component walks
+        * its own visible block grid, one block per MCU. */
+      def mcus(cs: Seq[Int]): Seq[Seq[(Int, Array[Int])]] =
+        if (cs.length > 1)
+          for (my <- 0 until mcusY; mx <- 0 until mcusX)
+            yield for (c <- cs; v <- 0 until compV(c); x <- 0 until compH(c))
+              yield (c, blocks(c)((my * compV(c) + v) * blocksX(c) + mx * compH(c) + x))
+        else {
+          val c = cs.head
+          val cols = ((w * compH(c) + hs - 1) / hs + 7) / 8
+          val rows = ((h * compV(c) + vs - 1) / vs + 7) / 8
+          for (by <- 0 until rows; bx <- 0 until cols)
+            yield Seq((c, blocks(c)(by * blocksX(c) + bx)))
+        }
+    }
+
     /** Encode a baseline grayscale JPEG from ZIGZAG-ordered QUANTIZED
       * coefficient blocks (raster block order, 64 ints each; index 0 is
       * the DC). `qZigzag` is the quant table in zigzag order as DQT
@@ -1334,73 +1458,9 @@ object Multimodal {
     def synthBaselineJpeg(
         w: Int, h: Int, blocks: Seq[Array[Int]], qZigzag: Array[Int],
         dcTable: HuffSpec, acTable: HuffSpec, restartInterval: Int,
-        comment: Array[Byte]): Array[Byte] = {
-      require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff, "jpeg dims are 16-bit")
-      require(qZigzag.length == 64 && qZigzag.forall(q => q >= 1 && q <= 255), "8-bit quant table")
-      val bw = (w + 7) / 8; val bh = (h + 7) / 8
-      require(blocks.length == bw * bh, s"need $bw*$bh blocks")
-      require(blocks.forall(_.length == 64), "blocks are 64 zigzag coefficients")
-      val out = new java.io.ByteArrayOutputStream()
-      def b(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
-      def seg(marker: Int, body: Int*): Unit = {
-        b(0xff, marker, (body.length + 2) >>> 8, body.length + 2); body.foreach(v => out.write(v & 0xff))
-      }
-      b(0xff, 0xd8) // SOI
-      seg(0xe0, 'J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0) // APP0 JFIF
-      seg(0xfe, comment.map(_.toInt): _*)                          // COM (layout axis)
-      seg(0xdb, 0x00 +: qZigzag.toSeq: _*)                         // DQT, Pq=0 Tq=0
-      seg(0xc0, 8, h >>> 8, h, w >>> 8, w, 1, 1, 0x11, 0)          // SOF0: 1 comp, 1x1, Tq 0
-      seg(0xc4, 0x00 +: (dcTable.counts ++ dcTable.symbols).toSeq: _*) // DHT DC 0
-      seg(0xc4, 0x10 +: (acTable.counts ++ acTable.symbols).toSeq: _*) // DHT AC 0
-      if (restartInterval > 0) seg(0xdd, restartInterval >>> 8, restartInterval)
-      seg(0xda, 1, 1, 0x00, 0, 63, 0)                              // SOS: comp 1, Td=0 Ta=0
-      // entropy-coded data: MSB-first bit writer with 0xFF00 stuffing
-      var acc = 0; var nbits = 0
-      def flushByte(): Unit = {
-        out.write(acc); if (acc == 0xff) out.write(0x00)
-        acc = 0; nbits = 0
-      }
-      def putBits(code: Int, len: Int): Unit = {
-        var i = len - 1
-        while (i >= 0) {
-          acc = (acc << 1) | ((code >>> i) & 1); nbits += 1
-          if (nbits == 8) flushByte()
-          i -= 1
-        }
-      }
-      def align(): Unit = if (nbits > 0) { putBits((1 << (8 - nbits)) - 1, 8 - nbits) }
-      def putCoef(table: HuffSpec, sym: Int, v: Int, t: Int): Unit = {
-        val (code, len) = table.encodeTable(sym)
-        putBits(code, len)
-        if (t > 0) putBits(if (v < 0) v + (1 << t) - 1 else v, t)
-      }
-      var pred = 0
-      var rst = 0
-      blocks.zipWithIndex.foreach { case (zz, mcu) =>
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          align(); b(0xff, 0xd0 + rst); rst = (rst + 1) % 8; pred = 0
-        }
-        val diff = zz(0) - pred; pred = zz(0)
-        val t = category(diff)
-        putCoef(dcTable, t, diff, t)
-        // AC: run/size with ZRL for 16-zero runs, EOB when the tail is zero
-        var k = 1
-        var lastNz = 63
-        while (lastNz >= 1 && zz(lastNz) == 0) lastNz -= 1
-        while (k <= lastNz) {
-          var run = 0
-          while (zz(k) == 0) { run += 1; k += 1 }
-          while (run >= 16) { putCoef(acTable, 0xF0, 0, 0); run -= 16 }
-          val s = category(zz(k))
-          putCoef(acTable, (run << 4) | s, zz(k), s)
-          k += 1
-        }
-        if (lastNz < 63) putCoef(acTable, 0x00, 0, 0) // EOB
-      }
-      align()
-      b(0xff, 0xd9) // EOI
-      out.toByteArray
-    }
+        comment: Array[Byte]): Array[Byte] =
+      synthBaselineJpegColor(w, h, 1, 1, blocks, Nil, Nil, qZigzag, qZigzag,
+        dcTable, acTable, dcTable, acTable, restartInterval, comment)
 
     /** Encode a baseline YCbCr JPEG from ZIGZAG-ordered QUANTIZED
       * coefficient blocks. Luma samples at `hSamp`×`vSamp` (1–2 each:
@@ -1408,110 +1468,52 @@ object Multimodal {
       * MCU carries hSamp·vSamp Y blocks + 1 Cb + 1 Cr. `yBlocks` is the
       * MCU-PADDED luma plane in raster block order
       * ((mcusX·hSamp)×(mcusY·vSamp) blocks); `cbBlocks`/`crBlocks` are
-      * the mcusX×mcusY chroma planes. Luma reads quant table 0 and
-      * Huffman ids 0; chroma reads quant table 1 and Huffman ids 1 —
-      * the layout every standard encoder emits, so decoding it is
-      * decoding real color JPEGs. */
+      * the mcusX×mcusY chroma planes. Grayscale when `cbBlocks` is
+      * empty: then `yBlocks` is the 1×1-sampling grid and the chroma
+      * arguments are unused. */
     def synthBaselineJpegColor(
         w: Int, h: Int, hSamp: Int, vSamp: Int,
         yBlocks: Seq[Array[Int]], cbBlocks: Seq[Array[Int]], crBlocks: Seq[Array[Int]],
         qLumaZigzag: Array[Int], qChromaZigzag: Array[Int],
         dcLuma: HuffSpec, acLuma: HuffSpec, dcChroma: HuffSpec, acChroma: HuffSpec,
         restartInterval: Int, comment: Array[Byte]): Array[Byte] = {
-      require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff, "jpeg dims are 16-bit")
-      require(hSamp >= 1 && hSamp <= 2 && vSamp >= 1 && vSamp <= 2, "luma sampling 1-2")
+      val frame = new Planes(w, h, hSamp, vSamp, yBlocks, cbBlocks, crBlocks)
       require(qLumaZigzag.length == 64 && qChromaZigzag.length == 64 &&
         (qLumaZigzag ++ qChromaZigzag).forall(q => q >= 1 && q <= 255), "8-bit quant tables")
-      val mcusX = (w + 8 * hSamp - 1) / (8 * hSamp)
-      val mcusY = (h + 8 * vSamp - 1) / (8 * vSamp)
-      require(yBlocks.length == mcusX * hSamp * mcusY * vSamp,
-        s"need ${mcusX * hSamp}*${mcusY * vSamp} luma blocks")
-      require(cbBlocks.length == mcusX * mcusY && crBlocks.length == mcusX * mcusY,
-        s"need $mcusX*$mcusY chroma blocks per plane")
-      require((yBlocks ++ cbBlocks ++ crBlocks).forall(_.length == 64),
-        "blocks are 64 zigzag coefficients")
       val out = new java.io.ByteArrayOutputStream()
-      def b(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
-      def seg(marker: Int, body: Int*): Unit = {
-        b(0xff, marker, (body.length + 2) >>> 8, body.length + 2); body.foreach(v => out.write(v & 0xff))
-      }
-      b(0xff, 0xd8) // SOI
-      seg(0xe0, 'J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0) // APP0 JFIF
-      seg(0xfe, comment.map(_.toInt): _*)                          // COM (layout axis)
-      seg(0xdb, 0x00 +: qLumaZigzag.toSeq: _*)                     // DQT Tq=0 (luma)
-      seg(0xdb, 0x01 +: qChromaZigzag.toSeq: _*)                   // DQT Tq=1 (chroma)
-      seg(0xc0, 8, h >>> 8, h, w >>> 8, w, 3,                      // SOF0: 3 comps
-        1, (hSamp << 4) | vSamp, 0,                                //  Y: sampling, Tq 0
-        2, 0x11, 1,                                                //  Cb: 1x1, Tq 1
-        3, 0x11, 1)                                                //  Cr: 1x1, Tq 1
-      seg(0xc4, 0x00 +: (dcLuma.counts ++ dcLuma.symbols).toSeq: _*)     // DHT DC 0
-      seg(0xc4, 0x10 +: (acLuma.counts ++ acLuma.symbols).toSeq: _*)     // DHT AC 0
-      seg(0xc4, 0x01 +: (dcChroma.counts ++ dcChroma.symbols).toSeq: _*) // DHT DC 1
-      seg(0xc4, 0x11 +: (acChroma.counts ++ acChroma.symbols).toSeq: _*) // DHT AC 1
-      if (restartInterval > 0) seg(0xdd, restartInterval >>> 8, restartInterval)
-      seg(0xda, 3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0) // SOS: Y→tables 0, chroma→1
-      // entropy-coded data: MSB-first bit writer with 0xFF00 stuffing
-      var acc = 0; var nbits = 0
-      def flushByte(): Unit = {
-        out.write(acc); if (acc == 0xff) out.write(0x00)
-        acc = 0; nbits = 0
-      }
-      def putBits(code: Int, len: Int): Unit = {
-        var i = len - 1
-        while (i >= 0) {
-          acc = (acc << 1) | ((code >>> i) & 1); nbits += 1
-          if (nbits == 8) flushByte()
-          i -= 1
-        }
-      }
-      def align(): Unit = if (nbits > 0) { putBits((1 << (8 - nbits)) - 1, 8 - nbits) }
-      def putCoef(table: HuffSpec, sym: Int, v: Int, t: Int): Unit = {
-        val (code, len) = table.encodeTable(sym)
-        putBits(code, len)
-        if (t > 0) putBits(if (v < 0) v + (1 << t) - 1 else v, t)
-      }
-      val preds = new Array[Int](3)
-      def putBlock(zz: Array[Int], c: Int, dc: HuffSpec, ac: HuffSpec): Unit = {
-        val diff = zz(0) - preds(c); preds(c) = zz(0)
-        val t = category(diff)
-        putCoef(dc, t, diff, t)
-        var k = 1
-        var lastNz = 63
-        while (lastNz >= 1 && zz(lastNz) == 0) lastNz -= 1
-        while (k <= lastNz) {
-          var run = 0
-          while (zz(k) == 0) { run += 1; k += 1 }
-          while (run >= 16) { putCoef(ac, 0xF0, 0, 0); run -= 16 }
-          val s = category(zz(k))
-          putCoef(ac, (run << 4) | s, zz(k), s)
-          k += 1
-        }
-        if (lastNz < 63) putCoef(ac, 0x00, 0, 0) // EOB
-      }
-      val bwY = mcusX * hSamp
+      frame.writeHeader(out, 0xc0, qLumaZigzag, qChromaZigzag,
+        dcLuma, acLuma, dcChroma, acChroma, restartInterval, comment)
+      val comps = 0 until frame.ncomp
+      frame.writeSos(out, comps, 0, 63, 0, 0)
+      val bits = new BitWriter(out)
+      val preds = new Array[Int](frame.ncomp)
       var rst = 0
-      var mcu = 0
-      while (mcu < mcusX * mcusY) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          align(); b(0xff, 0xd0 + rst); rst = (rst + 1) % 8
+      frame.mcus(comps).zipWithIndex.foreach { case (mcu, n) =>
+        if (restartInterval > 0 && n > 0 && n % restartInterval == 0) {
+          bits.marker(0xd0 + rst); rst = (rst + 1) % 8
           java.util.Arrays.fill(preds, 0)
         }
-        val mx = mcu % mcusX; val my = mcu / mcusX
-        var v = 0
-        while (v < vSamp) {
-          var hx = 0
-          while (hx < hSamp) {
-            putBlock(yBlocks((my * vSamp + v) * bwY + mx * hSamp + hx), 0, dcLuma, acLuma)
-            hx += 1
+        mcu.foreach { case (c, zz) =>
+          val (dc, ac) = if (c == 0) (dcLuma, acLuma) else (dcChroma, acChroma)
+          val diff = zz(0) - preds(c); preds(c) = zz(0)
+          val t = category(diff)
+          bits.symbol(dc, t); bits.magnitude(diff, t)
+          // AC: run/size with ZRL for 16-zero runs, EOB when the tail is zero
+          var lastNz = 63
+          while (lastNz >= 1 && zz(lastNz) == 0) lastNz -= 1
+          var k = 1
+          while (k <= lastNz) {
+            var run = 0
+            while (zz(k) == 0) { run += 1; k += 1 }
+            while (run >= 16) { bits.symbol(ac, 0xF0); run -= 16 }
+            val s = category(zz(k))
+            bits.symbol(ac, (run << 4) | s); bits.magnitude(zz(k), s)
+            k += 1
           }
-          v += 1
+          if (lastNz < 63) bits.symbol(ac, 0x00) // EOB
         }
-        putBlock(cbBlocks(my * mcusX + mx), 1, dcChroma, acChroma)
-        putBlock(crBlocks(my * mcusX + mx), 2, dcChroma, acChroma)
-        mcu += 1
       }
-      align()
-      b(0xff, 0xd9) // EOI
+      bits.marker(Eoi)
       out.toByteArray
     }
 
@@ -1536,631 +1538,32 @@ object Multimodal {
     }
 
     /** Decode a JPEG to (width, height, row-major luma).
-      * Scope: sequential baseline (SOF0) AND progressive (SOF2)
-      * Huffman 8-bit frames, ONE or THREE components. Grayscale
-      * decodes the single plane; YCbCr decodes all component planes
-      * (luma sampling factors 1–2 on each axis, chroma 1×1 — covering
-      * 4:4:4, 4:2:2, 4:4:0 and 4:2:0), upsamples chroma by sample
-      * replication, and composes luma via [[ycbcrLuma]]. Progressive
-      * frames decode the full scan sequence — spectral selection AND
-      * successive approximation, DC and AC first/refinement passes,
-      * EOB-run coding, per-scan restart intervals. None when the bytes
-      * are outside this scope (arithmetic coding, 12-bit, hierarchical,
-      * exotic sampling). */
-    def decodeJpegLuma(b: Array[Byte]): Option[(Int, Int, Array[Int])] = {
-      // dispatch on the frame type: one cheap segment walk to the SOF
-      if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-      var i = 2
-      var sof = -1
-      while (sof < 0) {
-        if (i + 2 > b.length || (b(i) & 0xff) != 0xff) return None
-        val m = b(i + 1) & 0xff
-        if (m == 0xff) i += 1 // 0xFF fill byte before a marker (T.81 B.1.1.2)
-        else if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) i += 2 // TEM/RSTn: standalone
-        else if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc) sof = m
-        else if (m == 0xda || m == 0xd9) return None // scan/EOI before any SOF
-        else {
-          if (i + 4 > b.length) return None
-          val len = ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-          if (len < 2 || i + 2 + len > b.length) return None
-          i += 2 + len
-        }
-      }
-      sof match {
-        case 0xc0 => decodeBaselineLuma(b)
-        case 0xc2 => decodeProgressiveLuma(b)
-        case _ => None // extended/arithmetic/lossless/hierarchical
-      }
-    }
-
-    private def decodeBaselineLuma(b: Array[Byte]): Option[(Int, Int, Array[Int])] = {
-      if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-      var w = 0; var h = 0
-      val qTabs = new Array[Array[Int]](4)
-      val dcTabs = new Array[HuffSpec](4)
-      val acTabs = new Array[HuffSpec](4)
-      var compIds: Array[Int] = null   // component id as SOF carries it
-      var compH: Array[Int] = null; var compV: Array[Int] = null
-      var compTq: Array[Int] = null
-      var compTd: Array[Int] = null; var compTa: Array[Int] = null
-      var dri = 0
-      var sos = -1
-      var i = 2
-      // ---- segment walk to SOS ----
-      while (sos < 0) {
-        if (i + 4 > b.length || (b(i) & 0xff) != 0xff) return None
-        val m = b(i + 1) & 0xff
-        // fill bytes and standalone markers (TEM/RSTn) carry no length:
-        // consume and re-read rather than misparsing payload as a length
-        if (m == 0xff) { i += 1 }
-        else if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) { i += 2 }
-        else {
-          val len = ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-          if (len < 2 || i + 2 + len > b.length) return None
-          val body = i + 4
-          m match {
-            case 0xc0 => // SOF0 baseline — the supported frame type
-              if (len < 11 || (b(body) & 0xff) != 8) return None
-              h = ((b(body + 1) & 0xff) << 8) | (b(body + 2) & 0xff)
-              w = ((b(body + 3) & 0xff) << 8) | (b(body + 4) & 0xff)
-              val ncomp = b(body + 5) & 0xff
-              if (ncomp != 1 && ncomp != 3) return None
-              if (len < 8 + 3 * ncomp) return None
-              compIds = new Array[Int](ncomp)
-              compH = new Array[Int](ncomp); compV = new Array[Int](ncomp)
-              compTq = new Array[Int](ncomp)
-              var c = 0
-              while (c < ncomp) {
-                compIds(c) = b(body + 6 + 3 * c) & 0xff
-                val hv = b(body + 7 + 3 * c) & 0xff
-                compH(c) = hv >>> 4; compV(c) = hv & 0x0f
-                compTq(c) = b(body + 8 + 3 * c) & 0xff
-                if (compH(c) < 1 || compH(c) > 2 || compV(c) < 1 || compV(c) > 2 ||
-                    compTq(c) > 3) return None
-                c += 1
-              }
-              // grayscale must be 1×1; color chroma must be 1×1 (the
-              // standard subsamplings — luma carries the 2× factors)
-              if (ncomp == 1 && (compH(0) != 1 || compV(0) != 1)) return None
-              if (ncomp == 3 && (compH(1) != 1 || compV(1) != 1 ||
-                  compH(2) != 1 || compV(2) != 1)) return None
-            case mm if (mm >= 0xc1 && mm <= 0xcf && mm != 0xc4 && mm != 0xc8) =>
-              return None // progressive/extended/arithmetic — out of scope
-            case 0xdb => // DQT (possibly several tables per segment)
-              var p = body
-              while (p < i + 2 + len) {
-                if ((b(p) & 0xff) >>> 4 != 0) return None // 16-bit tables out of scope
-                val tq = b(p) & 0x0f
-                if (tq > 3 || p + 65 > i + 2 + len) return None
-                qTabs(tq) = Array.tabulate(64)(j => b(p + 1 + j) & 0xff)
-                p += 65
-              }
-            case 0xc4 => // DHT (possibly several tables per segment)
-              var p = body
-              while (p < i + 2 + len) {
-                val tc = (b(p) & 0xff) >>> 4; val th = b(p) & 0x0f
-                if (th > 3 || p + 17 > i + 2 + len) return None
-                val counts = Array.tabulate(16)(j => b(p + 1 + j) & 0xff)
-                val n = counts.sum
-                if (p + 17 + n > i + 2 + len) return None
-                val syms = Array.tabulate(n)(j => b(p + 17 + j) & 0xff)
-                val spec = HuffSpec(counts, syms)
-                if (tc == 0) dcTabs(th) = spec
-                else if (tc == 1) acTabs(th) = spec
-                else return None
-                p += 17 + n
-              }
-            case 0xdd => // DRI
-              if (len != 4) return None
-              dri = ((b(body) & 0xff) << 8) | (b(body + 1) & 0xff)
-            case 0xda => // SOS: component count must match the frame
-              if (compIds == null) return None
-              val ns = b(body) & 0xff
-              if (ns != compIds.length || len < 6 + 2 * ns) return None
-              compTd = new Array[Int](compIds.length)
-              compTa = new Array[Int](compIds.length)
-              var s = 0
-              while (s < ns) {
-                val cid = b(body + 1 + 2 * s) & 0xff
-                val ci = compIds.indexOf(cid)
-                if (ci < 0) return None
-                val tt = b(body + 2 + 2 * s) & 0xff
-                compTd(ci) = tt >>> 4; compTa(ci) = tt & 0x0f
-                if (compTd(ci) > 3 || compTa(ci) > 3) return None
-                s += 1
-              }
-              // a baseline scan carries the full spectral band with no
-              // successive approximation: Ss=0, Se=63, Ah=0, Al=0 (T.81
-              // B.2.3) — anything else is spec-invalid for SOF0, and
-              // decoding it anyway would yield wrong luma, not None
-              if ((b(body + 1 + 2 * ns) & 0xff) != 0 ||
-                  (b(body + 2 + 2 * ns) & 0xff) != 63 ||
-                  (b(body + 3 + 2 * ns) & 0xff) != 0) return None
-              sos = i + 2 + len
-            case _ => // APPn / COM / others: skip
-          }
-          i += 2 + len
-        }
-      }
-      if (w <= 0 || h <= 0 || compIds == null || compTd == null) return None
-      val ncomp = compIds.length
-      // every referenced table must have arrived
-      var c0 = 0
-      while (c0 < ncomp) {
-        if (qTabs(compTq(c0)) == null || dcTabs(compTd(c0)) == null ||
-            acTabs(compTa(c0)) == null) return None
-        c0 += 1
-      }
-      // untrusted-dims guard (see MaxDecodePixels): SOF0 dims are 16-bit
-      // each, so w·h can reach 4.3e9 — cap before the pixel allocation
-      if (w.toLong * h > MaxDecodePixels) return None
-      val maxH = compH.max; val maxV = compV.max
-      val mcusX = (w + 8 * maxH - 1) / (8 * maxH)
-      val mcusY = (h + 8 * maxV - 1) / (8 * maxV)
-      // MCU-padded per-component planes (pad ≤ 15 px per axis — bounded
-      // by the w·h cap above with a small constant slack)
-      val planeW = Array.tabulate(ncomp)(c => mcusX * compH(c) * 8)
-      val planeH = Array.tabulate(ncomp)(c => mcusY * compV(c) * 8)
-      var cc = 0
-      while (cc < ncomp) {
-        if (planeW(cc).toLong * planeH(cc) > MaxDecodePixels.toLong + (1L << 16))
-          return None
-        cc += 1
-      }
-      val planes = Array.tabulate(ncomp)(c => new Array[Int](planeW(c) * planeH(c)))
-      val dcDec = Array.tabulate(ncomp)(c => dcTabs(compTd(c)).decodeTable)
-      val acDec = Array.tabulate(ncomp)(c => acTabs(compTa(c)).decodeTable)
-
-      // ---- entropy decode ----
-      var pos = sos
-      var acc = 0; var nbits = 0
-      var hitMarker = false
-      def nextBit(): Int = {
-        if (nbits == 0) {
-          if (pos >= b.length) { hitMarker = true; return -1 }
-          val v = b(pos) & 0xff
-          if (v == 0xff) {
-            if (pos + 1 < b.length && (b(pos + 1) & 0xff) == 0x00) { acc = 0xff; pos += 2 }
-            else { hitMarker = true; return -1 } // a real marker: stop here
-          } else { acc = v; pos += 1 }
-          nbits = 8
-        }
-        nbits -= 1
-        (acc >>> nbits) & 1
-      }
-      def decodeSym(tbl: Map[(Int, Int), Int]): Int = {
-        var code = 0; var len = 0
-        while (len < 16) {
-          val bit = nextBit()
-          if (bit < 0) return -1
-          code = (code << 1) | bit; len += 1
-          tbl.get((len, code)) match {
-            case Some(sym) => return sym
-            case None =>
-          }
-        }
-        -1
-      }
-      def receive(t: Int): Int = {
-        var v = 0; var k = 0
-        while (k < t) {
-          val bit = nextBit()
-          if (bit < 0) return Int.MinValue
-          v = (v << 1) | bit; k += 1
-        }
-        v
-      }
-      // T.81 F.2.2.1 EXTEND: low-category values are negative
-      def extend(v: Int, t: Int): Int =
-        if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
-
-      val coef = new Array[Int](64)
-      val pred = new Array[Int](ncomp)
-      var rstExpect = 0
-      var mcu = 0
-      // decode one 8×8 block of component `c` into its plane at block
-      // coordinates (bx, by); returns false on malformed entropy data
-      def decodeBlock(c: Int, bx: Int, by: Int): Boolean = {
-        val q = qTabs(compTq(c))
-        java.util.Arrays.fill(coef, 0)
-        val t = decodeSym(dcDec(c))
-        if (t < 0 || t > 11) return false
-        val dv = receive(t)
-        if (dv == Int.MinValue) return false
-        pred(c) += extend(dv, t)
-        coef(0) = pred(c) * q(0)
-        var k = 1
-        var eob = false
-        while (k < 64 && !eob) {
-          val sym = decodeSym(acDec(c))
-          if (sym < 0) return false
-          if (sym == 0x00) eob = true
-          else if (sym == 0xF0) k += 16 // ZRL: sixteen zeros
-          else {
-            k += sym >>> 4
-            val s = sym & 0x0f
-            if (s == 0 || k > 63) return false
-            val av = receive(s)
-            if (av == Int.MinValue) return false
-            coef(k) = extend(av, s) * q(k)
-            k += 1
-          }
-        }
-        if (k > 64) return false
-        // dezigzag + IDCT + level shift + clamp into the padded plane
-        val f = new Array[Int](64)
-        var z = 0
-        while (z < 64) { f(ZigzagOrder(z)) = coef(z); z += 1 }
-        val px = idct8x8(f)
-        val pw = planeW(c)
-        val plane = planes(c)
-        var y = 0
-        while (y < 8) {
-          var x = 0
-          while (x < 8) {
-            plane((by * 8 + y) * pw + bx * 8 + x) = px(y * 8 + x)
-            x += 1
-          }
-          y += 1
-        }
-        true
-      }
-      while (mcu < mcusX * mcusY) {
-        if (dri > 0 && mcu > 0 && mcu % dri == 0) {
-          // byte-align and consume the RSTn marker; predictors reset
-          nbits = 0
-          if (pos + 1 >= b.length || (b(pos) & 0xff) != 0xff ||
-              (b(pos + 1) & 0xff) != 0xd0 + rstExpect) return None
-          pos += 2; rstExpect = (rstExpect + 1) % 8
-          java.util.Arrays.fill(pred, 0); hitMarker = false
-        }
-        val mx = mcu % mcusX; val my = mcu / mcusX
-        // T.81 interleave: per component in SOF order, Vc×Hc blocks in
-        // raster order within the MCU
-        var c = 0
-        while (c < ncomp) {
-          var v = 0
-          while (v < compV(c)) {
-            var hx = 0
-            while (hx < compH(c)) {
-              if (!decodeBlock(c, mx * compH(c) + hx, my * compV(c) + v)) return None
-              hx += 1
-            }
-            v += 1
-          }
-          c += 1
-        }
-        mcu += 1
-      }
-      Some((w, h, composeLuma(w, h, ncomp, compH, compV, maxH, maxV, planes, planeW)))
-    }
-
-    /** Crop + chroma replication upsample + (for color) [[ycbcrLuma]]:
-      * the shared finish stage of the baseline and progressive decoders,
-      * turning MCU-padded per-component pixel planes into the final
-      * row-major luma. */
-    private def composeLuma(
-        w: Int, h: Int, ncomp: Int,
-        compH: Array[Int], compV: Array[Int], maxH: Int, maxV: Int,
-        planes: Array[Array[Int]], planeW: Array[Int]): Array[Int] = {
-      val lum = new Array[Int](w * h)
-      if (ncomp == 1) {
-        val pw = planeW(0); val plane = planes(0)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) { lum(y * w + x) = plane(y * pw + x); x += 1 }
-          y += 1
-        }
-      } else {
-        val py = planes(0); val pwy = planeW(0)
-        val pcb = planes(1); val pwcb = planeW(1)
-        val pcr = planes(2); val pwcr = planeW(2)
-        var y = 0
-        while (y < h) {
-          val yy0 = y * compV(0) / maxV
-          val ycb = y * compV(1) / maxV
-          val ycr = y * compV(2) / maxV
-          var x = 0
-          while (x < w) {
-            val yv = py(yy0 * pwy + x * compH(0) / maxH)
-            val cbv = pcb(ycb * pwcb + x * compH(1) / maxH)
-            val crv = pcr(ycr * pwcr + x * compH(2) / maxH)
-            lum(y * w + x) = ycbcrLuma(yv, cbv, crv)
-            x += 1
-          }
-          y += 1
-        }
-      }
-      lum
-    }
-
-    /** Encode a PROGRESSIVE (SOF2) JPEG from the same zigzag-quantized
-      * blocks as the baseline encoders, under an explicit scan script —
-      * each entry (comps, Ss, Se, Ah, Al): comps by frame index (DC
-      * scans may interleave several; AC scans must name one), spectral
-      * band [Ss, Se], successive-approximation high/low. A script like
-      * `DC Al=1 → AC 1..5 Al=1 → AC 6..63 Al=1 → DC refine → AC refine`
-      * reproduces the shape real encoders emit. Grayscale when
-      * `cbBlocks` is empty (then yBlocks must be the 1×1-sampling
-      * grid); color follows [[synthBaselineJpegColor]]'s table/slot
-      * conventions. Restart intervals are not emitted (the DECODER
-      * supports them; the synthetic fixtures do not need them).
+      * Scope: sequential baseline (SOF0) and progressive (SOF2) Huffman
+      * 8-bit frames, ONE or THREE components, through one decoder.
+      * Grayscale decodes the single plane; YCbCr decodes all component
+      * planes (luma sampling factors 1–2 on each axis, chroma 1×1 —
+      * covering 4:4:4, 4:2:2, 4:4:0 and 4:2:0), upsamples chroma by
+      * sample replication, and composes luma via [[ycbcrLuma]].
       *
-      * The AC-refinement emitter is spec-literal (T.81 G.1.2.3): each
-      * ZRL carries exactly the correction bits of the
-      * nonzero-history coefficients its 16-zero span passes, each
-      * newly-significant symbol carries the bits up to its placement
-      * position, and EOB runs buffer the tail bits of every blocked
-      * block in order — mirroring the reference decoder walk
-      * bit-for-bit. */
-    def synthProgressiveJpeg(
-        w: Int, h: Int, hSamp: Int, vSamp: Int,
-        yBlocks: Seq[Array[Int]], cbBlocks: Seq[Array[Int]], crBlocks: Seq[Array[Int]],
-        qLumaZigzag: Array[Int], qChromaZigzag: Array[Int],
-        dcLuma: HuffSpec, acLuma: HuffSpec, dcChroma: HuffSpec, acChroma: HuffSpec,
-        scans: Seq[(Seq[Int], Int, Int, Int, Int)],
-        comment: Array[Byte]): Array[Byte] = {
-      require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff, "jpeg dims are 16-bit")
-      val color = cbBlocks.nonEmpty
-      val ncomp = if (color) 3 else 1
-      val (hs, vs) = if (color) (hSamp, vSamp) else (1, 1)
-      require(hs >= 1 && hs <= 2 && vs >= 1 && vs <= 2, "luma sampling 1-2")
-      val mcusX = (w + 8 * hs - 1) / (8 * hs)
-      val mcusY = (h + 8 * vs - 1) / (8 * vs)
-      val compBw = Array(mcusX * hs, mcusX, mcusX)
-      val compBh = Array(mcusY * vs, mcusY, mcusY)
-      val compBlocks: Array[Seq[Array[Int]]] =
-        if (color) Array(yBlocks, cbBlocks, crBlocks) else Array(yBlocks)
-      var c = 0
-      while (c < ncomp) {
-        require(compBlocks(c).length == compBw(c) * compBh(c),
-          s"component $c needs ${compBw(c)}*${compBh(c)} blocks")
-        require(compBlocks(c).forall(_.length == 64), "blocks are 64 zigzag coefficients")
-        c += 1
-      }
-      scans.foreach { case (cs, ss, se, ah, al) =>
-        require(cs.nonEmpty && cs.forall(ci => ci >= 0 && ci < ncomp), "scan comps in frame")
-        require(
-          (ss == 0 && se == 0) || (cs.length == 1 && ss >= 1 && se >= ss && se <= 63),
-          "DC scans are Ss=Se=0; AC scans are single-component bands")
-        require(al >= 0 && (ah == 0 || ah == al + 1), "successive approximation steps by 1")
-      }
-      val out = new java.io.ByteArrayOutputStream()
-      def b(vs0: Int*): Unit = vs0.foreach(v => out.write(v & 0xff))
-      def seg(marker: Int, body: Int*): Unit = {
-        b(0xff, marker, (body.length + 2) >>> 8, body.length + 2)
-        body.foreach(v => out.write(v & 0xff))
-      }
-      b(0xff, 0xd8)
-      seg(0xe0, 'J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0)
-      seg(0xfe, comment.map(_.toInt): _*)
-      seg(0xdb, 0x00 +: qLumaZigzag.toSeq: _*)
-      if (color) seg(0xdb, 0x01 +: qChromaZigzag.toSeq: _*)
-      if (color)
-        seg(0xc2, 8, h >>> 8, h, w >>> 8, w, 3,
-          1, (hs << 4) | vs, 0, 2, 0x11, 1, 3, 0x11, 1)
-      else
-        seg(0xc2, 8, h >>> 8, h, w >>> 8, w, 1, 1, 0x11, 0)
-      seg(0xc4, 0x00 +: (dcLuma.counts ++ dcLuma.symbols).toSeq: _*)
-      seg(0xc4, 0x10 +: (acLuma.counts ++ acLuma.symbols).toSeq: _*)
-      if (color) {
-        seg(0xc4, 0x01 +: (dcChroma.counts ++ dcChroma.symbols).toSeq: _*)
-        seg(0xc4, 0x11 +: (acChroma.counts ++ acChroma.symbols).toSeq: _*)
-      }
-
-      // ---- per-scan entropy emission ----
-      var acc0 = 0; var nbits0 = 0
-      def putBits(code: Int, len: Int): Unit = {
-        var i2 = len - 1
-        while (i2 >= 0) {
-          acc0 = (acc0 << 1) | ((code >>> i2) & 1); nbits0 += 1
-          if (nbits0 == 8) {
-            out.write(acc0); if (acc0 == 0xff) out.write(0x00)
-            acc0 = 0; nbits0 = 0
-          }
-          i2 -= 1
-        }
-      }
-      def align(): Unit = if (nbits0 > 0) putBits((1 << (8 - nbits0)) - 1, 8 - nbits0)
-      def putSym(tbl: HuffSpec, sym: Int): Unit = {
-        val (code, len) = tbl.encodeTable(sym); putBits(code, len)
-      }
-
-      scans.foreach { case (cs, ss, se, ah, al) =>
-        // SOS header
-        val sosBody = Seq(cs.length) ++ cs.flatMap { ci =>
-          val id = ci + 1
-          val td = if (ci == 0) 0 else 1
-          Seq(id, (td << 4) | td)
-        } ++ Seq(ss, se, (ah << 4) | al)
-        seg(0xda, sosBody: _*)
-        acc0 = 0; nbits0 = 0
-
-        def dcTab(ci: Int) = if (ci == 0) dcLuma else dcChroma
-        def acTab(ci: Int) = if (ci == 0) acLuma else acChroma
-
-        if (ss == 0 && ah == 0) {
-          // DC first: interleaved (or trivially single-comp) MCU walk
-          val pred = new Array[Int](ncomp)
-          def emitDc(ci: Int, blk: Array[Int]): Unit = {
-            val v = blk(0) >> al // arithmetic shift (T.81 DC point transform)
-            val diff = v - pred(ci); pred(ci) = v
-            val t = category(diff)
-            putSym(dcTab(ci), t)
-            if (t > 0) putBits(if (diff < 0) diff + (1 << t) - 1 else diff, t)
-          }
-          if (cs.length > 1) {
-            var mcu = 0
-            while (mcu < mcusX * mcusY) {
-              val mx = mcu % mcusX; val my = mcu / mcusX
-              cs.foreach { ci =>
-                val (cH, cV) = if (ci == 0) (hs, vs) else (1, 1)
-                for (v <- 0 until cV; hx <- 0 until cH)
-                  emitDc(ci, compBlocks(ci)((my * cV + v) * compBw(ci) + mx * cH + hx))
-              }
-              mcu += 1
-            }
-          } else {
-            val ci = cs.head
-            val (cH, cV) = if (ci == 0) (hs, vs) else (1, 1)
-            val cw = (w * cH + hs - 1) / hs; val chh = (h * cV + vs - 1) / vs
-            val bw = (cw + 7) / 8; val bh = (chh + 7) / 8
-            for (by <- 0 until bh; bx <- 0 until bw)
-              emitDc(ci, compBlocks(ci)(by * compBw(ci) + bx))
-          }
-        } else if (ss == 0) {
-          // DC refinement: one bit per block, MCU order
-          def emitBit(blk: Array[Int]): Unit = putBits((blk(0) >> al) & 1, 1)
-          if (cs.length > 1) {
-            var mcu = 0
-            while (mcu < mcusX * mcusY) {
-              val mx = mcu % mcusX; val my = mcu / mcusX
-              cs.foreach { ci =>
-                val (cH, cV) = if (ci == 0) (hs, vs) else (1, 1)
-                for (v <- 0 until cV; hx <- 0 until cH)
-                  emitBit(compBlocks(ci)((my * cV + v) * compBw(ci) + mx * cH + hx))
-              }
-              mcu += 1
-            }
-          } else {
-            val ci = cs.head
-            val (cH, cV) = if (ci == 0) (hs, vs) else (1, 1)
-            val cw = (w * cH + hs - 1) / hs; val chh = (h * cV + vs - 1) / vs
-            val bw = (cw + 7) / 8; val bh = (chh + 7) / 8
-            for (by <- 0 until bh; bx <- 0 until bw)
-              emitBit(compBlocks(ci)(by * compBw(ci) + bx))
-          }
-        } else {
-          // AC scans: single component over its true data-unit grid
-          val ci = cs.head
-          val ac = acTab(ci)
-          val (cH, cV) = if (ci == 0) (hs, vs) else (1, 1)
-          val cw = (w * cH + hs - 1) / hs; val chh = (h * cV + vs - 1) / vs
-          val bw = (cw + 7) / 8; val bh = (chh + 7) / 8
-          var eobrun = 0
-          val tailBits = new scala.collection.mutable.ArrayBuffer[Int]()
-          def flushEob(): Unit = {
-            if (eobrun > 0) {
-              var r = 0
-              while ((eobrun >> (r + 1)) != 0) r += 1
-              putSym(ac, r << 4)
-              if (r > 0) putBits(eobrun - (1 << r), r)
-              eobrun = 0
-            }
-            tailBits.foreach(bit => putBits(bit, 1))
-            tailBits.clear()
-          }
-          for (by <- 0 until bh; bx <- 0 until bw) {
-            val blk = compBlocks(ci)(by * compBw(ci) + bx)
-            if (ah == 0) {
-              // AC first pass over the band: magnitudes at this Al
-              var r = 0
-              var k = ss
-              var any = false
-              while (k <= se) {
-                val v = blk(k)
-                val t = if (v >= 0) v >> al else -((-v) >> al)
-                if (t == 0) r += 1
-                else {
-                  if (!any || eobrun > 0) flushEob()
-                  any = true
-                  while (r >= 16) { putSym(ac, 0xF0); r -= 16 }
-                  val s2 = category(t)
-                  putSym(ac, (r << 4) | s2)
-                  putBits(if (t < 0) t + (1 << s2) - 1 else t, s2)
-                  r = 0
-                }
-                k += 1
-              }
-              if (r > 0 || !any) {
-                eobrun += 1
-                if (eobrun == 0x7fff) flushEob()
-              }
-            } else {
-              // AC refinement: spec-literal span-accurate emission
-              val p1bit = new Array[Int](64) // correction bit per position
-              val hist = new Array[Boolean](64) // nonzero history at this scan
-              val newSig = new Array[Boolean](64)
-              var k = ss
-              while (k <= se) {
-                val v = blk(k)
-                val mag = math.abs(v)
-                val t = mag >> al
-                hist(k) = (mag >> (al + 1)) != 0
-                newSig(k) = !hist(k) && t == 1
-                p1bit(k) = (mag >> al) & 1
-                k += 1
-              }
-              var cursor = ss
-              var any = false
-              var pos = ss
-              while (pos <= se) {
-                if (newSig(pos)) {
-                  if (!any || eobrun > 0) flushEob()
-                  any = true
-                  // zero-history run before this coefficient
-                  var r = 0
-                  var j = cursor
-                  while (j < pos) { if (!hist(j)) r += 1; j += 1 }
-                  while (r > 15) {
-                    putSym(ac, 0xF0)
-                    // bits for positions passed by this ZRL's 16-zero span
-                    var zeros = 0
-                    while (zeros < 16) {
-                      if (hist(cursor)) putBits(p1bit(cursor), 1)
-                      else zeros += 1
-                      cursor += 1
-                    }
-                    r -= 16
-                  }
-                  putSym(ac, (r << 4) | 1)
-                  putBits(if (blk(pos) >= 0) 1 else 0, 1)
-                  // bits for nonzero-history positions up to the placement
-                  while (cursor < pos) {
-                    if (hist(cursor)) putBits(p1bit(cursor), 1)
-                    cursor += 1
-                  }
-                  cursor = pos + 1
-                }
-                pos += 1
-              }
-              if (cursor <= se || !any) {
-                // trailing span joins the EOB run; its correction bits
-                // are buffered and flow after the EOBn symbol
-                eobrun += 1
-                var j = cursor
-                while (j <= se) {
-                  if (hist(j)) tailBits += p1bit(j)
-                  j += 1
-                }
-                if (eobrun == 0x7fff) flushEob()
-              }
-            }
-          }
-          flushEob()
-        }
-        align()
-      }
-      b(0xff, 0xd9)
-      out.toByteArray
-    }
-
-    /** Progressive (SOF2) decode — the format nearly every web image
-      * actually ships. Coefficients accumulate across SCANS into
-      * per-component zigzag-ordered stores: DC first scans deliver
+      * One marker loop reads the tables, the frame header and each
+      * scan. Coefficients accumulate across scans into per-component
+      * zigzag-ordered stores: a sequential scan delivers each block's DC
+      * and AC band in one pass; progressive DC first scans deliver
       * `pred << Al`, DC refinement appends one bit per block, AC first
       * scans cover a spectral band `[Ss, Se]` with EOB-run coding, and
       * AC refinement appends correction bits to already-significant
-      * coefficients while inserting newly-significant ±2^Al ones
-      * (T.81 G.2; the control flow mirrors the reference decoder
-      * structure every real file is written against). Interleaved
-      * scans (DC, all components) walk MCUs; AC scans are
-      * single-component over that component's true data-unit grid.
-      * After EOI: dequant, dezigzag, IDCT, and the same
-      * [[composeLuma]] finish as baseline. */
-    private def decodeProgressiveLuma(b: Array[Byte]): Option[(Int, Int, Array[Int])] = {
+      * coefficients while inserting newly-significant ±2^Al ones (T.81
+      * G.2; the control flow mirrors the reference decoder structure
+      * every real file is written against). Interleaved scans walk
+      * MCUs; single-component scans walk that component's true
+      * data-unit grid. A baseline frame is its one scan: decoding ends
+      * after the scan's last MCU, with no EOI required; a progressive
+      * frame ends at EOI. Then dequant, dezigzag, IDCT and
+      * [[composeLuma]]. None when the bytes are outside this scope
+      * (arithmetic coding, 12-bit, hierarchical, exotic sampling). */
+    def decodeJpegLuma(b: Array[Byte]): Option[(Int, Int, Array[Int])] = {
       if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
+      var baseline = false // SOF0 rather than SOF2
       var w = 0; var h = 0
       val qTabs = new Array[Array[Int]](4)
       val dcTabs = new Array[HuffSpec](4)
@@ -2173,15 +1576,13 @@ object Multimodal {
       var mcusX = 0; var mcusY = 0
       var stores: Array[Array[Int]] = null // per comp: nBlocks*64, zigzag order
       var storeBw: Array[Int] = null; var storeBh: Array[Int] = null
-      var sawEoi = false
-      var i = 2
       // scan-component table ids, refilled by each SOS parse before its
       // decodeScan call (indexed by frame component index)
       val scanTd = new Array[Int](4)
       val scanTa = new Array[Int](4)
 
-      // decode ONE scan's entropy data; returns the byte position of the
-      // next marker, or -1 on malformed data
+      // decode ONE scan's entropy data from `start`; returns the index
+      // just past its last data unit, or -1 on malformed data
       def decodeScan(
           scanComps: Array[Int], Ss: Int, Se: Int, Ah: Int, Al: Int,
           start: Int): Int = {
@@ -2222,6 +1623,7 @@ object Multimodal {
           }
           v
         }
+        // T.81 F.2.2.1 EXTEND: low-category values are negative
         def extend(v: Int, t: Int): Int =
           if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
 
@@ -2246,13 +1648,16 @@ object Multimodal {
         }
         def acFirst(store: Array[Int], base: Int, ac: Map[(Int, Int), Int]): Boolean = {
           if (eobrun > 0) { eobrun -= 1; return true }
-          var k = Ss
+          var k = if (Ss == 0) 1 else Ss // a sequential block's AC band follows its DC
           while (k <= Se) {
             val sym = decodeSym(ac)
             if (sym < 0) return false
             val r = sym >>> 4; val s = sym & 0x0f
             if (s == 0) {
               if (r < 15) {
+                // EOB runs exist only in progressive scans: a baseline
+                // block ends with plain EOB (0x00)
+                if (baseline && r != 0) return false
                 val ex = receive(r)
                 if (ex == Int.MinValue) return false
                 eobrun = (1 << r) - 1 + ex
@@ -2268,7 +1673,7 @@ object Multimodal {
               k += 1
             }
           }
-          true
+          !(baseline && k > 64) // a baseline ZRL may not run past the block
         }
         def acRefine(store: Array[Int], base: Int, ac: Map[(Int, Int), Int]): Boolean = {
           val p1 = 1 << Al
@@ -2338,12 +1743,11 @@ object Multimodal {
         var sc = 0
         while (sc < scanComps.length) {
           val ci = scanComps(sc)
-          if (Ss == 0) {
-            if (Ah == 0) {
-              if (dcTabs(scanTd(ci)) == null) return -1
-              dcMaps(sc) = dcTabs(scanTd(ci)).decodeTable
-            }
-          } else {
+          if (Ss == 0 && Ah == 0) {
+            if (dcTabs(scanTd(ci)) == null) return -1
+            dcMaps(sc) = dcTabs(scanTd(ci)).decodeTable
+          }
+          if (Se > 0) {
             if (acTabs(scanTa(ci)) == null) return -1
             acMaps(sc) = acTabs(scanTa(ci)).decodeTable
           }
@@ -2355,7 +1759,8 @@ object Multimodal {
           val store = stores(ci)
           val base = (by * storeBw(ci) + bx) * 64
           if (Ss == 0) {
-            if (Ah == 0) dcFirst(store, base, sc, dcMaps(sc)) else dcRefine(store, base)
+            if (Ah == 0) dcFirst(store, base, sc, dcMaps(sc)) && (Se == 0 || acFirst(store, base, acMaps(sc)))
+            else dcRefine(store, base)
           } else {
             if (Ah == 0) acFirst(store, base, acMaps(sc)) else acRefine(store, base, acMaps(sc))
           }
@@ -2374,7 +1779,8 @@ object Multimodal {
         }
 
         if (scanComps.length > 1) {
-          // interleaved (DC scans): frame MCU walk
+          // interleaved: frame MCU walk, per scan component Vc×Hc blocks
+          // in raster order within the MCU (T.81 A.2.3)
           var mcu = 0
           while (mcu < mcusX * mcusY) {
             if (!restartAt(mcu)) return -1
@@ -2408,39 +1814,63 @@ object Multimodal {
             unit += 1
           }
         }
-        // advance to the next marker, skipping stuffing and stray RSTn
-        var p = pos
-        var done = false
-        while (!done) {
-          if (p + 1 >= b.length) return -1
-          if ((b(p) & 0xff) == 0xff) {
-            val m = b(p + 1) & 0xff
-            if (m == 0x00) p += 2
-            else if (m >= 0xd0 && m <= 0xd7) p += 2
-            else done = true
-          } else p += 1
-        }
-        p
+        pos
       }
 
-      // ---- marker loop over the whole stream ----
-      while (!sawEoi) {
-        if (i + 2 > b.length || (b(i) & 0xff) != 0xff) return None
+      // dequant + dezigzag + IDCT into per-component planes, then compose
+      def finish(): Option[(Int, Int, Array[Int])] = {
+        val ncomp = compIds.length
+        if ((0 until ncomp).exists(c => qTabs(compTq(c)) == null)) return None
+        val planeW = Array.tabulate(ncomp)(c => storeBw(c) * 8)
+        val planes = Array.tabulate(ncomp)(c => new Array[Int](planeW(c) * storeBh(c) * 8))
+        val f = new Array[Int](64)
+        var c = 0
+        while (c < ncomp) {
+          val q = qTabs(compTq(c))
+          val store = stores(c)
+          val bw = storeBw(c); val bh = storeBh(c)
+          val pw = planeW(c)
+          var blk = 0
+          while (blk < bw * bh) {
+            val base = blk * 64
+            var z = 0
+            while (z < 64) { f(ZigzagOrder(z)) = store(base + z) * q(z); z += 1 }
+            val px = idct8x8(f)
+            val bx = blk % bw; val by = blk / bw
+            var y = 0
+            while (y < 8) {
+              var x = 0
+              while (x < 8) {
+                planes(c)((by * 8 + y) * pw + bx * 8 + x) = px(y * 8 + x)
+                x += 1
+              }
+              y += 1
+            }
+            blk += 1
+          }
+          c += 1
+        }
+        Some((w, h, composeLuma(w, h, ncomp, compH, compV, maxH, maxV, planes, planeW)))
+      }
+
+      // ---- the marker loop: tables, the frame header, then each scan ----
+      var i = nextMarker(b, 2)
+      var eoi = false
+      while (!eoi) {
+        if (i < 0) return None
         val m = b(i + 1) & 0xff
-        if (m == 0xd9) { sawEoi = true }
-        else if (m == 0xff) { i += 1 } // 0xFF fill byte before a marker
-        else if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) { i += 2 }
+        if (m == Eoi) eoi = true
         else {
-          if (i + 4 > b.length) return None
-          val len = ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-          if (len < 2 || i + 2 + len > b.length) return None
+          val len = be16(b, i + 2)
           val body = i + 4
+          var next = i + 2 + len
           m match {
-            case 0xc2 =>
+            case 0xc0 | 0xc2 =>
               if (stores != null) return None // one frame only
+              baseline = m == 0xc0
               if (len < 11 || (b(body) & 0xff) != 8) return None
-              h = ((b(body + 1) & 0xff) << 8) | (b(body + 2) & 0xff)
-              w = ((b(body + 3) & 0xff) << 8) | (b(body + 4) & 0xff)
+              h = be16(b, body + 1)
+              w = be16(b, body + 3)
               val ncomp = b(body + 5) & 0xff
               if (ncomp != 1 && ncomp != 3) return None
               if (len < 8 + 3 * ncomp) return None
@@ -2457,34 +1887,35 @@ object Multimodal {
                     compTq(c) > 3) return None
                 c += 1
               }
+              // grayscale must be 1×1; color chroma must be 1×1 (the
+              // standard subsamplings — luma carries the 2× factors)
               if (ncomp == 1 && (compH(0) != 1 || compV(0) != 1)) return None
               if (ncomp == 3 && (compH(1) != 1 || compV(1) != 1 ||
                   compH(2) != 1 || compV(2) != 1)) return None
+              // untrusted-dims guard (see MaxDecodePixels): dims are 16-bit
+              // each, so w·h can reach 4.3e9 — cap before any allocation
               if (w <= 0 || h <= 0 || w.toLong * h > MaxDecodePixels) return None
               maxH = compH.max; maxV = compV.max
               mcusX = (w + 8 * maxH - 1) / (8 * maxH)
               mcusY = (h + 8 * maxV - 1) / (8 * maxV)
               storeBw = Array.tabulate(ncomp)(c => mcusX * compH(c))
               storeBh = Array.tabulate(ncomp)(c => mcusY * compV(c))
-              var cc = 0
-              while (cc < ncomp) {
-                if (storeBw(cc).toLong * storeBh(cc) * 64 >
-                    MaxDecodePixels.toLong + (1L << 16)) return None
-                cc += 1
-              }
+              // MCU padding is ≤ 15 px per axis: a small slack over the cap
+              if ((0 until ncomp).exists(c =>
+                  storeBw(c).toLong * storeBh(c) * 64 > MaxDecodePixels + (1L << 16))) return None
               stores = Array.tabulate(ncomp)(c => new Array[Int](storeBw(c) * storeBh(c) * 64))
-            case mm if (mm >= 0xc0 && mm <= 0xcf && mm != 0xc2 && mm != 0xc4) =>
-              return None // mixed/other frame types
-            case 0xdb =>
+            case mm if mm >= 0xc1 && mm <= 0xcf && mm != 0xc4 =>
+              return None // other frame types (extended, lossless, arithmetic, hierarchical), JPG, DAC
+            case 0xdb => // DQT (possibly several tables per segment)
               var p = body
               while (p < i + 2 + len) {
-                if ((b(p) & 0xff) >>> 4 != 0) return None
+                if ((b(p) & 0xff) >>> 4 != 0) return None // 16-bit tables out of scope
                 val tq = b(p) & 0x0f
                 if (tq > 3 || p + 65 > i + 2 + len) return None
                 qTabs(tq) = Array.tabulate(64)(j => b(p + 1 + j) & 0xff)
                 p += 65
               }
-            case 0xc4 =>
+            case 0xc4 => // DHT (possibly several tables per segment)
               var p = body
               while (p < i + 2 + len) {
                 val tc = (b(p) & 0xff) >>> 4; val th = b(p) & 0x0f
@@ -2498,18 +1929,17 @@ object Multimodal {
                 else return None
                 p += 17 + n
               }
-            case 0xdd =>
+            case 0xdd => // DRI
               if (len != 4) return None
-              dri = ((b(body) & 0xff) << 8) | (b(body + 1) & 0xff)
-            case 0xda =>
+              dri = be16(b, body)
+            case 0xda => // SOS
               if (stores == null) return None
               val ns = b(body) & 0xff
               if (ns < 1 || ns > compIds.length || len < 6 + 2 * ns) return None
               val scanComps = new Array[Int](ns)
               var s = 0
               while (s < ns) {
-                val cid = b(body + 1 + 2 * s) & 0xff
-                val ci = compIds.indexOf(cid)
+                val ci = compIds.indexOf(b(body + 1 + 2 * s) & 0xff)
                 if (ci < 0) return None
                 scanComps(s) = ci
                 val tt = b(body + 2 + 2 * s) & 0xff
@@ -2521,61 +1951,239 @@ object Multimodal {
               val Se = b(body + 2 + 2 * ns) & 0xff
               val ahAl = b(body + 3 + 2 * ns) & 0xff
               val Ah = ahAl >>> 4; val Al = ahAl & 0x0f
-              // progressive scan constraints (T.81 G.1): DC scans are
-              // Ss=Se=0 (interleave allowed); AC scans are
-              // single-component spectral bands
-              if (Ss == 0) { if (Se != 0) return None }
-              else { if (ns != 1 || Se < Ss || Se > 63) return None }
-              if (Ah != 0 && Ah != Al + 1) return None // successive refinement steps by 1
-              if (Al > 13) return None
-              val next = decodeScan(scanComps, Ss, Se, Ah, Al, i + 2 + len)
+              if (baseline) {
+                // a baseline scan names every frame component and carries
+                // the full spectral band with no successive approximation:
+                // Ss=0, Se=63, Ah=Al=0 (T.81 B.2.3) — anything else is
+                // spec-invalid for SOF0, and decoding it anyway would
+                // yield wrong luma, not None
+                if (ns != compIds.length || Ss != 0 || Se != 63 || ahAl != 0) return None
+              } else {
+                // progressive scan constraints (T.81 G.1): DC scans are
+                // Ss=Se=0 (interleave allowed); AC scans are
+                // single-component spectral bands
+                if (Ss == 0) { if (Se != 0) return None }
+                else { if (ns != 1 || Se < Ss || Se > 63) return None }
+                if (Ah != 0 && Ah != Al + 1) return None // successive refinement steps by 1
+                if (Al > 13) return None
+              }
+              // a baseline scan decodes in frame component order
+              val end = decodeScan(if (baseline) compIds.indices.toArray else scanComps,
+                Ss, Se, Ah, Al, i + 2 + len)
+              if (end < 0) return None
+              if (baseline) return finish() // the frame's one scan is done
+              next = entropyEnd(b, end)
               if (next < 0) return None
-              i = next // decodeScan leaves i AT the next marker's 0xff
-            case _ => // APPn / COM: skip
+            case _ => // APPn / COM / others: skip
           }
-          if (m != 0xda) i += 2 + len
+          i = nextMarker(b, next)
         }
       }
-      if (stores == null) return None
-      // every component must have its quant table
-      var c2 = 0
-      while (c2 < compIds.length) {
-        if (qTabs(compTq(c2)) == null) return None
-        c2 += 1
+      // EOI ends a progressive frame; a baseline frame never reached its scan
+      if (stores == null || baseline) None else finish()
+    }
+
+    /** Crop + chroma replication upsample + (for color) [[ycbcrLuma]]:
+      * the finish stage of [[decodeJpegLuma]], turning MCU-padded
+      * per-component pixel planes into the final row-major luma. */
+    private def composeLuma(
+        w: Int, h: Int, ncomp: Int,
+        compH: Array[Int], compV: Array[Int], maxH: Int, maxV: Int,
+        planes: Array[Array[Int]], planeW: Array[Int]): Array[Int] = {
+      val lum = new Array[Int](w * h)
+      if (ncomp == 1) {
+        val pw = planeW(0); val plane = planes(0)
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) { lum(y * w + x) = plane(y * pw + x); x += 1 }
+          y += 1
+        }
+      } else {
+        val py = planes(0); val pwy = planeW(0)
+        val pcb = planes(1); val pwcb = planeW(1)
+        val pcr = planes(2); val pwcr = planeW(2)
+        var y = 0
+        while (y < h) {
+          val yy0 = y * compV(0) / maxV
+          val ycb = y * compV(1) / maxV
+          val ycr = y * compV(2) / maxV
+          var x = 0
+          while (x < w) {
+            val yv = py(yy0 * pwy + x * compH(0) / maxH)
+            val cbv = pcb(ycb * pwcb + x * compH(1) / maxH)
+            val crv = pcr(ycr * pwcr + x * compH(2) / maxH)
+            lum(y * w + x) = ycbcrLuma(yv, cbv, crv)
+            x += 1
+          }
+          y += 1
+        }
       }
-      // ---- dequant + dezigzag + IDCT into per-component planes ----
-      val ncomp = compIds.length
-      val planeW = Array.tabulate(ncomp)(c => storeBw(c) * 8)
-      val planes = Array.tabulate(ncomp)(c => new Array[Int](planeW(c) * storeBh(c) * 8))
-      val f = new Array[Int](64)
-      var c3 = 0
-      while (c3 < ncomp) {
-        val q = qTabs(compTq(c3))
-        val store = stores(c3)
-        val bw = storeBw(c3); val bh = storeBh(c3)
-        val pw = planeW(c3)
-        var blk = 0
-        while (blk < bw * bh) {
-          val base = blk * 64
-          java.util.Arrays.fill(f, 0)
-          var z = 0
-          while (z < 64) { f(ZigzagOrder(z)) = store(base + z) * q(z); z += 1 }
-          val px = idct8x8(f)
-          val bx = blk % bw; val by = blk / bw
-          var y = 0
-          while (y < 8) {
-            var x = 0
-            while (x < 8) {
-              planes(c3)((by * 8 + y) * pw + bx * 8 + x) = px(y * 8 + x)
-              x += 1
+      lum
+    }
+
+    /** Encode a PROGRESSIVE (SOF2) JPEG from the same zigzag-quantized
+      * blocks as the baseline encoders, under an explicit scan script —
+      * each entry (comps, Ss, Se, Ah, Al): comps by frame index (DC
+      * scans may interleave several; AC scans must name one), spectral
+      * band [Ss, Se], successive-approximation high/low. A script like
+      * `DC Al=1 → AC 1..5 Al=1 → AC 6..63 Al=1 → DC refine → AC refine`
+      * reproduces the shape real encoders emit. Grayscale when
+      * `cbBlocks` is empty (then yBlocks must be the 1×1-sampling
+      * grid); color follows [[synthBaselineJpegColor]]'s table/slot
+      * conventions. Restart intervals are not emitted (the DECODER
+      * supports them; the synthetic fixtures do not need them).
+      *
+      * The AC-refinement emitter is spec-literal (T.81 G.1.2.3): each
+      * ZRL carries exactly the correction bits of the
+      * nonzero-history coefficients its 16-zero span passes, each
+      * newly-significant symbol carries the bits up to its placement
+      * position, and EOB runs buffer the tail bits of every blocked
+      * block in order — mirroring the reference decoder walk
+      * bit-for-bit. */
+    def synthProgressiveJpeg(
+        w: Int, h: Int, hSamp: Int, vSamp: Int,
+        yBlocks: Seq[Array[Int]], cbBlocks: Seq[Array[Int]], crBlocks: Seq[Array[Int]],
+        qLumaZigzag: Array[Int], qChromaZigzag: Array[Int],
+        dcLuma: HuffSpec, acLuma: HuffSpec, dcChroma: HuffSpec, acChroma: HuffSpec,
+        scans: Seq[(Seq[Int], Int, Int, Int, Int)],
+        comment: Array[Byte]): Array[Byte] = {
+      val frame = new Planes(w, h, hSamp, vSamp, yBlocks, cbBlocks, crBlocks)
+      scans.foreach { case (cs, ss, se, ah, al) =>
+        require(cs.nonEmpty && cs.forall(ci => ci >= 0 && ci < frame.ncomp), "scan comps in frame")
+        require(
+          (ss == 0 && se == 0) || (cs.length == 1 && ss >= 1 && se >= ss && se <= 63),
+          "DC scans are Ss=Se=0; AC scans are single-component bands")
+        require(al >= 0 && (ah == 0 || ah == al + 1), "successive approximation steps by 1")
+      }
+      val out = new java.io.ByteArrayOutputStream()
+      frame.writeHeader(out, 0xc2, qLumaZigzag, qChromaZigzag,
+        dcLuma, acLuma, dcChroma, acChroma, 0, comment)
+      val bits = new BitWriter(out)
+      scans.foreach { case (cs, ss, se, ah, al) =>
+        frame.writeSos(out, cs, ss, se, ah, al)
+        val units = frame.mcus(cs).flatten
+        if (ss == 0 && ah == 0) {
+          // DC first: the point-transformed DC difference per block
+          val pred = new Array[Int](frame.ncomp)
+          units.foreach { case (ci, blk) =>
+            val v = blk(0) >> al // arithmetic shift (T.81 DC point transform)
+            val diff = v - pred(ci); pred(ci) = v
+            val t = category(diff)
+            bits.symbol(if (ci == 0) dcLuma else dcChroma, t)
+            bits.magnitude(diff, t)
+          }
+        } else if (ss == 0) {
+          // DC refinement: one bit per block
+          units.foreach { case (_, blk) => bits.bits((blk(0) >> al) & 1, 1) }
+        } else {
+          // AC scans: single component over its true data-unit grid
+          val ac = if (cs.head == 0) acLuma else acChroma
+          var eobrun = 0
+          val tailBits = new scala.collection.mutable.ArrayBuffer[Int]()
+          def flushEob(): Unit = {
+            if (eobrun > 0) {
+              var r = 0
+              while ((eobrun >> (r + 1)) != 0) r += 1
+              bits.symbol(ac, r << 4)
+              if (r > 0) bits.bits(eobrun - (1 << r), r)
+              eobrun = 0
             }
-            y += 1
+            tailBits.foreach(bit => bits.bits(bit, 1))
+            tailBits.clear()
           }
-          blk += 1
+          units.foreach { case (_, blk) =>
+            if (ah == 0) {
+              // AC first pass over the band: magnitudes at this Al
+              var r = 0
+              var k = ss
+              var any = false
+              while (k <= se) {
+                val v = blk(k)
+                val t = if (v >= 0) v >> al else -((-v) >> al)
+                if (t == 0) r += 1
+                else {
+                  if (!any || eobrun > 0) flushEob()
+                  any = true
+                  while (r >= 16) { bits.symbol(ac, 0xF0); r -= 16 }
+                  val s2 = category(t)
+                  bits.symbol(ac, (r << 4) | s2)
+                  bits.magnitude(t, s2)
+                  r = 0
+                }
+                k += 1
+              }
+              if (r > 0 || !any) {
+                eobrun += 1
+                if (eobrun == 0x7fff) flushEob()
+              }
+            } else {
+              // AC refinement: spec-literal span-accurate emission
+              val p1bit = new Array[Int](64) // correction bit per position
+              val hist = new Array[Boolean](64) // nonzero history at this scan
+              val newSig = new Array[Boolean](64)
+              var k = ss
+              while (k <= se) {
+                val v = blk(k)
+                val mag = math.abs(v)
+                val t = mag >> al
+                hist(k) = (mag >> (al + 1)) != 0
+                newSig(k) = !hist(k) && t == 1
+                p1bit(k) = (mag >> al) & 1
+                k += 1
+              }
+              var cursor = ss
+              var any = false
+              var pos = ss
+              while (pos <= se) {
+                if (newSig(pos)) {
+                  if (!any || eobrun > 0) flushEob()
+                  any = true
+                  // zero-history run before this coefficient
+                  var r = 0
+                  var j = cursor
+                  while (j < pos) { if (!hist(j)) r += 1; j += 1 }
+                  while (r > 15) {
+                    bits.symbol(ac, 0xF0)
+                    // bits for positions passed by this ZRL's 16-zero span
+                    var zeros = 0
+                    while (zeros < 16) {
+                      if (hist(cursor)) bits.bits(p1bit(cursor), 1)
+                      else zeros += 1
+                      cursor += 1
+                    }
+                    r -= 16
+                  }
+                  bits.symbol(ac, (r << 4) | 1)
+                  bits.bits(if (blk(pos) >= 0) 1 else 0, 1)
+                  // bits for nonzero-history positions up to the placement
+                  while (cursor < pos) {
+                    if (hist(cursor)) bits.bits(p1bit(cursor), 1)
+                    cursor += 1
+                  }
+                  cursor = pos + 1
+                }
+                pos += 1
+              }
+              if (cursor <= se || !any) {
+                // trailing span joins the EOB run; its correction bits
+                // are buffered and flow after the EOBn symbol
+                eobrun += 1
+                var j = cursor
+                while (j <= se) {
+                  if (hist(j)) tailBits += p1bit(j)
+                  j += 1
+                }
+                if (eobrun == 0x7fff) flushEob()
+              }
+            }
+          }
+          flushEob()
         }
-        c3 += 1
+        bits.align()
       }
-      Some((w, h, composeLuma(w, h, ncomp, compH, compV, maxH, maxV, planes, planeW)))
+      bits.marker(Eoi)
+      out.toByteArray
     }
 
     private val CosTable: Array[Double] = {

@@ -1197,6 +1197,17 @@ class PipelineSpec extends GraftSuite {
       assert(dw == w && dh == h)
       assert(lum.toSeq == pix.toSeq, s"pixels diverged at filter=$filter level=$level")
     }
+    // a zlib header asking for a preset dictionary (FDICT; FLG 0x20 keeps
+    // the header check valid after CMF 0x78) can never inflate here: the
+    // decode is None, not a spin on a zero-byte inflate (the timeout turns
+    // such a spin into a failure instead of a hung suite)
+    val png = ImagePixels.encodePngGray(w, h, pix, 6, 0)
+    val idat = png.indices.find(i => new String(png, i, 4, "US-ASCII") == "IDAT").get
+    assert((png(idat + 4) & 0xff) == 0x78)
+    val fdict = png.clone(); fdict(idat + 5) = 0x20
+    import scala.concurrent.{Await, Future}
+    val dec = Future(ImagePixels.decodePngLuma(fdict))(scala.concurrent.ExecutionContext.global)
+    assert(Await.result(dec, scala.concurrent.duration.Duration(30, "s")).isEmpty)
   }
 
   test("the different-encoder fixture: same pixels, different bytes, SAME dHash") {
@@ -1922,6 +1933,30 @@ class PipelineSpec extends GraftSuite {
     assert(decodeJpegLuma(patchSos(2 + 2 * ns, 62)).isEmpty) // Se = 62
     assert(decodeJpegLuma(patchSos(3 + 2 * ns, 0x01)).isEmpty) // Al = 1
     assert(decodeJpegLuma(patchSos(3 + 2 * ns, 0x10)).isEmpty) // Ah = 1
+    // the header readers walk segments by the decoder's rules: both
+    // files parse, carry their COM payload, and take a dims rewrite
+    val header = graft.functions.Multimodal.ImageHeader
+    for (f <- Seq(withTem, withFill)) {
+      assert(header.decode(f).contains((27, 16)))
+      assert(header.extractPayload(f).exists(_.sameElements("p".getBytes("US-ASCII"))))
+    }
+    assert(header.decode(header.rewriteDims(withFill, 13, 8).get).contains((13, 8)))
+    // a baseline frame ends after its scan's last MCU: no EOI needed
+    assert(decodeJpegLuma(base.dropRight(2)).get._3.sameElements(expected))
+    // a progressive frame ends at EOI: without it the decode is None
+    val prog = synthProgressiveJpeg(27, 16, 1, 1, blocks, Nil, Nil, q8, q8,
+      DcAnnexK, AcProgA, DcFlat, AcProgB,
+      Seq((Seq(0), 0, 0, 0, 0), (Seq(0), 1, 63, 0, 0)), "p".getBytes("US-ASCII"))
+    assert(decodeJpegLuma(prog).get._3.sameElements(expected))
+    assert(decodeJpegLuma(prog.dropRight(2)).isEmpty)
+    // a baseline scan must name every frame component: a 4:4:4 color
+    // header (same luma tables) followed by base's Y-only scan is None
+    val color = synthBaselineJpegColor(27, 16, 1, 1, blocks, blocks, blocks, q8, q8,
+      DcAnnexK, AcSmallA, DcFlat, AcSmallB, 0, "c".getBytes("US-ASCII"))
+    assert(decodeJpegLuma(color).isDefined)
+    val colorSos = color.indices.find(i =>
+      (color(i) & 0xff) == 0xff && (color(i + 1) & 0xff) == 0xda).get
+    assert(decodeJpegLuma(color.take(colorSos) ++ base.drop(sosAt)).isEmpty)
   }
 
   test("PCM synth fails fast on samples outside int16 instead of wrapping") {

@@ -322,8 +322,35 @@ object TextExprPropertySpec extends Properties("TextExprs") {
           (Seq(0), 0, 0, 1, 0), (Seq(0), 1, 63, 1, 0))
       val prog = synthProgressiveJpeg(27, 16, 1, 1, blocks, Nil, Nil, q, q,
         DcAnnexK, AcProgA, DcFlat, AcProgB, script, "p".getBytes("US-ASCII"))
-      decodeJpegLuma(prog).get._3.sameElements(expected)
+      // both decodes run through one decoder, so each also meets the
+      // hand reference that shares no decoder code but idct8x8
+      val hand = handLuma(27, 16, blocks, q)
+      decodeJpegLuma(prog).get._3.sameElements(expected) &&
+        expected.sameElements(hand) && decodeJpegLuma(prog).get._3.sameElements(hand)
     }
+
+  /** Natural index of each zigzag position, walked along the
+    * anti-diagonals (T.81 figure 5). */
+  private val zigzag: Array[Int] = (0 until 15).flatMap { s =>
+    val diag = (math.max(0, s - 7) to math.min(s, 7)).map(r => r * 8 + (s - r))
+    if (s % 2 == 1) diag else diag.reverse
+  }.toArray
+
+  /** Hand reference decode of a 1×1-sampled grayscale frame from its
+    * zigzag-ordered quantized blocks: per block dezigzag, dequantise,
+    * idct8x8, then crop the block grid to w×h. */
+  private def handLuma(w: Int, h: Int, blocks: Seq[Array[Int]], q: Array[Int]): Array[Int] = {
+    val bw = (w + 7) / 8
+    val px = blocks.map { zz =>
+      val f = new Array[Int](64)
+      for (i <- 0 until 64) f(zigzag(i)) = zz(i) * q(i)
+      graft.functions.Multimodal.JpegGray.idct8x8(f)
+    }
+    Array.tabulate(w * h) { p =>
+      val x = p % w; val y = p / w
+      px((y / 8) * bw + x / 8)((y % 8) * 8 + x % 8)
+    }
+  }
 
   property("palette/Adam7 PNG round-trip: any dims, any filter, permuted PLTE") =
     Prop.forAll(Gen.chooseNum(1, 40), Gen.chooseNum(1, 24),
