@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
-import graft.io.Flatten
+import graft.io.{Flatten, LocalFs}
 import graft.ops.Merge
 import graft.sql.{SqlDialect, SqlTemplate}
 
@@ -710,6 +710,13 @@ object GraftSession {
 
   def apply(spark: SparkSession): GraftSession = new GraftSession(spark)
 
+  /** Route `file:` through [[graft.io.LocalFs]] (no `chmod`/`readlink`
+    * child process per local file) for `FileSystem.get` and
+    * `FileContext` alike. Static: must be set before the session starts. */
+  val localFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFs.FileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Fs].getName)
+
   /** Local-mode builder with the settings this engine assumes (UTC, AQE,
     * shuffle partitions sized to cores — not the 200 default). */
   def localSpark(cores: Int = 32, appName: String = "graft"): SparkSession = {
@@ -748,6 +755,7 @@ object GraftSession {
       // production sizes it is a no-op.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.ui.enabled", "false")
+      .config(localFsConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

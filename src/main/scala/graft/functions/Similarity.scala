@@ -279,11 +279,10 @@ object Similarity {
     // Cell labels are matrix row indices — consistent between the corpus
     // assignment and the query probes because both use the same matrix.
     // Non-nullable like [[kmeansAssignCol]] (same inferred-isnotnull
-    // duplication when __cid becomes a join key): the fused top-1 loop
-    // always yields an index for the non-null normalized vectors here.
+    // duplication when __cid becomes a join key).
     def nearestCid(matrix: Seq[Seq[Float]], v: Column): Column = {
       require(matrix.nonEmpty, "nearestCid: empty centroid set")
-      coalesce(nearestCentroids(v, matrix, 1).getItem(0), lit(0))
+      assignedOrRaise(nearestCentroids(v, matrix, 1).getItem(0), "buildIvfIndex")
     }
 
     var seedArr = seeds.as[(Int, Seq[Float])].collect()
@@ -549,10 +548,10 @@ object Similarity {
     * realizes the ties-to-lowest-cid rule. Expects the normalized-double
     * `__v` column produced by [[kmeansFit]].
     *
-    * NON-NULLABLE by construction (`coalesce` with a literal fallback the
-    * expression can never reach — the fused argmax always returns a valid
-    * matrix index for a non-null vector, and the corpora carry no null
-    * vectors): when the assignment column is a join/group key downstream,
+    * NON-NULLABLE by construction ([[assignedOrRaise]]: the fused argmax
+    * returns a valid matrix index for every well-formed vector, and the
+    * query fails on any other): when the assignment column is a
+    * join/group key downstream,
     * a nullable alias makes `InferFiltersFromConstraints` add
     * `isnotnull(<alias>)` and predicate pushdown then substitutes the
     * ENTIRE defining expression into the scan-stage filter — measured as
@@ -563,9 +562,18 @@ object Similarity {
   private def kmeansAssignCol(cids: Array[Int], matrix: Seq[Seq[Double]]): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     require(cids.nonEmpty && matrix.nonEmpty, "kmeansAssignCol: empty centroid set")
-    coalesce(element_at(lit(cids), ColumnBridge.column(
+    assignedOrRaise(element_at(lit(cids), ColumnBridge.column(
       NearestCentroidDoubleExpr(ColumnBridge.expression(col("__v")), matrix)) + 1),
-      lit(cids.head))
+      "kmeansAssign")
+  }
+
+  /** `cell`, failing the query on a row without one (a null vector, a
+    * null element or a dimension mismatch), typed non-nullable. */
+  private def assignedOrRaise(cell: Column, op: String): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val raise = raise_error(lit(s"$op: null vector, null element or dimension mismatch"))
+    ColumnBridge.column(org.apache.spark.sql.catalyst.expressions.KnownNotNull(
+      ColumnBridge.expression(coalesce(cell, raise))))
   }
 
   /** Stateless cell assignment against a driver-resident index — the

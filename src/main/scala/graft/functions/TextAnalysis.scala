@@ -339,27 +339,8 @@ object TextAnalysis {
       .where(length(col("token")) > 0)
     // pass 1: per-partition Misra-Gries + a token-count sentinel row
     val partial = toks.as[String].mapPartitions { it =>
-      val counters = new java.util.HashMap[String, Long](cap * 2)
-      var n = 0L
-      it.foreach { t =>
-        n += 1
-        val c = counters.get(t)
-        if (c != null) counters.put(t, c + 1L)
-        else if (counters.size < cap) counters.put(t, 1L)
-        else {
-          // decrement-all; drop zeros (amortized O(1): every decrement
-          // cancels exactly one earlier increment)
-          val iter = counters.entrySet().iterator()
-          while (iter.hasNext) {
-            val e = iter.next()
-            if (e.getValue == 1L) iter.remove() else e.setValue(e.getValue - 1L)
-          }
-        }
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Boolean)]
-      counters.forEach((t, _) => out += ((t, 0L, false)))
-      out += ((null, n, true))
-      out.iterator
+      val (summary, n) = misraGries(it, cap)
+      summary.iterator.map(t => (t, 0L, false)) ++ Iterator.single((null: String, n, true))
     }.toDF("token", "cnt", "sentinel").persist()
     val total = partial.where(col("sentinel")).agg(sum("cnt")).as[Long].head()
     val cands = partial.where(!col("sentinel")).select("token").distinct()
@@ -389,6 +370,34 @@ object TextAnalysis {
           org.apache.spark.sql.types.StringType, nullable = false),
         org.apache.spark.sql.types.StructField("n",
           org.apache.spark.sql.types.LongType, nullable = false))))
+  }
+
+  /** Misra–Gries summary of one partition's tokens with `cap` counters:
+    * at most `cap` tokens, among them every token seen more than
+    * n/(cap+1) times, where n (returned beside them) is the number of
+    * tokens read. */
+  private[graft] def misraGries(tokens: Iterator[String], cap: Int): (Seq[String], Long) = {
+    // java.lang.Long values: a missing key must read as null, not 0L
+    val counters = new java.util.HashMap[String, java.lang.Long](cap * 2)
+    var n = 0L
+    tokens.foreach { t =>
+      n += 1
+      val c = counters.get(t)
+      if (c != null) counters.put(t, c + 1L)
+      else if (counters.size < cap) counters.put(t, 1L)
+      else {
+        // decrement-all; drop zeros (amortized O(1): every decrement
+        // cancels exactly one earlier increment)
+        val iter = counters.entrySet().iterator()
+        while (iter.hasNext) {
+          val e = iter.next()
+          if (e.getValue == 1L) iter.remove() else e.setValue(e.getValue - 1L)
+        }
+      }
+    }
+    val out = Seq.newBuilder[String]
+    counters.forEach((t, _) => out += t)
+    (out.result(), n)
   }
 
   /** Corpus-adaptive quality score: per-doc fraction of tokens inside

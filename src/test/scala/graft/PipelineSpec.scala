@@ -328,6 +328,23 @@ class PipelineSpec extends GraftSuite {
     docs.unpersist()
   }
 
+  test("misraGries keeps at most cap tokens, among them every token above n/(cap+1)") {
+    val rnd = new scala.util.Random(7)
+    Seq(4, 16, 64).foreach { cap =>
+      // Zipf-ish: a few heavy tokens, a long tail of rare ones
+      val toks = Seq.fill(5000)(s"t${(math.pow(rnd.nextDouble(), 6) * 400).toInt}")
+      val (summary, n) = graft.functions.TextAnalysis.misraGries(toks.iterator, cap)
+      assert(n == toks.size)
+      assert(summary.size <= cap && summary.distinct.size == summary.size)
+      val heavy = toks.groupBy(identity).collect { case (t, ts) if ts.size.toLong * (cap + 1) > n => t }
+      assert(heavy.nonEmpty && heavy.forall(summary.contains), s"cap $cap")
+    }
+    // the vocabulary (400 tokens) is far above cap, so the summary prunes
+    val (pruned, _) = graft.functions.TextAnalysis.misraGries(
+      Iterator.tabulate(4000)(i => s"t${i % 400}"), 16)
+    assert(pruned.size < 16)
+  }
+
   test("vocabCoverage: corpus-adaptive top-K membership ratio") {
     // corpus vocab by count: a(×5), b(×3), c(×2), d/e(×1) — top-2 = {a, b}
     val d = Seq(
@@ -2312,6 +2329,26 @@ class PipelineSpec extends GraftSuite {
       Similarity.buildIvfIndex(df, "vec_id", "embedding", nCentroids = 0)
     }
     assert(noSeeds.getMessage.contains("nearestCid: empty centroid set"))
+  }
+
+  test("k-means and IVF assignment fail loudly on a null vector") {
+    import graft.functions.Similarity
+    val vecs = (0L until 40L).map(i => i -> Array(math.cos(i.toDouble).toFloat, math.sin(i.toDouble).toFloat))
+    // the null row's id hashes last, so the IVF seed sample never draws it
+    val nullId = spark.range(1000L, 1100L)
+      .select(col("id"), pmod(xxhash64(col("id")), lit(1000000L)).as("h"))
+      .orderBy(col("h").desc).as[(Long, Long)].head()._1
+    val df = (vecs :+ (nullId -> (null: Array[Float]))).toDF("vec_id", "embedding")
+    def raised(run: => Any): String = intercept[Exception](run).getMessage
+    assert(raised(Similarity.kmeansAssign(df, "vec_id", "embedding", k = 2, rounds = 1).collect())
+      .contains("kmeansAssign: null vector"))
+    assert(raised(Similarity.assignCells(df, "vec_id", "embedding", Array(0, 1),
+      Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))).collect()).contains("kmeansAssign: null vector"))
+    assert(raised(Similarity.buildIvfIndex(df, "vec_id", "embedding", nCentroids = 2))
+      .contains("buildIvfIndex: null vector"))
+    // the same rows without the null one still assign
+    assert(Similarity.assignCells(df.where(col("embedding").isNotNull), "vec_id", "embedding",
+      Array(0, 1), Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))).count() == 40L)
   }
 
   test("scrubPii: typed redaction with per-category counts, near-misses survive") {
