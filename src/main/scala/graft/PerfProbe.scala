@@ -1,17 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Dev tool: time + explain individual queries.
   * Usage: runMain graft.PerfProbe <sfDir> <query...> [--explain]
   *   [--conf:key=value ...] [--scale:m] [--stages]
+  *
+  * Runs on `local[SPARK_GRAFT_CPUS]` (32 when unset), as Bench does. Each
+  * call prints a `CALL` line: its build (the query function returning its
+  * DataFrame) and run (the noop-sink write) seconds, and the number of
+  * generated classes compiled during it.
   */
 object PerfProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val explain = args.contains("--explain")
     val names = args.drop(1).filterNot(_.startsWith("--"))
-    val spark = GraftSession.localSpark()
+    val spark = GraftSession.localSpark(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     args.filter(_.startsWith("--conf:")).foreach { a =>
       val kv = a.stripPrefix("--conf:").split("=", 2)
       if (kv.length != 2 || kv(0).isEmpty) {
@@ -95,9 +100,14 @@ object PerfProbe {
         listener.rows.synchronized(listener.rows.clear())
         jobStarts.synchronized { jobSpans.clear() }
         val t0Ms = System.currentTimeMillis()
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
-        fn(spark, runDir).write.format("noop").mode("overwrite").save()
+        val df = fn(spark, runDir)
+        val tb = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
         val t = (System.nanoTime() - t0) / 1e9
+        println(f"CALL $name $i build=${(tb - t0) / 1e9}%.3fs run=${(System.nanoTime() - tb) / 1e9}%.3fs " +
+          s"compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0}")
         if (stages && i == 2) {
           val (nJobs, darkS) = jobStats(t0Ms, System.currentTimeMillis())
           println(f"JOBS $name n=$nJobs dark=${darkS}%.2fs of ${t}%.2fs")

@@ -273,12 +273,12 @@ object PipelineQueries {
     * full run stays priced by the bench-only xxhash64 twin
     * `p_dedup_incremental_fast`. */
   def dedupMinHashIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    // table name salted with the applicationId: two apps sharing a
-    // warehouse/metastore must not collide on a dataset-derived name
-    val storeTable = ("graft_incstore_" +
-      spark.sparkContext.applicationId + "_" + sfDir)
-      .replaceAll("[^A-Za-z0-9]", "_")
+    val storeTable = incStoreTable(spark, sfDir)
     val dir = Fixtures.staged(spark, sfDir, "incstore") { d =>
+      // the store's files live in this dir ($d/store), so the fixture
+      // store revalidates them with kept0; a rebuild must not resolve the
+      // store through the catalog entry the wiped build registered
+      spark.sql(s"DROP TABLE IF EXISTS `$storeTable`")
       val b0 = portableBandBuckets(
         docsWithNearDups(spark, sfDir).where(col("doc_id") % 2 === 0)).cache()
       val kept0 = b0.select("doc_id").distinct()
@@ -296,7 +296,7 @@ object PipelineQueries {
           .select("__bucket").distinct(),
         storeTable, Seq("__bucket"),
         numBuckets = spark.sparkContext.defaultParallelism,
-        sortCols = Seq("__bucket"))
+        sortCols = Seq("__bucket"), path = Some(s"$d/store"))
       b0.unpersist()
     }
     val kept1 = incrementalBatch1Keep(spark,
@@ -307,6 +307,13 @@ object PipelineQueries {
       .unionByName(kept1.withColumn("batch", lit(1L)))
       .orderBy("doc_id")
   }
+
+  /** The catalog name of [[dedupMinHashIncremental]]'s external store
+    * table, salted with the applicationId: two apps sharing a metastore
+    * must not collide on a dataset-derived name. */
+  private[graft] def incStoreTable(spark: SparkSession, sfDir: String): String =
+    ("graft_incstore_" + spark.sparkContext.applicationId + "_" + sfDir)
+      .replaceAll("[^A-Za-z0-9]", "_")
 
   /** Docs of a bucket relation that share a bucket with a smaller id —
     * the within-batch drop set of the bucket-minimum keep rule. */

@@ -114,14 +114,16 @@ object Scale {
 
   /** Write a table bucketed (and sorted) by join keys: subsequent equi-joins
     * between tables bucketed the same way run shuffle-free — the layout a
-    * 100 TB fact/fact join needs. In-memory-catalog limitation: bucketed
-    * tables are managed saveAsTable tables. */
+    * 100 TB fact/fact join needs. Bucketing lives in the catalog, so the
+    * layout is a saveAsTable table: managed in the warehouse, or external
+    * with its files at `path`. */
   def writeBucketed(
       df: DataFrame,
       table: String,
       bucketCols: Seq[String],
       numBuckets: Int,
-      sortCols: Seq[String] = Nil): Unit = {
+      sortCols: Seq[String] = Nil,
+      path: Option[String] = None): Unit = {
     // pre-partition on the bucket columns (bucketBy assigns files with
     // the same murmur3 hash): one task per bucket → one file per
     // bucket, instead of every task emitting a file for each bucket it
@@ -130,6 +132,7 @@ object Scale {
       .write.mode(SaveMode.Overwrite).format("parquet")
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
     if (sortCols.nonEmpty) w = w.sortBy(sortCols.head, sortCols.tail: _*)
+    path.foreach(p => w = w.option("path", p))
     w.saveAsTable(table)
   }
 }

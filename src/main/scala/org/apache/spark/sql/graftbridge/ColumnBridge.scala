@@ -18,6 +18,13 @@ object ColumnBridge {
   def expressionEager(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter.apply(c.node)
 
+  /** A DataFrame over an already analysed plan, without re-resolving
+    * its relation. */
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
   /** Drain the async listener bus (test support: job-count assertions
     * need delivered events before reading their counters). */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =

@@ -55,6 +55,25 @@ class FixturesSpec extends GraftSuite {
     assert(after == before)
   }
 
+  test("p_dedup_minhash_incremental re-stages a store that lost its part files") {
+    def run() = SparkEntry.queries("p_dedup_minhash_incremental")(spark, sfDir)
+      .as[(Long, Long)].collect().toSeq.sorted
+    assert(run().nonEmpty)
+    val store = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(PipelineQueries.incStoreTable(spark, sfDir)))
+    val parts = regularFiles(Paths.get(store.location).toString)
+      .filter(_.getFileName.toString.startsWith("part-"))
+    assert(parts.nonEmpty)
+    parts.foreach(Files.delete)
+    val after = run()
+    val buckets = PipelineQueries.portableBandBuckets(
+      PipelineQueries.docsWithNearDups(spark, sfDir)).cache()
+    val fresh = PipelineQueries.incrementalKeepFromBuckets(spark, buckets)
+      .as[(Long, Long)].collect().toSeq.sorted
+    buckets.unpersist()
+    assert(after == fresh)
+  }
+
   test("linkOrCopy copies across filesystems, keeping the bytes and mtime") {
     val shm = Paths.get("/dev/shm")
     val src = Files.createTempFile("graft-fixtures", ".bin")
