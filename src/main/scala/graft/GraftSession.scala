@@ -710,12 +710,28 @@ object GraftSession {
 
   def apply(spark: SparkSession): GraftSession = new GraftSession(spark)
 
-  /** Route `file:` through [[graft.io.LocalFs]] (no `chmod`/`readlink`
-    * child process per local file) for `FileSystem.get` and
-    * `FileContext` alike. Static: must be set before the session starts. */
-  val localFsConf: Map[String, String] = Map(
+  /** Settings that must be in place before the session starts; the graft
+    * sessions and the test session apply them, and a user building their
+    * own session adds them to its builder.
+    *
+    * The `file:` routes send `FileSystem.get` and `FileContext` alike
+    * through [[graft.io.LocalFs]] (no `chmod`/`readlink` child process per
+    * local file).
+    *
+    * Artifact isolation is off. Graft adds no artifact (no `addArtifact`,
+    * no `addJar`), so all isolation did was give every stream run its own
+    * executor classloader, and with it a recompile of every class the
+    * stream generates: `CodeGenerator.compile` caches by (the thread's
+    * context classloader, the source); each `StreamExecution` runs on a
+    * `cloneSession()` with a new session UUID; with isolation on, the
+    * clone's tasks carry that UUID as their `JobArtifactState`, and the
+    * executor builds a new `IsolatedSessionState`, a new
+    * `MutableURLClassLoader`, for it. Each dead loader then stayed pinned
+    * by the codegen cache and the executor's isolated-state cache. */
+  val staticConf: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" -> classOf[LocalFs.FileSystem].getName,
-    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Fs].getName)
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Fs].getName,
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** Local-mode builder with the settings this engine assumes (UTC, AQE,
     * shuffle partitions sized to cores — not the 200 default). */
@@ -755,7 +771,7 @@ object GraftSession {
       // production sizes it is a no-op.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.ui.enabled", "false")
-      .config(localFsConf)
+      .config(staticConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -114,11 +114,6 @@ object Dedup {
     kept.drop("__fp", "__fp2")
   }
 
-  /** Read-only form of [[incrementalExactDedup]] — the anti-join against
-    * the current store WITHOUT the survivor append, returned LAZY (no
-    * checkpoint): the terminal dump of a backfill, dry runs, and plan
-    * inspection (the returned plan shows the bucketed store scan that
-    * the eager form's checkpoint would hide). */
   /** The catalog name [[incrementalExactDedup]] registers for
     * `statePath`'s store — external-table identity: the DATA lives at
     * statePath (a new session re-registers and resumes); the NAME is
@@ -140,6 +135,11 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, statePath: String): Unit =
     spark.sql(s"DROP TABLE IF EXISTS `${storeTableName(spark, statePath)}`")
 
+  /** Read-only form of [[incrementalExactDedup]] — the anti-join against
+    * the current store WITHOUT the survivor append, returned LAZY (no
+    * checkpoint): the terminal dump of a backfill, dry runs, and plan
+    * inspection (the returned plan shows the bucketed store scan that
+    * the eager form's checkpoint would hide). */
   def incrementalExactDedupDry(
       batch: DataFrame,
       keyCols: Seq[String],

@@ -19,7 +19,7 @@ object SparkTestBase {
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.ui.enabled", "false")
-      .config(GraftSession.localFsConf)
+      .config(GraftSession.staticConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

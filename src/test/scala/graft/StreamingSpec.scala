@@ -215,4 +215,46 @@ class StreamingSpec extends GraftSuite {
       "file_stream_test", OutputMode.Complete())
     assert(streamed.count() > 0)
   }
+
+  /** A windowed aggregation over a parquet file stream, drained through
+    * `runToMemorySink` into a fresh memory table each call. */
+  private def windowedFileStream(dir: String): Seq[org.apache.spark.sql.Row] = {
+    val name = "win_file_" + java.util.UUID.randomUUID().toString.take(8)
+    Streams.runToMemorySink(
+      Streams.windowedEventCounts(Streams.eventFileStream(spark, dir), "1 hour", "2 hours"),
+      name, OutputMode.Complete())
+      .orderBy("window_start", "event_type").collect().toSeq
+  }
+
+  private def eventsDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString + "/events"
+    (batch1 ++ batch2).toDF().write.parquet(dir)
+    dir
+  }
+
+  test("a repeated file stream compiles no generated class") {
+    // the generated sources are the same on every run; a run that compiles
+    // them again has looked them up under a new classloader
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = eventsDir("graft_stream_codegen")
+    val first = windowedFileStream(dir)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = windowedFileStream(dir)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0 == 0)
+    assert(second == first)
+    assert(first.nonEmpty)
+  }
+
+  test("stream runs add no isolated session state to the executor") {
+    import org.apache.spark.sql.graftbridge.TestExecutorState
+    val dir = eventsDir("graft_stream_sessions")
+    windowedFileStream(dir)
+    val before = TestExecutorState.isolatedSessionIds
+    windowedFileStream(dir)
+    windowedFileStream(dir)
+    val after = TestExecutorState.isolatedSessionIds
+    // no new id, so the map (and its classloaders) does not grow, even
+    // where the executor's cache evicts an old state as a new one arrives
+    assert((after -- before).isEmpty, s"new isolated sessions: ${after -- before}")
+  }
 }
