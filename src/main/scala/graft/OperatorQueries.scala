@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.checks.Checks
 import graft.core._
+import graft.functions.WsTokens
 import graft.io.{Fixtures, Flatten}
 
 /** Operator-semantic verification queries: each runs a real GraftSession
@@ -697,7 +698,7 @@ object OperatorQueries {
   def explodeTokens(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.registerAll(spark, sfDir)
     Tables.read(spark, sfDir, "documents")
-      .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("tok"))
+      .select(col("doc_id"), explode(WsTokens.split(trim(col("text")))).as("tok"))
       .groupBy("tok")
       .agg(count(lit(1)).cast("bigint").as("n"),
         countDistinct(col("doc_id")).cast("bigint").as("n_docs"))

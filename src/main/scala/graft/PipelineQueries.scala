@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Dedup, Multimodal, Sampling, Similarity, Sketch, TextAnalysis}
+import graft.functions.{Dedup, Multimodal, Sampling, Similarity, Sketch, TextAnalysis, WsTokens}
 import graft.io.Fixtures
 
 /** Verification queries for the LLM-training-data pipeline operators
@@ -392,7 +392,7 @@ object PipelineQueries {
     val hexDigitVal = (s: String, i: String) =>
       s"(locate(substring($s, $i, 1), '0123456789abcdef') - 1)"
     val toks = corpus
-      .select(col("doc_id"), explode(split(lower(trim(col("text"))), "\\s+")).as("t"))
+      .select(col("doc_id"), explode(WsTokens.split(lower(trim(col("text"))))).as("t"))
       .where(col("t") =!= "")
     // The sign-sum over token OCCURRENCES equals the count-weighted sum
     // over DISTINCT (doc, token) pairs — so md5 bit derivation runs once
@@ -473,7 +473,7 @@ object PipelineQueries {
     val d = docs(spark, sfDir).select("doc_id", "text")
       .repartition(spark.sparkContext.defaultParallelism)
     val tagged = d.select(col("doc_id"),
-      array_join(transform(split(lower(trim(col("text"))), "\\s+"),
+      array_join(transform(WsTokens.split(lower(trim(col("text")))),
         t => concat(lit("g"), col("doc_id"), lit("w"), t)), " ").as("text"))
     // NOTE: the sibling alias shadows doc_id for the later expression
     // (Spark lateral column alias resolution), so sentinels carry the
@@ -685,7 +685,7 @@ object PipelineQueries {
       spark: SparkSession, sfDir: String): (DataFrame, DataFrame, DataFrame) = {
     val d = docs(spark, sfDir).select("doc_id", "text")
       .repartition(spark.sparkContext.defaultParallelism)
-    def tag(prefix: String) = array_join(transform(split(lower(trim(col("text"))), "\\s+"),
+    def tag(prefix: String) = array_join(transform(WsTokens.split(lower(trim(col("text")))),
       t => concat(lit(prefix), col("doc_id"), lit("w"), t)), " ")
     val base = d.select(col("doc_id"), tag("g").as("text"))
     val chainSrc = d.where(col("doc_id") % 9 === 0)
@@ -816,7 +816,7 @@ object PipelineQueries {
     val copies = d.where(col("doc_id") % 3 === 0).select(
       when(col("doc_id") % 5 === 0, col("doc_id") - 100000)
         .otherwise(col("doc_id") + 100000).as("doc_id"),
-      concat(array_join(reverse(split(col("text"), "\\s+")), " "),
+      concat(array_join(reverse(WsTokens.split(col("text"))), " "),
         lit(" qz extra filler"), anchor(col("doc_id"))).as("text"))
     (base, copies)
   }

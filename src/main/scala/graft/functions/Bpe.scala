@@ -61,7 +61,7 @@ object Bpe {
     * cached. */
   def learnBpe(df: DataFrame, textCol: String, numMerges: Int): Seq[(Int, String, String, Long)] = {
     val wf = df
-      .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("word"))
+      .select(explode(WsTokens.split(lower(trim(col(textCol))))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
       .select(col("word"), col("freq"), segInit(col("word")).as("seg"))
       .localCheckpoint() // one corpus pass; iterate on the vocab relation
@@ -112,7 +112,7 @@ object Bpe {
     * the narrow tokenization path (no dictionary join): each word
     * re-segments through the chained replaces in the scan projection. */
   def bpeTokenCount(text: Column, merges: Seq[(String, String)]): Column = {
-    val words = split(lower(trim(text)), "\\s+")
+    val words = WsTokens.split(lower(trim(text)))
     aggregate(words, lit(0),
       (acc, w) => acc + segTokenCount(applyMerges(segInit(w), merges)))
   }

@@ -136,7 +136,7 @@ object Classifier {
     import spark.implicits._
     val wdf = w.toSeq.sortBy(_._1).toDF("__b", "__w")
     val toks = df
-      .select(col(idCol), explode(split(lower(trim(col(textCol))), "\\s+")).as("__t"))
+      .select(col(idCol), explode(WsTokens.split(lower(trim(col(textCol))))).as("__t"))
       .where(col("__t") =!= "")
     val scored = toks
       .select(col(idCol), substring(md5(col("__t")), 1, 4).as("__b"))
@@ -164,7 +164,7 @@ object Classifier {
   }
 
   /** Zero-shuffle scoring: the whole model rides inside one codegen'd
-    * expression ([[PerceptronScoreExpr]], the [[BigramLmStatExpr]]
+    * expression ([[PerceptronScoreExpr]], the [[BigramLmStatsExpr]]
     * pattern) — no explode, no join, no aggregation, so the projection is
     * embarrassingly parallel AND stateless-streaming-safe (the join-based
     * [[scoreQuality]] would need streaming aggregation state). Scores are
@@ -178,16 +178,17 @@ object Classifier {
     val (arr, b) = qualityWeightArray
     df.select(col(idCol),
         ColumnBridge.column(PerceptronScoreExpr(
-          ColumnBridge.expression(coalesce(col(textCol), lit(""))), arr, b)).as("score"))
+          ColumnBridge.expression(lower(coalesce(col(textCol), lit("")))), arr, b)).as("score"))
       .withColumn("keep", col("score") > 0)
   }
 }
 
 /** One-pass perceptron scoring over whitespace tokens of the input:
-  * `bias + Σ weights[md5₁₆(lower(token))]` — the token walk is the
-  * [[BigramLmStatExpr]] byte loop, the feature hash is the first two
-  * md5 bytes (the same 4-hex bucket the relational scorer and the
-  * DuckDB oracle use, compared as an int index into the dense array). */
+  * `bias + Σ weights[md5₁₆(token)]`, the input lowercased by Spark's
+  * `lower()` before it arrives. The token walk is the [[WsTokens]]
+  * kernel; the feature hash is the first two md5 bytes (the same 4-hex
+  * bucket the relational scorer and the DuckDB oracle use, compared as
+  * an int index into the dense array). */
 case class PerceptronScoreExpr(
     child: org.apache.spark.sql.catalyst.expressions.Expression,
     weights: Array[Long],
@@ -219,33 +220,22 @@ object PerceptronScoreExpr {
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  private def isWs(b: Byte): Boolean =
-    b == ' '.toByte || b == '\t'.toByte || b == '\n'.toByte ||
-      b == 0x0b.toByte || b == '\f'.toByte || b == '\r'.toByte
-
   /** The whitespace walk matches `split(..., "\\s+")` + the non-empty
-    * filter of the relational scorer; each token lowercases exactly like
-    * Spark `lower()` (UTF8String.toLowerCase) before hashing. */
+    * filter of the relational scorer; `s` is already lowercased by Spark
+    * `lower()`, as the relational scorer's tokens are (a per-token
+    * `UTF8String.toLowerCase` is the JDK's mapping, which leaves capitals
+    * encoded after Unicode 13 upper where `lower()`'s ICU mapping does
+    * not). */
   def score(s: UTF8String, w: Array[Long], bias: Long): Long = {
     val bytes = s.getBytes
     val md = digest.get()
     var sum = bias
-    def token(st: Int, e: Int): Unit = {
-      val t = UTF8String.fromBytes(bytes, st, e - st).toLowerCase
+    WsTokens.foreachToken(bytes, 0, bytes.length) { (st, e) =>
       md.reset()
-      val d = md.digest(t.getBytes)
+      md.update(bytes, st, e - st)
+      val d = md.digest()
       sum += w(((d(0) & 0xff) << 8) | (d(1) & 0xff))
     }
-    var i = 0
-    var start = -1
-    val len = bytes.length
-    while (i < len) {
-      if (isWs(bytes(i))) {
-        if (start >= 0) { token(start, i); start = -1 }
-      } else if (start < 0) start = i
-      i += 1
-    }
-    if (start >= 0) token(start, len)
     sum
   }
 }

@@ -233,7 +233,7 @@ object Dedup {
     * Convenience scalar form — see [[charNgramSets]] for the
     * corpus-scale explode-shaped variant (normalizes once per doc). */
   def charNgrams(text: Column, n: Int): Column = {
-    val s = regexp_replace(lower(trim(text)), "\\s+", " ")
+    val s = WsTokens.collapse(lower(trim(text)))
     val len = length(s)
     val raw = when(len <= n, array(s))
       .otherwise(transform(sequence(lit(1), len - n + 1), i => substring(s, i, lit(n))))
@@ -628,7 +628,7 @@ object Dedup {
   /** Whitespace-normalized lowercase text — the canonical form both
     * shingle-set builders tokenize/slide over. */
   private def normText(textCol: String): Column =
-    regexp_replace(lower(trim(col(textCol))), "\\s+", " ")
+    WsTokens.collapse(lower(trim(col(textCol))))
 
   /** (id, sets) of hashed word `k`-shingles as ONE narrow codegen'd pass
     * per document ([[ShingleSetExpr]]): the normalized string is scanned
@@ -993,9 +993,9 @@ object Dedup {
   }
 }
 
-/** Charikar SimHash as a single codegen'd Catalyst expression: tokenize on
-  * ASCII whitespace runs (Java `\s+` split semantics, including the
-  * leading-empty-token case), xxhash64 each token byte-range in place
+/** Charikar SimHash as a single codegen'd Catalyst expression: tokenize
+  * with the [[WsTokens]] kernel (`split(s, "\\s+")` semantics, including
+  * the empty edge tokens), xxhash64 each token byte-range in place
   * (Spark's XXH64, seed 42 — bit-identical to `xxhash64(token)`),
   * accumulate the 64 signed bit-sums, and emit the sign vector — one tight
   * byte loop per row with zero per-token allocation. Replaces an
@@ -1338,10 +1338,6 @@ object MinHashSigExpr {
 object SimHash64Expr {
   private final val Seed = 42L
 
-  private def isWs(b: Byte): Boolean =
-    b == ' '.toByte || b == '\t'.toByte || b == '\n'.toByte ||
-      b == 0x0b.toByte || b == '\f'.toByte || b == '\r'.toByte
-
   /** Single-pass simhash over the UTF-8 bytes (called from codegen). */
   def simhash(bytes: Array[Byte]): Long = {
     val counts = new Array[Int](64)
@@ -1355,18 +1351,12 @@ object SimHash64Expr {
       }
     }
     val len = bytes.length
-    // Java split("\\s+") parity: "" → [""]; a leading separator run also
-    // yields one empty token (trim strips spaces but not tabs/newlines)
-    if (len == 0 || isWs(bytes(0))) addToken(0, 0)
-    var i = 0
-    var start = -1
-    while (i < len) {
-      if (isWs(bytes(i))) {
-        if (start >= 0) { addToken(start, i); start = -1 }
-      } else if (start < 0) start = i
-      i += 1
-    }
-    if (start >= 0) addToken(start, len)
+    // split("\\s+") parity: "" → [""]; a leading or trailing separator
+    // run also yields an empty token (trim strips spaces, not tabs or
+    // newlines)
+    if (WsTokens.leadingEmpty(bytes, 0, len)) addToken(0, 0)
+    WsTokens.foreachToken(bytes, 0, len)(addToken)
+    if (WsTokens.trailingEmpty(bytes, 0, len)) addToken(len, len)
     var out = 0L
     var b = 0
     while (b < 64) {

@@ -70,7 +70,7 @@ object GraftFunctions {
         val c = ColumnBridge.column(exprs.head)
         import org.apache.spark.sql.functions.{lower, regexp_replace, trim}
         ColumnBridge.column(ShingleSetExpr(
-          ColumnBridge.expression(regexp_replace(lower(trim(c)), "\\s+", " ")),
+          ColumnBridge.expression(WsTokens.collapse(lower(trim(c)))),
           3, byWord = true))
       },
       "built-in")
@@ -85,7 +85,8 @@ object GraftFunctions {
       "graft_quality_score",
       exprs => {
         val (arr, b) = Classifier.qualityWeightArray
-        PerceptronScoreExpr(exprs.head, arr, b)
+        PerceptronScoreExpr(
+          org.apache.spark.sql.catalyst.expressions.Lower(exprs.head), arr, b)
       },
       "built-in")
 

@@ -10,15 +10,18 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Text-analysis operators for training-data pipelines (builder-prompt
   * north star; no reference equivalent — the reference's only text path is
   * pandas transforms). Everything here is pure `Column` composition over
-  * Spark built-ins (whole-stage-codegen friendly, no UDFs) plus one custom
-  * codegen'd Catalyst expression for fingerprinting.
+  * Spark built-ins (whole-stage-codegen friendly, no UDFs) plus custom
+  * codegen'd Catalyst expressions. Whitespace tokenization — every
+  * `split(…, "\\s+")`, token count and whitespace collapse, and the token
+  * walk of the fused byte loops below — goes through the one
+  * [[WsTokens]] kernel, bit-identical to Spark's regex forms.
   */
 object TextAnalysis {
 
-  /** Whitespace token count; empty/blank → 0. */
+  /** Whitespace token count ([[WsTokens.count]]); empty/blank → 0,
+    * null → null. */
   def tokenCount(c: Column): Column =
-    when(length(trim(c)) === 0, lit(0))
-      .otherwise(size(split(trim(c), "\\s+")))
+    WsTokens.count(c)
 
   /** A BPE-ish subword count: word tokens plus an extra unit per 4 chars of
     * long words (crude but deterministic proxy for tokenizer load). One
@@ -31,12 +34,13 @@ object TextAnalysis {
   }
 
   /** Tokens of `c` (split(trim, "\\s+") semantics) whose lowercase form
-    * is in `words` — one codegen'd pass ([[StopwordHitsExpr]]) instead of
-    * an interpreted `filter(toks, t => array_contains(...))` that walks
-    * the word list per token. */
+    * is in `words` — one codegen'd pass ([[StopwordHitsExpr]]) over
+    * `lower(trim(c))` instead of an interpreted
+    * `filter(toks, t => array_contains(...))` that walks the word list
+    * per token. */
   def stopwordHits(c: Column, words: Seq[String]): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(StopwordHitsExpr(ColumnBridge.expression(trim(c)), words))
+    ColumnBridge.column(StopwordHitsExpr(ColumnBridge.expression(lower(trim(c))), words))
   }
 
   /** Quality metrics in one projection: char/token counts, mean token
@@ -44,7 +48,7 @@ object TextAnalysis {
     * stopword ratio (en). Output column names are stable API. */
   def qualityMetrics(c: Column): Seq[(String, Column)] = {
     val nChars = length(c)
-    val toks = split(trim(c), "\\s+")
+    val toks = WsTokens.split(trim(c))
     val nToks = tokenCount(c)
     def classRatio(pattern: String): Column =
       when(nChars === 0, lit(0.0))
@@ -78,14 +82,14 @@ object TextAnalysis {
     * a custom codegen'd Catalyst expression (see [[Fingerprint64]]). */
   def fingerprint64(c: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    val normalized = regexp_replace(lower(trim(c)), "\\s+", " ")
+    val normalized = WsTokens.collapse(lower(trim(c)))
     ColumnBridge.column(Fingerprint64(ColumnBridge.expression(normalized)))
   }
 
   /** Text normalization for training corpora: strip control characters,
     * collapse runs of whitespace, trim. */
   def cleanText(c: Column): Column =
-    trim(regexp_replace(regexp_replace(c, "[\\p{Cntrl}]", " "), "\\s+", " "))
+    trim(WsTokens.collapse(regexp_replace(c, "[\\p{Cntrl}]", " ")))
 
   /** Unicode NFC normalization — canonical composition (e + U+0301 →
     * é), the standard pre-tokenization canonicalization so visually
@@ -133,7 +137,7 @@ object TextAnalysis {
       .foldLeft(noTags) { case (acc, (ent, repl)) =>
         regexp_replace(acc, ent, repl)
       }
-    trim(regexp_replace(decoded, "\\s+", " "))
+    trim(WsTokens.collapse(decoded))
   }
 
   /** PII masking: emails, phone-number-ish sequences, and IPv4 addresses
@@ -197,7 +201,7 @@ object TextAnalysis {
     * previous Column form paid. */
   def repetitionRatio(c: Column, n: Int): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    val normalized = regexp_replace(lower(trim(c)), "\\s+", " ")
+    val normalized = WsTokens.collapse(lower(trim(c)))
     ColumnBridge.column(RepetitionRatioExpr(ColumnBridge.expression(normalized), n))
   }
 
@@ -267,7 +271,7 @@ object TextAnalysis {
     * (partial aggregation), and the final top-k is a TakeOrdered — no
     * global sort of the vocabulary. */
   def topTokens(df: org.apache.spark.sql.DataFrame, textCol: String, k: Int): org.apache.spark.sql.DataFrame =
-    df.select(explode(split(lower(trim(col(textCol))), "\\s+")).as("token"))
+    df.select(explode(WsTokens.split(lower(trim(col(textCol))))).as("token"))
       .where(length(col("token")) > 0)
       .groupBy("token").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token")).limit(k)
@@ -292,7 +296,7 @@ object TextAnalysis {
     require(chunkTokens > 0 && overlap >= 0 && overlap < chunkTokens,
       s"need 0 <= overlap < chunkTokens, got chunkTokens=$chunkTokens overlap=$overlap")
     val stride = chunkTokens - overlap
-    val toks = split(trim(col(textCol)), "\\s+")
+    val toks = WsTokens.split(trim(col(textCol)))
     df.select(col(idCol), toks.as("__toks"))
       .withColumn("__nc",
         when(size(col("__toks")) <= chunkTokens, lit(1))
@@ -335,7 +339,7 @@ object TextAnalysis {
     val cap = if (capacity > 0) capacity else math.max(256, 16 * k)
     val spark = df.sparkSession
     import spark.implicits._
-    def toks = df.select(explode(split(lower(trim(col(textCol))), "\\s+")).as("token"))
+    def toks = df.select(explode(WsTokens.split(lower(trim(col(textCol))))).as("token"))
       .where(length(col("token")) > 0)
     // pass 1: per-partition Misra-Gries + a token-count sentinel row
     val partial = toks.as[String].mapPartitions { it =>
@@ -430,7 +434,7 @@ object TextAnalysis {
     * list" gate, one codegen'd pass ([[DistinctStopwordHitsExpr]]). */
   def distinctStopwordHits(c: Column, words: Seq[String]): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(DistinctStopwordHitsExpr(ColumnBridge.expression(trim(c)), words))
+    ColumnBridge.column(DistinctStopwordHitsExpr(ColumnBridge.expression(lower(trim(c))), words))
   }
 
   private def lineStat(c: Column, which: Int): Column = {
@@ -464,7 +468,7 @@ object TextAnalysis {
     * by quality is embarrassingly parallel and stays that way. */
   def qualitySignals(c: Column, rules: QualityRules): Seq[(String, Column)] = {
     val ntok = tokenCount(c)
-    val toks = split(trim(c), "\\s+")
+    val toks = WsTokens.split(trim(c))
     val meanLen = when(ntok === 0, lit(0.0))
       .otherwise(aggregate(toks, lit(0L), (a, t) => a + length(t)).cast("double") / ntok)
     // symbol load: '#' chars + non-overlapping "..." runs + '…' chars
@@ -611,7 +615,7 @@ object TextAnalysis {
       textCol: String,
       minDf: Long = 2L): org.apache.spark.sql.DataFrame =
     df.select(col(idCol),
-        explode(array_distinct(split(lower(trim(col(textCol))), "\\s+"))).as("token"))
+        explode(array_distinct(WsTokens.split(lower(trim(col(textCol)))))).as("token"))
       .groupBy("token")
       .agg(sort_array(collect_list(col(idCol))).as("postings"))
       .select(col("token"), size(col("postings")).cast("long").as("df"),
@@ -626,12 +630,15 @@ object TextAnalysis {
     * multiplication), so scores AND ranks replay bit-exactly anywhere.
     * Ties break on the token.
     *
-    * Scale shape: tf is a map-side-combinable (id, token) aggregation;
-    * df is the same relation re-aggregated by token (distinct docs);
-    * the join back is a standard token-keyed equi-join — nothing is
-    * vocabulary-broadcast, nothing all-pairs. The final top-k window
-    * partitions by doc. `n` (corpus size) is one count action, scalar
-    * like the IVF centroid collect. */
+    * Scale shape: tf and df come from [[termFrequencies]] (one scan and
+    * tokenization, map-side-combined aggregates); the join back is a
+    * token-keyed equi-join, nothing all-pairs. df (a row per distinct
+    * token) re-aggregates tf, so its size estimate never exceeds tf's:
+    * AQE broadcasts df while it is under the broadcast threshold and
+    * shuffles both sides above it, never broadcasting the (doc, token)
+    * relation. The final top-k window partitions by doc. `n`
+    * (corpus size) is one count action, scalar like the IVF centroid
+    * collect. */
   def salientTerms(
       df: org.apache.spark.sql.DataFrame,
       idCol: String,
@@ -639,11 +646,7 @@ object TextAnalysis {
       k: Int = 3): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val n = df.count()
-    val toks = df.select(col(idCol),
-      explode(split(lower(trim(col(textCol))), "\\s+")).as("token"))
-    val tf = toks.groupBy(col(idCol), col("token"))
-      .agg(count(lit(1)).as("tf"))
-    val dfRel = tf.groupBy("token").agg(count(lit(1)).as("df"))
+    val (tf, dfRel) = termFrequencies(df, idCol, textCol)
     val scored = tf.join(dfRel, Seq("token"))
       .withColumn("score", col("tf").cast("double") *
         ((lit(n.toDouble) - col("df").cast("double") + lit(0.5)) /
@@ -653,6 +656,29 @@ object TextAnalysis {
     scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
       .select(col(idCol), col("token"), col("tf").cast("bigint").as("tf"),
         col("df").cast("bigint").as("df"), col("score"), col("rank"))
+  }
+
+  /** (id, token, tf) and (token, df) over the whitespace tokens of
+    * `lower(trim(text))`, tokenizing the corpus once, on every core (a
+    * scan narrower than the session is spread first,
+    * [[graft.ops.Scale.spreadIfNarrow]]): tf is a map-side-combined
+    * (id, token) count, df re-aggregates tf by token
+    * (map-side combined too, a row per distinct token). df counts the
+    * rows with a positive tf (all of them) rather than rows: over the
+    * bare (id, token) keys column pruning would cut its tf aggregate
+    * down to a distinct, whose exchange is not the tf exchange, so the
+    * corpus would be scanned and tokenized a second time. (`count(tf)`
+    * does not do: tf is never null, so the optimizer rewrites it to
+    * `count(1)`.) */
+  private def termFrequencies(
+      df: org.apache.spark.sql.DataFrame,
+      idCol: String,
+      textCol: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val tf = graft.ops.Scale.spreadIfNarrow(df).select(col(idCol),
+        explode(WsTokens.split(lower(trim(col(textCol))))).as("token"))
+      .groupBy(col(idCol), col("token"))
+      .agg(count(lit(1)).as("tf"))
+    (tf, tf.groupBy("token").agg(count(when(col("tf") > 0, lit(1))).as("df")))
   }
 
   /** BM25-style document retrieval for a bag-of-terms query: each doc
@@ -670,11 +696,7 @@ object TextAnalysis {
       k: Int = 20): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val n = df.count()
-    val toks = df.select(col(idCol),
-      explode(split(lower(trim(col(textCol))), "\\s+")).as("token"))
-    val tf = toks.groupBy(col(idCol), col("token"))
-      .agg(count(lit(1)).as("tf"))
-    val dfRel = tf.groupBy("token").agg(count(lit(1)).as("df"))
+    val (tf, dfRel) = termFrequencies(df, idCol, textCol)
     val contrib = tf
       .join(broadcast(queryTerms.select(col("token"))), Seq("token"))
       .join(dfRel, Seq("token"))
@@ -1032,7 +1054,7 @@ object TextAnalysis {
     * phrase (case-insensitive substring). */
   def c4KeepLine(l: Column, minWords: Int, blocklist: Seq[String]): Column = {
     val t = trim(l)
-    val words = when(length(t) === 0, lit(0)).otherwise(size(split(t, "\\s+")))
+    val words = WsTokens.count(l)
     val noBlock = blocklist.map(p => !lower(t).contains(p)).reduce(_ && _)
     t.rlike("[.!?\"]$") && words >= minWords && noBlock
   }
@@ -1073,7 +1095,7 @@ object TextAnalysis {
       textCol: String,
       k: Int = 5,
       keepFirst: Boolean = true): org.apache.spark.sql.DataFrame = {
-    val toksCol = split(lower(trim(col(textCol))), "\\s+")
+    val toksCol = WsTokens.split(lower(trim(col(textCol))))
     val withToks = df.select(col(idCol), toksCol.as("__toks"))
     val n = size(col("__toks"))
     val grams = withToks.where(n >= k).select(col(idCol),
@@ -1123,12 +1145,14 @@ object TextAnalysis {
     "nl" -> Seq("de", "het", "een", "en", "van", "is", "dat", "op", "te", "zijn", "met", "voor"))
 }
 
-/** Count of whitespace-separated tokens whose lowercase form is in a
-  * fixed word set, as one codegen'd pass: tokenize on whitespace runs
-  * (Java `split("\\s+")` semantics — a leading empty token can't match a
-  * non-empty word, so it is skipped), lowercase each token with
-  * `UTF8String.toLowerCase` (bit-identical to Spark's `lower()`), probe a
-  * prebuilt hash set. Replaces an interpreted
+/** Count of whitespace-separated tokens in a fixed word set, as one
+  * codegen'd pass over the [[WsTokens]] walk (the non-empty tokens of
+  * `split(s, "\\s+")` — an empty token can't match a non-empty word),
+  * probing a prebuilt hash set. The input arrives lowercased by Spark's
+  * `lower()` ([[TextAnalysis.stopwordHits]]): a per-token
+  * `UTF8String.toLowerCase` is the JDK's mapping, which differs from
+  * `lower()`'s ICU mapping on capitals encoded after Unicode 13 (U+A7C0,
+  * U+2C2F, U+10570 stay upper under JDK 17). Replaces an interpreted
   * `filter(toks, t => array_contains(lit(words), lower(t)))`, which walks
   * the word array per token through the interpreted-lambda path.
   */
@@ -1156,36 +1180,22 @@ case class StopwordHitsExpr(child: Expression, words: Seq[String]) extends Unary
 }
 
 object StopwordHitsExpr {
-  private def isWs(b: Byte): Boolean =
-    b == ' '.toByte || b == '\t'.toByte || b == '\n'.toByte ||
-      b == 0x0b.toByte || b == '\f'.toByte || b == '\r'.toByte
-
   /** Matching-token count (called from codegen). */
   def hits(bytes: Array[Byte], set: java.util.HashSet[UTF8String]): Int = {
     var count = 0
-    var i = 0
-    var start = -1
-    val len = bytes.length
-    def probe(s: Int, e: Int): Unit = {
-      val t = UTF8String.fromBytes(bytes, s, e - s).toLowerCase
-      if (set.contains(t)) count += 1
+    WsTokens.foreachToken(bytes, 0, bytes.length) { (s, e) =>
+      if (set.contains(UTF8String.fromBytes(bytes, s, e - s))) count += 1
     }
-    while (i < len) {
-      if (isWs(bytes(i))) {
-        if (start >= 0) { probe(start, i); start = -1 }
-      } else if (start < 0) start = i
-      i += 1
-    }
-    if (start >= 0) probe(start, len)
     count
   }
 }
 
 /** `Σ max(1, ceil(codepoints/4))` over whitespace tokens in one codegen'd
   * pass — the subword-count fold, replacing an interpreted
-  * `aggregate(split(...))` higher-order function. Java `split("\\s+")`
+  * `aggregate(split(...))` higher-order function. `split(s, "\\s+")`
   * parity: an empty or leading-separator input contributes one empty
-  * token (counted as 1 subword), matching the Column form exactly. */
+  * token, and a trailing separator another (each counted as 1 subword),
+  * matching the Column form exactly. */
 case class TokenFoldExpr(child: Expression) extends UnaryExpression {
   import org.apache.spark.sql.types.IntegerType
   override def dataType: DataType = IntegerType
@@ -1200,29 +1210,21 @@ case class TokenFoldExpr(child: Expression) extends UnaryExpression {
 }
 
 object TokenFoldExpr {
-  private def isWs(b: Byte): Boolean =
-    b == ' '.toByte || b == '\t'.toByte || b == '\n'.toByte ||
-      b == 0x0b.toByte || b == '\f'.toByte || b == '\r'.toByte
-
   def subwords(bytes: Array[Byte]): Int = {
     val len = bytes.length
+    // the empty edge tokens of split("\\s+") count 1 subword each
     var total = 0
-    var chars = 0
-    var inTok = false
-    def flush(): Unit = { total += math.max(1, (chars + 3) / 4); chars = 0 }
-    // split("\\s+") emits one empty token for "" and for leading separators
-    if (len == 0 || isWs(bytes(0))) total += 1
-    var i = 0
-    while (i < len) {
-      if (isWs(bytes(i))) {
-        if (inTok) { flush(); inTok = false }
-      } else {
+    if (WsTokens.leadingEmpty(bytes, 0, len)) total += 1
+    if (WsTokens.trailingEmpty(bytes, 0, len)) total += 1
+    WsTokens.foreachToken(bytes, 0, len) { (s, e) =>
+      var chars = 0
+      var i = s
+      while (i < e) {
         if ((bytes(i) & 0xc0) != 0x80) chars += 1 // codepoint leading byte
-        inTok = true
+        i += 1
       }
-      i += 1
+      total += math.max(1, (chars + 3) / 4)
     }
-    if (inTok) flush()
     total
   }
 }
@@ -1372,10 +1374,10 @@ object NfcNormalizeExpr {
 }
 
 /** Count of DISTINCT words from a fixed set appearing among the
-  * whitespace tokens of the input (tokens lowercased before probing) —
-  * the Gopher "contains at least k of the stop list" gate in one
-  * codegen'd pass. Same tokenizer loop as [[StopwordHitsExpr]]; matches
-  * collect into a per-row set so repeats count once. */
+  * whitespace tokens of the input (lowercased by Spark's `lower()` before
+  * it arrives, see [[StopwordHitsExpr]]) — the Gopher "contains at least
+  * k of the stop list" gate in one codegen'd pass over the [[WsTokens]]
+  * walk; matches collect into a per-row set so repeats count once. */
 case class DistinctStopwordHitsExpr(child: Expression, words: Seq[String]) extends UnaryExpression {
   import org.apache.spark.sql.types.IntegerType
   override def dataType: DataType = IntegerType
@@ -1400,26 +1402,12 @@ case class DistinctStopwordHitsExpr(child: Expression, words: Seq[String]) exten
 }
 
 object DistinctStopwordHitsExpr {
-  private def isWs(b: Byte): Boolean =
-    b == ' '.toByte || b == '\t'.toByte || b == '\n'.toByte ||
-      b == 0x0b.toByte || b == '\f'.toByte || b == '\r'.toByte
-
   def distinctHits(bytes: Array[Byte], set: java.util.HashSet[UTF8String]): Int = {
     val seen = new java.util.HashSet[UTF8String](8)
-    var i = 0
-    var start = -1
-    val len = bytes.length
-    def probe(s: Int, e: Int): Unit = {
-      val t = UTF8String.fromBytes(bytes, s, e - s).toLowerCase
+    WsTokens.foreachToken(bytes, 0, bytes.length) { (s, e) =>
+      val t = UTF8String.fromBytes(bytes, s, e - s)
       if (set.contains(t)) seen.add(t)
     }
-    while (i < len) {
-      if (isWs(bytes(i))) {
-        if (start >= 0) { probe(start, i); start = -1 }
-      } else if (start < 0) start = i
-      i += 1
-    }
-    if (start >= 0) probe(start, len)
     seen.size
   }
 }
@@ -1591,10 +1579,6 @@ case class WordGramsExpr(child: Expression, k: Int, distinct: Boolean)
 }
 
 object WordGramsExpr {
-  private def isWs(b: Byte): Boolean =
-    b == ' '.toByte || b == '\t'.toByte || b == '\n'.toByte ||
-      b == 0x0b.toByte || b == '\f'.toByte || b == '\r'.toByte
-
   /** Called from codegen. */
   def grams(bytes: Array[Byte], k: Int,
       distinct: Boolean): org.apache.spark.sql.catalyst.util.GenericArrayData = {
@@ -1611,19 +1595,9 @@ object WordGramsExpr {
       }
       starts(n) = s; ends(n) = e; n += 1
     }
-    if (len == 0) push(0, 0)
-    else {
-      if (isWs(bytes(0))) push(0, 0)
-      var i = 0
-      while (i < len) {
-        if (!isWs(bytes(i))) {
-          val s = i
-          while (i < len && !isWs(bytes(i))) i += 1
-          push(s, i)
-        } else i += 1
-      }
-      if (isWs(bytes(len - 1))) push(len, len)
-    }
+    if (WsTokens.leadingEmpty(bytes, 0, len)) push(0, 0)
+    WsTokens.foreachToken(bytes, 0, len)(push)
+    if (WsTokens.trailingEmpty(bytes, 0, len)) push(len, len)
     val span = if (n < k) n else k // tokens per gram
     val nGrams = if (n < k) 1 else n - k + 1
     val out = new Array[Any](nGrams)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import graft.functions.WsTokens
 
 /** Scale utilities for the shapes AQE alone doesn't fix: deliberate key
   * salting for skewed joins, and bucketed table layout for repeated
@@ -89,7 +90,7 @@ object Scale {
     (1 until m).foldLeft(df) { (acc, i) =>
       acc.unionByName(df.select(
         (col("doc_id") + lit(i * 10000000L)).as("doc_id"),
-        array_join(transform(split(col("text"), "\\s+"),
+        array_join(transform(WsTokens.split(col("text")),
           t => concat(t, lit(s"_$i"))), " ").as("text"),
         col("lang"), col("source"),
         col("n_chars")))

@@ -573,6 +573,19 @@ class PipelineSpec extends GraftSuite {
     assert(out == Seq(0, 0, 1, 3))
   }
 
+  test("tokenCount of a null text is null under both ANSI settings") {
+    // size(split(null)) read -1 with ANSI off (legacy sizeOfNull); the
+    // fused count null-propagates like the DuckDB replay
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    try Seq("true", "false").foreach { ansi =>
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      val texts = spark.range(3).select(
+        when($"id" === 0, lit("two words")).when($"id" === 1, lit("")).as("t"))
+      val out = texts.select(TextAnalysis.tokenCount($"t")).as[Option[Int]].collect().toSeq
+      assert(out == Seq(Some(2), Some(0), None), s"ansi=$ansi")
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
+
   test("langId routes common languages") {
     val out = Seq(
       "the cat is on the mat and it is happy with the sun",
@@ -1529,11 +1542,20 @@ class PipelineSpec extends GraftSuite {
     val set = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]()
     Seq("the", "and", "of").foreach(w =>
       set.add(org.apache.spark.unsafe.types.UTF8String.fromString(w)))
+    // the kernel walks text already lowercased: an upper-case token
+    // matches nothing there
     def h(t: String) = DistinctStopwordHitsExpr.distinctHits(t.getBytes("UTF-8"), set)
+    assert(h("the the the cat") == 1)
     assert(h("the THE The cat") == 1)
+    assert(h("THE cat") == 0)
     assert(h("the and of the and") == 3)
     assert(h("theory android office") == 0) // whole tokens only
     assert(h("") == 0)
+    // the Column lowercases (and trims) with Spark's lower() first
+    val hits = Seq("the THE The cat", "  THE\tAnd OF  ", "THEORY Android").toDF("t")
+      .select(TextAnalysis.distinctStopwordHits(col("t"), Seq("the", "and", "of")))
+      .as[Int].collect().toSeq
+    assert(hits == Seq(1, 3, 0))
   }
 
   test("quality gate: each rule drops its pathology; filter keeps exactly the pass set") {

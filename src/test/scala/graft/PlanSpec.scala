@@ -249,6 +249,46 @@ class PlanSpec extends GraftSuite {
     assert(!p.contains("CartesianProduct") && !p.contains("SortMergeJoin"), p)
   }
 
+  test("tfidf terms: one scan and tokenization, spread to every core") {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    object Walk extends AdaptiveSparkPlanHelper
+    def finalPlan(name: String): SparkPlan = {
+      val df = (SparkEntry.queries ++ SparkEntry.benchOnlyQueries)(name)(spark, sfDir)
+      df.collect()
+      df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+        case p => p
+      }
+    }
+    val par = spark.sparkContext.defaultParallelism
+    val tfidf = finalPlan("p_tfidf_terms")
+    // the df branch reads tf's exchange instead of scanning and
+    // tokenizing the documents again
+    val gens = Walk.collect(tfidf) { case g: GenerateExec => g }
+    assert(gens.size == 1, tfidf)
+    assert(Walk.collect(tfidf) { case r: ReusedExchangeExec => r }.nonEmpty, tfidf)
+    // df stays a map-side-combined aggregate: no window keyed by token
+    val windows = Walk.collect(tfidf) { case w: WindowExec => w }
+    assert(!windows.exists(_.partitionSpec.exists(_.references.exists(_.name == "token"))),
+      tfidf)
+    // and it, a row per distinct token, is the broadcast side of the
+    // join back, not the (doc, token) tf relation
+    val joins = Walk.collect(tfidf) { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 1, tfidf)
+    val build = joins.head.buildSide match {
+      case BuildLeft => joins.head.left
+      case BuildRight => joins.head.right
+    }
+    assert(build.output.map(_.name) == Seq("token", "df"), tfidf)
+    // the single-row-group scan is spread before the tokenizer runs
+    assert(gens.head.child.outputPartitioning.numPartitions == par, tfidf)
+  }
+
   test("cms sketch: bounded counter table, probe side broadcast against it") {
     val p = plan("p_sketch_cms")
     // counter build is a plain partial-aggregated count; the 20-key × 4-row

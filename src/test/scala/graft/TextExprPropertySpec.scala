@@ -99,11 +99,10 @@ object TextExprPropertySpec extends Properties("TextExprs") {
       val pairs = if (toks.size < 2) Nil else toks.zip(toks.tail)
       val expInv = pairs.count { case (x, y) => inV(x) && inV(y) }
       val expHit = pairs.count(p => lm.bigrams.contains(p))
-      val bytes = t.trim.getBytes("UTF-8")
-      import graft.functions.BigramLmStatExpr._
-      stat(bytes, lm.runtime, OovTokens) == expOov &&
-        stat(bytes, lm.runtime, InvocabBigrams) == expInv &&
-        stat(bytes, lm.runtime, HitBigrams) == expHit
+      // the scorers take the text lowercased once, as lower(trim(text))
+      val got = graft.functions.BigramLmStatsExpr.stats(
+        t.trim.toLowerCase.getBytes("UTF-8"), lm.runtime)
+      got.getInt(0) == expOov && got.getInt(1) == expInv && got.getInt(2) == expHit
     }
   }
 
@@ -533,4 +532,144 @@ object TextExprPropertySpec extends Properties("TextExprs") {
     Prop.forAll(Gen.oneOf("", " ", "a", "a b", "\t\t", " a ")) { t =>
       (1 to 5).forall(k => fusedGrams(t, k, false) == refGrams(t, k, false))
     }
+
+  // ---- the WsTokens kernel vs Spark's own regex forms ----
+
+  import org.apache.spark.sql.catalyst.expressions.{Expression, If, EqualTo, Length,
+    Literal, Lower, RegExpReplace, Size, StringSplit, StringTrim}
+  import graft.functions.{BigramLmStatsExpr, WsCollapseExpr, WsSplitExpr, WsTokenCountExpr}
+
+  // all six Java-regex `\s` bytes, U+00A0 and U+2003 (not `\s`),
+  // non-ASCII letters (Turkish İ, a Greek word ending in capital sigma),
+  // "" and whitespace runs at either end
+  private val wsTextGen: Gen[String] =
+    Gen.listOf(Gen.frequency(
+      5 -> Gen.oneOf("a", "The", "cat", "\u00e9", "\u0416", "\u0130", "\u039f\u0394\u039f\u03a3",
+        "\u00df", "\u65e5\u672c", "x\u00a0y"),
+      4 -> Gen.oneOf(" ", "\t", "\n", "\u000b", "\f", "\r", "  ", " \t\n\u000b\f\r"),
+      1 -> Gen.oneOf("\u00a0", "\u2003", ""))).map(_.mkString)
+
+  private def str(t: String): Expression = Literal(UTF8String.fromString(t))
+  private val wsRe = Literal(UTF8String.fromString("\\s+"))
+
+  private def strings(a: Any): Seq[String] = {
+    val arr = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    (0 until arr.numElements()).map(i => arr.getUTF8String(i).toString)
+  }
+
+  property("WsSplitExpr == split(s, \"\\\\s+\")") =
+    Prop.forAll(wsTextGen) { t =>
+      strings(WsSplitExpr(str(t)).eval(null)) ==
+        strings(StringSplit(str(t), wsRe, Literal(-1)).eval(null))
+    }
+
+  property("WsTokenCountExpr == tokenCount's Column form") =
+    Prop.forAll(wsTextGen) { t =>
+      // when(length(trim(c)) === 0, 0).otherwise(size(split(trim(c), "\\s+")))
+      val trimmed = StringTrim(str(t))
+      val columnForm = If(EqualTo(Length(trimmed), Literal(0)), Literal(0),
+        Size(StringSplit(trimmed, wsRe, Literal(-1))))
+      WsTokenCountExpr(str(t)).eval(null) == columnForm.eval(null)
+    }
+
+  property("WsCollapseExpr == regexp_replace(s, \"\\\\s+\", \" \")") =
+    Prop.forAll(wsTextGen) { t =>
+      WsCollapseExpr(str(t)).eval(null) ==
+        RegExpReplace(str(t), wsRe, Literal(UTF8String.fromString(" "))).eval(null)
+    }
+
+  property("TokenFoldExpr == Σ max(1, ceil(codepoints/4)) over split(s, \"\\\\s+\")") =
+    Prop.forAll(wsTextGen) { t =>
+      val toks = strings(StringSplit(str(t), wsRe, Literal(-1)).eval(null))
+      val expected = toks.map(w => math.max(1, (w.codePointCount(0, w.length) + 3) / 4)).sum
+      graft.functions.TokenFoldExpr.subwords(t.getBytes("UTF-8")) == expected
+    }
+
+  property("SimHash64Expr == sign vector of xxhash64 over split(s, \"\\\\s+\")") =
+    Prop.forAll(wsTextGen) { t =>
+      val counts = new Array[Int](64)
+      strings(StringSplit(str(t), wsRe, Literal(-1)).eval(null)).foreach { w =>
+        val b = w.getBytes("UTF-8")
+        val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+          b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
+        (0 until 64).foreach(i => counts(i) += (if (((h >>> i) & 1L) == 1L) 1 else -1))
+      }
+      val expected = (0 until 64).foldLeft(0L)((acc, i) => if (counts(i) > 0) acc | (1L << i) else acc)
+      graft.functions.SimHash64Expr.simhash(t.getBytes("UTF-8")) == expected
+    }
+
+  /** The LM signal walk as it stood before the one-walk struct: three
+    * walks (one per counter) over the trimmed text, each token
+    * lowercased by the JDK's `UTF8String.toLowerCase`. */
+  private object ReferenceLmStat {
+    val OovTokens = 0
+    val InvocabBigrams = 1
+    val HitBigrams = 2
+
+    def stat(bytes: Array[Byte], lm: graft.functions.BigramLmRuntime, mode: Int): Int = {
+      var oov = 0
+      var invocab = 0
+      var hits = 0
+      var prev: UTF8String = null
+      val toks = new String(bytes, "UTF-8").split("[ \\t\\n\\x0B\\f\\r]+").filter(_.nonEmpty)
+      toks.foreach { raw =>
+        val t = UTF8String.fromString(raw).toLowerCase
+        val inV = lm.uni.containsKey(t)
+        if (!inV) oov += 1
+        if (prev != null && inV && lm.uni.containsKey(prev)) {
+          invocab += 1
+          if (lm.bi.containsKey(graft.functions.BigramLmRuntime.pairKey(prev, t))) hits += 1
+        }
+        prev = t
+      }
+      mode match {
+        case OovTokens      => oov
+        case InvocabBigrams => invocab
+        case _              => hits
+      }
+    }
+  }
+
+  property("BigramLmStatsExpr over lower(trim(s)) == the three per-mode walks") = {
+    // vocab and bigrams in the form the build counts them: lower()'d
+    def lc(w: String) = Lower(str(w)).eval(null).toString
+    val words = Seq("a", "the", "cat", "\u00e9", "\u0416", "\u0130", "\u039f\u0394\u039f\u03a3")
+      .map(lc)
+    val lm = graft.functions.LanguageModel.BigramLm(
+      vocab = words.zipWithIndex.map { case (w, i) => w -> (i + 1).toLong }.toMap,
+      bigrams = Map((lc("The"), lc("cat")) -> 3L, (lc("\u0130"), lc("a")) -> 1L,
+        (lc("\u00e9"), lc("\u039f\u0394\u039f\u03a3")) -> 2L),
+      totalTokens = 40L, vocabSize = words.size)
+    Prop.forAll(wsTextGen) { t =>
+      val trimmed = StringTrim(str(t)).eval(null).asInstanceOf[UTF8String].getBytes
+      val lowered = Lower(StringTrim(str(t))).eval(null).asInstanceOf[UTF8String].getBytes
+      val got = BigramLmStatsExpr.stats(lowered, lm.runtime)
+      import ReferenceLmStat._
+      got.getInt(0) == stat(trimmed, lm.runtime, OovTokens) &&
+        got.getInt(1) == stat(trimmed, lm.runtime, InvocabBigrams) &&
+        got.getInt(2) == stat(trimmed, lm.runtime, HitBigrams)
+    }
+  }
+
+  // capitals encoded after Unicode 13 (U+A7C0, U+2C2F, U+10570): Spark's
+  // lower() maps them through ICU; the JDK 17 mapping a per-token
+  // UTF8String.toLowerCase used leaves them upper
+  private val lateCapitalsGen: Gen[String] =
+    Gen.listOf(Gen.frequency(
+      4 -> Gen.oneOf("\ua7c0", "\u2c2f", "\ud801\udd70", "\ua7c0x", "the", "The", "\u0130"),
+      3 -> Gen.oneOf(" ", "\t", "\n"))).map(_.mkString)
+
+  property("stopword and distinct-stopword walks count the tokens of lower(trim(s))") = {
+    def lc(w: String) = Lower(str(w)).eval(null).asInstanceOf[UTF8String]
+    val set = new java.util.HashSet[UTF8String]()
+    Seq("\ua7c0", "\u2c2f", "\ud801\udd70", "the", "\u0130").foreach(w => set.add(lc(w)))
+    Prop.forAll(lateCapitalsGen) { t =>
+      val lowered = Lower(StringTrim(str(t))).eval(null).asInstanceOf[UTF8String]
+      val toks = strings(StringSplit(Literal(lowered), wsRe, Literal(-1)).eval(null))
+        .filter(w => set.contains(UTF8String.fromString(w)))
+      graft.functions.StopwordHitsExpr.hits(lowered.getBytes, set) == toks.size &&
+        graft.functions.DistinctStopwordHitsExpr.distinctHits(lowered.getBytes, set) ==
+          toks.distinct.size
+    }
+  }
 }
