@@ -3560,27 +3560,11 @@ object PipelineQueries {
     s"SELECT doc_id, '$lang' AS lang, len(list_filter(t, x -> list_contains([$list], x))) AS hits FROM toks"
   }.mkString("\n  UNION ALL\n  ")
 
-  /** Generated k-means replay (the BPE/PageRank pattern): a WITH prefix
-    * whose final CTE `a<rounds>` holds the round-`rounds` assignment
-    * (vec_id, v, cid). Every FP step mirrors [[Similarity.kmeansAssign]]
-    * operation for operation: NormalizeExpr's float normalize (double
-    * division, round to real, widen back), the DotExpr left-to-right
-    * fold, argmax with ties to the lowest cid, the meanPoolExact
-    * two-level ordered fold, and the double re-normalization. `list_
-    * reduce` lacks Spark's 0.0 fold seed — the results differ only in
-    * the sign of an all-negative-zero prefix, which real data never
-    * produces and SQL comparison cannot observe. */
   /** The ascending-index left-fold dot product in DuckDB — bitwise the
     * engine's `DotExpr` (up to the unobservable 0.0-seed sign). */
   private def dotSql(a: String, b: String) =
     s"list_reduce(list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i]), (x, y) -> x + y)"
 
-  /** Generated PQ replay: normalized corpus (the kmeans header), then per
-    * subspace `mi` the Euclidean codebook rounds (min-L2 assignment with
-    * ties to the lowest cid, exact two-level block-fold means, NO
-    * renormalization — mirroring [[Similarity.pqFit]] op for op), the
-    * final code assignment, per-query lookup tables against the final
-    * codebook, the left-associated m-term ADC sum, and the ranking. */
   /** The normalized-embeddings header shared by the vector oracles. */
   private val evHeaderSql =
     """nrm AS (
@@ -3596,7 +3580,7 @@ object PipelineQueries {
       |  FROM embeddings e JOIN nrm n ON e.vec_id = n.vec_id)""".stripMargin
 
   /** Per-subspace PQ codebook training CTEs over `srcRel` (a
-    * `(vec_id, v)` relation) — the SQL mirror of `pqFitPrepared`:
+    * `(vec_id, v)` relation) — the SQL mirror of `Similarity.pqFit`:
     * lowest-id seeding, min-L2 assignment (ties to lowest cid), exact
     * block-fold means, no renormalization. Emits `s$mi`/`p${mi}*`
     * chains; the final assignment per subspace is `p${mi}a$rounds` and
@@ -3664,6 +3648,12 @@ object PipelineQueries {
     (luts, adcSum, lutJoins)
   }
 
+  /** Generated PQ replay: normalized corpus (the kmeans header), then per
+    * subspace `mi` the Euclidean codebook rounds (min-L2 assignment with
+    * ties to the lowest cid, exact two-level block-fold means, NO
+    * renormalization — mirroring [[Similarity.pqFit]] op for op), the
+    * final code assignment, per-query lookup tables against the final
+    * codebook, the left-associated m-term ADC sum, and the ranking. */
   private def pqWithSql(
       m: Int, subDim: Int, k: Int, rounds: Int, blockSize: Int): String = {
     val subspaces = pqSubspacesSql("ev", m, subDim, k, rounds, blockSize)
@@ -3730,6 +3720,16 @@ object PipelineQueries {
        |)""".stripMargin
   }
 
+  /** Generated k-means replay (the BPE/PageRank pattern): a WITH prefix
+    * whose final CTE `a<rounds>` holds the round-`rounds` assignment
+    * (vec_id, v, cid). Every FP step mirrors [[Similarity.kmeansAssign]]
+    * operation for operation: NormalizeExpr's float normalize (double
+    * division, round to real, widen back), the DotExpr left-to-right
+    * fold, argmax with ties to the lowest cid, the meanPoolExact
+    * two-level ordered fold, and the double re-normalization. `list_
+    * reduce` lacks Spark's 0.0 fold seed — the results differ only in
+    * the sign of an all-negative-zero prefix, which real data never
+    * produces and SQL comparison cannot observe. */
   private[graft] def kmeansWithSql(k: Int, rounds: Int, blockSize: Int): String = {
     val header =
       s"""nrm AS (

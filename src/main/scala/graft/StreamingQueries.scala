@@ -588,7 +588,7 @@ object StreamingQueries {
   def annAssignStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
     import graft.functions.Similarity
     val e = Tables.read(spark, sfDir, "embeddings").select("vec_id", "embedding")
-    val (_, cids, matrix) = Similarity.kmeansFit(e, "vec_id", "embedding", 16, 2, 16)
+    val (_, cids, matrix) = Similarity.kmeansFit("annAssignStream", e, "vec_id", "embedding", 16, 2, 16)
     val dir = stageTwoBatches(spark, sfDir,
       e.where(col("vec_id") % 2 === 0), e.where(col("vec_id") % 2 === 1),
       "stream-annassign")

@@ -959,8 +959,8 @@ object TextAnalysis {
     // gram into per-gram source sets (bounded by the source count), and
     // both the pair counts and the per-source sizes derive from that
     // relation with narrow explodes — no gram self-join, the gram hash
-    // never shuffles twice. Cached (conf-gated, like the LSH signature
-    // relations) because pairs and sizes both consume it.
+    // never shuffles twice. Cached, like the LSH signature relations,
+    // because pairs and sizes both consume it.
     val perGram =
       df.select(col(srcCol).as("__s"),
           explode(Dedup.wordShingles(col(textCol), k)).as("__g"))
