@@ -45,7 +45,7 @@ object Bench {
     // Scale curve (round-3 verdict): the dedup/LSH family measured at m×
     // corpus multiples, so the 100 TB linearity claims carry an actual
     // scaling signature instead of a single point. Each multiple is a
-    // synthetic corpus (ops.Scale.scaleDocuments/scaleEmbeddings: replica
+    // synthetic corpus (ops.Scale.writeScaledCorpus: replica
     // vocabularies disjoint, ids salted) materialized to parquet OUTSIDE
     // the timed region; the same SparkEntry query fns then run against the
     // scaled dir, one timed pass each. Near-linear growth on the
@@ -54,7 +54,6 @@ object Bench {
     val curveQueries = SparkEntry.all.filter(_.curve)
     val multiples = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULTIPLES", "1,3,10")
       .split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
-    val scaleRoot = graft.io.Fixtures.scratch("graft-bench-scale-")
     // Materialize every multiple's corpus FIRST, then time each query's
     // multiples back-to-back (query-outer, multiple-inner). The flag below
     // is a RATIO between the ×1 and ×10 points; with the old
@@ -64,14 +63,7 @@ object Bench {
     // 79.6 s in the round-12 slow-regime refresh, byte-identical plans).
     // Adjacent timings inflate TOGETHER, keeping the ratio attributable
     // to the plan rather than to when the host slowed down.
-    val dirs = multiples.map { m =>
-      val dir = s"$scaleRoot/x$m"
-      val docs = graft.ops.Scale.scaleDocuments(Tables.read(spark, sfDir, "documents"), m)
-      val embs = graft.ops.Scale.scaleEmbeddings(Tables.read(spark, sfDir, "embeddings"), m, dim = 64)
-      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      embs.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      m -> (dir, spark.read.parquet(s"$dir/documents.parquet").count())
-    }.toMap
+    val dirs = multiples.map(m => m -> graft.ops.Scale.writeScaledCorpus(spark, sfDir, m)).toMap
     // min-of-2 like the main suite: single-pass curve points manufactured
     // two phantom regressions (rounds 4/5 flagged 16.95 s / 10.03 s at
     // ×10 for a query whose min-of-2 truth was 3.56 s — shared-host
@@ -100,9 +92,6 @@ object Bench {
           n -> (r, r > 2.0)
         }
       }
-    val scaleRootPath = new org.apache.hadoop.fs.Path(scaleRoot)
-    scaleRootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(scaleRootPath, true)
 
     // 3-decimal seconds: full double repr would double the line length,
     // and the driver's artifact keeps only a 2000-char window of it

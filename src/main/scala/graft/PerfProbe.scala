@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted}
+import scala.collection.mutable
 
 /** Dev tool: time + explain individual queries.
   * Usage: runMain graft.PerfProbe <sfDir> <query...> [--explain]
@@ -9,30 +12,44 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * Runs on `local[SPARK_GRAFT_CPUS]` (32 when unset), as Bench does. Each
   * call prints a `CALL` line: its build (the query function returning its
   * DataFrame) and run (the noop-sink write) seconds, and the number of
-  * generated classes compiled during it.
+  * generated classes compiled during it. `--stages` adds, for the warm
+  * call, a `JOBS` line (job count and dark time) and the 12 longest
+  * `STAGE`s. `--scale:m` runs curve rows (`Query.curve`) against the m×
+  * corpus of Bench's scale curve; with `--stages` it gives the per-stage
+  * attribution of a scale-curve point.
   */
 object PerfProbe {
   def main(args: Array[String]): Unit = {
+    def fail(msg: String): Nothing = { System.err.println(msg); sys.exit(2) }
     val sfDir = args(0)
     val explain = args.contains("--explain")
-    val names = args.drop(1).filterNot(_.startsWith("--"))
+    val stages = args.contains("--stages")
+    val scale = args.find(_.startsWith("--scale:")).map(_.stripPrefix("--scale:").toInt)
+    val queries = args.drop(1).filterNot(_.startsWith("--")).map { name =>
+      SparkEntry.all.find(_.name == name).getOrElse(fail(s"unknown query $name"))
+    }
+    // a scaled dir holds documents and embeddings only: any other row
+    // would fail deep inside Tables.read, after the corpus was written
+    if (scale.isDefined) queries.find(!_.curve).foreach { q =>
+      fail(s"${q.name} is not on the scale curve (Query.curve = false); " +
+        "--scale runs only rows that read documents and embeddings")
+    }
     val spark = GraftSession.localSpark(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     args.filter(_.startsWith("--conf:")).foreach { a =>
       val kv = a.stripPrefix("--conf:").split("=", 2)
-      if (kv.length != 2 || kv(0).isEmpty) {
-        System.err.println(s"malformed $a — expected --conf:key=value")
-        sys.exit(2)
-      }
+      if (kv.length != 2 || kv(0).isEmpty) fail(s"malformed $a — expected --conf:key=value")
       spark.conf.set(kv(0), kv(1))
     }
-    val stages = args.contains("--stages")
-    // per-stage wall + task parallelism: the AQE-coalescing failure mode
-    // (byte-small compute-dense stage squeezed to 1 task) shows up here
-    // as a long stage with numTasks ≈ 1
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      val rows = scala.collection.mutable.ArrayBuffer[(Int, Int, Long, String)]()
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+    // Per-stage wall + task parallelism: the AQE-coalescing failure mode
+    // (byte-small compute-dense stage squeezed to 1 task) shows up as a
+    // long stage with numTasks ≈ 1. Job spans give the job-gap
+    // accounting: wall time where NO job is running (driver-side
+    // planning / AQE re-optimization / collect processing) vs job wall.
+    val stageRows = mutable.ArrayBuffer[(Int, Int, Long, String)]()
+    val jobSpans = mutable.ArrayBuffer[(Long, Long)]()
+    val jobStarts = mutable.Map[Int, Long]()
+    if (stages) spark.sparkContext.addSparkListener(new SparkListener {
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val i = sc.stageInfo
         val wall = (for {a <- i.completionTime; b <- i.submissionTime} yield a - b).getOrElse(-1L)
         // the job-group name is always the same lambda frame — the RDD
@@ -44,24 +61,17 @@ object PerfProbe {
           f"gc=${m.jvmGCTime / 1e3}%.2fs " +
           f"deser=${m.executorDeserializeTime / 1e3}%.2fs " +
           i.rddInfos.map(_.name).distinct.mkString(",")).take(170)
-        rows.synchronized {
-          rows += ((i.stageId, i.numTasks, wall, rdds))
+        stageRows.synchronized {
+          stageRows += ((i.stageId, i.numTasks, wall, rdds))
         }
       }
-    }
-    // job-gap accounting: wall time where NO job is running (driver-side
-    // planning / AQE re-optimization / collect processing) vs job wall
-    val jobSpans = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    val jobStarts = scala.collection.mutable.Map[Int, Long]()
-    val jobListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      override def onJobStart(j: SparkListenerJobStart): Unit =
         jobStarts.synchronized { jobStarts(j.jobId) = j.time }
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
         jobStarts.synchronized {
           jobStarts.remove(j.jobId).foreach(s => jobSpans += ((s, j.time)))
         }
-    }
-    if (stages) spark.sparkContext.addSparkListener(jobListener)
+    })
     def jobStats(t0Ms: Long, t1Ms: Long): (Int, Double) = {
       // drain the async listener bus first: an onJobEnd not yet delivered
       // would understate covered time (overstating "dark"), and span ends
@@ -76,33 +86,20 @@ object PerfProbe {
         (spans.size, (t1Ms - t0Ms - covered) / 1e3)
       }
     }
-    if (stages) spark.sparkContext.addSparkListener(listener)
-    // --scale:m — time the queries against an m× synthetic corpus (the
-    // Bench scale-curve construction), materialized once to a scratch dir
-    // deleted on exit
-    val scaledDir: Option[String] =
-      args.find(_.startsWith("--scale:")).map(_.stripPrefix("--scale:").toInt).map { m =>
-        val dir = graft.io.Fixtures.scratch("graft-perfprobe-x" + m + "-")
-        graft.ops.Scale.scaleDocuments(Tables.read(spark, sfDir, "documents"), m)
-          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-        graft.ops.Scale.scaleEmbeddings(Tables.read(spark, sfDir, "embeddings"), m, dim = 64)
-          .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-        dir
-      }
-    val runDir = scaledDir.getOrElse(sfDir)
-    names.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name, SparkEntry.benchOnlyQueries(name))
-      if (explain) fn(spark, runDir).explain("formatted")
+    val runDir = scale.fold(sfDir)(m => graft.ops.Scale.writeScaledCorpus(spark, sfDir, m)._1)
+    queries.foreach { q =>
+      val name = q.name
+      if (explain) q.run(spark, runDir).explain("formatted")
       // warm + timed runs, same materialization + isolation as Bench
       val times = (1 to 2).map { i =>
         spark.catalog.clearCache()
         System.gc()
-        listener.rows.synchronized(listener.rows.clear())
+        stageRows.synchronized(stageRows.clear())
         jobStarts.synchronized { jobSpans.clear() }
         val t0Ms = System.currentTimeMillis()
         val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
-        val df = fn(spark, runDir)
+        val df = q.run(spark, runDir)
         val tb = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()
         val t = (System.nanoTime() - t0) / 1e9
@@ -111,9 +108,7 @@ object PerfProbe {
         if (stages && i == 2) {
           val (nJobs, darkS) = jobStats(t0Ms, System.currentTimeMillis())
           println(f"JOBS $name n=$nJobs dark=${darkS}%.2fs of ${t}%.2fs")
-        }
-        if (stages && i == 2) {
-          listener.rows.synchronized(listener.rows.toSeq).sortBy(-_._3).take(12).foreach {
+          stageRows.synchronized(stageRows.toSeq).sortBy(-_._3).take(12).foreach {
             case (id, n, wall, nm) =>
               println(f"STAGE $name id=$id tasks=$n wall=${wall / 1e3}%7.2fs $nm")
           }

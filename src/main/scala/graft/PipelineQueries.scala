@@ -107,9 +107,7 @@ object PipelineQueries {
   }
 
   /** documents ∪ mutated copies ("… extra token") — guaranteed near-dups.
-    * Repartitioned for the same reason as [[docsWithDups]]. Exposed to
-    * [[ScaleDiag]] so the diagnostic times the PRODUCTION corpus
-    * construction, not a hand-copied restatement that could de-sync. */
+    * Repartitioned for the same reason as [[docsWithDups]]. */
   private[graft] def docsWithNearDups(spark: SparkSession, sfDir: String,
       sliceMod: Int = 1): DataFrame = {
     // sliceMod > 1 keeps the deterministic 1/sliceMod base-doc slice —
@@ -150,28 +148,15 @@ object PipelineQueries {
       .select("doc_id").orderBy("doc_id")
   }
 
-  /** The exact LSH configuration of [[dedupMinHashScale]] — shared with
-    * [[ScaleDiag]] so a future retune of the query can never silently
-    * de-sync the diagnostic's cardinality reconstruction. */
-  private[graft] object MinHashScaleConfig {
-    val shingleK = 3
-    val numHashes = 32
-    val bands = 8
-    val threshold = 0.6
-    val bucketMinOnly = true
-  }
-
   /** The 100 TB-shaped variant: bucket-minimum-only pairing (linear per
     * bucket where all-pairs is quadratic). Deterministic; not exactly
     * SQL-expressible → rows-only check, semantics pinned in PipelineSpec. */
   def dedupMinHashScale(spark: SparkSession, sfDir: String): DataFrame = {
-    val c = MinHashScaleConfig
     val corpus = docsWithNearDups(spark, sfDir)
-    val sets = Dedup.wordShingleSets(corpus, "doc_id", "text", k = c.shingleK)
+    val sets = Dedup.wordShingleSets(corpus, "doc_id", "text", k = 3)
       .withColumnRenamed("__id", "doc_id").persist()
     val pairs = Dedup.nearDupPairsFromSets(sets, "doc_id",
-      numHashes = c.numHashes, bands = c.bands, threshold = c.threshold,
-      bucketMinOnly = c.bucketMinOnly)
+      numHashes = 32, bands = 8, threshold = 0.6, bucketMinOnly = true)
     Dedup.keepFirstFromPairs(corpus, "doc_id", pairs)
       .select("doc_id").orderBy("doc_id")
   }
@@ -619,14 +604,13 @@ object PipelineQueries {
   }
 
   /** The chain corpus and its verified pair set, shared by
-    * [[dedupCcKeep]] and ScaleDiag's per-round CC attribution (so a
-    * retune of the query retunes the diagnostic with it).
+    * [[dedupCcKeep]] and the rest of the CC family.
     *
     * Round-11 (round-9 verdict task 7): the LSH mining (shingle sets →
     * 64-band MinHash → bucket candidates → exact-Jaccard verify) is
-    * ~74% of every CC-family query's cost, and FIVE contract rows
-    * (`p_dedup_cc`, `_labels`, `_longest`, `p_dedup_cluster_sizes`, and
-    * ScaleDiag) consume the identical (corpus, pairs) relations. They
+    * ~74% of every CC-family query's cost, and FOUR contract rows
+    * (`p_dedup_cc`, `_labels`, `_longest`, `p_dedup_cluster_sizes`)
+    * consume the identical (corpus, pairs) relations. They
     * are now MATERIALIZED once per (Spark app, sf dir) as a
     * [[graft.io.Fixtures]] staged dir and every subsequent
     * call reads the parquet back: the 100 TB shape, where a curation
@@ -2774,10 +2758,10 @@ object PipelineQueries {
     * integer Levenshtein.
     *
     * maxBucketSize = 1000 is the production giant-bucket cap (round-9
-    * ScaleDiag): every copy shares the appended-tail 12-grams, so at
-    * bench scale multiples one tail-dominated band bucket grows to ~4k
-    * docs whose in-bucket pairs are ALL junk (J ≈ 0.13 — only tail
-    * grams shared; the estimate prefilter kills every one, measured:
+    * stage attribution, SCALING.md): every copy shares the appended-tail
+    * 12-grams, so at bench scale multiples one tail-dominated band bucket
+    * grows to ~4k docs whose in-bucket pairs are ALL junk (J ≈ 0.13 —
+    * only tail grams shared; the estimate prefilter kills every one, measured:
     * candidate and verified counts are IDENTICAL at caps 10⁵/1500/200).
     * At local bench scale the cap does not move wall-clock (the mining
     * wall is the linear signature build — SCALING.md round-9), but

@@ -787,8 +787,7 @@ object Dedup {
     *
     * Returns (id, label). Nodes absent from `pairs` are absent here —
     * they are their own singleton components. */
-  def componentMin(pairs: DataFrame, maxIter: Int = 25,
-      roundHook: (Int, Long, Double, Double) => Unit = null): DataFrame = {
+  def componentMin(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
     // Sever the lineage before iterating: `pairs` usually carries a deep
     // LSH plan, and every round issues several actions — without
     // truncation Catalyst re-analyzes the whole mining DAG per action
@@ -824,20 +823,13 @@ object Dedup {
       // the convergence probe below is a scan of the just-materialized
       // blocks, NOT a second join job (the previous shape re-joined next
       // against old labels, doubling the shuffles per round).
-      val t0 = System.nanoTime()
       val next = labels.alias("l")
         .join(nbrMin, col("l.id") === nbrMin("src"), "left")
         .select(col("l.id").as("id"),
           least(col("l.label"), coalesce(col("nmin"), col("l.label"))).as("label"),
           (coalesce(col("nmin"), col("l.label")) < col("l.label")).as("__changed"))
         .localCheckpoint(true)
-      val t1 = System.nanoTime()
       val changed = next.where(col("__changed")).count()
-      val t2 = System.nanoTime()
-      // per-round attribution for ScaleDiag: (round, changed labels,
-      // join+agg+checkpoint-materialize secs, convergence-probe secs)
-      if (roundHook != null)
-        roundHook(round, changed, (t1 - t0) / 1e9, (t2 - t1) / 1e9)
       labels = next.select("id", "label")
       converged = changed == 0
       round += 1

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.functions.WsTokens
+import graft.io.Fixtures
 
 /** Scale utilities for the shapes AQE alone doesn't fix: deliberate key
   * salting for skewed joins, and bucketed table layout for repeated
@@ -111,6 +113,21 @@ object Scale {
           slice(col("embedding"), 1, i)).as("embedding"),
         col("label")))
     }
+  }
+
+  /** Write the `m`× corpus of `sfDir` — [[scaleDocuments]] and
+    * [[scaleEmbeddings]] (dim 64) as `documents.parquet` and
+    * `embeddings.parquet` — to a fresh scratch dir deleted at JVM exit.
+    * The one writer of the scaled dirs that Bench's scale curve and
+    * PerfProbe's `--scale:m` run the curve queries against. Returns the
+    * dir and its documents row count. */
+  def writeScaledCorpus(spark: SparkSession, sfDir: String, m: Int): (String, Long) = {
+    val dir = Fixtures.scratch(s"graft-scale-x$m-")
+    scaleDocuments(Tables.read(spark, sfDir, "documents"), m)
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/documents.parquet")
+    scaleEmbeddings(Tables.read(spark, sfDir, "embeddings"), m, dim = 64)
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/embeddings.parquet")
+    (dir, spark.read.parquet(s"$dir/documents.parquet").count())
   }
 
   /** Write a table bucketed (and sorted) by join keys: subsequent equi-joins

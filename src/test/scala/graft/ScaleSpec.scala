@@ -21,6 +21,50 @@ class ScaleSpec extends GraftSuite {
     assert(plain.nonEmpty)
   }
 
+  test("scale corpus at m = 3: salted ids, suffixed tokens, rotated vectors, one writer") {
+    val docs = Seq((5L, "the cat  sat", "en", "web", 12L), (9L, "a\tb c", "fr", "wiki", 5L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val dim = 8
+    val vecs = Seq(1L, 2L).map(id =>
+      (id, Seq.tabulate(dim)(j => ((id * 7 + j * 3) % 11 - 5).toFloat / 3), id.toInt))
+    val embs = vecs.toDF("vec_id", "embedding", "label")
+
+    val sd = Scale.scaleDocuments(docs, 3).as[(Long, String, String, String, Long)].collect()
+    assert(sd.length == 6)
+    assert(sd.map(_._1).distinct.length == 6)
+    val base = docs.as[(Long, String, String, String, Long)].collect()
+    assert(sd.filter(_._1 < 10000000L).sortBy(_._1).toSeq == base.sortBy(_._1).toSeq)
+    for (i <- 1 to 2; b <- base) {
+      val r = sd.find(_._1 == b._1 + i * 10000000L).get
+      val tokens = r._2.split("\\s+").toSeq
+      assert(tokens.forall(_.endsWith(s"_$i")), r)
+      assert(tokens.map(_.stripSuffix(s"_$i")) == b._2.split("\\s+").toSeq)
+      assert((r._3, r._4, r._5) == (b._3, b._4, b._5))
+    }
+
+    val se = Scale.scaleEmbeddings(embs, 3, dim).as[(Long, Seq[Float], Int)].collect()
+    assert(se.length == 6)
+    assert(se.map(_._1).distinct.length == 6)
+    def norm(v: Seq[Float]) = math.sqrt(v.map(x => x.toDouble * x).sum)
+    for ((id, v, label) <- vecs; i <- 0 to 2) {
+      val r = se.find(_._1 == id + i * 10000000L).get
+      assert(r._3 == label)
+      assert(math.abs(norm(r._2) - norm(v)) <= 1e-9 * norm(v), r)
+      assert(r._2.sorted == v.sorted, r)
+      if (i == 0) assert(r._2 == v)
+    }
+
+    val sfDir = graft.io.Fixtures.scratch("graft-scalespec-")
+    docs.write.parquet(s"$sfDir/documents.parquet")
+    embs.write.parquet(s"$sfDir/embeddings.parquet")
+    val (dir, rows) = Scale.writeScaledCorpus(spark, sfDir, 3)
+    assert(rows == 6)
+    assert(spark.read.parquet(s"$dir/documents.parquet")
+      .as[(Long, String, String, String, Long)].collect().sortBy(_._1).toSeq == sd.sortBy(_._1).toSeq)
+    assert(spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id").as[Long]
+      .collect().sorted.toSeq == se.map(_._1).sorted.toSeq)
+  }
+
   test("bucketed tables join without a shuffle") {
     val a = (1 to 1000).map(i => (i.toLong, i * 2)).toDF("k", "va")
     val b = (1 to 1000).map(i => (i.toLong, i * 3)).toDF("k", "vb")
