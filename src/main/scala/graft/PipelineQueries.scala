@@ -2454,9 +2454,9 @@ object PipelineQueries {
     d.as[(Long, String)].map { case (id, text) =>
       val samples = text.codePoints().toArray.map(cp => math.min(cp, 255) * 257 - 32768)
       val wav = Multimodal.AudioSamples.synthPcmWav(16000, 2, samples, junk = true)
-      val decoded = Multimodal.AudioSamples.decodePcm16(wav).get
+      val decoded = Multimodal.AudioSamples.decodePcm(wav).get
       val down = Multimodal.AudioSamples.decimate(decoded, 4)
-      val out = Multimodal.AudioSamples.decodePcm16(
+      val out = Multimodal.AudioSamples.decodePcm(
         Multimodal.AudioSamples.synthPcmWav(4000, 1, down)).get
       (id, out.length, out.mkString(","))
     }.toDF("media_id", "n_samples", "samples")

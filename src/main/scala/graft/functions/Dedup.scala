@@ -215,7 +215,7 @@ object Dedup {
     *
     * Convenience scalar form — the lambda-captured token array re-splits
     * per shingle inside the higher-order function; for corpus-scale work
-    * use [[wordShingleSets]] (explode-shaped, tokenizes once per doc). */
+    * use [[wordShingleSets]] (one [[ShingleSetExpr]] pass per doc). */
   def wordShingles(text: Column, k: Int): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     // fused gram construction (WordGramsExpr — bit-identical to the
@@ -227,17 +227,6 @@ object Dedup {
     val raw = ColumnBridge.column(graft.functions.WordGramsExpr(
       ColumnBridge.expression(lower(trim(text))), k, distinct = false))
     array_distinct(transform(raw, s => xxhash64(s)))
-  }
-
-  /** Distinct character `n`-grams of normalized text, as 64-bit hashes.
-    * Convenience scalar form — see [[charNgramSets]] for the
-    * corpus-scale explode-shaped variant (normalizes once per doc). */
-  def charNgrams(text: Column, n: Int): Column = {
-    val s = WsTokens.collapse(lower(trim(text)))
-    val len = length(s)
-    val raw = when(len <= n, array(s))
-      .otherwise(transform(sequence(lit(1), len - n + 1), i => substring(s, i, lit(n))))
-    array_distinct(transform(raw, g => xxhash64(g)))
   }
 
   /** Mersenne prime 2³¹−1 — the modulus of the min-wise hash family. */
@@ -382,13 +371,6 @@ object Dedup {
       .join(setsB.select(col("__id").as("id_b"), col("sets").as("sets_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         when(uni === 0, lit(1.0)).otherwise(inter.cast("double") / uni).as("jaccard"))
-  }
-
-  /** Exact Jaccard similarity of two *distinct-element* arrays. */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val uni = size(a) + size(b) - size(array_intersect(a, b))
-    when(uni === 0, lit(1.0)).otherwise(inter / uni)
   }
 
   /** Candidate pairs (idA < idB) sharing at least one LSH bucket.

@@ -10,22 +10,27 @@ import org.apache.spark.sql.functions._
   * Container decode is REAL for all three modalities: PNG IHDR / JPEG SOF
   * frame headers ([[ImageHeader]]), WAV/RIFF fmt+data chunks
   * ([[AudioHeader]]), and AVI/RIFF avih headers ([[VideoHeader]]) are all
-  * parsed from the payload bytes — public formats, dependency-free. Only
-  * the *feature vector* is a stand-in (a content-hash projection — this
-  * container ships no embedding model); a real featurizer (JNI FFmpeg
-  * frames → model, or a Python `mapInPandas` worker in PySpark) plugs
-  * into the same [[Decoder.decode]] boundary. Everything around it —
-  * schema, batching, partition sizing, output contract — is real Spark
-  * and tested.
+  * parsed from the payload bytes — public formats, dependency-free. Each
+  * container has one walker and one writer that every reader and encoder
+  * of it goes through: [[ImagePixels]] for PNG chunks, [[JpegGray]] for
+  * JPEG segments, `Riff` for WAV and AVI chunks. Only the *feature
+  * vector* is a stand-in (a content-hash projection — this container
+  * ships no embedding model); a real featurizer (JNI FFmpeg frames →
+  * model, or a Python `mapInPandas` worker in PySpark) plugs into the
+  * same [[Decoder.decode]] boundary. Everything around it — schema,
+  * batching, partition sizing, output contract — is real Spark and
+  * tested.
   */
 object Multimodal {
 
-  /** Decoder allocation guards: these codecs parse UNTRUSTED bytes inside
-    * executors, so a malformed header declaring giga-pixel dims must cost
-    * None, not an OOM or a NegativeArraySizeException. 64 MB of decoded
-    * bytes / 16 M pixels covers every real fixture by orders of magnitude
-    * (an 8K frame is 33 MB decoded); anything larger is out of the
-    * documented scope and falls back to the payload walk. */
+  /** Decoder guards: these codecs parse UNTRUSTED bytes inside executors,
+    * so a malformed file must cost None, not an exception, an OOM or a
+    * hang. The chunk walkers refuse a negative chunk length and a step
+    * past `Int.MaxValue`, and every reader bounds what it reads inside a
+    * chunk. A header declaring giga-pixel dims is capped here: 64 MB of
+    * decoded bytes / 16 M pixels covers every real fixture by orders of
+    * magnitude (an 8K frame is 33 MB decoded); anything larger is out of
+    * the documented scope and falls back to the payload walk. */
   private[functions] val MaxDecodeBytes: Long = 1L << 26
   private[functions] val MaxDecodePixels: Long = 1L << 24
 
@@ -36,6 +41,15 @@ object Multimodal {
   private def be32(b: Array[Byte], i: Int): Int = (be16(b, i) << 16) | be16(b, i + 2)
   private def le16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
   private def le32(b: Array[Byte], i: Int): Int = le16(b, i) | (le16(b, i + 2) << 16)
+
+  /** A PNG chunk type or RIFF FourCC as the big-endian Int of its four
+    * ASCII bytes: the form both chunk walkers hand their visitors. */
+  private def fourcc(s: String): Int = be32(s.getBytes("US-ASCII"), 0)
+
+  /** Integer luma (ITU-R BT.601 weights, floor division — exact,
+    * engine-replayable, and the identity on gray r = g = b pixels): the
+    * one RGB fold of the PNG and DIB-AVI decoders. */
+  private def luma(r: Int, g: Int, b: Int): Int = (299 * r + 587 * g + 114 * b) / 1000
 
   /** A media record: the multimodal table schema. `content` is the opaque
     * payload; `meta` carries source-asserted properties. */
@@ -69,16 +83,15 @@ object Multimodal {
     * container formats — enough to write structurally-valid files whose
     * dimensions are then parsed back from the BYTES, not copied from
     * metadata. PNG: 8-byte signature + IHDR (width/height as big-endian
-    * 32-bit at data offsets 0/4) with correct CRC32s; JPEG: SOI + SOF0
-    * frame header (height/width as big-endian 16-bit). */
+    * 32-bit at data offsets 0/4) with correct CRC32s, read and written
+    * through the [[ImagePixels]] chunk walker and writer; JPEG: SOI + SOF0
+    * frame header (height/width as big-endian 16-bit), found by the
+    * [[JpegGray]] segment walker. */
   object ImageHeader {
-    private val PngSig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
     /** (width, height) from PNG or JPEG bytes; None if neither parses. */
     def decode(b: Array[Byte]): Option[(Int, Int)] =
-      if (b.length >= 24 && b.take(8).sameElements(PngSig) &&
-        new String(b.slice(12, 16), "US-ASCII") == "IHDR")
-        Some((be32(b, 16), be32(b, 20)))
+      if (ImagePixels.isPng(b)) Some((be32(b, 16), be32(b, 20)))
       else sofAt(b).map(i => (be16(b, i + 7), be16(b, i + 5)))
 
     /** Index of the JPEG's first SOFn marker, when that segment holds the
@@ -93,20 +106,14 @@ object Multimodal {
       * offsets 0/4) with the chunk CRC32 recomputed; JPEG SOFn
       * height/width patched (big-endian 16-bit, no checksum in JPEG).
       * Works on any structurally valid PNG/JPEG, not just synthesized
-      * ones. None if the bytes parse as neither. */
-    def rewriteDims(b: Array[Byte], w: Int, h: Int): Option[Array[Byte]] = {
-      if (b.length >= 24 && b.take(8).sameElements(PngSig) &&
-        new String(b.slice(12, 16), "US-ASCII") == "IHDR") {
+      * ones. None if the bytes parse as neither, or the PNG ends inside
+      * its IHDR chunk. */
+    def rewriteDims(b: Array[Byte], w: Int, h: Int): Option[Array[Byte]] =
+      if (ImagePixels.isPng(b)) Option.when(b.length >= 33) {
         val out = b.clone()
-        def w32(i: Int, v: Int): Unit = {
-          out(i) = (v >>> 24).toByte; out(i + 1) = (v >>> 16).toByte
-          out(i + 2) = (v >>> 8).toByte; out(i + 3) = v.toByte
-        }
-        w32(16, w); w32(20, h)
-        val crc = new java.util.zip.CRC32
-        crc.update(out, 12, 4 + 13) // chunk type + IHDR data
-        w32(29, crc.getValue.toInt)
-        Some(out)
+        java.nio.ByteBuffer.wrap(out).putInt(16, w).putInt(20, h)
+          .putInt(29, ImagePixels.crc(out, 12, 4 + 13)) // chunk type + IHDR data
+        out
       } else sofAt(b).map { i =>
         require(w <= 0xffff && h <= 0xffff, "jpeg dims are 16-bit")
         val out = b.clone()
@@ -114,34 +121,13 @@ object Multimodal {
         out(i + 7) = (w >>> 8).toByte; out(i + 8) = w.toByte
         out
       }
-    }
 
     // --- synthesis (for the hermetic verify corpus and tests) ---
 
-    private def chunk(out: java.io.ByteArrayOutputStream, tpe: String, data: Array[Byte]): Unit = {
-      def w32(v: Int): Unit =
-        out.write(Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte))
-      w32(data.length)
-      val tb = tpe.getBytes("US-ASCII")
-      out.write(tb); out.write(data)
-      val crc = new java.util.zip.CRC32
-      crc.update(tb); crc.update(data)
-      w32(crc.getValue.toInt)
-    }
-
     /** Structurally valid PNG: signature + IHDR(w,h,8-bit RGB) + a tEXt
       * chunk carrying `payload` + IEND. 57 + payload.length bytes. */
-    def synthPng(w: Int, h: Int, payload: Array[Byte]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(PngSig)
-      val ihdr = java.nio.ByteBuffer.allocate(13)
-        .putInt(w).putInt(h).put(8.toByte).put(2.toByte)
-        .put(0.toByte).put(0.toByte).put(0.toByte).array()
-      chunk(out, "IHDR", ihdr)
-      chunk(out, "tEXt", payload)
-      chunk(out, "IEND", Array.emptyByteArray)
-      out.toByteArray
-    }
+    def synthPng(w: Int, h: Int, payload: Array[Byte]): Array[Byte] =
+      ImagePixels.png(w, h, colorType = 2, interlaced = false, "tEXt" -> payload)
 
     /** Minimal JPEG: SOI + SOF0(8-bit, h×w, 3 components) + COM segment
       * carrying `payload` + EOI. 27 + payload.length bytes. */
@@ -163,37 +149,34 @@ object Multimodal {
       * PNG `tEXt` chunk data or the JPEG `COM` segment body — the walk
       * parses real chunk/segment structure (lengths, markers, EOI), the
       * same standard as [[decode]]. None when no payload chunk exists. */
-    def extractPayload(b: Array[Byte]): Option[Array[Byte]] = {
-      if (b.length >= 8 && PngSig.indices.forall(i => b(i) == PngSig(i))) {
-        var i = 8
-        while (i + 8 <= b.length) {
-          val len = be32(b, i)
-          if (len < 0) return None // corrupt length: no progress, no negative copy
-          val tpe = new String(b, i + 4, 4, "US-ASCII")
-          if (tpe == "tEXt" && i + 8 + len <= b.length)
-            return Some(java.util.Arrays.copyOfRange(b, i + 8, i + 8 + len))
-          if (tpe == "IEND") return None
-          i += 12 + len // length + type + data + crc
+    def extractPayload(b: Array[Byte]): Option[Array[Byte]] =
+      if (ImagePixels.isPng(b)) {
+        var out: Option[Array[Byte]] = None
+        ImagePixels.walk(b) { (tpe, off, len) =>
+          if (tpe == ImagePixels.Text && len <= b.length - off) {
+            out = Some(java.util.Arrays.copyOfRange(b, off, off + len)); false
+          } else tpe != ImagePixels.Iend
         }
-        None
+        out
       } else {
         val i = JpegGray.findSegment(b)(_ == 0xfe) // COM
         if (i < 0) None else Some(java.util.Arrays.copyOfRange(b, i + 4, i + 2 + be16(b, i + 2)))
       }
-    }
   }
 
   /** REAL pixel-level PNG codec — dependency-free (`java.util.zip`
     * Inflater/Deflater + the five standard scanline filters from the PNG
-    * spec, RFC 2083 §6). This retires the round-8 "payload-as-luma" stub
-    * boundary for PNG: two visually identical PNGs written by different
-    * encoders (different zlib levels, different filter choices) have
-    * different BYTES but decode to the same pixels, so perceptual dedup
-    * must hash pixels, not payload bytes — pinned by MultimodalSpec's
-    * different-encoder fixture and the `p_dedup_image_px` contract query.
-    * (JPEG/WAV/AVI pixel kernels followed in round 9 — [[JpegGray]],
-    * [[AudioSamples]], [[VideoFrames]] — so no payload-walk stub remains
-    * on any decode path with a synthesizable fixture.)
+    * spec, RFC 2083 §6) — and the one home of the PNG container: the
+    * signature+IHDR check [[isPng]], the chunk walker [[walk]] and the
+    * chunk writer [[chunk]] (behind the file writer [[png]]) serve every
+    * PNG reader and encoder, the [[ImageHeader]] ones included. Two
+    * visually identical PNGs written by different encoders (different
+    * zlib levels, different filter choices) have different BYTES but
+    * decode to the same pixels, so perceptual dedup hashes pixels, not
+    * payload bytes — pinned by PipelineSpec's PNG pixel-codec tests and
+    * the `p_dedup_image_px` contract query. JPEG, WAV and AVI have
+    * pixel and sample kernels of their own ([[JpegGray]],
+    * [[AudioSamples]], [[VideoFrames]]).
     *
     * Decoder scope (documented contract): 8-bit depth, color types 0
     * (gray), 2 (RGB), 3 (palette via PLTE), 4 (gray+alpha), 6 (RGBA),
@@ -201,10 +184,76 @@ object Multimodal {
     * None (never a wrong answer). */
   object ImagePixels {
     private val PngSig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
+    private val Ihdr = fourcc("IHDR"); private val Plte = fourcc("PLTE")
+    private val Idat = fourcc("IDAT")
+    private[Multimodal] val Iend = fourcc("IEND"); private[Multimodal] val Text = fourcc("tEXt")
 
-    /** Integer luma (ITU-R BT.601 weights, floor division — exact and
-      * engine-replayable): gray passes through, RGB(A) folds. */
-    private def luma(r: Int, g: Int, b: Int): Int = (299 * r + 587 * g + 114 * b) / 1000
+    /** True when `b` opens with the PNG signature and an IHDR chunk type,
+      * so that its first 24 bytes hold the declared width and height: the
+      * one check every PNG reader starts from. */
+    private[Multimodal] def isPng(b: Array[Byte]): Boolean =
+      b.length >= 24 && PngSig.indices.forall(i => b(i) == PngSig(i)) && be32(b, 12) == Ihdr
+
+    /** The one PNG chunk walker. From the IHDR at offset 8 it calls
+      * `visit(type, off, len)` — the chunk type as [[fourcc]], the data
+      * offset and the declared length — for each chunk whose 8-byte
+      * header lies inside `b`, stepping 12 + len (length, type, data,
+      * CRC). A negative length, or a step past `Int.MaxValue`, is
+      * malformed: the walk stops before visiting that chunk. True when
+      * the walk reached the end with every chunk well-formed and
+      * visited; false when a length was malformed or `visit` returned
+      * false to stop. Readers bound what they read inside a chunk. */
+    private[Multimodal] def walk(b: Array[Byte])(visit: (Int, Int, Int) => Boolean): Boolean = {
+      var i = 8
+      while (i <= b.length - 8) {
+        val len = be32(b, i)
+        val next = i + 12L + len
+        if (len < 0 || next > Int.MaxValue || !visit(be32(b, i + 4), i + 8, len)) return false
+        i = next.toInt
+      }
+      true
+    }
+
+    /** CRC-32 of `b[off, off + len)`, as PNG chunks carry it. */
+    private[Multimodal] def crc(b: Array[Byte], off: Int, len: Int): Int = {
+      val c = new java.util.zip.CRC32; c.update(b, off, len); c.getValue.toInt
+    }
+
+    /** The one PNG chunk writer: length, type, data, CRC-32 of type and
+      * data. */
+    private def chunk(out: java.io.ByteArrayOutputStream, tpe: String, data: Array[Byte]): Unit = {
+      val c = java.nio.ByteBuffer.allocate(12 + data.length)
+        .putInt(data.length).put(tpe.getBytes("US-ASCII")).put(data)
+      out.write(c.putInt(crc(c.array, 4, 4 + data.length)).array)
+    }
+
+    /** A PNG file: signature, IHDR (w × h, 8-bit, `colorType`,
+      * `interlaced`), the `chunks` in order, IEND. */
+    private[Multimodal] def png(w: Int, h: Int, colorType: Int, interlaced: Boolean,
+        chunks: (String, Array[Byte])*): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream()
+      out.write(PngSig)
+      chunk(out, "IHDR", java.nio.ByteBuffer.allocate(13)
+        .putInt(w).putInt(h).put(8.toByte).put(colorType.toByte)
+        .put(0.toByte).put(0.toByte).put((if (interlaced) 1 else 0).toByte).array())
+      chunks.foreach { case (tpe, data) => chunk(out, tpe, data) }
+      chunk(out, "IEND", Array.emptyByteArray)
+      out.toByteArray
+    }
+
+    /** The PNG filter predictor (spec §6.2-6.6) of filter type `ft` 0-4
+      * from the left, up and upper-left bytes: the encoder subtracts it,
+      * the decoder adds it back. Type 4 is the Paeth predictor. */
+    private def predict(ft: Int, left: Int, up: Int, ul: Int): Int = ft match {
+      case 0 => 0
+      case 1 => left
+      case 2 => up
+      case 3 => (left + up) / 2
+      case _ =>
+        val p = left + up - ul
+        val pa = math.abs(p - left); val pb = math.abs(p - up); val pc = math.abs(p - ul)
+        if (pa <= pb && pa <= pc) left else if (pb <= pc) up else ul
+    }
 
     /** Adam7 interlace pass geometry: (xStart, yStart, xStep, yStep) per
       * pass, in stream order (PNG spec §8.2). */
@@ -212,11 +261,18 @@ object Multimodal {
       (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
       (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
 
+    /** The (width, height) of pass `p` of a w × h image, without Int
+      * overflow for any positive w and h; non-interlaced is the one pass
+      * (0, 0, 1, 1). */
+    private def passDims(w: Int, h: Int, p: (Int, Int, Int, Int)): (Int, Int) = {
+      val (xs, ys, dx, dy) = p
+      (if (w > xs) (w - xs - 1) / dx + 1 else 0, if (h > ys) (h - ys - 1) / dy + 1 else 0)
+    }
+
     /** Decode a PNG to (width, height, per-pixel luma ints in row-major
       * order). None when the bytes are not a PNG in the supported scope. */
     def decodePngLuma(b: Array[Byte]): Option[(Int, Int, Array[Int])] = {
-      if (b.length < 33 || !PngSig.indices.forall(i => b(i) == PngSig(i))) return None
-      if (new String(b, 12, 4, "US-ASCII") != "IHDR") return None
+      if (b.length < 33 || !isPng(b)) return None
       val w = be32(b, 16); val h = be32(b, 20)
       val bitDepth = b(24) & 0xff; val colorType = b(25) & 0xff
       val interlace = b(28) & 0xff
@@ -226,23 +282,20 @@ object Multimodal {
         case _ => return None
       }
       // gather IDAT chunk data (chunks may split the zlib stream anywhere)
-      // and the PLTE palette (must precede IDAT for color type 3)
+      // and the PLTE palette (must precede IDAT for color type 3), up to
+      // IEND; every chunk's data and CRC must lie inside `b`
       val idat = new java.io.ByteArrayOutputStream()
       var plte: Array[Byte] = null
-      var i = 8
       var sawEnd = false
-      while (i + 8 <= b.length && !sawEnd) {
-        val len = be32(b, i)
-        if (len < 0 || i + 12 + len > b.length) return None
-        val tpe = new String(b, i + 4, 4, "US-ASCII")
-        if (tpe == "IDAT") idat.write(b, i + 8, len)
-        else if (tpe == "PLTE") {
-          if (plte != null || idat.size() > 0) return None // one PLTE, before IDAT
-          plte = java.util.Arrays.copyOfRange(b, i + 8, i + 8 + len)
-        }
-        else if (tpe == "IEND") sawEnd = true
-        i += 12 + len
+      val walked = walk(b) { (tpe, off, len) =>
+        if (len > b.length - off - 4) false
+        else if (tpe == Iend) { sawEnd = true; false }
+        else if (tpe == Idat) { idat.write(b, off, len); true }
+        else if (tpe != Plte) true
+        else if (plte != null || idat.size() > 0) false // one PLTE, before IDAT
+        else { plte = java.util.Arrays.copyOfRange(b, off, off + len); true }
       }
+      if (!walked && !sawEnd) return None
       if (colorType == 3 &&
           (plte == null || plte.length == 0 || plte.length % 3 != 0 ||
             plte.length > 768)) return None
@@ -253,17 +306,12 @@ object Multimodal {
       // seven sub-images, each with its own filtered scanline block
       val passes: Array[(Int, Int, Int, Int)] =
         if (interlace == 0) Array((0, 0, 1, 1)) else Adam7
-      def passDims(p: (Int, Int, Int, Int)): (Int, Int) = {
-        val (xs, ys, dx, dy) = p
-        (if (w > xs) (w - xs + dx - 1) / dx else 0,
-          if (h > ys) (h - ys + dy - 1) / dy else 0)
-      }
       // inflate to exactly the concatenated per-pass scanline blocks.
       // Long arithmetic + the shared pixel cap: a 30-byte file declaring
       // 2-gigapixel dims must cost None, not a multi-GB allocation (these
       // decoders run on untrusted bytes inside executors)
       val expect = passes.map { p =>
-        val (pw, ph) = passDims(p)
+        val (pw, ph) = passDims(w, h, p)
         if (pw == 0 || ph == 0) 0L else ph.toLong * (1L + pw.toLong * channels)
       }.sum
       if (expect == 0 || expect > MaxDecodeBytes) return None
@@ -285,36 +333,23 @@ object Multimodal {
       // per pass: de-filter the block in place (PNG spec §6.2-6.6 —
       // filters reset at each pass boundary), then write lumas into the
       // full-size grid at the pass's (start, step) coordinates
-      val bpp = channels
       var passOff = 0
       var ok = true
       passes.foreach { case (xs, ys, dx, dy) =>
-        val (pw, ph) = passDims((xs, ys, dx, dy))
+        val (pw, ph) = passDims(w, h, (xs, ys, dx, dy))
         if (ok && pw > 0 && ph > 0) {
           val stride = 1 + pw * channels
           var y = 0
           while (y < ph && ok) {
             val rowOff = passOff + y * stride
             val ft = raw(rowOff) & 0xff
+            ok = ft <= 4
             var x = 1
-            while (x < stride) {
-              val cur = raw(rowOff + x) & 0xff
-              val left = if (x > bpp) raw(rowOff + x - bpp) & 0xff else 0
+            while (x < stride && ok) {
+              val left = if (x > channels) raw(rowOff + x - channels) & 0xff else 0
               val up = if (y > 0) raw(rowOff - stride + x) & 0xff else 0
-              val ul = if (y > 0 && x > bpp) raw(rowOff - stride + x - bpp) & 0xff else 0
-              val rec = ft match {
-                case 0 => cur
-                case 1 => cur + left
-                case 2 => cur + up
-                case 3 => cur + (left + up) / 2
-                case 4 =>
-                  val p = left + up - ul
-                  val pa = math.abs(p - left); val pb = math.abs(p - up); val pc = math.abs(p - ul)
-                  val pred = if (pa <= pb && pa <= pc) left else if (pb <= pc) up else ul
-                  cur + pred
-                case _ => ok = false; 0
-              }
-              raw(rowOff + x) = (rec & 0xff).toByte
+              val ul = if (y > 0 && x > channels) raw(rowOff - stride + x - channels) & 0xff else 0
+              raw(rowOff + x) = ((raw(rowOff + x) & 0xff) + predict(ft, left, up, ul)).toByte
               x += 1
             }
             // luma straight into the de-interlaced grid
@@ -348,58 +383,8 @@ object Multimodal {
       * fixture [[decodePngLuma]] must see through. */
     def encodePngGray(w: Int, h: Int, gray: Array[Int], level: Int, filter: Int): Array[Byte] = {
       require(gray.length == w * h, s"need $w*$h pixels, got ${gray.length}")
-      require(filter >= 0 && filter <= 4, "filter must be 0-4")
-      val stride = 1 + w
-      val raw = new Array[Byte](h * stride)
-      var y = 0
-      while (y < h) {
-        raw(y * stride) = filter.toByte
-        var x = 0
-        while (x < w) {
-          val cur = gray(y * w + x) & 0xff
-          val left = if (x > 0) gray(y * w + x - 1) & 0xff else 0
-          val up = if (y > 0) gray((y - 1) * w + x) & 0xff else 0
-          val ul = if (y > 0 && x > 0) gray((y - 1) * w + x - 1) & 0xff else 0
-          val f = filter match {
-            case 0 => cur
-            case 1 => cur - left
-            case 2 => cur - up
-            case 3 => cur - (left + up) / 2
-            case 4 =>
-              val p = left + up - ul
-              val pa = math.abs(p - left); val pb = math.abs(p - up); val pc = math.abs(p - ul)
-              val pred = if (pa <= pb && pa <= pc) left else if (pb <= pc) up else ul
-              cur - pred
-          }
-          raw(y * stride + 1 + x) = (f & 0xff).toByte
-          x += 1
-        }
-        y += 1
-      }
-      val deflater = new java.util.zip.Deflater(level)
-      deflater.setInput(raw); deflater.finish()
-      val buf = new Array[Byte](raw.length + 64)
-      val zOut = new java.io.ByteArrayOutputStream()
-      while (!deflater.finished()) zOut.write(buf, 0, deflater.deflate(buf))
-      deflater.end()
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(PngSig)
-      def chunk(tpe: String, data: Array[Byte]): Unit = {
-        def w32(v: Int): Unit =
-          out.write(Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte))
-        w32(data.length)
-        val tb = tpe.getBytes("US-ASCII")
-        out.write(tb); out.write(data)
-        val crc = new java.util.zip.CRC32
-        crc.update(tb); crc.update(data)
-        w32(crc.getValue.toInt)
-      }
-      chunk("IHDR", java.nio.ByteBuffer.allocate(13)
-        .putInt(w).putInt(h).put(8.toByte).put(0.toByte) // 8-bit grayscale
-        .put(0.toByte).put(0.toByte).put(0.toByte).array())
-      chunk("IDAT", zOut.toByteArray)
-      chunk("IEND", Array.emptyByteArray)
-      out.toByteArray
+      pngEncode(w, h, gray, level, filter, colorType = 0, plte = null,
+        interlaced = false)
     }
 
     /** Encode 8-bit PALETTE pixels as a real PNG (color type 3): `idx`
@@ -442,8 +427,7 @@ object Multimodal {
         if (interlaced) Adam7 else Array((0, 0, 1, 1))
       val rawOut = new java.io.ByteArrayOutputStream()
       passes.foreach { case (xs, ys, dx, dy) =>
-        val pw = if (w > xs) (w - xs + dx - 1) / dx else 0
-        val ph = if (h > ys) (h - ys + dy - 1) / dy else 0
+        val (pw, ph) = passDims(w, h, (xs, ys, dx, dy))
         if (pw > 0 && ph > 0) {
           // materialize the pass sub-image, then filter it like any image
           val sub = Array.tabulate(pw * ph)(p =>
@@ -453,24 +437,10 @@ object Multimodal {
             rawOut.write(filter)
             var x = 0
             while (x < pw) {
-              val cur = sub(y * pw + x)
               val left = if (x > 0) sub(y * pw + x - 1) else 0
               val up = if (y > 0) sub((y - 1) * pw + x) else 0
               val ul = if (y > 0 && x > 0) sub((y - 1) * pw + x - 1) else 0
-              val f = filter match {
-                case 0 => cur
-                case 1 => cur - left
-                case 2 => cur - up
-                case 3 => cur - (left + up) / 2
-                case 4 =>
-                  val p = left + up - ul
-                  val pa = math.abs(p - left); val pb = math.abs(p - up)
-                  val pc = math.abs(p - ul)
-                  val pred = if (pa <= pb && pa <= pc) left
-                    else if (pb <= pc) up else ul
-                  cur - pred
-              }
-              rawOut.write(f & 0xff)
+              rawOut.write(sub(y * pw + x) - predict(filter, left, up, ul))
               x += 1
             }
             y += 1
@@ -484,25 +454,8 @@ object Multimodal {
       val zOut = new java.io.ByteArrayOutputStream()
       while (!deflater.finished()) zOut.write(buf, 0, deflater.deflate(buf))
       deflater.end()
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(PngSig)
-      def chunk(tpe: String, data: Array[Byte]): Unit = {
-        def w32(v: Int): Unit =
-          out.write(Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte))
-        w32(data.length)
-        val tb = tpe.getBytes("US-ASCII")
-        out.write(tb); out.write(data)
-        val crc = new java.util.zip.CRC32
-        crc.update(tb); crc.update(data)
-        w32(crc.getValue.toInt)
-      }
-      chunk("IHDR", java.nio.ByteBuffer.allocate(13)
-        .putInt(w).putInt(h).put(8.toByte).put(colorType.toByte)
-        .put(0.toByte).put(0.toByte).put((if (interlaced) 1 else 0).toByte).array())
-      if (plte != null) chunk("PLTE", plte)
-      chunk("IDAT", zOut.toByteArray)
-      chunk("IEND", Array.emptyByteArray)
-      out.toByteArray
+      val chunks = (if (plte != null) Seq("PLTE" -> plte) else Nil) :+ ("IDAT" -> zOut.toByteArray)
+      png(w, h, colorType, interlaced, chunks: _*)
     }
 
     /** Deterministic pixel field from text — the generative rule the
@@ -562,6 +515,106 @@ object Multimodal {
       }
   }
 
+  /** The RIFF container (WAV and AVI): the one chunk walker every WAV and
+    * AVI reader goes through, and the one writer every WAV and AVI
+    * encoder does. */
+  private object Riff {
+    private val RiffId = fourcc("RIFF"); private val ListId = fourcc("LIST")
+    val Wave = fourcc("WAVE"); val Fmt = fourcc("fmt "); val Data = fourcc("data")
+    val Avi = fourcc("AVI "); val Hdrl = fourcc("hdrl"); val Avih = fourcc("avih")
+    val Strl = fourcc("strl"); val Strf = fourcc("strf")
+    val Movi = fourcc("movi"); val Db00 = fourcc("00db")
+
+    /** The form type of a RIFF file (`WAVE`, `AVI `) as [[fourcc]]; 0
+      * when `b` is not one. */
+    def form(b: Array[Byte]): Int =
+      if (b.length >= 12 && be32(b, 0) == RiffId) be32(b, 8) else 0
+
+    /** The one RIFF chunk walker, with the contract of the PNG one
+      * ([[ImagePixels.walk]]) over the chunks whose 8-byte header (FourCC,
+      * then little-endian length) lies in `[from, end)`, stepping
+      * 8 + len + (len & 1): chunks are word-aligned. A LIST's sub-chunks
+      * are walked by calling it again on `[off + 4, min(end, off + len))`. */
+    def walk(b: Array[Byte], from: Int, end: Int)(visit: (Int, Int, Int) => Boolean): Boolean = {
+      var i = from
+      while (i <= end - 8) {
+        val len = le32(b, i + 4)
+        val next = i + 8L + len + (len & 1)
+        if (len < 0 || next > Int.MaxValue || !visit(be32(b, i), i + 8, len)) return false
+        i = next.toInt
+      }
+      true
+    }
+
+    /** The list type of the chunk (`id`, `off`) when it is a LIST whose
+      * type lies before `end`; 0 otherwise. */
+    def listType(b: Array[Byte], id: Int, off: Int, end: Int): Int =
+      if (id == ListId && off + 4 <= end) be32(b, off) else 0
+
+    /** A copy of the data of the first `id` chunk in `[from, end)` whose
+      * data lies before `end`; None when the walk finds none. */
+    def firstData(b: Array[Byte], from: Int, end: Int, id: Int): Option[Array[Byte]] = {
+      var out: Option[Array[Byte]] = None
+      walk(b, from, end) { (cid, off, len) =>
+        cid != id || len > end - off || {
+          out = Some(java.util.Arrays.copyOfRange(b, off, off + len)); false
+        }
+      }
+      out
+    }
+
+    /** The one RIFF writer: a file of form `form` whose chunks `body`
+      * writes. */
+    def write(form: String)(body: Writer => Unit): Array[Byte] = {
+      val w = new Writer
+      w.put("RIFF") { w.tag(form); body(w) }
+      w.toByteArray
+    }
+
+    /** A WAV file: `fmt ` (format tag, channels, rate, byte rate, block
+      * align, bits per sample), a LIST/INFO chunk when `junk`, then the
+      * `data` chunk that `samples` writes. */
+    def wav(format: Int, rate: Int, channels: Int, bits: Int, junk: Boolean)(
+        samples: Writer => Unit): Array[Byte] =
+      write("WAVE") { out =>
+        out.put("fmt ") {
+          out.w16(format); out.w16(channels); out.w32(rate)
+          out.w32(rate * channels * (bits / 8)) // byte rate
+          out.w16(channels * (bits / 8)) // block align
+          out.w16(bits)
+        }
+        if (junk) out.list("INFO") { out.put("ICMT") { out.tag("gen0") } }
+        out.put("data")(samples(out))
+      }
+
+    /** Little-endian fields, FourCC tags and nested chunks. Each chunk's
+      * size is what its body wrote, and an odd-sized chunk is followed by
+      * a pad byte that counts in its parent's size — so the RIFF size is
+      * always the file length − 8. */
+    final class Writer {
+      private var out = new java.io.ByteArrayOutputStream()
+      def w8(v: Int): Unit = out.write(v)
+      def w16(v: Int): Unit = { out.write(v); out.write(v >>> 8) }
+      def w32(v: Int): Unit = { w16(v); w16(v >>> 16) }
+      def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
+      def bytes(a: Array[Byte]): Unit = out.write(a)
+      /** The chunk `id` holding what `body` writes. */
+      def put(id: String)(body: => Unit): Unit = {
+        val parent = out
+        val data = new java.io.ByteArrayOutputStream()
+        out = data
+        body
+        out = parent
+        tag(id); w32(data.size)
+        data.writeTo(out)
+        if ((data.size & 1) == 1) out.write(0)
+      }
+      /** A LIST of type `tpe` holding the chunks `body` writes. */
+      def list(tpe: String)(body: => Unit): Unit = put("LIST") { tag(tpe); body }
+      private[Riff] def toByteArray: Array[Byte] = out.toByteArray
+    }
+  }
+
   /** Minimal real encoder/decoder for the canonical PCM audio container —
     * RIFF/WAVE (public format): 12-byte RIFF header, `fmt ` chunk
     * (channels at offset 2, sample rate at 4, byte rate at 8, bits at 14,
@@ -574,24 +627,14 @@ object Multimodal {
       * container doesn't parse. Walks chunks so extra chunks (LIST, fact)
       * before `data` are handled. */
     def decode(b: Array[Byte]): Option[(Int, Int, Long)] = {
-      if (b.length < 44 ||
-        new String(b.slice(0, 4), "US-ASCII") != "RIFF" ||
-        new String(b.slice(8, 12), "US-ASCII") != "WAVE") return None
+      if (b.length < 44 || Riff.form(b) != Riff.Wave) return None
       var sampleRate = 0; var channels = 0; var byteRate = 0
       var dataLen = -1L
-      var i = 12
-      while (i + 8 <= b.length && dataLen < 0) {
-        val id = new String(b.slice(i, i + 4), "US-ASCII")
-        val len = le32(b, i + 4)
-        // a negative (or cursor-overflowing) chunk length is malformed —
-        // stepping by it would loop forever or walk backwards
-        if (len < 0 || i + 8 + len < i) return None
-        if (id == "fmt " && i + 8 + 16 <= b.length) {
-          channels = le16(b, i + 10)
-          sampleRate = le32(b, i + 12)
-          byteRate = le32(b, i + 16)
-        } else if (id == "data") dataLen = len.toLong & 0xffffffffL
-        i += 8 + len + (len & 1) // chunks are word-aligned
+      Riff.walk(b, 12, b.length) { (id, off, len) =>
+        if (id == Riff.Fmt && off + 16 <= b.length) {
+          channels = le16(b, off + 2); sampleRate = le32(b, off + 4); byteRate = le32(b, off + 8)
+        } else if (id == Riff.Data) dataLen = len
+        dataLen < 0
       }
       if (sampleRate <= 0 || channels <= 0 || byteRate <= 0 || dataLen < 0) None
       else Some((sampleRate, channels, dataLen * 1000L / byteRate))
@@ -600,53 +643,23 @@ object Multimodal {
     /** Structurally valid 16-bit PCM WAV whose data chunk is `payload`:
       * 44 + payload.length bytes (+1 pad byte if the payload length is
       * odd — RIFF chunks are word-aligned). */
-    def synthWav(sampleRate: Int, channels: Int, payload: Array[Byte]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-      def w32(v: Int): Unit = { w16(v & 0xffff); w16((v >>> 16) & 0xffff) }
-      def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-      val pad = payload.length & 1
-      tag("RIFF"); w32(36 + payload.length + pad); tag("WAVE")
-      tag("fmt "); w32(16)
-      w16(1) // PCM
-      w16(channels)
-      w32(sampleRate)
-      w32(sampleRate * channels * 2) // byte rate, 16-bit samples
-      w16(channels * 2) // block align
-      w16(16) // bits per sample
-      tag("data"); w32(payload.length)
-      out.write(payload)
-      if (pad == 1) out.write(0)
-      out.toByteArray
-    }
+    def synthWav(sampleRate: Int, channels: Int, payload: Array[Byte]): Array[Byte] =
+      Riff.wav(1, sampleRate, channels, 16, junk = false)(_.bytes(payload))
 
     /** Extract the `data` chunk contents (the PCM payload) by the same
       * RIFF chunk walk as [[decode]] — the declared chunk length, so the
       * word-alignment pad byte never leaks into the payload. */
-    def extractData(b: Array[Byte]): Option[Array[Byte]] = {
-      if (b.length < 12 || !(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F') ||
-          !(b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E')) return None
-      var i = 12
-      while (i + 8 <= b.length) {
-        val tpe = new String(b, i, 4, "US-ASCII")
-        val len = le32(b, i + 4)
-        if (len < 0) return None // corrupt length: no progress, no negative copy
-        if (tpe == "data" && i + 8 + len <= b.length)
-          return Some(java.util.Arrays.copyOfRange(b, i + 8, i + 8 + len))
-        i += 8 + len + (len & 1) // chunks are word-aligned
-      }
-      None
-    }
+    def extractData(b: Array[Byte]): Option[Array[Byte]] =
+      if (Riff.form(b) != Riff.Wave) None else Riff.firstData(b, 12, b.length, Riff.Data)
   }
 
-  /** REAL sample-level WAV codec — the audio analog of [[ImagePixels]],
-    * retiring the payload-as-luma boundary for PCM audio: two WAVs
-    * carrying the SAME samples in different container layouts (mono vs
-    * channel-replicated stereo, extra LIST/INFO chunks before `data`)
-    * have different BYTES but decode to the same mono sample sequence,
-    * so perceptual audio dedup must hash samples, not container bytes —
-    * pinned by MultimodalSpec-style fixtures and the `p_dedup_audio_px`
-    * contract query.
+  /** REAL sample-level WAV codec — the audio analog of [[ImagePixels]]:
+    * two WAVs carrying the SAME samples in different container layouts
+    * (mono vs channel-replicated stereo, extra LIST/INFO chunks before
+    * `data`) have different BYTES but decode to the same mono sample
+    * sequence, so perceptual audio dedup must hash samples, not container
+    * bytes — pinned by PipelineSpec's PCM fixtures and the
+    * `p_dedup_audio_px` contract query.
     *
     * Decoder scope (documented contract): WAVE_FORMAT_PCM (format tag 1)
     * at 16, 8, or 24 bits, WAVE_FORMAT_IEEE_FLOAT (format tag 3) at 32
@@ -675,28 +688,21 @@ object Multimodal {
       * are lossless). None when the bytes are outside the supported
       * scope — never a wrong answer. */
     def decodePcm(b: Array[Byte]): Option[Array[Int]] = {
-      if (b.length < 12 || !(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F') ||
-          !(b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E')) return None
+      if (Riff.form(b) != Riff.Wave) return None
       var fmt = 0; var bits = 0; var channels = 0
       var dataOff = -1; var dataLen = -1
-      var i = 12
-      while (i + 8 <= b.length) {
-        val id = new String(b, i, 4, "US-ASCII")
-        val len = le32(b, i + 4)
-        if (len < 0 || i + 8 + len < i) return None
-        if (id == "fmt " && len >= 16 && i + 8 + 16 <= b.length) {
-          fmt = le16(b, i + 8)
-          channels = le16(b, i + 10)
-          bits = le16(b, i + 22)
-        } else if (id == "data" && dataOff < 0 && i + 8 + len <= b.length) {
-          dataOff = i + 8; dataLen = len
+      val walked = Riff.walk(b, 12, b.length) { (id, off, len) =>
+        if (id == Riff.Fmt && len >= 16 && off + 16 <= b.length) {
+          fmt = le16(b, off); channels = le16(b, off + 2); bits = le16(b, off + 14)
+        } else if (id == Riff.Data && dataOff < 0 && len <= b.length - off) {
+          dataOff = off; dataLen = len
         }
-        i += 8 + len + (len & 1) // chunks are word-aligned
+        true
       }
       val fmtOk = channels >= 1 &&
         ((fmt == 1 && (bits == 16 || bits == 8 || bits == 24)) ||
           (fmt == 3 && bits == 32))
-      if (!fmtOk || dataOff < 0) return None
+      if (!walked || !fmtOk || dataOff < 0) return None
       val bytesPer = bits / 8
       val blockAlign = channels * bytesPer
       if (dataLen % blockAlign != 0) return None
@@ -728,10 +734,6 @@ object Multimodal {
       Some(out)
     }
 
-    /** Pre-generalization name — 16-bit PCM callers read better at the
-      * call site through the scoped alias. */
-    @inline def decodePcm16(b: Array[Byte]): Option[Array[Int]] = decodePcm(b)
-
     /** REAL sample-rate downsample: decimation by integer factor `k`,
       * each output sample the floor MEAN (Math.floorDiv — matches
       * external floor-division semantics on negative sums) of its
@@ -762,33 +764,14 @@ object Multimodal {
     def synthPcmWav(
         rate: Int, channels: Int, samples: Array[Int], junk: Boolean = false): Array[Byte] = {
       require(rate > 0 && channels >= 1, "rate and channels must be positive")
-      // `s & 0xffff` below would silently WRAP out-of-range ints (e.g. the
+      // `w16` below would silently WRAP out-of-range ints (e.g. the
       // -32896 floor of decodePcm's 8-bit map would re-encode as +32640) —
       // fail fast instead so a decode→re-encode chain can never wrap peaks
       require(samples.forall(s => s >= Short.MinValue && s <= Short.MaxValue),
         "PCM16 samples must be in [-32768, 32767] — clamp before re-encoding")
-      val out = new java.io.ByteArrayOutputStream()
-      def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-      def w32(v: Int): Unit = { w16(v & 0xffff); w16((v >>> 16) & 0xffff) }
-      def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-      // LIST body = 'INFO' (4) + ICMT header (8) + 'gen0' body (4) = 16
-      val junkBytes = if (junk) 8 + 16 else 0
-      val dataLen = samples.length * 2 * channels
-      tag("RIFF"); w32(36 + junkBytes + dataLen); tag("WAVE")
-      tag("fmt "); w32(16)
-      w16(1) // PCM
-      w16(channels)
-      w32(rate)
-      w32(rate * channels * 2) // byte rate
-      w16(channels * 2) // block align
-      w16(16) // bits per sample
-      if (junk) { tag("LIST"); w32(16); tag("INFO"); tag("ICMT"); w32(4); tag("gen0") }
-      tag("data"); w32(dataLen)
-      samples.foreach { s =>
-        var c = 0
-        while (c < channels) { w16(s & 0xffff); c += 1 }
+      Riff.wav(1, rate, channels, 16, junk) { out =>
+        samples.foreach(s => (0 until channels).foreach(_ => out.w16(s)))
       }
-      out.toByteArray
     }
 
     /** Structurally valid 8-bit PCM WAV (`samples8` unsigned 0–255,
@@ -798,25 +781,9 @@ object Multimodal {
         rate: Int, channels: Int, samples8: Array[Int], junk: Boolean = false): Array[Byte] = {
       require(rate > 0 && channels >= 1, "rate and channels must be positive")
       require(samples8.forall(s => s >= 0 && s <= 255), "8-bit samples are 0-255")
-      val out = new java.io.ByteArrayOutputStream()
-      def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-      def w32(v: Int): Unit = { w16(v & 0xffff); w16((v >>> 16) & 0xffff) }
-      def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-      val junkBytes = if (junk) 8 + 16 else 0
-      val dataLen = samples8.length * channels
-      tag("RIFF"); w32(36 + junkBytes + dataLen); tag("WAVE")
-      tag("fmt "); w32(16)
-      w16(1); w16(channels); w32(rate)
-      w32(rate * channels) // byte rate
-      w16(channels) // block align
-      w16(8) // bits per sample
-      if (junk) { tag("LIST"); w32(16); tag("INFO"); tag("ICMT"); w32(4); tag("gen0") }
-      tag("data"); w32(dataLen)
-      samples8.foreach { s =>
-        var c = 0
-        while (c < channels) { out.write(s & 0xff); c += 1 }
+      Riff.wav(1, rate, channels, 8, junk) { out =>
+        samples8.foreach(s => (0 until channels).foreach(_ => out.w8(s)))
       }
-      out.toByteArray
     }
 
     /** Structurally valid 24-bit PCM WAV (s24le; `samples` are 16-bit-
@@ -829,31 +796,12 @@ object Multimodal {
       // fail-fast contract as synthPcmWav
       require(samples.forall(s => s >= Short.MinValue && s <= Short.MaxValue),
         "PCM24 samples must be in [-32768, 32767] — clamp before re-encoding")
-      val out = new java.io.ByteArrayOutputStream()
-      def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-      def w32(v: Int): Unit = { w16(v & 0xffff); w16((v >>> 16) & 0xffff) }
-      def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-      val junkBytes = if (junk) 8 + 16 else 0
-      val dataLen = samples.length * 3 * channels
-      tag("RIFF"); w32(36 + junkBytes + dataLen); tag("WAVE")
-      tag("fmt "); w32(16)
-      w16(1); w16(channels); w32(rate)
-      w32(rate * channels * 3) // byte rate
-      w16(channels * 3) // block align
-      w16(24) // bits per sample
-      if (junk) { tag("LIST"); w32(16); tag("INFO"); tag("ICMT"); w32(4); tag("gen0") }
-      tag("data"); w32(dataLen)
-      samples.foreach { s =>
-        val v = s << 8
-        var c = 0
-        while (c < channels) {
-          out.write(v & 0xff); out.write((v >>> 8) & 0xff); out.write((v >>> 16) & 0xff)
-          c += 1
+      Riff.wav(1, rate, channels, 24, junk) { out =>
+        samples.foreach { s =>
+          val v = s << 8 // s24le
+          (0 until channels).foreach { _ => out.w8(v); out.w16(v >>> 8) }
         }
       }
-      // chunk word alignment when the data length is odd
-      if (dataLen % 2 == 1) out.write(0)
-      out.toByteArray
     }
 
     /** Structurally valid IEEE-float32 WAV (WAVE_FORMAT_IEEE_FLOAT,
@@ -863,27 +811,12 @@ object Multimodal {
     def synthFloatWav(
         rate: Int, channels: Int, samples: Array[Int], junk: Boolean = false): Array[Byte] = {
       require(rate > 0 && channels >= 1, "rate and channels must be positive")
-      val out = new java.io.ByteArrayOutputStream()
-      def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-      def w32(v: Int): Unit = { w16(v & 0xffff); w16((v >>> 16) & 0xffff) }
-      def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-      val junkBytes = if (junk) 8 + 16 else 0
-      val dataLen = samples.length * 4 * channels
-      tag("RIFF"); w32(36 + junkBytes + dataLen); tag("WAVE")
-      tag("fmt "); w32(16)
-      w16(3) // IEEE float
-      w16(channels); w32(rate)
-      w32(rate * channels * 4) // byte rate
-      w16(channels * 4) // block align
-      w16(32) // bits per sample
-      if (junk) { tag("LIST"); w32(16); tag("INFO"); tag("ICMT"); w32(4); tag("gen0") }
-      tag("data"); w32(dataLen)
-      samples.foreach { s =>
-        val fb = java.lang.Float.floatToIntBits(s / 32768f)
-        var c = 0
-        while (c < channels) { w32(fb); c += 1 }
+      Riff.wav(3, rate, channels, 32, junk) { out =>
+        samples.foreach { s =>
+          val fb = java.lang.Float.floatToIntBits(s / 32768f)
+          (0 until channels).foreach(_ => out.w32(fb))
+        }
       }
-      out.toByteArray
     }
   }
 
@@ -897,106 +830,71 @@ object Multimodal {
   object VideoHeader {
 
     /** (width, height, totalFrames, durationMs) from AVI bytes; None if
-      * the container doesn't parse. Walks top-level chunks and the hdrl
-      * sub-chunks with the same malformed-length guards as WAV. */
+      * the container doesn't parse. The first `LIST hdrl` decides: its
+      * `avih`, or None when it has none. */
     def decode(b: Array[Byte]): Option[(Int, Int, Int, Long)] = {
-      if (b.length < 12 ||
-        new String(b.slice(0, 4), "US-ASCII") != "RIFF" ||
-        new String(b.slice(8, 12), "US-ASCII") != "AVI ") return None
-      var i = 12
-      while (i + 8 <= b.length) {
-        val id = new String(b.slice(i, i + 4), "US-ASCII")
-        val len = le32(b, i + 4)
-        if (len < 0 || i + 8 + len < i) return None
-        if (id == "LIST" && i + 12 <= b.length &&
-          new String(b.slice(i + 8, i + 12), "US-ASCII") == "hdrl") {
-          // walk hdrl sub-chunks to avih
-          var j = i + 12
-          val end = math.min(b.length, i + 8 + len)
-          while (j + 8 <= end) {
-            val sid = new String(b.slice(j, j + 4), "US-ASCII")
-            val slen = le32(b, j + 4)
-            if (slen < 0 || j + 8 + slen < j) return None
-            if (sid == "avih" && slen >= 40 && j + 8 + 40 <= b.length) {
-              val usPerFrame = le32(b, j + 8).toLong & 0xffffffffL
-              val frames = le32(b, j + 24)
-              val w = le32(b, j + 40)
-              val h = le32(b, j + 44)
-              if (usPerFrame <= 0 || frames < 0 || w <= 0 || h <= 0) return None
-              return Some((w, h, frames, frames.toLong * usPerFrame / 1000L))
+      if (Riff.form(b) != Riff.Avi) return None
+      var out: Option[(Int, Int, Int, Long)] = None
+      Riff.walk(b, 12, b.length) { (id, off, len) =>
+        Riff.listType(b, id, off, b.length) != Riff.Hdrl || {
+          Riff.walk(b, off + 4, math.min(b.length, off + len)) { (sid, soff, slen) =>
+            sid != Riff.Avih || slen < 40 || soff + 40 > b.length || {
+              val usPerFrame = le32(b, soff).toLong & 0xffffffffL
+              val frames = le32(b, soff + 16)
+              val w = le32(b, soff + 32)
+              val h = le32(b, soff + 36)
+              if (usPerFrame > 0 && frames >= 0 && w > 0 && h > 0)
+                out = Some((w, h, frames, frames.toLong * usPerFrame / 1000L))
+              false
             }
-            j += 8 + slen + (slen & 1)
           }
-          return None // hdrl without avih is malformed
+          false
         }
-        i += 8 + len + (len & 1)
       }
-      None
+      out
     }
+
+    /** The 56-byte `avih` main header: µs per frame, total frames, the
+      * suggested buffer size and the frame dims; one stream. */
+    private[Multimodal] def avih(out: Riff.Writer, usPerFrame: Int, frames: Int,
+        bufferSize: Int, w: Int, h: Int): Unit =
+      out.put("avih") {
+        out.w32(usPerFrame)                         // dwMicroSecPerFrame
+        out.w32(0); out.w32(0); out.w32(0)          // dwMaxBytesPerSec, dwPaddingGranularity, dwFlags
+        out.w32(frames)                             // dwTotalFrames
+        out.w32(0); out.w32(1)                      // dwInitialFrames, dwStreams
+        out.w32(bufferSize)                         // dwSuggestedBufferSize
+        out.w32(w); out.w32(h)                      // dwWidth, dwHeight
+        out.w32(0); out.w32(0); out.w32(0); out.w32(0) // dwReserved[4]
+      }
 
     /** Structurally valid AVI: RIFF header + `LIST hdrl` with a 56-byte
       * `avih` + `LIST movi` whose single `00db` chunk is `payload`.
       * 108 + payload.length bytes (+1 pad if the payload length is odd). */
-    def synthAvi(w: Int, h: Int, frames: Int, usPerFrame: Int, payload: Array[Byte]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      def w32(v: Int): Unit = {
-        out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-        out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff)
+    def synthAvi(w: Int, h: Int, frames: Int, usPerFrame: Int, payload: Array[Byte]): Array[Byte] =
+      Riff.write("AVI ") { out =>
+        out.list("hdrl")(avih(out, usPerFrame, frames, 0, w, h))
+        out.list("movi") { out.put("00db")(out.bytes(payload)) }
       }
-      def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-      val pad = payload.length & 1
-      val moviLen = 4 + 8 + payload.length + pad
-      tag("RIFF"); w32(4 + (8 + 68) + (8 + moviLen)); tag("AVI ")
-      tag("LIST"); w32(68); tag("hdrl")
-      tag("avih"); w32(56)
-      w32(usPerFrame)           // dwMicroSecPerFrame
-      w32(0); w32(0); w32(0)    // dwMaxBytesPerSec, dwPaddingGranularity, dwFlags
-      w32(frames)               // dwTotalFrames
-      w32(0); w32(1)            // dwInitialFrames, dwStreams
-      w32(0)                    // dwSuggestedBufferSize
-      w32(w); w32(h)            // dwWidth, dwHeight
-      w32(0); w32(0); w32(0); w32(0) // dwReserved[4]
-      tag("LIST"); w32(moviLen); tag("movi")
-      tag("00db"); w32(payload.length)
-      out.write(payload)
-      if (pad == 1) out.write(0)
-      out.toByteArray
-    }
 
     /** Extract the first `00db` frame payload by walking RIFF LISTs to
       * `movi` — the same chunk structure [[decode]] parses; declared
       * lengths, so the word-align pad never leaks in. */
     def extractFrame(b: Array[Byte]): Option[Array[Byte]] = {
-      if (b.length < 12 || !(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F') ||
-          !(b(8) == 'A' && b(9) == 'V' && b(10) == 'I' && b(11) == ' ')) return None
-      var i = 12
-      while (i + 8 <= b.length) {
-        val tpe = new String(b, i, 4, "US-ASCII")
-        val len = le32(b, i + 4)
-        if (len < 0) return None // corrupt length: the walk must progress
-        if (tpe == "LIST" && i + 12 <= b.length &&
-            new String(b, i + 8, 4, "US-ASCII") == "movi") {
-          var j = i + 12
-          val end = math.min(b.length, i + 8 + len)
-          while (j + 8 <= end) {
-            val ct = new String(b, j, 4, "US-ASCII")
-            val cl = le32(b, j + 4)
-            if (cl < 0) return None // corrupt length: no progress, no negative copy
-            if (ct == "00db" && j + 8 + cl <= end)
-              return Some(java.util.Arrays.copyOfRange(b, j + 8, j + 8 + cl))
-            j += 8 + cl + (cl & 1)
-          }
-          return None
+      if (Riff.form(b) != Riff.Avi) return None
+      var out: Option[Array[Byte]] = None
+      Riff.walk(b, 12, b.length) { (id, off, len) =>
+        Riff.listType(b, id, off, b.length) != Riff.Movi || {
+          out = Riff.firstData(b, off + 4, math.min(b.length, off + len), Riff.Db00)
+          false
         }
-        i += 8 + len + (len & 1)
       }
-      None
+      out
     }
   }
 
   /** REAL frame-level AVI codec — the video analog of [[ImagePixels]] /
-    * [[AudioSamples]], retiring the payload-as-luma boundary for
-    * uncompressed video: two AVIs carrying the SAME BGR24 DIB frames in
+    * [[AudioSamples]]: two AVIs carrying the SAME BGR24 DIB frames in
     * different container layouts (a JUNK chunk between `hdrl` and
     * `movi`, an `idx1` index appended, a different
     * dwSuggestedBufferSize hint) have different BYTES but decode to the
@@ -1012,9 +910,6 @@ object Multimodal {
     * remains the declared boundary (the legacy header-only AVIs carry
     * no `strl` at all, so they keep their old hash). */
   object VideoFrames {
-    /** Same integer BT.601 floor-div luma as [[ImagePixels]] — exact,
-      * and the identity on gray (r = g = b) pixels. */
-    private def luma(r: Int, g: Int, b: Int): Int = (299 * r + 587 * g + 114 * b) / 1000
 
     /** Decode an uncompressed-DIB AVI to (width, height, per-pixel SUMS
       * of frame luma in top-down row-major order, frame count). The
@@ -1023,54 +918,34 @@ object Multimodal {
       * sums compare exactly like the means. None when the bytes are
       * outside the supported scope — never a wrong answer. */
     def decodeDibLumaSums(b: Array[Byte]): Option[(Int, Int, Array[Int], Int)] = {
-      if (b.length < 12 || !(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F') ||
-          !(b(8) == 'A' && b(9) == 'V' && b(10) == 'I' && b(11) == ' ')) return None
+      if (Riff.form(b) != Riff.Avi) return None
       var w = 0; var h = 0; var fmtOk = false
       var moviOff = -1; var moviEnd = -1
-      var i = 12
-      while (i + 8 <= b.length) {
-        val id = new String(b, i, 4, "US-ASCII")
-        val len = le32(b, i + 4)
-        if (len < 0 || i + 8 + len < i) return None
-        if (id == "LIST" && i + 12 <= b.length) {
-          val listType = new String(b, i + 8, 4, "US-ASCII")
-          val end = math.min(b.length, i + 8 + len)
-          if (listType == "hdrl") {
-            // walk hdrl for the LIST strl carrying strh/strf
-            var j = i + 12
-            while (j + 8 <= end) {
-              val sid = new String(b, j, 4, "US-ASCII")
-              val slen = le32(b, j + 4)
-              if (slen < 0 || j + 8 + slen < j) return None
-              if (sid == "LIST" && j + 12 <= end &&
-                  new String(b, j + 8, 4, "US-ASCII") == "strl") {
-                var k = j + 12
-                val send = math.min(end, j + 8 + slen)
-                while (k + 8 <= send) {
-                  val tid = new String(b, k, 4, "US-ASCII")
-                  val tlen = le32(b, k + 4)
-                  if (tlen < 0 || k + 8 + tlen < k) return None
-                  if (tid == "strf" && tlen >= 40 && k + 8 + 40 <= b.length) {
+      // three levels down for the format (hdrl → strl → strf), and the
+      // first movi's bounds for the frame walk below
+      val walked = Riff.walk(b, 12, b.length) { (id, off, len) =>
+        val end = math.min(b.length, off + len)
+        Riff.listType(b, id, off, b.length) match {
+          case Riff.Hdrl =>
+            Riff.walk(b, off + 4, end) { (sid, soff, slen) =>
+              Riff.listType(b, sid, soff, end) != Riff.Strl ||
+                Riff.walk(b, soff + 4, math.min(end, soff + slen)) { (tid, toff, tlen) =>
+                  if (tid == Riff.Strf && tlen >= 40 && toff + 40 <= b.length) {
                     // BITMAPINFOHEADER: width, height, planes, bitcount,
                     // compression — the uncompressed-RGB contract
-                    w = le32(b, k + 12)
-                    h = le32(b, k + 16)
-                    val bitCount = le16(b, k + 22)
-                    val compression = le32(b, k + 24)
-                    fmtOk = w > 0 && h > 0 && bitCount == 24 && compression == 0
+                    w = le32(b, toff + 4)
+                    h = le32(b, toff + 8)
+                    fmtOk = w > 0 && h > 0 && le16(b, toff + 14) == 24 && le32(b, toff + 16) == 0
                   }
-                  k += 8 + tlen + (tlen & 1)
+                  true
                 }
-              }
-              j += 8 + slen + (slen & 1)
             }
-          } else if (listType == "movi" && moviOff < 0) {
-            moviOff = i + 12; moviEnd = end
-          }
+          case Riff.Movi if moviOff < 0 =>
+            moviOff = off + 4; moviEnd = end; true
+          case _ => true
         }
-        i += 8 + len + (len & 1)
       }
-      if (!fmtOk || moviOff < 0) return None
+      if (!walked || !fmtOk || moviOff < 0) return None
       // untrusted-dims guard (see MaxDecodePixels); the frame cap keeps
       // the Int per-pixel SUMS exact (255 · 127 frames < 2^15)
       if (w.toLong * h > MaxDecodePixels) return None
@@ -1078,18 +953,15 @@ object Multimodal {
       val frameBytes = rowBytes * h
       val sums = new Array[Int](w * h)
       var frames = 0
-      var j = moviOff
-      while (j + 8 <= moviEnd) {
-        val ct = new String(b, j, 4, "US-ASCII")
-        val cl = le32(b, j + 4)
-        if (cl < 0 || j + 8 + cl < j) return None
-        if (ct == "00db") {
-          if (cl != frameBytes || j + 8 + cl > moviEnd || frames >= 127) return None
+      val framesOk = Riff.walk(b, moviOff, moviEnd) { (ct, off, cl) =>
+        if (ct != Riff.Db00) true
+        else if (cl != frameBytes || cl > moviEnd - off || frames >= 127) false
+        else {
           // DIB rows are bottom-up: buffer row r is image row h-1-r
           var r = 0
           while (r < h) {
             val y = h - 1 - r
-            val rowOff = j + 8 + r * rowBytes
+            val rowOff = off + r * rowBytes
             var x = 0
             while (x < w) {
               val o = rowOff + x * 3 // B, G, R
@@ -1100,10 +972,10 @@ object Multimodal {
             r += 1
           }
           frames += 1
+          true
         }
-        j += 8 + cl + (cl & 1)
       }
-      if (frames == 0) None else Some((w, h, sums, frames))
+      if (!framesOk || frames == 0) None else Some((w, h, sums, frames))
     }
 
     /** Structurally valid uncompressed-DIB AVI carrying `frames` (each a
@@ -1118,73 +990,50 @@ object Multimodal {
         junk: Boolean = false): Array[Byte] = {
       require(w > 0 && h > 0 && frames.nonEmpty, "need positive dims and ≥1 frame")
       require(frames.forall(_.length == w * h), "each frame must be w*h pixels")
-      val out = new java.io.ByteArrayOutputStream()
-      def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-      def w32(v: Int): Unit = { w16(v & 0xffff); w16((v >>> 16) & 0xffff) }
-      def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
       val rowBytes = (w * 3 + 3) & ~3
       val frameBytes = rowBytes * h
       val n = frames.length
-      val strlLen = 4 + (8 + 56) + (8 + 40)         // 'strl' + strh + strf
-      val hdrlLen = 4 + (8 + 56) + (8 + strlLen)    // 'hdrl' + avih + LIST strl
-      val junkLen = if (junk) 8 + 12 else 0
-      val moviLen = 4 + n * (8 + frameBytes)        // 'movi' + 00db chunks (frameBytes is 4-aligned)
-      val idx1Len = if (junk) 8 + n * 16 else 0
-      tag("RIFF"); w32(4 + (8 + hdrlLen) + junkLen + (8 + moviLen) + idx1Len); tag("AVI ")
-      tag("LIST"); w32(hdrlLen); tag("hdrl")
-      tag("avih"); w32(56)
-      w32(usPerFrame); w32(0); w32(0); w32(0)
-      w32(n)                                        // dwTotalFrames
-      w32(0); w32(1)                                // dwInitialFrames, dwStreams
-      w32(if (junk) frameBytes * 2 else frameBytes) // dwSuggestedBufferSize (layout-varied)
-      w32(w); w32(h)
-      w32(0); w32(0); w32(0); w32(0)
-      tag("LIST"); w32(strlLen); tag("strl")
-      tag("strh"); w32(56)
-      tag("vids"); tag("DIB ")                      // fccType, fccHandler
-      w32(0); w16(0); w16(0); w32(0)                // flags, priority, language, initialFrames
-      w32(usPerFrame); w32(1000000)                 // scale, rate → fps = rate/scale
-      w32(0); w32(n)                                // start, length
-      w32(frameBytes); w32(0); w32(0)               // suggestedBufferSize, quality, sampleSize
-      w16(0); w16(0); w16(w); w16(h)                // rcFrame
-      tag("strf"); w32(40)
-      w32(40); w32(w); w32(h)                       // biSize, biWidth, biHeight (bottom-up)
-      w16(1); w16(24)                               // biPlanes, biBitCount
-      w32(0); w32(frameBytes)                       // biCompression = BI_RGB, biSizeImage
-      w32(0); w32(0); w32(0); w32(0)                // pels/meter, clrUsed, clrImportant
-      if (junk) { tag("JUNK"); w32(12); tag("graftpad0000") }
-      tag("LIST"); w32(moviLen); tag("movi")
-      frames.foreach { f =>
-        tag("00db"); w32(frameBytes)
-        var r = 0
-        while (r < h) {
-          val y = h - 1 - r // bottom-up
-          var x = 0
-          while (x < w) {
-            val v = f(y * w + x) & 0xff
-            out.write(v); out.write(v); out.write(v) // B = G = R
-            x += 1
+      Riff.write("AVI ") { out =>
+        out.list("hdrl") {
+          VideoHeader.avih(out, usPerFrame, n,
+            if (junk) frameBytes * 2 else frameBytes, w, h) // layout-varied buffer hint
+          out.list("strl") {
+            out.put("strh") {
+              out.tag("vids"); out.tag("DIB ")          // fccType, fccHandler
+              out.w32(0); out.w16(0); out.w16(0); out.w32(0) // flags, priority, language, initialFrames
+              out.w32(usPerFrame); out.w32(1000000)     // scale, rate → fps = rate/scale
+              out.w32(0); out.w32(n)                    // start, length
+              out.w32(frameBytes); out.w32(0); out.w32(0) // suggestedBufferSize, quality, sampleSize
+              out.w16(0); out.w16(0); out.w16(w); out.w16(h) // rcFrame
+            }
+            out.put("strf") {
+              out.w32(40); out.w32(w); out.w32(h)       // biSize, biWidth, biHeight (bottom-up)
+              out.w16(1); out.w16(24)                   // biPlanes, biBitCount
+              out.w32(0); out.w32(frameBytes)           // biCompression = BI_RGB, biSizeImage
+              out.w32(0); out.w32(0); out.w32(0); out.w32(0) // pels/meter, clrUsed, clrImportant
+            }
           }
-          var p = w * 3
-          while (p < rowBytes) { out.write(0); p += 1 }
-          r += 1
+        }
+        if (junk) out.put("JUNK")(out.tag("graftpad0000"))
+        out.list("movi") {
+          frames.foreach { f =>
+            out.put("00db") {
+              (h - 1 to 0 by -1).foreach { y => // bottom-up
+                (0 until w).foreach { x => val v = f(y * w + x); out.w8(v); out.w8(v); out.w8(v) }
+                (w * 3 until rowBytes).foreach(_ => out.w8(0)) // B = G = R, rows 4-aligned
+              }
+            }
+          }
+        }
+        if (junk) out.put("idx1") {
+          (0 until n).foreach { f => // offsets are relative to the movi list type
+            out.tag("00db"); out.w32(0x10)              // AVIIF_KEYFRAME
+            out.w32(4 + f * (8 + frameBytes)); out.w32(frameBytes)
+          }
         }
       }
-      if (junk) {
-        tag("idx1"); w32(n * 16)
-        var f = 0
-        var off = 4 // offsets are relative to the start of the movi list type
-        while (f < n) {
-          tag("00db"); w32(0x10)                    // AVIIF_KEYFRAME
-          w32(off); w32(frameBytes)
-          off += 8 + frameBytes
-          f += 1
-        }
-      }
-      out.toByteArray
     }
   }
-
   /** REAL JPEG codec (ITU-T T.81 / ISO 10918-1, the public JPEG
     * standard) — a genuine entropy decoder, not a header walk, plus the
     * three encoders the fixtures are written with. Each concern has one
@@ -2367,7 +2216,7 @@ object Multimodal {
     * carry REAL 16-bit PCM WAV (rate 8/12/16/20 kHz and 1-2 channels
     * derived from the id) whose SAMPLES come from the deterministic
     * affine rule `min(codepoint, 255)·257 − 32768` — genuine full-range
-    * PCM the sample decoder ([[AudioSamples.decodePcm16]]) really
+    * PCM the sample decoder ([[AudioSamples.decodePcm]]) really
     * decodes, and because the perceptual hash compares cross-multiplied
     * bin MEANS, a positive affine map of the codepoint sequence yields
     * bit-identical dHashes (the ±b·L₁·L₂ terms cancel), keeping the
@@ -2558,15 +2407,7 @@ object PayloadDHashExpr {
       }
       r += 1
     }
-    var hv = 0L
-    var j = 0
-    while (j < 64) {
-      val i1 = (j / 8) * 9 + (j % 8)
-      val i2 = i1 + 1
-      if (sums(i1) * lens(i2) > sums(i2) * lens(i1)) hv |= (1L << j)
-      j += 1
-    }
-    hv
+    bits(sums, lens)
   }
 
   /** 1-D 72-bin dHash over an integer sequence: floor bin boundaries
@@ -2591,15 +2432,21 @@ object PayloadDHashExpr {
       lens(k) = (hi - lo).toLong
       k += 1
     }
-    var h = 0L
+    bits(sums, lens)
+  }
+
+  /** The 64 dHash bits over the 8×9 cells (`sums`, `lens`): bit j
+    * compares the MEAN of cell (j/8, j%8) against its right neighbor,
+    * cross-multiplied so the comparison is exact. */
+  private def bits(sums: Array[Long], lens: Array[Long]): Long = {
+    var hv = 0L
     var j = 0
     while (j < 64) {
       val i1 = (j / 8) * 9 + (j % 8)
-      val i2 = i1 + 1
-      if (sums(i1) * lens(i2) > sums(i2) * lens(i1)) h |= (1L << j)
+      if (sums(i1) * lens(i1 + 1) > sums(i1 + 1) * lens(i1)) hv |= (1L << j)
       j += 1
     }
-    h
+    hv
   }
 
   /** Boxed so an unparseable container can signal null; called from
@@ -2619,7 +2466,7 @@ object PayloadDHashExpr {
       case Some((w, h, lum)) => return java.lang.Long.valueOf(hashPixels(w, h, lum))
       case None =>
     }
-    Multimodal.AudioSamples.decodePcm16(content) match {
+    Multimodal.AudioSamples.decodePcm(content) match {
       case Some(samples) => return java.lang.Long.valueOf(hashSeq(samples))
       case None =>
     }

@@ -1393,6 +1393,111 @@ class PipelineSpec extends GraftSuite {
     out.write("JUNK".getBytes); b(0xf8, 0xff, 0xff, 0xff) // length -8: cursor would never advance
     out.write(new Array[Byte](32))
     assert(AudioHeader.decode(out.toByteArray).isEmpty) // must return, not loop
+    // lengths near 2^31 in every container: each reader that reaches the
+    // chunk declines, and none throws
+    import graft.functions.PayloadDHashExpr
+    import Multimodal._
+    type Reader = Array[Byte] => Option[Any]
+    val readers: Map[String, Reader] = Map(
+      "decodePngLuma" -> (b => ImagePixels.decodePngLuma(b)),
+      "extractPayload" -> (b => ImageHeader.extractPayload(b)),
+      "AudioHeader.decode" -> (b => AudioHeader.decode(b)),
+      "extractData" -> (b => AudioHeader.extractData(b)),
+      "decodePcm" -> (b => AudioSamples.decodePcm(b)),
+      "VideoHeader.decode" -> (b => VideoHeader.decode(b)),
+      "extractFrame" -> (b => VideoHeader.extractFrame(b)),
+      "decodeDibLumaSums" -> (b => VideoFrames.decodeDibLumaSums(b)))
+    val png = ImageHeader.synthPng(4, 4, "payload".getBytes("US-ASCII"))
+    val gray = ImagePixels.encodePngGray(9, 4, Array.tabulate(36)(_ * 7), level = 6, filter = 4)
+    // an empty unknown ancillary chunk (length, type, CRC) between IHDR and IDAT
+    val unknown = gray.take(33) ++ new Array[Byte](4) ++ "grAf".getBytes("US-ASCII") ++
+      new Array[Byte](4) ++ gray.drop(33)
+    val wav = AudioSamples.synthPcmWav(8000, 1, Array.tabulate(30)(_ * 100))
+    val wavList = AudioSamples.synthPcmWav(8000, 2, Array.tabulate(30)(_ * 100), junk = true)
+    val avi = VideoFrames.synthDibAvi(5, 3, Seq(Array.fill(15)(9), Array.fill(15)(200)), 40000,
+      junk = true)
+    def deep(x: Any): Any = x match { // arrays by content, inside Options and tuples
+      case a: Array[_] => a.toSeq
+      case p: Product => p.productIterator.map(deep).toList
+      case v => v
+    }
+    def at(b: Array[Byte], tag: String): Int =
+      b.indices.find(i => i + 4 <= b.length && new String(b, i, 4, "US-ASCII") == tag).get
+    // (name, file, offset of the length field, big-endian?, readers that
+    // reach the chunk and must decline); every other reader must answer
+    // as it does on the well-formed file
+    val cases = Seq(
+      ("PNG tEXt", png, at(png, "tEXt") - 4, true, Seq("decodePngLuma", "extractPayload")),
+      ("PNG IDAT", gray, at(gray, "IDAT") - 4, true, Seq("decodePngLuma", "extractPayload")),
+      ("PNG unknown", unknown, at(unknown, "grAf") - 4, true, Seq("decodePngLuma", "extractPayload")),
+      ("WAV data", wav, at(wav, "data") + 4, false,
+        Seq("AudioHeader.decode", "extractData", "decodePcm")),
+      ("WAV LIST", wavList, at(wavList, "LIST") + 4, false,
+        Seq("AudioHeader.decode", "extractData", "decodePcm")),
+      ("AVI hdrl", avi, at(avi, "hdrl") - 4, false,
+        Seq("VideoHeader.decode", "extractFrame", "decodeDibLumaSums")),
+      ("AVI strl", avi, at(avi, "strl") - 4, false, Seq("decodeDibLumaSums")),
+      ("AVI JUNK", avi, at(avi, "JUNK") + 4, false, Seq("extractFrame", "decodeDibLumaSums")),
+      ("AVI movi", avi, at(avi, "movi") - 4, false, Seq("extractFrame", "decodeDibLumaSums")),
+      ("AVI 00db", avi, at(avi, "00db") + 4, false, Seq("extractFrame", "decodeDibLumaSums")))
+    for ((name, file, lenAt, bigEndian, decline) <- cases; len <- Seq(0x7fffffff, 0x7ffffff0)) {
+      assert(decline.exists(r => readers(r)(file).nonEmpty), s"$name decodes when well-formed")
+      val bb = java.nio.ByteBuffer.wrap(file.clone())
+      if (!bigEndian) bb.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      val bad = bb.putInt(lenAt, len).array()
+      readers.foreach { case (r, read) =>
+        val want = if (decline.contains(r)) None else read(file)
+        assert(deep(read(bad)) == deep(want), s"$r on $name, length $len")
+      }
+      PayloadDHashExpr.hash(bad) // a Long or null: must not throw
+    }
+    // an Adam7 PNG declaring a 2^31 - 1 row height declines too (the pass
+    // geometry must not overflow), and a PNG cut inside its IHDR is not
+    // rewritten
+    val adam7 = java.nio.ByteBuffer.wrap(ImagePixels.encodePngGrayAdam7(9, 4,
+      Array.tabulate(36)(_ * 7), level = 6, filter = 4)).putInt(20, 0x7fffffff).array()
+    assert(ImagePixels.decodePngLuma(adam7).isEmpty)
+    assert(ImageHeader.rewriteDims(gray.take(30), 2, 2).isEmpty)
+  }
+
+  test("every RIFF writer pads an odd chunk and counts the pad in the RIFF size") {
+    import Multimodal._
+    def le32(b: Array[Byte], i: Int): Int =
+      java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt(i)
+    // every chunk of [from, end) starts at an even offset, LISTs recursively,
+    // and the last one (with its pad byte) ends exactly at `end`
+    def aligned(b: Array[Byte], from: Int, end: Int): Boolean = {
+      var i = from
+      var ok = true
+      while (ok && i < end) {
+        val len = le32(b, i + 4)
+        ok = i % 2 == 0 && len >= 0 && i + 8 + len <= end &&
+          (new String(b, i, 4, "US-ASCII") != "LIST" || aligned(b, i + 12, i + 8 + len))
+        i += 8 + len + (len & 1)
+      }
+      ok && i == end
+    }
+    for (n <- Seq(1, 2, 3, 4, 7); ch <- Seq(1, 2)) {
+      val s16 = Array.tabulate(n)(i => i * 1000 - 3000)
+      val s8 = Array.tabulate(n)(i => (i * 37) % 256)
+      val payload = Array.tabulate(n)(_.toByte)
+      val files = Seq(
+        "synthWav" -> AudioHeader.synthWav(8000, ch, payload),
+        "synthPcmWav" -> AudioSamples.synthPcmWav(8000, ch, s16, junk = n % 2 == 0),
+        "synthPcm8Wav" -> AudioSamples.synthPcm8Wav(8000, ch, s8, junk = n % 2 == 1),
+        "synthPcm24Wav" -> AudioSamples.synthPcm24Wav(8000, ch, s16, junk = n % 2 == 0),
+        "synthFloatWav" -> AudioSamples.synthFloatWav(8000, ch, s16, junk = n % 2 == 1),
+        "synthAvi" -> VideoHeader.synthAvi(4, 4, 2, 40000, payload),
+        "synthDibAvi" -> VideoFrames.synthDibAvi(n, ch, Seq(Array.fill(n * ch)(7)), 40000,
+          junk = n % 2 == 0))
+      files.foreach { case (name, f) =>
+        assert(le32(f, 4) == f.length - 8, s"$name n=$n ch=$ch: RIFF size")
+        assert(aligned(f, 12, f.length), s"$name n=$n ch=$ch: chunk alignment")
+      }
+      // the pad byte never reaches the samples
+      assert(AudioSamples.decodePcm(files(2)._2).get.sameElements(s8.map(u => (u - 128) * 257)))
+      assert(AudioSamples.decodePcm(files(3)._2).get.sameElements(s16))
+    }
   }
 
   test("dot/normalize propagate null on malformed vectors (no garbage results)") {
@@ -1791,8 +1896,8 @@ class PipelineSpec extends GraftSuite {
     val mono = Multimodal.AudioSamples.synthPcmWav(16000, 1, samples)
     val stereoJunk = Multimodal.AudioSamples.synthPcmWav(8000, 2, samples, junk = true)
     assert(!mono.sameElements(stereoJunk)) // different bytes...
-    assert(Multimodal.AudioSamples.decodePcm16(mono).get.sameElements(samples))
-    assert(Multimodal.AudioSamples.decodePcm16(stereoJunk).get.sameElements(samples))
+    assert(Multimodal.AudioSamples.decodePcm(mono).get.sameElements(samples))
+    assert(Multimodal.AudioSamples.decodePcm(stereoJunk).get.sameElements(samples))
     // ...same samples → identical perceptual hash; and it is the SAMPLE
     // hash, not any byte/payload walk
     assert(PayloadDHashExpr.hash(mono) == PayloadDHashExpr.hash(stereoJunk))
@@ -1819,7 +1924,7 @@ class PipelineSpec extends GraftSuite {
       out.toByteArray
     }
     // floor mean: (100+101)/2 = 100, (-100 + -101)/2 = floor(-100.5) = -101
-    assert(Multimodal.AudioSamples.decodePcm16(bytesLR).get.toSeq == Seq(100, -101))
+    assert(Multimodal.AudioSamples.decodePcm(bytesLR).get.toSeq == Seq(100, -101))
   }
 
   test("PCM matrix: 8-bit and IEEE-float WAVs decode to the same signal as PCM16") {

@@ -174,8 +174,8 @@ object TextExprPropertySpec extends Properties("TextExprs") {
       // decode must invert the encode exactly (mixdown of replicated
       // channels is the identity), and the hash must be invariant to
       // channel count, sample rate, and the junk LIST chunk
-      Multimodal.AudioSamples.decodePcm16(mono).get.sameElements(samples) &&
-        Multimodal.AudioSamples.decodePcm16(multi).get.sameElements(samples) &&
+      Multimodal.AudioSamples.decodePcm(mono).get.sameElements(samples) &&
+        Multimodal.AudioSamples.decodePcm(multi).get.sameElements(samples) &&
         PayloadDHashExpr.hash(mono) == expected &&
         PayloadDHashExpr.hash(multi) == expected
     }
@@ -405,11 +405,13 @@ object TextExprPropertySpec extends Properties("TextExprs") {
           (Seq(0), 0, 0, 1, 0), (Seq(0), 1, 63, 1, 0)),
         "fp".getBytes("US-ASCII")),
       ImageHeader.synthPng(4, 4, Array.tabulate(20)(i => (i + seed).toByte)),
+      ImageHeader.synthJpeg(4, 4, Array.tabulate(20)(i => (i + seed).toByte)),
+      AudioHeader.synthWav(8000, 1 + seed % 2, Array.tabulate(21 + seed % 2)(i => (i + seed).toByte)),
       VideoHeader.synthAvi(4, 4, 2, 40000, Array.tabulate(20)(i => (i + seed).toByte)))
   }
 
   property("decoder totality: corrupted containers never throw from the hash chain") =
-    Prop.forAll(Gen.chooseNum(0, 10000), Gen.chooseNum(0, 2), Gen.chooseNum(0, 1 << 20)) {
+    Prop.forAll(Gen.chooseNum(0, 10000), Gen.chooseNum(0, 3), Gen.chooseNum(0, 1 << 20)) {
       (seed, mode, r) =>
         import graft.functions.PayloadDHashExpr
         validContainers(seed).forall { bytes =>
@@ -418,8 +420,13 @@ object TextExprPropertySpec extends Properties("TextExprs") {
             case 0 => bytes.take(at) // truncate
             case 1 => // flip one byte
               val c = bytes.clone(); c(at) = (c(at) ^ 0xff).toByte; c
-            case _ => // overwrite a byte with an arbitrary value
+            case 2 => // overwrite a byte with an arbitrary value
               val c = bytes.clone(); c(at) = (r >> 8).toByte; c
+            case _ => // a length near 2^31 (0x7fffffff - k) in either byte order
+              val bb = java.nio.ByteBuffer.wrap(bytes.clone())
+              if ((r & 1) == 1) bb.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+              bb.putInt(java.lang.Math.floorMod(r >> 5, math.max(1, bytes.length - 3)),
+                0x7fffffff - ((r >> 1) & 15)).array()
           }
           PayloadDHashExpr.hash(mutated) // Long or null — must not throw
           true

@@ -18,7 +18,11 @@
 #   fresh expression id in the source makes them;
 # task/stream/driver: the compiling thread, an executor task, a stream's
 #   micro-batch thread or any other driver thread.
-# A warm call (i = 2) should compile 0. Set CODEGEN_AUDIT_DIR to a
+# Each CALL is charged the last N compile records before its line, N
+# being the compiles= count PerfProbe prints on it; older records (JVM
+# and session start, a --scale corpus) print first as one
+#   [codegen_audit] PRE compiles=N seen=S new=M task=T stream=R driver=D
+# line. A warm call (i = 2) should compile 0. Set CODEGEN_AUDIT_DIR to a
 # directory to keep every compiled source there as <query>-<i>-<n>.java
 # for diffing. SPARK_GRAFT_CPUS sets the core count as for PerfProbe.
 set -u
@@ -70,6 +74,24 @@ def close():
         compiles.append((record[0], "\n".join(record[1])))
     record = None
 
+def report(label, records, call):
+    old = new = 0
+    kinds = {"task": 0, "stream": 0, "driver": 0}
+    for n, (thread, src) in enumerate(records):
+        h = hashlib.sha256(src.encode()).hexdigest()
+        if h in seen:
+            old += 1
+        else:
+            new += 1
+            seen.add(h)
+        kinds[kind(thread)] += 1
+        if dump and call:
+            with open(os.path.join(dump, "%s-%s-%d.java" % (call.group(1), call.group(2), n)), "w") as f:
+                f.write(src + "\n")
+    print("[codegen_audit] %s compiles=%d seen=%d new=%d task=%d stream=%d driver=%d"
+          % (label, len(records), old, new,
+             kinds["task"], kinds["stream"], kinds["driver"]), file=sys.stderr, flush=True)
+
 def kind(thread):
     if thread.startswith("Executor task launch worker"):
         return "task"
@@ -90,25 +112,16 @@ for line in sys.stdin:
         continue
     close()
     print(line, flush=True)
-    call = re.match(r"CALL (\S+) (\d+) ", line)
+    call = re.match(r"CALL (\S+) (\d+) .*compiles=(\d+)", line)
     if not call:
         continue
-    old = new = 0
-    kinds = {"task": 0, "stream": 0, "driver": 0}
-    for n, (thread, src) in enumerate(compiles):
-        h = hashlib.sha256(src.encode()).hexdigest()
-        if h in seen:
-            old += 1
-        else:
-            new += 1
-            seen.add(h)
-        kinds[kind(thread)] += 1
-        if dump:
-            with open(os.path.join(dump, "%s-%s-%d.java" % (call.group(1), call.group(2), n)), "w") as f:
-                f.write(src + "\n")
-    print("[codegen_audit] CALL %s %s compiles=%d seen=%d new=%d task=%d stream=%d driver=%d"
-          % (call.group(1), call.group(2), len(compiles), old, new,
-             kinds["task"], kinds["stream"], kinds["driver"]), file=sys.stderr, flush=True)
+    # PerfProbe counts the compiles of the call itself; older records
+    # (session start, a scaled corpus written before the first query)
+    # are reported apart rather than charged to the call
+    split = max(0, len(compiles) - int(call.group(3)))
+    if split:
+        report("PRE", compiles[:split], None)
+    report("CALL %s %s" % (call.group(1), call.group(2)), compiles[split:], call)
     compiles = []
 '
 exit "${PIPESTATUS[0]}"
