@@ -423,7 +423,7 @@ object OperatorQueries {
   }
 
   /** T-SQL `TOP n WITH TIES`, round 14 — certifies the guarded rank()
-    * window restatement ([[graft.sql.SqlDialect]] rewriteTopTies)
+    * window restatement ([[graft.sql.SqlDialect]] rewriteTop)
     * end-to-end: ORDER BY a non-unique key, so the result is exactly
     * "the first n rows plus every tie of the n-th" — a set DuckDB's
     * rank()-based oracle reproduces deterministically regardless of

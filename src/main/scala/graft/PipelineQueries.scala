@@ -2119,8 +2119,9 @@ object PipelineQueries {
     * id+700000 with level 9 and a per-id scanline filter
     * (Sub/Up/Average/Paeth), so every defilter branch is exercised on
     * the contract path. The files are byte-different (a byte hash or the
-    * old payload-as-luma hash provably cannot pair them — MultimodalSpec
-    * pins that the tEXt-payload twin files differ), but decode →
+    * old payload-as-luma hash provably cannot pair them — PipelineSpec's
+    * "the different-encoder fixture: same pixels, different bytes, SAME
+    * dHash" test pins it), but decode →
     * de-filter → luma → 2D dHash sees identical pixels, so every
     * (base, copy) pairs at Hamming 0. The oracle never inflates zlib:
     * it recomputes the dHash bits from the same generative pixel rule

@@ -76,9 +76,15 @@ import scala.collection.mutable.ArrayBuffer
   * clause, `ANY/ALL` with other operators or subqueries or quoted
   * array-literal items, DISTINCT ON forms failing the meaning-
   * preservation guards, T-SQL `TOP n PERCENT` / `TOP n WITH TIES`
-  * forms failing [[rewriteTopTies]]'s guards (no ORDER BY, DISTINCT
+  * forms failing [[rewriteTop]]'s guards (no ORDER BY, DISTINCT
   * quantifier, underivable output names, set-operation scope),
-  * and `TOP n` directly over a set operation (UNION/INTERSECT/EXCEPT).
+  * and `TOP n` directly over a set operation (UNION/INTERSECT/EXCEPT/
+  * MINUS).
+  *
+  * A statement-ending `;` closes a SELECT scope like its closing `)`,
+  * and comments are whitespace: a clause rewrite restates its slices
+  * with each comment rendered as a space, and a `TOP n`'s LIMIT lands
+  * before any trailing comment.
   */
 object SqlDialect {
 
@@ -117,7 +123,7 @@ object SqlDialect {
     *    `SELECT TOP n` → trailing `LIMIT n` (plain n or (expr));
     *    `TOP n WITH TIES` → a rank() window filter and `TOP n PERCENT
     *    [WITH TIES]` → a row_number()/rank() + count-over window filter
-    *    with a CEILING row budget ([[rewriteTopTies]], guarded — forms
+    *    with a CEILING row budget ([[rewriteTop]], guarded — forms
     *    failing the guards and set-operation scopes are left untouched
     *    → loud Spark error), 2-arg ISNULL → coalesce, IIF → if, GETDATE/
     *    SYSDATETIME, DATEADD/DATEDIFF (boundary semantics like
@@ -693,10 +699,38 @@ object SqlDialect {
 
   private def text(ts: collection.Seq[Tok]): String = ts.map(_.text).mkString
 
+  /** Whether ts(i) is the keyword `w` (any case); false for i = -1. */
+  private def isWord(ts: collection.Seq[Tok], i: Int, w: String): Boolean =
+    i >= 0 && i < ts.length && (ts(i) match {
+      case Word(x) => x.equalsIgnoreCase(w)
+      case _ => false
+    })
+
+  /** A `--` or block comment (the lexer keeps both as [[Ws]]). */
+  private def isComment(t: Tok): Boolean =
+    t.isInstanceOf[Ws] && (t.text.startsWith("--") || t.text.startsWith("/*"))
+
+  /** ts[from, until) as trimmed text with every comment rendered as a
+    * space: a restated slice lands inside a one-line fragment, where a
+    * `--` comment would swallow the rest of the line. */
+  private def sliceText(ts: ArrayBuffer[Tok], from: Int, until: Int): String =
+    ts.slice(from, until).map(t => if (isComment(t)) " " else t.text).mkString.trim
+
+  private def stripBt(s: String): String = s.stripPrefix("`").stripSuffix("`")
+
   /** Replace ts[from..to] (inclusive) with one Raw token. */
   private def splice(ts: ArrayBuffer[Tok], from: Int, to: Int, raw: String): Unit = {
     ts.remove(from, to - from + 1)
     ts.insert(from, Raw(raw))
+  }
+
+  /** Drive a rewrite that restarts after each change: `step(i)` looks
+    * at token i and returns true when it rewrote, which restarts the
+    * scan at 0 (the splice moved every later index); the pass ends
+    * after a scan with no rewrite. */
+  private def rewriteToFixpoint(ts: ArrayBuffer[Tok])(step: Int => Boolean): Unit = {
+    var i = 0
+    while (i < ts.length) i = if (step(i)) 0 else i + 1
   }
 
   /** Index of the first depth-0 comma between `open` (a "(") and its
@@ -781,9 +815,9 @@ object SqlDialect {
     val ts = ArrayBuffer(lex(sql, dqAsString = mode.dqAsString,
       eStrings = mode.eStrings, bracketIdents = mode.bracketIdents): _*)
 
-    // 0) T-SQL `SELECT TOP n` family: the guarded PERCENT / WITH TIES
-    //    window restatements first, then plain TOP → trailing LIMIT
-    if (mode.msCalls) { rewriteTopTies(ts); rewriteTopN(ts) }
+    // 0) T-SQL `SELECT TOP n` family: plain TOP → trailing LIMIT, the
+    //    PERCENT / WITH TIES forms → guarded window restatements
+    if (mode.msCalls) rewriteTop(ts)
     // 0a) Snowflake/Redshift QUALIFY → guarded subquery + WHERE
     if (mode.qualifyClause) rewriteQualify(ts)
 
@@ -1063,12 +1097,17 @@ object SqlDialect {
     text(ts.toSeq)
   }
 
+  /** The set operators: a clause rewrite skips a SELECT scope holding
+    * one at depth 0 (its restatement or LIMIT would bind to the wrong
+    * branch). */
+  private val setOpWords = Set("union", "intersect", "except", "minus")
+
   /** Keywords that can terminate an ORDER BY item list at depth 0 (the
     * statement tail after ORDER BY, a window frame clause, or a set
     * operator sharing the scope). */
-  private val orderStopWords = Set(
-    "limit", "offset", "fetch", "rows", "range", "groups", "union",
-    "intersect", "except", "minus", "for", "window", "into", "returning")
+  private val orderStopWords = setOpWords ++ Set(
+    "limit", "offset", "fetch", "rows", "range", "groups", "for", "window",
+    "into", "returning")
 
   /** Postgres/Redshift/Snowflake rank NULLS LAST under ASC and NULLS
     * FIRST under DESC; Spark (like T-SQL and BigQuery) defaults to the
@@ -1086,16 +1125,8 @@ object SqlDialect {
   private def rewriteNullsOrdering(ts: ArrayBuffer[Tok]): Unit = {
     var i = 0
     while (i < ts.length) {
-      val isOrder = ts(i) match {
-        case Word(w) => w.equalsIgnoreCase("order")
-        case _ => false
-      }
-      val by = if (isOrder) nextIdx(ts, i) else -1
-      val isBy = by >= 0 && (ts(by) match {
-        case Word(w) => w.equalsIgnoreCase("by")
-        case _ => false
-      })
-      if (isBy) {
+      val by = if (isWord(ts, i, "order")) nextIdx(ts, i) else -1
+      if (isWord(ts, by, "by")) {
         // walk the item list; j is the scan cursor, itemStart/lastSig
         // track the current item's extent (significant tokens only)
         var j = by + 1
@@ -1107,23 +1138,12 @@ object SqlDialect {
         // unless the item already has one (or a USING clause)
         def closeItem(): Unit = {
           if (lastSig >= 0 && !itemHasUsing) {
-            val hasNulls = ts(lastSig) match {
-              case Word(w) if w.equalsIgnoreCase("first") ||
-                  w.equalsIgnoreCase("last") =>
-                val p = prevIdx(ts, lastSig)
-                p >= 0 && (ts(p) match {
-                  case Word(n) => n.equalsIgnoreCase("nulls")
-                  case _ => false
-                })
-              case _ => false
-            }
+            val hasNulls =
+              (isWord(ts, lastSig, "first") || isWord(ts, lastSig, "last")) &&
+                isWord(ts, prevIdx(ts, lastSig), "nulls")
             if (!hasNulls) {
-              val desc = ts(lastSig) match {
-                case Word(w) => w.equalsIgnoreCase("desc")
-                case _ => false
-              }
-              ts.insert(lastSig + 1,
-                Raw(if (desc) " NULLS FIRST" else " NULLS LAST"))
+              ts.insert(lastSig + 1, Raw(
+                if (isWord(ts, lastSig, "desc")) " NULLS FIRST" else " NULLS LAST"))
               j += 1 // account for the inserted token
             }
           }
@@ -1140,7 +1160,7 @@ object SqlDialect {
             case Word(w) if depth == 0 &&
                 orderStopWords.contains(w.toLowerCase) =>
               closeItem(); done = true
-            case Word(w) if depth == 0 && w.equalsIgnoreCase("using") =>
+            case _ if depth == 0 && isWord(ts, j, "using") =>
               itemHasUsing = true; lastSig = j
             case _: Ws =>
             case _ => lastSig = j
@@ -1187,70 +1207,43 @@ object SqlDialect {
     * LOUDLY at runtime instead of changing meaning. Only the FROM/JOIN
     * position rewrites; a projection-position generate_series passes
     * through to Spark's own unknown-function error. */
-  private def rewriteGenerateSeries(ts: ArrayBuffer[Tok]): Unit = {
-    var restart = true
-    while (restart) {
-      restart = false
-      var i = 0
-      while (i < ts.length && !restart) {
-        // FROM / JOIN position only: a comma-separated FROM-list item is
-        // not distinguishable from a SELECT-list item at token level, and
-        // a projection-position generate_series must stay untouched (it
-        // then fails with Spark's own unknown-function error)
-        val isFromPos = ts(i) match {
-          case Word(w) => w.equalsIgnoreCase("from") || w.equalsIgnoreCase("join")
-          case _ => false
-        }
-        if (isFromPos) {
-          val g = nextIdx(ts, i)
-          val isGs = g >= 0 && (ts(g) match {
-            case Word(w) => w.equalsIgnoreCase("generate_series")
-            case _ => false
-          })
-          if (isGs) {
-            val open = nextIdx(ts, g)
-            if (open >= 0 && ts(open) == Sym("(")) {
-              {
-                val close = primaryEnd(ts, open)
-                val hasStep = topLevelComma(ts, open, close) > 0 && {
-                  val c1 = topLevelComma(ts, open, close)
-                  topLevelComma(ts, c1, close) > 0
-                }
-                val argsText = text(ts.slice(open + 1, close)).trim +
-                  (if (hasStep) "" else ", 1")
-                // optional [AS] alias [( col )]
-                var end = close
-                var aliasName = "generate_series"
-                var colName = "generate_series"
-                var j = nextIdx(ts, close)
-                if (j >= 0) ts(j) match {
-                  case Word(a) if a.equalsIgnoreCase("as") => j = nextIdx(ts, j)
-                  case _ =>
-                }
-                if (j >= 0) ts(j) match {
-                  case Word(a) if !postFromKeywords.contains(a.toLowerCase) =>
-                    aliasName = a; end = j
-                    val p1 = nextIdx(ts, j)
-                    if (p1 >= 0 && ts(p1) == Sym("(")) {
-                      val p2 = nextIdx(ts, p1)
-                      val p3 = if (p2 >= 0) nextIdx(ts, p2) else -1
-                      (if (p2 >= 0) ts(p2) else null, if (p3 >= 0) ts(p3) else null) match {
-                        case (Word(c), Sym(")")) => colName = c; end = p3
-                        case _ =>
-                      }
-                    }
-                  case QIdent(a) => aliasName = a; end = j
-                  case _ =>
-                }
-                splice(ts, g, end,
-                  s"(SELECT explode(sequence($argsText)) AS $colName) $aliasName")
-                restart = true
-              }
+  private def rewriteGenerateSeries(ts: ArrayBuffer[Tok]): Unit = rewriteToFixpoint(ts) { i =>
+    // FROM / JOIN position only: a comma-separated FROM-list item is
+    // not distinguishable from a SELECT-list item at token level, and
+    // a projection-position generate_series must stay untouched (it
+    // then fails with Spark's own unknown-function error)
+    val g = if (isWord(ts, i, "from") || isWord(ts, i, "join")) nextIdx(ts, i) else -1
+    val open = if (isWord(ts, g, "generate_series")) nextIdx(ts, g) else -1
+    open >= 0 && ts(open) == Sym("(") && {
+      val close = primaryEnd(ts, open)
+      val c1 = topLevelComma(ts, open, close)
+      val hasStep = c1 > 0 && topLevelComma(ts, c1, close) > 0
+      val argsText = text(ts.slice(open + 1, close)).trim +
+        (if (hasStep) "" else ", 1")
+      // optional [AS] alias [( col )]
+      var end = close
+      var aliasName = "generate_series"
+      var colName = "generate_series"
+      var j = nextIdx(ts, close)
+      if (isWord(ts, j, "as")) j = nextIdx(ts, j)
+      if (j >= 0) ts(j) match {
+        case Word(a) if !postFromKeywords.contains(a.toLowerCase) =>
+          aliasName = a; end = j
+          val p1 = nextIdx(ts, j)
+          if (p1 >= 0 && ts(p1) == Sym("(")) {
+            val p2 = nextIdx(ts, p1)
+            val p3 = if (p2 >= 0) nextIdx(ts, p2) else -1
+            (if (p2 >= 0) ts(p2) else null, if (p3 >= 0) ts(p3) else null) match {
+              case (Word(c), Sym(")")) => colName = c; end = p3
+              case _ =>
             }
           }
-        }
-        i += 1
+        case QIdent(a) => aliasName = a; end = j
+        case _ =>
       }
+      splice(ts, g, end,
+        s"(SELECT explode(sequence($argsText)) AS $colName) $aliasName")
+      true
     }
   }
 
@@ -1264,47 +1257,84 @@ object SqlDialect {
   private def rewriteSimilarTo(ts: ArrayBuffer[Tok]): Unit = {
     var i = 0
     while (i < ts.length) {
-      val isSimilar = ts(i) match {
-        case Word(w) => w.equalsIgnoreCase("similar")
-        case _ => false
-      }
-      if (isSimilar) {
-        val toIdx = nextIdx(ts, i)
-        val isTo = toIdx >= 0 && (ts(toIdx) match {
-          case Word(w) => w.equalsIgnoreCase("to")
-          case _ => false
-        })
-        if (isTo) {
-          val patIdx = nextIdx(ts, toIdx)
-          val patOk = patIdx >= 0 && ts(patIdx).isInstanceOf[Str]
-          val afterPat = if (patOk) nextIdx(ts, patIdx) else -1
-          val hasEscape = afterPat >= 0 && (ts(afterPat) match {
-            case Word(w) => w.equalsIgnoreCase("escape")
-            case _ => false
-          })
-          if (patOk && !hasEscape) {
-            // [NOT] before SIMILAR
-            val p = prevIdx(ts, i)
-            val negIdx = if (p >= 0) ts(p) match {
-              case Word(w) if w.equalsIgnoreCase("not") => p
-              case _ => -1
-            } else -1
-            val lhsEnd = prevIdx(ts, if (negIdx >= 0) negIdx else i)
-            if (lhsEnd >= 0 && isOperandEnd(ts(lhsEnd))) {
-              val lhsStart = primaryStart(ts, lhsEnd)
-              val lhs = text(ts.slice(lhsStart, lhsEnd + 1))
-              val lit = ts(patIdx).text
-              val regex = similarToRegex(lit.substring(1, lit.length - 1))
-              val neg = if (negIdx >= 0) "NOT " else ""
-              splice(ts, lhsStart, patIdx,
-                s"$neg$lhs RLIKE '${regex.replace("'", "''")}'")
-              i = lhsStart
-            }
+      val toIdx = if (isWord(ts, i, "similar")) nextIdx(ts, i) else -1
+      if (isWord(ts, toIdx, "to")) {
+        val patIdx = nextIdx(ts, toIdx)
+        val patOk = patIdx >= 0 && ts(patIdx).isInstanceOf[Str]
+        if (patOk && !isWord(ts, nextIdx(ts, patIdx), "escape")) {
+          // [NOT] before SIMILAR
+          val p = prevIdx(ts, i)
+          val negIdx = if (isWord(ts, p, "not")) p else -1
+          val lhsEnd = prevIdx(ts, if (negIdx >= 0) negIdx else i)
+          if (lhsEnd >= 0 && isOperandEnd(ts(lhsEnd))) {
+            val lhsStart = primaryStart(ts, lhsEnd)
+            val lhs = text(ts.slice(lhsStart, lhsEnd + 1))
+            val lit = ts(patIdx).text
+            val regex = similarToRegex(lit.substring(1, lit.length - 1))
+            val neg = if (negIdx >= 0) "NOT " else ""
+            splice(ts, lhsStart, patIdx,
+              s"$neg$lhs RLIKE '${regex.replace("'", "''")}'")
+            i = lhsStart
           }
         }
       }
       i += 1
     }
+  }
+
+  /** One SELECT scope, walked from `start` (the first select-list
+    * token) at depth 0: the first FROM, the first QUALIFY and the first
+    * LIMIT|OFFSET after it, the first ORDER BY (-1 when absent), the
+    * ORDER BY item text, whether a set operator shares the scope, and
+    * `end`: the index of the `)` or `;` closing the scope, or ts.length. */
+  private final case class Scope(start: Int, from: Int, qualify: Int, order: Int,
+      tail: Int, setOp: Boolean, end: Int, orderText: Option[String]) {
+    /** Where the clauses before ORDER BY / the tail / the scope end stop. */
+    def bodyEnd: Int = if (order >= 0) order else if (tail >= 0) tail else end
+  }
+
+  private def selectScope(ts: ArrayBuffer[Tok], start: Int): Scope = {
+    var from = -1; var qualify = -1; var order = -1; var tail = -1
+    var setOp = false
+    var depth = 0
+    var k = start
+    while (k < ts.length && !(depth == 0 && (ts(k) == Sym(")") || ts(k) == Sym(";")))) {
+      ts(k) match {
+        case Sym("(") => depth += 1
+        case Sym(")") => depth -= 1
+        case Word(w) if depth == 0 => w.toLowerCase match {
+          case "from" if from < 0 => from = k
+          case "qualify" if qualify < 0 && from >= 0 => qualify = k
+          case "order" if order < 0 && isWord(ts, nextIdx(ts, k), "by") => order = k
+          case "limit" | "offset" if tail < 0 && from >= 0 => tail = k
+          case wl => setOp ||= setOpWords.contains(wl)
+        }
+        case _ =>
+      }
+      k += 1
+    }
+    val orderText = if (order < 0) None
+      else Some(sliceText(ts, nextIdx(ts, order) + 1, if (tail >= 0) tail else k))
+    Scope(start, from, qualify, order, tail, setOp, k, orderText)
+  }
+
+  /** Replace the SELECT at `sel` (scope `sc`) with the subquery
+    * restatement the DISTINCT ON, QUALIFY and TOP window rewrites share:
+    * `SELECT [DISTINCT ]names FROM (SELECT items[, win] mid) alias WHERE
+    * cond [ORDER BY o] [tail]` — items are the select list, mid runs
+    * from FROM to `midEnd`, and the ORDER BY and LIMIT|OFFSET tail move
+    * to the outer select. A `)` or `;` closing the scope stays. */
+  private def restate(ts: ArrayBuffer[Tok], sel: Int, sc: Scope, midEnd: Int,
+      items: Seq[(String, Option[String])], win: String, alias: String,
+      cond: String, distinct: Boolean = false): Unit = {
+    val dk = if (distinct) "DISTINCT " else ""
+    val winCol = if (win.isEmpty) "" else s", $win"
+    val order = sc.orderText.fold("")(o => s" ORDER BY $o")
+    val tail = if (sc.tail >= 0) " " + sliceText(ts, sc.tail, sc.end) else ""
+    splice(ts, sel, sc.end - 1,
+      s"SELECT $dk${items.map(_._1).mkString(", ")} FROM (SELECT " +
+        s"${sliceText(ts, sc.start, sc.from)}$winCol ${sliceText(ts, sc.from, midEnd)}) " +
+        s"$alias WHERE $cond$order$tail")
   }
 
   /** Postgres `SELECT DISTINCT ON (keys) items FROM … [ORDER BY o]
@@ -1340,102 +1370,32 @@ object SqlDialect {
     * key naming a select alias that shadows a real input column keeps
     * the input-column meaning; alias keys over bare columns are
     * idempotent either way. */
-  private def rewriteDistinctOn(ts: ArrayBuffer[Tok]): Unit = {
-    def isWord(t: Tok, w: String) = t match {
-      case Word(x) => x.equalsIgnoreCase(w)
-      case _ => false
-    }
-    var restart = true
-    while (restart) {
-      restart = false
-      var i = 0
-      while (i < ts.length && !restart) {
-        if (isWord(ts(i), "select")) {
-          val d = nextIdx(ts, i)
-          val o = if (d >= 0 && isWord(ts(d), "distinct")) nextIdx(ts, d) else -1
-          val open = if (o >= 0 && isWord(ts(o), "on")) nextIdx(ts, o) else -1
-          if (open >= 0 && ts(open) == Sym("(")) {
-            val keysClose = primaryEnd(ts, open)
-            val keysText = text(ts.slice(open + 1, keysClose)).trim
-            // positional keys (DISTINCT ON (1)) are ORDER BY-style refs
-            // the inner window cannot reproduce — skip
-            val keysPositional = ts.slice(open + 1, keysClose).exists {
-              case Num(_) => true
-              case _ => false
-            }
-            // scan the scope: first depth-0 FROM / ORDER BY / LIMIT|OFFSET,
-            // any depth-0 set op, the scope end
-            var depth = 0
-            var k = keysClose + 1
-            var fromIdx = -1; var orderIdx = -1; var tailIdx = -1
-            var setOp = false
-            var scopeEnd = ts.length
-            while (k < ts.length && scopeEnd == ts.length) {
-              ts(k) match {
-                case Sym("(") => depth += 1
-                case Sym(")") => if (depth == 0) scopeEnd = k else depth -= 1
-                // a statement-terminating semicolon ends the scope (verbatim
-                // .sql files commonly carry one)
-                case Sym(";") if depth == 0 => scopeEnd = k
-                case Word(w) if depth == 0 =>
-                  val wl = w.toLowerCase
-                  if (wl == "from" && fromIdx < 0) fromIdx = k
-                  else if (wl == "order" && orderIdx < 0 && {
-                    val nb = nextIdx(ts, k); nb >= 0 && isWord(ts(nb), "by")
-                  }) orderIdx = k
-                  else if ((wl == "limit" || wl == "offset") && tailIdx < 0 &&
-                    fromIdx >= 0) tailIdx = k
-                  else if (wl == "union" || wl == "intersect" || wl == "except")
-                    setOp = true
-                case _ =>
-              }
-              k += 1
-            }
-            val itemsEnd = if (fromIdx >= 0) fromIdx else -1
-            if (!keysPositional && !setOp && itemsEnd > keysClose) {
-              // output names + underlying chains (None = underivable → skip)
-              val items = selectListItems(ts, keysClose + 1, itemsEnd)
-              val midEnd =
-                if (orderIdx >= 0) orderIdx
-                else if (tailIdx >= 0) tailIdx else scopeEnd
-              val orderText =
-                if (orderIdx >= 0) {
-                  val byIdx = nextIdx(ts, orderIdx)
-                  val oEnd = if (tailIdx >= 0) tailIdx else scopeEnd
-                  Some(text(ts.slice(byIdx + 1, oEnd)).trim)
-                } else None
-              // the window's ORDER BY resolves against the INPUT scope,
-              // so alias-typed order items substitute their underlying
-              // column ([[windowOrderFor]]); no ORDER BY → keys order
-              // (keysText is input-scope by construction)
-              val windowOrder: Option[String] = orderText match {
-                case Some(ot) => items.flatMap(its => windowOrderFor(ot, its))
-                case None => Some(keysText)
-              }
-              if (items.isDefined && windowOrder.isDefined) {
-                val itemsText = text(ts.slice(keysClose + 1, itemsEnd)).trim
-                val midText = text(ts.slice(fromIdx, midEnd)).trim
-                val tailText =
-                  if (tailIdx >= 0) " " + text(ts.slice(tailIdx, scopeEnd)).trim
-                  else ""
-                val outerOrder = orderText.map(ot => s" ORDER BY $ot").getOrElse("")
-                val namesCsv = items.get.map(_._1).mkString(", ")
-                splice(ts, i, scopeEnd - 1,
-                  s"SELECT $namesCsv FROM (SELECT $itemsText, row_number() OVER " +
-                    s"(PARTITION BY $keysText ORDER BY ${windowOrder.get}) AS __gd_rn " +
-                    s"$midText) __gd WHERE __gd_rn = 1$outerOrder$tailText")
-                restart = true
-              }
-            }
+  private def rewriteDistinctOn(ts: ArrayBuffer[Tok]): Unit = rewriteToFixpoint(ts) { i =>
+    val d = if (isWord(ts, i, "select")) nextIdx(ts, i) else -1
+    val o = if (isWord(ts, d, "distinct")) nextIdx(ts, d) else -1
+    val open = if (isWord(ts, o, "on")) nextIdx(ts, o) else -1
+    open >= 0 && ts(open) == Sym("(") && {
+      val keysClose = primaryEnd(ts, open)
+      val keysText = sliceText(ts, open + 1, keysClose)
+      // positional keys (DISTINCT ON (1)) are ORDER BY-style refs the
+      // inner window cannot reproduce — skip
+      val keysPositional = (open + 1 until keysClose).exists(ts(_).isInstanceOf[Num])
+      val sc = selectScope(ts, keysClose + 1)
+      !keysPositional && !sc.setOp && sc.from >= 0 &&
+        selectListItems(ts, sc.start, sc.from).exists { items =>
+          // the window's ORDER BY resolves against the INPUT scope, so
+          // alias-typed order items substitute their underlying column
+          // ([[windowOrderFor]]); no ORDER BY → keys order (keysText is
+          // input-scope by construction)
+          sc.orderText.fold(Option(keysText))(windowOrderFor(_, items)).exists { wo =>
+            restate(ts, i, sc, sc.bodyEnd, items, s"row_number() OVER " +
+              s"(PARTITION BY $keysText ORDER BY $wo) AS __gd_rn", "__gd", "__gd_rn = 1")
+            true
           }
         }
-        i += 1
-      }
     }
   }
 
-  /** Output names of a select list slice, or None when any item's name
-    * is underivable (`*`, unaliased expressions). */
   /** Select-list items as (output name, underlying bare-column chain):
     * the chain is Some("t.a"-style text) when the item is a bare
     * (possibly qualified) column or an alias OF one, None when the
@@ -1524,14 +1484,10 @@ object SqlDialect {
     * the caller skips the rewrite (loud). */
   private def windowOrderFor(orderText: String,
       items: Seq[(String, Option[String])]): Option[String] = {
-    val byName = items.map { case (n, e) =>
-      n.stripPrefix("`").stripSuffix("`").toLowerCase -> e }.toMap
+    val byName = items.map { case (n, e) => stripBt(n).toLowerCase -> e }.toMap
     val parts: Seq[Option[String]] = orderText.split(",").toSeq.map { raw =>
-      val words = raw.trim.split("\\s+").toSeq
-      val (baseWords, sufWords) = words.span(w =>
-        !Set("asc", "desc", "nulls").contains(w.toLowerCase))
-      val base = baseWords.mkString(" ")
-      val key = base.stripPrefix("`").stripSuffix("`")
+      val (base, sufWords) = orderItem(raw)
+      val key = stripBt(base)
       if (base.contains(".") || base.contains("(") || base.contains(" ") ||
           key.isEmpty) None
       else byName.get(key.toLowerCase).flatten.map { chain =>
@@ -1539,6 +1495,14 @@ object SqlDialect {
       }
     }
     if (parts.forall(_.isDefined)) Some(parts.flatten.mkString(", ")) else None
+  }
+
+  /** One ORDER BY item split into its sort key text and its ASC/DESC/
+    * NULLS suffix words. */
+  private def orderItem(raw: String): (String, Seq[String]) = {
+    val (base, suffix) = raw.trim.split("\\s+").toSeq.span(w =>
+      !Set("asc", "desc", "nulls").contains(w.toLowerCase))
+    (base.mkString(" "), suffix)
   }
 
   /** Postgres array membership: `expr = ANY(ARRAY[…])` / `expr =
@@ -1552,82 +1516,62 @@ object SqlDialect {
     * braces, or escapes inside — anything else passes through to
     * Spark's own error). Other operators (`> ANY`, `LIKE ANY`, …)
     * pass through untouched. */
-  private def rewriteAnyAllArray(ts: ArrayBuffer[Tok]): Unit = {
-    var restart = true
-    while (restart) {
-      restart = false
-      var i = 0
-      while (i < ts.length && !restart) {
-        val anyAll = ts(i) match {
-          case Word(w) if w.equalsIgnoreCase("any") => Some(false)
-          case Word(w) if w.equalsIgnoreCase("all") => Some(true)
+  private def rewriteAnyAllArray(ts: ArrayBuffer[Tok]): Unit = rewriteToFixpoint(ts) { i =>
+    val all = isWord(ts, i, "all")
+    val opIdx = if (all || isWord(ts, i, "any")) prevIdx(ts, i) else -1
+    // = ANY → contains, <> ALL → not contains
+    val neg = if (opIdx < 0) None else ts(opIdx) match {
+      case Sym("=") if !all => Some(false)
+      case Sym("<>") | Sym("!=") if all => Some(true)
+      case _ => None
+    }
+    val open = nextIdx(ts, i)
+    neg.isDefined && open >= 0 && ts(open) == Sym("(") && {
+      val close = primaryEnd(ts, open)
+      val inner = nextIdx(ts, open)
+      val lhsEnd = prevIdx(ts, opIdx)
+      if (lhsEnd < 0 || !isOperandEnd(ts(lhsEnd))) false
+      // subquery operand: `= ANY(SELECT …)` IS the SQL-standard
+      // definition of `IN (SELECT …)` and `<> ALL(SELECT …)` of
+      // `NOT IN (SELECT …)` (identical NULL semantics) — Spark parses
+      // neither ANY form but both IN forms, so only the operator
+      // spelling changes; the subquery tokens stay live
+      else if (isWord(ts, inner, "select") || isWord(ts, inner, "with")) {
+        splice(ts, opIdx, i, if (neg.get) " NOT IN " else " IN ")
+        true
+      } else {
+        // the array argument: ARRAY[…] or a '{…}' literal; anything
+        // else → skip
+        val arrText: Option[String] = ts(inner) match {
+          case Word(a) if a.equalsIgnoreCase("array") =>
+            val br = nextIdx(ts, inner)
+            if (br >= 0 && ts(br) == Sym("[")) {
+              // primaryEnd from the ARRAY word absorbs the [..] block
+              val brClose = primaryEnd(ts, inner)
+              if (ts(brClose) == Sym("]") && nextIdx(ts, brClose) == close)
+                Some("array(" + text(ts.slice(br + 1, brClose)).trim + ")")
+              else None
+            } else None
+          case Str(s) =>
+            val body = s.substring(1, s.length - 1).trim
+            if (nextIdx(ts, inner) == close &&
+                body.startsWith("{") && body.endsWith("}")) {
+              val items = body.substring(1, body.length - 1)
+              if (items.nonEmpty && !items.exists(c => "\"'{}\\".contains(c)))
+                Some(items.split(",").map(_.trim).map(x =>
+                  if (x.matches("[-+]?\\d+(\\.\\d+)?")) x else "'" + x + "'")
+                  .mkString("array(", ", ", ")"))
+              else None
+            } else None
           case _ => None
         }
-        if (anyAll.isDefined) {
-          val open = nextIdx(ts, i)
-          val opIdx = prevIdx(ts, i)
-          val op = if (opIdx >= 0) ts(opIdx) match {
-            case Sym("=") if !anyAll.get => Some(false) // = ANY → contains
-            case Sym("<>") | Sym("!=") if anyAll.get => Some(true) // <> ALL → not contains
-            case _ => None
-          } else None
-          if (open >= 0 && ts(open) == Sym("(") && op.isDefined) {
-            val close = primaryEnd(ts, open)
-            val inner = nextIdx(ts, open)
-            // the array argument: ARRAY[…], a '{…}' literal, or anything
-            // else (incl. a subquery) → skip
-            // subquery operand: `= ANY(SELECT …)` IS the SQL-standard
-            // definition of `IN (SELECT …)` and `<> ALL(SELECT …)` of
-            // `NOT IN (SELECT …)` (identical NULL semantics) — Spark
-            // parses neither ANY form but both IN forms, so only the
-            // operator spelling changes; the subquery tokens stay live
-            val isSubquery = ts(inner) match {
-              case Word(w) => w.equalsIgnoreCase("select") || w.equalsIgnoreCase("with")
-              case _ => false
-            }
-            if (isSubquery) {
-              val lhsEnd = prevIdx(ts, opIdx)
-              if (lhsEnd >= 0 && isOperandEnd(ts(lhsEnd))) {
-                splice(ts, opIdx, i, if (op.get) " NOT IN " else " IN ")
-                restart = true
-              }
-            }
-            val arrText: Option[String] = if (isSubquery) None else ts(inner) match {
-              case Word(a) if a.equalsIgnoreCase("array") =>
-                val br = nextIdx(ts, inner)
-                if (br >= 0 && ts(br) == Sym("[")) {
-                  // primaryEnd from the ARRAY word absorbs the [..] block
-                  val brClose = primaryEnd(ts, inner)
-                  if (ts(brClose) == Sym("]") && nextIdx(ts, brClose) == close)
-                    Some("array(" + text(ts.slice(br + 1, brClose)).trim + ")")
-                  else None
-                } else None
-              case Str(s) =>
-                val body = s.substring(1, s.length - 1).trim
-                if (nextIdx(ts, inner) == close &&
-                    body.startsWith("{") && body.endsWith("}")) {
-                  val items = body.substring(1, body.length - 1)
-                  if (items.nonEmpty && !items.exists(c => "\"'{}\\".contains(c)))
-                    Some(items.split(",").map(_.trim).map(x =>
-                      if (x.matches("[-+]?\\d+(\\.\\d+)?")) x else "'" + x + "'")
-                      .mkString("array(", ", ", ")"))
-                  else None
-                } else None
-              case _ => None
-            }
-            arrText.foreach { arr =>
-              val lhsEnd = prevIdx(ts, opIdx)
-              if (lhsEnd >= 0 && isOperandEnd(ts(lhsEnd))) {
-                val lhsStart = primaryStart(ts, lhsEnd)
-                val lhs = text(ts.slice(lhsStart, lhsEnd + 1))
-                val neg = if (op.get) "NOT " else ""
-                splice(ts, lhsStart, close, s"${neg}array_contains($arr, $lhs)")
-                restart = true
-              }
-            }
-          }
+        arrText.exists { arr =>
+          val lhsStart = primaryStart(ts, lhsEnd)
+          val lhs = text(ts.slice(lhsStart, lhsEnd + 1))
+          splice(ts, lhsStart, close,
+            s"${if (neg.get) "NOT " else ""}array_contains($arr, $lhs)")
+          true
         }
-        i += 1
       }
     }
   }
@@ -1659,6 +1603,15 @@ object SqlDialect {
     b.append(")$").toString
   }
 
+  /** Words of a QUALIFY predicate that never name a select alias. */
+  private val qualifyPredKeywords = Set(
+    "over", "partition", "by", "order", "asc", "desc", "nulls", "first",
+    "last", "rows", "range", "groups", "between", "and", "or", "not",
+    "unbounded", "preceding", "following", "current", "row", "case",
+    "when", "then", "else", "end", "is", "null", "in", "like", "rlike",
+    "ilike", "true", "false", "cast", "as", "interval", "distinct",
+    "exists", "any", "all")
+
   /** Snowflake/Redshift `SELECT [DISTINCT] items FROM … [WHERE/GROUP
     * BY/HAVING] QUALIFY pred [ORDER BY o] [LIMIT …]` → the standard
     * subquery restatement, in the two provable shapes:
@@ -1681,171 +1634,80 @@ object SqlDialect {
     * HAVING → window → QUALIFY → DISTINCT → ORDER BY (the DISTINCT
     * quantifier moves to the OUTER select). Anything failing a guard
     * passes through → Spark's own parse error. */
-  private def rewriteQualify(ts: ArrayBuffer[Tok]): Unit = {
-    def isWord(t: Tok, w: String) = t match {
-      case Word(x) => x.equalsIgnoreCase(w)
-      case _ => false
-    }
-    val predKeywords = Set(
-      "over", "partition", "by", "order", "asc", "desc", "nulls", "first",
-      "last", "rows", "range", "groups", "between", "and", "or", "not",
-      "unbounded", "preceding", "following", "current", "row", "case",
-      "when", "then", "else", "end", "is", "null", "in", "like", "rlike",
-      "ilike", "true", "false", "cast", "as", "interval", "distinct",
-      "exists", "any", "all")
-    def stripBt(s: String) = s.stripPrefix("`").stripSuffix("`")
-    var restart = true
-    while (restart) {
-      restart = false
-      var i = 0
-      while (i < ts.length && !restart) {
-        if (isWord(ts(i), "select")) {
-          var selStart = nextIdx(ts, i)
-          var distinct = false
-          if (selStart >= 0 && isWord(ts(selStart), "all"))
-            selStart = nextIdx(ts, selStart)
-          else if (selStart >= 0 && isWord(ts(selStart), "distinct")) {
-            distinct = true; selStart = nextIdx(ts, selStart)
+  private def rewriteQualify(ts: ArrayBuffer[Tok]): Unit = rewriteToFixpoint(ts) { i =>
+    val q = if (isWord(ts, i, "select")) nextIdx(ts, i) else -1
+    val distinct = isWord(ts, q, "distinct")
+    val selStart = if (distinct || isWord(ts, q, "all")) nextIdx(ts, q) else q
+    selStart >= 0 && {
+      val sc = selectScope(ts, selStart)
+      sc.from > selStart && sc.qualify > sc.from && !sc.setOp &&
+        selectListItems(ts, selStart, sc.from).exists { items =>
+          val predEnd = sc.bodyEnd
+          val predText = sliceText(ts, sc.qualify + 1, predEnd)
+          // outer ORDER BY references the subquery OUTPUT: every item
+          // base must be an unqualified projected name
+          val names = items.map(p => stripBt(p._1).toLowerCase).toSet
+          val orderOk = sc.orderText.forall(_.split(",").forall { item =>
+            val base = orderItem(item)._1
+            !base.contains(".") && !base.contains("(") && base.nonEmpty &&
+              names.contains(stripBt(base).toLowerCase)
+          })
+          // a windowed pred must not name a renamed/computed alias (the
+          // inner scope resolves against the INPUT)
+          val predHasOver = (sc.qualify + 1 until predEnd).exists(isWord(ts, _, "over"))
+          val dangerous = items.collect {
+            case (n, u) if u.forall(c =>
+                !stripBt(c.split("\\.").last).equalsIgnoreCase(stripBt(n))) =>
+              stripBt(n).toLowerCase
+          }.toSet
+          val pt = ts.slice(sc.qualify + 1, predEnd).filterNot(_.isInstanceOf[Ws])
+          val predScopeSafe = !predHasOver || pt.indices.forall { j =>
+            val name = pt(j) match {
+              case Word(w) if !qualifyPredKeywords.contains(w.toLowerCase) => Some(w)
+              case QIdent(q) => Some(stripBt(q))
+              case _ => None
+            }
+            !name.exists(n => dangerous.contains(n.toLowerCase)) ||
+              (j > 0 && pt(j - 1) == Sym(".")) || (j + 1 < pt.length && pt(j + 1) == Sym("("))
           }
-          // scope scan: first depth-0 FROM / QUALIFY / ORDER BY /
-          // LIMIT|OFFSET, set ops, scope end (")" or ";")
-          var depth = 0
-          var k = selStart
-          var fromIdx = -1; var qualIdx = -1; var orderIdx = -1
-          var tailIdx = -1
-          var setOp = false
-          var scopeEnd = ts.length
-          while (k >= 0 && k < ts.length && scopeEnd == ts.length) {
-            ts(k) match {
-              case Sym("(") => depth += 1
-              case Sym(")") => if (depth == 0) scopeEnd = k else depth -= 1
-              case Sym(";") if depth == 0 => scopeEnd = k
-              case Word(x) if depth == 0 =>
-                val wl = x.toLowerCase
-                if (wl == "from" && fromIdx < 0) fromIdx = k
-                else if (wl == "qualify" && qualIdx < 0 && fromIdx >= 0)
-                  qualIdx = k
-                else if (wl == "order" && orderIdx < 0 && {
-                  val nb = nextIdx(ts, k); nb >= 0 && isWord(ts(nb), "by")
-                }) orderIdx = k
-                else if ((wl == "limit" || wl == "offset") && tailIdx < 0 &&
-                  fromIdx >= 0) tailIdx = k
-                else if (wl == "union" || wl == "intersect" || wl == "except")
-                  setOp = true
-              case _ =>
-            }
-            k += 1
-          }
-          if (selStart >= 0 && fromIdx > selStart && qualIdx > fromIdx &&
-              !setOp) {
-            val items = selectListItems(ts, selStart, fromIdx)
-            val predEnd =
-              if (orderIdx >= 0) orderIdx
-              else if (tailIdx >= 0) tailIdx else scopeEnd
-            val predToks = ts.slice(qualIdx + 1, predEnd)
-            val predText = text(predToks).trim
-            val orderText =
-              if (orderIdx >= 0) {
-                val byIdx = nextIdx(ts, orderIdx)
-                val oEnd = if (tailIdx >= 0) tailIdx else scopeEnd
-                Some(text(ts.slice(byIdx + 1, oEnd)).trim)
-              } else None
-            // outer ORDER BY references the subquery OUTPUT: every
-            // item base must be an unqualified projected name
-            val orderOk = orderText.forall { ot =>
-              items.exists { its =>
-                val names = its.map(p => stripBt(p._1).toLowerCase).toSet
-                ot.split(",").forall { item =>
-                  val base = item.trim.split("\\s+").toSeq.takeWhile(w =>
-                    !Set("asc", "desc", "nulls").contains(w.toLowerCase))
-                    .mkString(" ")
-                  !base.contains(".") && !base.contains("(") &&
-                    base.nonEmpty &&
-                    names.contains(stripBt(base).toLowerCase)
-                }
-              }
-            }
-            // a windowed pred must not name a renamed/computed alias
-            // (inner scope resolves against the INPUT)
-            val predHasOver = predToks.exists(isWord(_, "over"))
-            val predScopeSafe = !predHasOver || items.exists { its =>
-              val dangerous = its.collect {
-                case (n, u) if u.forall(c =>
-                    !stripBt(c.split("\\.").last)
-                      .equalsIgnoreCase(stripBt(n))) =>
-                  stripBt(n).toLowerCase
-              }.toSet
-              dangerous.isEmpty || {
-                var bad = false
-                var j = 0
-                val pt = predToks.filterNot(_.isInstanceOf[Ws])
-                while (j < pt.length && !bad) {
-                  pt(j) match {
-                    case Word(w) if !predKeywords.contains(w.toLowerCase) &&
-                        (j == 0 || pt(j - 1) != Sym(".")) &&
-                        (j + 1 >= pt.length || pt(j + 1) != Sym("(")) &&
-                        dangerous.contains(w.toLowerCase) => bad = true
-                    case QIdent(q) if (j == 0 || pt(j - 1) != Sym(".")) &&
-                        (j + 1 >= pt.length || pt(j + 1) != Sym("(")) &&
-                        dangerous.contains(stripBt(q).toLowerCase) => bad = true
-                    case _ =>
-                  }
-                  j += 1
-                }
-                !bad
-              }
-            }
-            if (items.isDefined && predText.nonEmpty && orderOk &&
-                predScopeSafe) {
-              val itemsText = text(ts.slice(selStart, fromIdx)).trim
-              val midText = text(ts.slice(fromIdx, qualIdx)).trim
-              val tailText =
-                if (tailIdx >= 0) " " + text(ts.slice(tailIdx, scopeEnd)).trim
-                else ""
-              val outerOrder =
-                orderText.map(ot => s" ORDER BY $ot").getOrElse("")
-              val namesCsv = items.get.map(_._1).mkString(", ")
-              val dk = if (distinct) "DISTINCT " else ""
-              val body =
-                if (!predHasOver)
-                  s"SELECT $dk$namesCsv FROM (SELECT $itemsText $midText) " +
-                    s"__gq WHERE ($predText)$outerOrder$tailText"
-                else
-                  s"SELECT $dk$namesCsv FROM (SELECT $itemsText, " +
-                    s"($predText) AS __gq_p $midText) __gq " +
-                    s"WHERE __gq_p$outerOrder$tailText"
-              splice(ts, i, scopeEnd - 1, body)
-              restart = true
-            }
+          predText.nonEmpty && orderOk && predScopeSafe && {
+            val (win, cond) =
+              if (predHasOver) (s"($predText) AS __gq_p", "__gq_p") else ("", s"($predText)")
+            restate(ts, i, sc, sc.qualify, items, win, "__gq", cond, distinct)
+            true
           }
         }
-        i += 1
-      }
     }
   }
 
-  /** T-SQL `SELECT [ALL] TOP n WITH TIES … ORDER BY o` and
-    * `SELECT [ALL] TOP n PERCENT [WITH TIES] … ORDER BY o` → the
-    * standard window restatements:
-    *  - WITH TIES ≡ `rank() OVER (ORDER BY o) <= n` (exact: a row has
-    *    rank ≤ n iff its tie-group intersects the first n positions —
-    *    precisely the rows TOP n WITH TIES returns),
-    *  - PERCENT ≡ `row_number() <= CEILING(count(*) OVER () * n / 100.0)`
-    *    (T-SQL rounds the row budget UP), rank() for the
-    *    PERCENT-WITH-TIES combination.
-    * GUARDED like [[rewriteDistinctOn]] — fires only when provably
-    * meaning-preserving: every select-list item has a derivable output
-    * name, an ORDER BY is present (T-SQL itself requires one for WITH
-    * TIES; a PERCENT without ORDER BY returns arbitrary rows — skipped
-    * → loud), every ORDER BY item is an unqualified projected name
-    * (alias items substitute their underlying column in the generated
-    * window via [[windowOrderFor]] — T-SQL ranks by the OUTPUT, Spark
-    * windows resolve the INPUT scope; expression aliases skip), no
-    * DISTINCT quantifier (rank would be computed pre-dedup), no depth-0
-    * set operator in scope, and a PERCENT budget that is a literal
-    * provably in T-SQL's accepted [0, 100] range (out-of-range budgets
-    * error there; the CEILING restatement would silently return all
-    * rows instead). Anything else passes through to Spark's own
+  /** T-SQL `SELECT [ALL|DISTINCT] TOP n|(expr) [PERCENT] [WITH TIES] …`,
+    * in three forms:
+    *  - plain `TOP n` → the TOP clause is removed and `LIMIT n` is
+    *    inserted after the scope's last significant token (before a
+    *    trailing comment, and before the `)` of a subquery or a
+    *    statement-ending `;`),
+    *  - `TOP n WITH TIES … ORDER BY o` ≡ `rank() OVER (ORDER BY o) <= n`
+    *    (exact: a row has rank ≤ n iff its tie-group intersects the
+    *    first n positions — precisely the rows TOP n WITH TIES returns),
+    *  - `TOP n PERCENT [WITH TIES] … ORDER BY o` ≡ `row_number() <=
+    *    CEILING(count(*) OVER () * n / 100.0)` (T-SQL rounds the row
+    *    budget UP), rank() for the PERCENT-WITH-TIES combination;
+    * the last two as the shared subquery restatement ([[restate]]).
+    * Every form is skipped when a depth-0 set operator shares the scope
+    * (LIMIT or the restatement would bind to the wrong branch). The
+    * window forms are GUARDED like [[rewriteDistinctOn]] — they fire
+    * only when provably meaning-preserving: every select-list item has
+    * a derivable output name, an ORDER BY is present (T-SQL itself
+    * requires one for WITH TIES; a PERCENT without ORDER BY returns
+    * arbitrary rows — skipped → loud), every ORDER BY item is an
+    * unqualified projected name (alias items substitute their
+    * underlying column in the generated window via [[windowOrderFor]]
+    * — T-SQL ranks by the OUTPUT, Spark windows resolve the INPUT
+    * scope; expression aliases skip), no DISTINCT quantifier (rank
+    * would be computed pre-dedup), and a PERCENT budget that is a
+    * literal provably in T-SQL's accepted [0, 100] range (out-of-range
+    * budgets error there; the CEILING restatement would silently return
+    * all rows instead). Anything else passes through to Spark's own
     * parse error. Scale note: the global rank window is the semantic
     * cost of the construct itself — for the constant-n WITH TIES form
     * Spark's InferWindowGroupLimit inserts a per-partition
@@ -1853,193 +1715,54 @@ object SqlDialect {
     * n+ties rows per upstream partition reach it (a global LIMIT's
     * shape); the PERCENT form needs the total count and prices a full
     * global sort, exactly like T-SQL's own execution. */
-  private def rewriteTopTies(ts: ArrayBuffer[Tok]): Unit = {
-    def isWord(t: Tok, w: String) = t match {
-      case Word(x) => x.equalsIgnoreCase(w)
-      case _ => false
+  private def rewriteTop(ts: ArrayBuffer[Tok]): Unit = rewriteToFixpoint(ts) { i =>
+    val q = if (isWord(ts, i, "select")) nextIdx(ts, i) else -1
+    val distinct = isWord(ts, q, "distinct")
+    val top = if (distinct || isWord(ts, q, "all")) nextIdx(ts, q) else q
+    val nIdx = if (isWord(ts, top, "top")) nextIdx(ts, top) else -1
+    val nEnd = if (nIdx < 0) -1 else ts(nIdx) match {
+      case Num(_) => nIdx
+      case Sym("(") => primaryEnd(ts, nIdx)
+      case _ => -1
     }
-    var restart = true
-    while (restart) {
-      restart = false
-      var i = 0
-      while (i < ts.length && !restart) {
-        if (isWord(ts(i), "select")) {
-          var j = nextIdx(ts, i)
-          // ALL is a no-op quantifier; DISTINCT under the window
-          // restatement would rank pre-dedup → skip (loud)
-          if (j >= 0 && isWord(ts(j), "all")) j = nextIdx(ts, j)
-          if (j >= 0 && isWord(ts(j), "top")) {
-            val nIdx = nextIdx(ts, j)
-            val (limitText, consumedEnd) =
-              if (nIdx >= 0 && ts(nIdx).isInstanceOf[Num]) (ts(nIdx).text, nIdx)
-              else if (nIdx >= 0 && ts(nIdx) == Sym("(")) {
-                val close = primaryEnd(ts, nIdx)
-                (text(ts.slice(nIdx, close + 1)), close)
-              } else ("", -1)
-            if (consumedEnd >= 0) {
-              var clauseEnd = consumedEnd
-              var percent = false
-              var budgetOk = true
-              val p = nextIdx(ts, clauseEnd)
-              if (p >= 0 && isWord(ts(p), "percent")) {
-                percent = true; clauseEnd = p
-                // T-SQL rejects PERCENT budgets outside [0, 100]; the
-                // CEILING restatement would silently accept them (150
-                // PERCENT → all rows). Rewrite only a literal budget
-                // provably in range — anything else stays loud.
-                budgetOk = ts(nIdx) match {
-                  case Num(t) => t.toDoubleOption.exists(v => v >= 0 && v <= 100)
-                  case _ => false
-                }
-              }
-              var ties = false
-              val w = nextIdx(ts, clauseEnd)
-              if (w >= 0 && isWord(ts(w), "with")) {
-                val t = nextIdx(ts, w)
-                if (t >= 0 && isWord(ts(t), "ties")) {
-                  ties = true; clauseEnd = t
-                }
-              }
-              if ((percent || ties) && budgetOk) {
-                // scope scan (the rewriteDistinctOn shape): first depth-0
-                // FROM / ORDER BY / LIMIT|OFFSET, set ops, scope end
-                var depth = 0
-                var k = clauseEnd + 1
-                var fromIdx = -1; var orderIdx = -1; var tailIdx = -1
-                var setOp = false
-                var scopeEnd = ts.length
-                while (k < ts.length && scopeEnd == ts.length) {
-                  ts(k) match {
-                    case Sym("(") => depth += 1
-                    case Sym(")") => if (depth == 0) scopeEnd = k else depth -= 1
-                    // a statement-terminating semicolon ends the scope (verbatim
-                    // .sql files commonly carry one)
-                    case Sym(";") if depth == 0 => scopeEnd = k
-                    case Word(x) if depth == 0 =>
-                      val wl = x.toLowerCase
-                      if (wl == "from" && fromIdx < 0) fromIdx = k
-                      else if (wl == "order" && orderIdx < 0 && {
-                        val nb = nextIdx(ts, k); nb >= 0 && isWord(ts(nb), "by")
-                      }) orderIdx = k
-                      else if ((wl == "limit" || wl == "offset") && tailIdx < 0 &&
-                        fromIdx >= 0) tailIdx = k
-                      else if (wl == "union" || wl == "intersect" || wl == "except")
-                        setOp = true
-                    case _ =>
-                  }
-                  k += 1
-                }
-                if (fromIdx > clauseEnd && orderIdx > fromIdx && !setOp) {
-                  val items = selectListItems(ts, clauseEnd + 1, fromIdx)
-                  val byIdx = nextIdx(ts, orderIdx)
-                  val oEnd = if (tailIdx >= 0) tailIdx else scopeEnd
-                  val orderText = text(ts.slice(byIdx + 1, oEnd)).trim
-                  // the window resolves ORDER BY against the INPUT
-                  // scope — alias-typed items substitute their
-                  // underlying column ([[windowOrderFor]])
-                  val winOrder = items.flatMap(its =>
-                    windowOrderFor(orderText, its))
-                  if (items.isDefined && winOrder.isDefined) {
-                    val itemsText = text(ts.slice(clauseEnd + 1, fromIdx)).trim
-                    val midText = text(ts.slice(fromIdx, orderIdx)).trim
-                    val tailText =
-                      if (tailIdx >= 0) " " + text(ts.slice(tailIdx, scopeEnd)).trim
-                      else ""
-                    val namesCsv = items.get.map(_._1).mkString(", ")
-                    val (winCols, cutoff) =
-                      if (percent) {
-                        val rk = if (ties) "rank()" else "row_number()"
-                        (s"$rk OVER (ORDER BY ${winOrder.get}) AS __gt_rk, " +
-                          "count(*) OVER () AS __gt_ct",
-                          s"__gt_rk <= CEILING(__gt_ct * ($limitText) / 100.0)")
-                      } else
-                        (s"rank() OVER (ORDER BY ${winOrder.get}) AS __gt_rk",
-                          s"__gt_rk <= $limitText")
-                    splice(ts, i, scopeEnd - 1,
-                      s"SELECT $namesCsv FROM (SELECT $itemsText, $winCols " +
-                        s"$midText) __gt WHERE $cutoff ORDER BY $orderText$tailText")
-                    restart = true
-                  }
-                }
-              }
+    nEnd >= 0 && {
+      val n = sliceText(ts, nIdx, nEnd + 1)
+      val p = nextIdx(ts, nEnd)
+      val percent = isWord(ts, p, "percent")
+      val w = if (percent) nextIdx(ts, p) else p
+      val ties = isWord(ts, w, "with") && isWord(ts, nextIdx(ts, w), "ties")
+      val headEnd = if (ties) nextIdx(ts, w) else if (percent) p else nEnd
+      val sc = selectScope(ts, headEnd + 1)
+      if (sc.setOp) false
+      else if (!percent && !isWord(ts, w, "with")) {
+        // absorb the whitespace after the TOP clause so the select list
+        // doesn't keep a double space
+        val last = if (ts.lift(nEnd + 1).exists(_.isInstanceOf[Ws])) nEnd + 1 else nEnd
+        ts.remove(top, last - top + 1)
+        val end = sc.end - (last - top + 1)
+        val at = (prevIdx(ts, end) + 1 until end).find(k => isComment(ts(k)))
+        ts.insert(at.getOrElse(end), Raw(s" LIMIT $n "))
+        true
+      } else {
+        // T-SQL rejects PERCENT budgets outside [0, 100]; the CEILING
+        // restatement would silently accept them (150 PERCENT → all
+        // rows). Rewrite only a literal budget provably in range.
+        val budgetOk = !percent || (ts(nIdx) match {
+          case Num(t) => t.toDoubleOption.exists(v => v >= 0 && v <= 100)
+          case _ => false
+        })
+        (percent || ties) && budgetOk && !distinct && sc.from >= 0 && sc.order > sc.from &&
+          selectListItems(ts, sc.start, sc.from).exists { items =>
+            windowOrderFor(sc.orderText.get, items).exists { wo =>
+              val rank = if (ties) "rank()" else "row_number()"
+              val win = s"$rank OVER (ORDER BY $wo) AS __gt_rk" +
+                (if (percent) ", count(*) OVER () AS __gt_ct" else "")
+              val cond = if (percent) s"__gt_rk <= CEILING(__gt_ct * ($n) / 100.0)"
+                else s"__gt_rk <= $n"
+              restate(ts, i, sc, sc.order, items, win, "__gt", cond)
+              true
             }
           }
-        }
-        i += 1
-      }
-    }
-  }
-
-  /** T-SQL `SELECT [ALL|DISTINCT] TOP n [expr-in-parens]` → remove the
-    * TOP clause and append `LIMIT n` at the end of that SELECT's scope
-    * (end of input for a depth-0 select, before the closing ")" for a
-    * subquery). Left untouched — loud Spark error — when followed by
-    * PERCENT / WITH TIES forms that fail [[rewriteTopTies]]'s guards,
-    * or when a depth-0 set operator shares the scope (LIMIT at scope
-    * end would bind to the wrong branch). */
-  private def rewriteTopN(ts: ArrayBuffer[Tok]): Unit = {
-    var restart = true
-    while (restart) {
-      restart = false
-      var i = 0
-      while (i < ts.length && !restart) {
-        ts(i) match {
-          case Word(s) if s.equalsIgnoreCase("select") =>
-            var j = nextIdx(ts, i)
-            // skip the optional ALL / DISTINCT quantifier
-            if (j >= 0) ts(j) match {
-              case Word(q) if q.equalsIgnoreCase("all") ||
-                  q.equalsIgnoreCase("distinct") => j = nextIdx(ts, j)
-              case _ =>
-            }
-            val isTop = j >= 0 && (ts(j) match {
-              case Word(t) => t.equalsIgnoreCase("top")
-              case _ => false
-            })
-            if (isTop) {
-              val nIdx = nextIdx(ts, j)
-              val (limitText, consumedEnd) =
-                if (nIdx >= 0 && ts(nIdx).isInstanceOf[Num]) (ts(nIdx).text, nIdx)
-                else if (nIdx >= 0 && ts(nIdx) == Sym("(")) {
-                  val close = primaryEnd(ts, nIdx)
-                  (text(ts.slice(nIdx, close + 1)), close)
-                } else ("", -1)
-              val after = if (consumedEnd >= 0) nextIdx(ts, consumedEnd) else -1
-              val blocked = after >= 0 && (ts(after) match {
-                case Word(x) => x.equalsIgnoreCase("percent") || x.equalsIgnoreCase("with")
-                case _ => false
-              })
-              if (consumedEnd >= 0 && !blocked) {
-                // scope end: where this SELECT's depth closes
-                var depth = 0; var k = consumedEnd + 1; var scopeEnd = ts.length
-                var setOp = false
-                while (k < ts.length && scopeEnd == ts.length) {
-                  ts(k) match {
-                    case Sym("(") => depth += 1
-                    case Sym(")") =>
-                      if (depth == 0) scopeEnd = k else depth -= 1
-                    case Word(x) if depth == 0 &&
-                        (x.equalsIgnoreCase("union") || x.equalsIgnoreCase("intersect") ||
-                         x.equalsIgnoreCase("except")) => setOp = true
-                    case _ =>
-                  }
-                  k += 1
-                }
-                if (!setOp) {
-                  // absorb the whitespace after the TOP clause so the
-                  // select list doesn't keep a double space
-                  val last = if (consumedEnd + 1 < ts.length &&
-                    ts(consumedEnd + 1).isInstanceOf[Ws]) consumedEnd + 1 else consumedEnd
-                  val removed = last - j + 1
-                  ts.remove(j, removed)
-                  ts.insert(scopeEnd - removed, Raw(s" LIMIT $limitText "))
-                  restart = true
-                }
-              }
-            }
-          case _ =>
-        }
-        i += 1
       }
     }
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.scalacheck.{Gen, Prop, Properties}
 
 import graft.sql.SqlDialect.toSparkSql
@@ -18,6 +19,9 @@ import graft.sql.SqlDialect.toSparkSql
   *  - TERMINATION: arbitrary printable soup either translates or
   *    throws IllegalArgumentException (unterminated literal) — never
   *    hangs or blows the stack (the fixpoint guard + bounded passes).
+  *  - CLAUSE REWRITES (DISTINCT ON, QUALIFY, the TOP family) are
+  *    idempotent, and a trailing `;` or comment leaves the parsed
+  *    Spark plan unchanged.
   */
 object SqlDialectPropertySpec extends Properties("SqlDialect") {
 
@@ -104,4 +108,43 @@ object SqlDialectPropertySpec extends Properties("SqlDialect") {
       }
     }
   }
+
+  /** (statement, dialect) pairs for every clause-rewrite form. */
+  private val clauseG: Gen[(String, String)] = for {
+    n <- Gen.choose(1, 100)
+    desc <- Gen.oneOf("", " DESC")
+    where <- Gen.oneOf("", " WHERE b > 0")
+    limit <- Gen.oneOf("", " LIMIT 3")
+    form <- Gen.choose(0, 6)
+  } yield form match {
+    case 0 => (s"SELECT DISTINCT ON (a) a, b FROM t$where ORDER BY a, b$desc$limit", "postgres")
+    case 1 => (s"SELECT DISTINCT ON (a) a, b AS x FROM t$where$limit", "postgres")
+    case 2 => (s"SELECT a, b FROM t$where QUALIFY row_number() OVER " +
+      s"(PARTITION BY a ORDER BY b$desc) = 1 ORDER BY a$limit", "snowflake")
+    case 3 => (s"SELECT a, row_number() OVER (PARTITION BY a ORDER BY b$desc) AS rn " +
+      s"FROM t$where QUALIFY rn <= $n$limit", "snowflake")
+    case 4 => (s"SELECT TOP $n a, b FROM t$where ORDER BY a$desc", "mssql")
+    case 5 => (s"SELECT TOP ($n) WITH TIES a, b FROM t$where ORDER BY b$desc", "mssql")
+    case _ => (s"SELECT TOP $n PERCENT${if (n % 2 == 0) " WITH TIES" else ""} a, b " +
+      s"FROM t$where ORDER BY a$desc", "mssql")
+  }
+
+  private val suffixG: Gen[String] = Gen.oneOf(";", " -- c", "\n-- c\n", " /* c */")
+
+  property("clause rewrites are idempotent") = Prop.forAll(clauseG, suffixG) {
+    case ((s, d), suffix) =>
+      Seq(s, s + suffix).forall { q =>
+        val once = toSparkSql(q, d)
+        toSparkSql(once, d) == once
+      }
+  }
+
+  /** The parsed plan, without the expression ids each parse mints. */
+  private def plan(sql: String): String =
+    CatalystSqlParser.parsePlan(sql).toString.replaceAll("#\\d+", "")
+
+  property("a trailing ; or comment leaves the parsed plan unchanged") =
+    Prop.forAll(clauseG, suffixG) { case ((s, d), suffix) =>
+      plan(toSparkSql(s + suffix, d)) == plan(toSparkSql(s, d))
+    }
 }

@@ -253,6 +253,12 @@ class SqlDialectSpec extends GraftSuite {
       == "SELECT * FROM t QUALIFY row_number() OVER (ORDER BY v NULLS LAST) = 1")
     assert(sf("SELECT k FROM t QUALIFY rn = 1 UNION SELECT j FROM u")
       == "SELECT k FROM t QUALIFY rn = 1 UNION SELECT j FROM u")
+    // MINUS is a set operator too: the restatement would fold the MINUS
+    // branch into the predicate column
+    assert(sf("SELECT a FROM t QUALIFY row_number() OVER (PARTITION BY a ORDER BY b) = 1 " +
+        "MINUS SELECT a FROM u")
+      == "SELECT a FROM t QUALIFY row_number() OVER (PARTITION BY a ORDER BY b NULLS LAST) " +
+        "= 1 MINUS SELECT a FROM u")
     // redshift shares the clause
     assert(toSparkSql("SELECT k, v FROM t QUALIFY row_number() OVER (ORDER BY v) = 1",
         "redshift")
@@ -496,6 +502,40 @@ class SqlDialectSpec extends GraftSuite {
       == "SELECT a FROM (SELECT a, row_number() OVER (ORDER BY a) " +
         "AS __gt_rk, count(*) OVER () AS __gt_ct FROM t) __gt " +
         "WHERE __gt_rk <= CEILING(__gt_ct * (2.5) / 100.0) ORDER BY a")
+  }
+
+  test("clause rewrites see past a trailing ; or comment") {
+    import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+    import org.apache.spark.sql.catalyst.plans.logical.GlobalLimit
+    def ms(s: String) = toSparkSql(s, "mssql")
+    def hasLimit(sql: String) =
+      CatalystSqlParser.parsePlan(sql).find(_.isInstanceOf[GlobalLimit]).isDefined
+    // TOP n's LIMIT lands after the last significant token: not inside
+    // a trailing line comment, not after the statement's `;`
+    assert(ms("SELECT TOP 5 a FROM t -- five rows")
+      == "SELECT a FROM t  LIMIT 5 -- five rows")
+    assert(ms("SELECT TOP 5 a FROM t\n-- five rows")
+      == "SELECT a FROM t\n LIMIT 5 -- five rows")
+    assert(ms("SELECT TOP 5 a FROM t;") == "SELECT a FROM t LIMIT 5 ;")
+    assert(ms("select top 5 a from t;") == "select a from t LIMIT 5 ;")
+    Seq("SELECT TOP 5 a FROM t -- five rows", "SELECT TOP 5 a FROM t\n-- five rows",
+      "SELECT TOP 5 a FROM t;", "select top 5 a from t;")
+      .foreach(s => assert(hasLimit(ms(s)), s))
+    // a restated slice renders a comment as a space, so it cannot
+    // swallow the rest of the one-line fragment
+    assert(pg("SELECT DISTINCT ON (a) a, b FROM t -- latest\nORDER BY a, b")
+      == "SELECT a, b FROM (SELECT a, b, row_number() OVER (PARTITION BY a " +
+        "ORDER BY a NULLS LAST, b NULLS LAST) AS __gd_rn FROM t) __gd " +
+        "WHERE __gd_rn = 1 ORDER BY a NULLS LAST, b NULLS LAST")
+    assert(toSparkSql("SELECT a, rn FROM t QUALIFY rn = 1 -- keep first", "snowflake")
+      == "SELECT a, rn FROM (SELECT a, rn FROM t) __gq WHERE (rn = 1)")
+    // ... and a trailing comment does not fail the ORDER BY guard
+    assert(ms("SELECT TOP 3 WITH TIES a FROM t ORDER BY a -- ties")
+      == "SELECT a FROM (SELECT a, rank() OVER (ORDER BY a) AS __gt_rk " +
+        "FROM t) __gt WHERE __gt_rk <= 3 ORDER BY a")
+    // MINUS shares the scope like UNION: TOP n stays loud
+    assert(ms("SELECT TOP 3 a FROM t MINUS SELECT b FROM u")
+      == "SELECT TOP 3 a FROM t MINUS SELECT b FROM u")
   }
 
   test("mssql end-to-end: TOP WITH TIES and TOP PERCENT execute") {
