@@ -727,11 +727,16 @@ object GraftSession {
     * clone's tasks carry that UUID as their `JobArtifactState`, and the
     * executor builds a new `IsolatedSessionState`, a new
     * `MutableURLClassLoader`, for it. Each dead loader then stayed pinned
-    * by the codegen cache and the executor's isolated-state cache. */
+    * by the codegen cache and the executor's isolated-state cache.
+    *
+    * The extensions add [[graft.sql.LocalSort]], which sorts a global
+    * `Sort` over a `LocalRelation` on the driver (a drained stream's
+    * final `orderBy` then runs no range-partition jobs). */
   val staticConf: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" -> classOf[LocalFs.FileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Fs].getName,
-    "spark.sql.artifact.isolation.enabled" -> "false")
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.extensions" -> classOf[graft.sql.GraftExtensions].getName)
 
   /** Local-mode builder with the settings this engine assumes (UTC, AQE,
     * shuffle partitions sized to cores — not the 200 default). */

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
   SparkListenerStageCompleted}
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import scala.collection.mutable
 
 /** Dev tool: time + explain individual queries.
@@ -13,8 +14,10 @@ import scala.collection.mutable
   * call prints a `CALL` line: its build (the query function returning its
   * DataFrame) and run (the noop-sink write) seconds, and the number of
   * generated classes compiled during it. `--stages` adds, for the warm
-  * call, a `JOBS` line (job count and dark time) and the 12 longest
-  * `STAGE`s. `--scale:m` runs curve rows (`Query.curve`) against the m×
+  * call, a `JOBS` line (job count and dark time), a `STREAM` line per
+  * drained streaming query (micro-batches, state stores per stateful
+  * operator, summed state-store and offset-log commit ms) and the 12
+  * longest `STAGE`s. `--scale:m` runs curve rows (`Query.curve`) against the m×
   * corpus of Bench's scale curve; with `--stages` it gives the per-stage
   * attribution of a scale-curve point.
   */
@@ -72,6 +75,26 @@ object PerfProbe {
           jobStarts.remove(j.jobId).foreach(s => jobSpans += ((s, j.time)))
         }
     })
+    // per streaming query, in arrival order: batches, the state stores of
+    // each stateful operator, state-store commit ms and offset/commit-log ms
+    final class StreamRow(var batches: Int = 0, var stores: Seq[String] = Nil,
+        var stateCommitMs: Long = 0L, var logCommitMs: Long = 0L)
+    val streamRows = mutable.LinkedHashMap[String, StreamRow]()
+    if (stages) spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        def d(k: String): Long = Option(p.durationMs.get(k)).map(_.longValue).getOrElse(0L)
+        streamRows.synchronized {
+          val r = streamRows.getOrElseUpdate(Option(p.name).getOrElse(p.id.toString), new StreamRow)
+          r.batches += 1
+          r.stores = p.stateOperators.toSeq.map(op => s"${op.operatorName}:${op.numStateStoreInstances}")
+          r.stateCommitMs += p.stateOperators.map(_.commitTimeMs).sum
+          r.logCommitMs += d("commitOffsets") + d("walCommit")
+        }
+      }
+    })
     def jobStats(t0Ms: Long, t1Ms: Long): (Int, Double) = {
       // drain the async listener bus first: an onJobEnd not yet delivered
       // would understate covered time (overstating "dark"), and span ends
@@ -96,6 +119,7 @@ object PerfProbe {
         System.gc()
         stageRows.synchronized(stageRows.clear())
         jobStarts.synchronized { jobSpans.clear() }
+        streamRows.synchronized(streamRows.clear())
         val t0Ms = System.currentTimeMillis()
         val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
@@ -108,6 +132,10 @@ object PerfProbe {
         if (stages && i == 2) {
           val (nJobs, darkS) = jobStats(t0Ms, System.currentTimeMillis())
           println(f"JOBS $name n=$nJobs dark=${darkS}%.2fs of ${t}%.2fs")
+          streamRows.synchronized(streamRows.toSeq).foreach { case (stream, r) =>
+            println(s"STREAM $name $stream batches=${r.batches} stores=${if (r.stores.isEmpty) "none" else r.stores.mkString(",")} " +
+              s"state_commit_ms=${r.stateCommitMs} log_commit_ms=${r.logCommitMs}")
+          }
           stageRows.synchronized(stageRows.toSeq).sortBy(-_._3).take(12).foreach {
             case (id, n, wall, nm) =>
               println(f"STAGE $name id=$id tasks=$n wall=${wall / 1e3}%7.2fs $nm")

@@ -16,44 +16,24 @@ object StreamingQueries {
   /** The events stream's base files, staged once per (app, sfDir) and
     * shared by the read-only consumers; the mutating consumer
     * (sessionizeStream appends sentinel files) takes a private overlay
-    * via [[stagedSource]]. */
-  private def stageEventDir(spark: SparkSession, sfDir: String): String =
-    Fixtures.staged(spark, sfDir, "stream-events") { out =>
-      // one read feeds the percentile plus both halves' writes
-      val events = Tables.read(spark, sfDir, "events").cache()
-      // Split by event time, not id: micro-batches must arrive in rough time
-      // order or the second batch falls below the watermark and is dropped —
-      // exactly like a production file stream tailing time-partitioned drops.
-      // unix_micros states the intent (epoch comparison) and requires the
-      // normalized TimestampType from Tables.read — a raw NTZ/long ts would
-      // fail here loudly instead of silently shifting the split point
-      val median = events.selectExpr("percentile_approx(unix_micros(ts), 0.5)")
-        .collect()(0).getLong(0)
-      // 2 files per half → 4 micro-batches at maxFilesPerTrigger=1: enough
-      // to prove multi-batch watermark/state semantics without paying ~64
-      // state-store snapshots (one per source part file otherwise)
-      events.where(unix_micros(col("ts")) <= median)
-        .coalesce(2).write.mode("overwrite").parquet(s"$out/f0")
-      events.where(unix_micros(col("ts")) > median)
-        .coalesce(2).write.mode("overwrite").parquet(s"$out/f1")
-      events.unpersist(false)
-      // flatten into one dir of files
-      val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-      var i = 0
-      Seq("f0", "f1").foreach { sub =>
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$out/$sub"))
-          .filter(_.getPath.getName.startsWith("part-"))
-          .foreach { st =>
-            fs.rename(st.getPath, new org.apache.hadoop.fs.Path(s"$out/batch$i.parquet"))
-            // FileStreamSource orders by modification time: make the
-            // time-ordered ingestion explicit rather than trusting write
-            // timing (an mtime tie would process late files first and drop
-            // them below the watermark)
-            new java.io.File(s"$out/batch$i.parquet").setLastModified(1000000000000L + i * 60000L)
-            i += 1
-          }
-      }
-    }
+    * via [[stagedSource]]. One file per half of the events, split at the
+    * median event time, so a stream at `maxFilesPerTrigger=1` runs two
+    * micro-batches whatever the input's row-group layout. */
+  private def stageEventDir(spark: SparkSession, sfDir: String): String = {
+    lazy val events = Tables.read(spark, sfDir, "events")
+    // Split by event time, not id: micro-batches must arrive in rough time
+    // order or the second batch falls below the watermark and is dropped —
+    // exactly like a production file stream tailing time-partitioned drops.
+    // unix_micros states the intent (epoch comparison) and requires the
+    // normalized TimestampType from Tables.read — a raw NTZ/long ts would
+    // fail here loudly instead of silently shifting the split point
+    lazy val median = events.selectExpr("percentile_approx(unix_micros(ts), 0.5)")
+      .collect()(0).getLong(0)
+    stageTwoBatches(spark, sfDir,
+      events.where(unix_micros(col("ts")) <= median),
+      events.where(unix_micros(col("ts")) > median),
+      "stream-events")
+  }
 
   /** A per-invocation OVERLAY of the events stream's base files: the
     * mutating consumer appends sentinel files, so it cannot share the base
@@ -71,26 +51,15 @@ object StreamingQueries {
     out.toString
   }
 
-  /** Run `body` with a reduced shuffle-partition count: stateful streaming
-    * cost is dominated by per-batch state-store snapshots × partitions,
-    * and the keyed state here (users / windows) doesn't need 32. */
-  private def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   /** Streaming tumbling-window aggregation over the events file stream,
     * drained to completion (Complete mode) — equals the batch/SQL result. */
-  def streamWindowAgg(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def streamWindowAgg(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = stageEventDir(spark, sfDir)
     val stream = spark.readStream
       .schema(Tables.read(spark, sfDir, "events").schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
-    val name = "graft_stream_window_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(
-      Streams.windowedEventCounts(stream, "1 hour", "2 hours"), name, OutputMode.Complete())
+    Streams.drain(Streams.windowedEventCounts(stream, "1 hour", "2 hours"), "window", OutputMode.Complete())
       .orderBy("window_start", "event_type")
   }
 
@@ -103,37 +72,29 @@ object StreamingQueries {
   /** Streaming stateful sessionization (flatMapGroupsWithState with
     * event-time timeout) over the same events, flushed via a sentinel
     * batch that advances the watermark; must equal the batch plan. */
-  def sessionizeStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 4) {
+  def sessionizeStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val dir = stagedSource(spark, sfDir, "sess")
     val schema = Tables.read(spark, sfDir, "events").schema
-    // 2 files per trigger → 2 data batches (+2 sentinel rounds): state
-    // still crosses batches and timeouts still fire, at half the
-    // per-batch state-store snapshot cost of 1-file triggers
+    // one file per trigger → 2 data batches (+2 sentinel rounds): state
+    // crosses batches and timeouts fire
     val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(dir)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Streams.Event]
-    val name = "graft_stream_sess_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    val q = Streams.sessionizeStream(stream, gapMinutes = 30).toDF()
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append()).start()
-    try {
-      q.processAllAvailable()
-      // sentinel events far in the future: advance the watermark, then fire
-      // the event-time timeouts in a follow-up batch. The sentinel FILES
-      // are a deterministic function of the dataset (far = max event ts),
-      // so they stage once per (app, sfDir) and each invocation overlays
-      // them into its private dir — the two per-invocation 1-row parquet
-      // write jobs were fixture encoding, not the operator.
-      val sentinels = stagedSessionSentinels(spark, sfDir)
-      (0 until 2).foreach { i =>
-        Fixtures.linkOrCopy(java.nio.file.Paths.get(s"$sentinels/sentinel$i.parquet"),
-          java.nio.file.Paths.get(s"$dir/zz_sentinel$i.parquet"))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(name)
+    // sentinel events far in the future: advance the watermark, then fire
+    // the event-time timeouts in a follow-up batch. The sentinel FILES
+    // are a deterministic function of the dataset (far = max event ts),
+    // so they stage once per (app, sfDir) and each invocation overlays
+    // them into its private dir — the two per-invocation 1-row parquet
+    // write jobs were fixture encoding, not the operator.
+    val sentinels = stagedSessionSentinels(spark, sfDir)
+    val feeds = (0 until 2).map { i => () =>
+      Fixtures.linkOrCopy(java.nio.file.Paths.get(s"$sentinels/sentinel$i.parquet"),
+        java.nio.file.Paths.get(s"$dir/zz_sentinel$i.parquet"))
+    }
+    Streams.drain(Streams.sessionizeStream(stream, gapMinutes = 30).toDF(), "sess",
+        OutputMode.Append(), feeds)
       .where(col("user_id") < 9999991L)
       .orderBy("user_id", "session_start")
   }
@@ -200,7 +161,7 @@ object StreamingQueries {
     * Complete mode yields EXACTLY the batch counter table (the oracle
     * replays the same row:item md5 buckets and counts). Point lookups
     * then run against the drained table exactly as in the batch path. */
-  def cmsStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def cmsStream(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = Tables.read(spark, sfDir, "documents")
       .select("doc_id", "source", "text")
     val dir = stageTwoBatches(spark, sfDir,
@@ -211,8 +172,7 @@ object StreamingQueries {
     val items = stream.select(
       explode(PipelineQueries.bigramsOf(col("text"))).as("gm"))
     val out = graft.functions.Sketch.cmsTable(items, "gm", depth = 4, width = 512)
-    val name = "graft_stream_cms_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(out, name, OutputMode.Complete())
+    Streams.drain(out, "cms", OutputMode.Complete())
       .select(col("cms_row").cast("int").as("cms_row"),
         col("cms_bucket").cast("bigint").as("cms_bucket"),
         col("cnt").cast("bigint").as("cnt"))
@@ -227,7 +187,7 @@ object StreamingQueries {
     * precedes every probe that could need it, draining the stream equals
     * the batch as-of join exactly: the oracle IS `p_asof_join`'s DuckDB
     * ASOF replay. */
-  def asofStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def asofStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val events = Tables.read(spark, sfDir, "events")
     val rights = events.where(col("event_type") === "purchase")
@@ -245,8 +205,7 @@ object StreamingQueries {
       .option("maxFilesPerTrigger", "1").parquet(dir)
       .as[Streams.AsOfIn]
     val out = Streams.asofBackwardStream(stream).toDF()
-    val name = "graft_stream_asof_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(out, name, OutputMode.Append())
+    Streams.drain(out, "asof", OutputMode.Append())
       .select(col("left_id").as("event_id"), col("key").as("user_id"),
         col("matched").as("purchase_value"))
       .orderBy("event_id")
@@ -260,7 +219,7 @@ object StreamingQueries {
     * micro-batches; append mode; no state needed — anti-join against a
     * static side is stateless per batch, so the result equals the batch
     * anti-join and shares p_decontaminate_bloom's oracle shape. */
-  def decontaminateStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def decontaminateStream(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.read(spark, sfDir, "documents").select("doc_id", "text")
     val dir = stageTwoBatches(spark, sfDir,
       docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 === 1),
@@ -270,8 +229,7 @@ object StreamingQueries {
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val clean = stream.join(ref, stream("text") === ref("__rtext"), "left_anti")
-    val name = "graft_stream_decon_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(clean, name, OutputMode.Append())
+    Streams.drain(clean, "decon", OutputMode.Append())
       .select("doc_id").orderBy("doc_id")
   }
 
@@ -280,7 +238,7 @@ object StreamingQueries {
     * stateless streaming filter (append mode, no state) — quality
     * filtering an incoming crawl is a pure projection, so the streaming
     * result equals the batch pass set and shares its oracle's verdict. */
-  def qualityStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def qualityStream(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = PipelineQueries.qualityCorpus(spark, sfDir)
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
@@ -289,8 +247,7 @@ object StreamingQueries {
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val kept = graft.functions.TextAnalysis.qualityFilter(
       stream, "text", PipelineQueries.qualityRules)
-    val name = "graft_stream_quality_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(kept, name, OutputMode.Append())
+    Streams.drain(kept, "quality", OutputMode.Append())
       .select("doc_id").orderBy("doc_id")
   }
 
@@ -300,7 +257,7 @@ object StreamingQueries {
     * Stateless, so Append mode needs no watermark and the stream result
     * equals the batch scorer row-for-row — which is exactly what the
     * oracle (the batch p_quality_classifier replay) checks. */
-  def classifierStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def classifierStream(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = Tables.read(spark, sfDir, "documents").select("doc_id", "text")
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
@@ -308,8 +265,7 @@ object StreamingQueries {
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val scored = graft.functions.Classifier.scoreQualityFused(stream, "doc_id", "text")
-    val name = "graft_stream_classifier_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(scored, name, OutputMode.Append())
+    Streams.drain(scored, "classifier", OutputMode.Append())
       .select("doc_id", "score", "keep").orderBy("doc_id")
   }
 
@@ -319,7 +275,7 @@ object StreamingQueries {
     * the PII-decorated corpus. Stateless projections, so Append mode
     * needs no watermark and the stream equals the batch scrub
     * row-for-row — the oracle IS the batch p_pii_scrub replay. */
-  def piiScrubStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def piiScrubStream(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = PipelineQueries.piiCorpus(spark, sfDir)
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
@@ -327,8 +283,7 @@ object StreamingQueries {
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val scrubbed = graft.functions.TextAnalysis.scrubPii(stream, "doc_id", "text")
-    val name = "graft_stream_pii_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(scrubbed, name, OutputMode.Append())
+    Streams.drain(scrubbed, "pii", OutputMode.Append())
       .select("doc_id", "text", "n_email", "n_ip", "n_phone").orderBy("doc_id")
   }
 
@@ -338,7 +293,7 @@ object StreamingQueries {
     * on an arriving crawl without reprocessing history). Two-batch file
     * stream drained in Append mode equals the batch result, so the
     * oracle IS the batch replay. */
-  def fixMojibakeStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def fixMojibakeStream(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = PipelineQueries.mojibakeCorpus(spark, sfDir)
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
@@ -350,8 +305,7 @@ object StreamingQueries {
         length(col("text")).as("__l0"))
       .select(col("doc_id"), col("ftext").as("text"),
         (col("__l0") - length(col("ftext"))).cast("bigint").as("n_repaired"))
-    val name = "graft_stream_moji_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(fixed, name, OutputMode.Append())
+    Streams.drain(fixed, "moji", OutputMode.Append())
       .select("doc_id", "text", "n_repaired").orderBy("doc_id")
   }
 
@@ -368,7 +322,7 @@ object StreamingQueries {
     * batch `p_sketch_vocab` replay, and the gram/aggregation code is
     * shared with the batch query by construction
     * ([[PipelineQueries.sketchVocabAgg]]). */
-  def sketchStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def sketchStream(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = Tables.read(spark, sfDir, "documents")
       .select("doc_id", "source", "text")
     val dir = stageTwoBatches(spark, sfDir,
@@ -379,8 +333,7 @@ object StreamingQueries {
     val items = stream.select(col("source"),
       explode(PipelineQueries.bigramsOf(col("text"))).as("gm"))
     val out = PipelineQueries.sketchVocabAgg(items)
-    val name = "graft_stream_sketch_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(out, name, OutputMode.Complete())
+    Streams.drain(out, "sketch", OutputMode.Complete())
       .orderBy("source")
   }
 
@@ -393,7 +346,7 @@ object StreamingQueries {
     * IS the batch `p_sketch_hll` replay, and the gram/aggregation code is
     * shared with the batch query by construction
     * ([[PipelineQueries.sketchHllAgg]]). */
-  def hllStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def hllStream(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = Tables.read(spark, sfDir, "documents")
       .select("doc_id", "source", "text")
     val dir = stageTwoBatches(spark, sfDir,
@@ -404,8 +357,7 @@ object StreamingQueries {
     val items = stream.select(col("source"),
       explode(PipelineQueries.bigramsOf(col("text"))).as("gm"))
     val out = PipelineQueries.sketchHllAgg(items)
-    val name = "graft_stream_hll_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(out, name, OutputMode.Complete())
+    Streams.drain(out, "hll", OutputMode.Complete())
       .orderBy("source")
   }
 
@@ -419,7 +371,7 @@ object StreamingQueries {
     * replay, with the aggregation code shared by construction. Closes
     * the sketch family's streaming residue: KMV-distinct, HLL, CMS, and
     * now the quantile sketch all have drained-stream twins. */
-  def quantileStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def quantileStream(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = Tables.read(spark, sfDir, "documents")
       .select("doc_id", "lang", "text")
     val dir = stageTwoBatches(spark, sfDir,
@@ -428,8 +380,7 @@ object StreamingQueries {
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val out = PipelineQueries.sketchQuantilesAgg(stream)
-    val name = "graft_stream_quantile_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(out, name, OutputMode.Complete())
+    Streams.drain(out, "quantile", OutputMode.Complete())
       .orderBy("lang")
   }
 
@@ -439,7 +390,7 @@ object StreamingQueries {
     * stream-static join shape), the rules are stateless projections,
     * so the drained stream equals the batch verdicts — the oracle IS
     * the batch replay. */
-  def urlPolicyStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def urlPolicyStream(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = PipelineQueries.urlPolicyCorpus(spark, sfDir)
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
@@ -447,8 +398,7 @@ object StreamingQueries {
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val gated = PipelineQueries.urlPolicyVerdicts(spark, stream)
-    val name = "graft_stream_urlpol_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(gated, name, OutputMode.Append())
+    Streams.drain(gated, "urlpol", OutputMode.Append())
       .orderBy("doc_id")
   }
 
@@ -459,7 +409,7 @@ object StreamingQueries {
     * Register max and counter sums are batch-split invariant, so the
     * drained two-batch stream equals the batch profile — the oracle IS
     * the batch replay. */
-  def profileApproxStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def profileApproxStream(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = Tables.read(spark, sfDir, "documents")
     val dir = stageTwoBatches(spark, sfDir,
       corpus.where(col("doc_id") % 2 === 0), corpus.where(col("doc_id") % 2 === 1),
@@ -467,8 +417,7 @@ object StreamingQueries {
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val out = PipelineQueries.profileApproxAgg(stream)
-    val name = "graft_stream_profile_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(out, name, OutputMode.Complete())
+    Streams.drain(out, "profile", OutputMode.Complete())
       .orderBy("column_name")
   }
 
@@ -477,7 +426,7 @@ object StreamingQueries {
     * groupBy(content fingerprint) keeping the minimum doc_id — stateful
     * keep-first dedup with state carried across batches. Complete mode on
     * a finite corpus → deterministic, SQL-expressible result. */
-  def dedupStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def dedupStream(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.read(spark, sfDir, "documents").select("doc_id", "text")
     val corpus = docs.unionByName(
       docs.select((col("doc_id") + 100000).as("doc_id"), col("text")))
@@ -491,8 +440,7 @@ object StreamingQueries {
     val deduped = stream
       .groupBy(graft.functions.TextAnalysis.fingerprint64(col("text")).as("__fp"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).cast("bigint").as("n_copies"))
-    val name = "graft_stream_dedup_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(deduped, name, OutputMode.Complete())
+    Streams.drain(deduped, "dedup", OutputMode.Complete())
       .select("doc_id", "n_copies")
       .orderBy("doc_id")
   }
@@ -507,7 +455,7 @@ object StreamingQueries {
     * the keep-first resolution over the finite pair set is batch (the same
     * `keepFirstFromPairs` rule), giving the identical mutation-map oracle
     * as the batch query. */
-  def dedupNearDupStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def dedupNearDupStream(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Tables.read(spark, sfDir, "documents").select("doc_id", "text")
     val (bases, copies) = PipelineQueries.anchoredSimhashCorpus(d)
     val corpus = bases.unionByName(copies)
@@ -515,8 +463,7 @@ object StreamingQueries {
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val pairs = Streams.simhashPairsStream(stream, "doc_id", "text", maxHamming = 3)
-    val name = "graft_stream_neardup_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    val pairsDf = Streams.runToMemorySink(pairs.toDF(), name, OutputMode.Append())
+    val pairsDf = Streams.drain(pairs.toDF(), "neardup", OutputMode.Append())
       .dropDuplicates("id_a", "id_b")
     graft.functions.Dedup.keepFirstFromPairs(corpus, "doc_id", pairsDf)
       .select("doc_id").orderBy("doc_id")
@@ -529,7 +476,7 @@ object StreamingQueries {
     * pairs new arrivals against everything seen — the cross-batch
     * version of [[PipelineQueries.dedupMedia]], checked against the
     * IDENTICAL batch oracle. */
-  def dedupMediaStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def dedupMediaStream(spark: SparkSession, sfDir: String): DataFrame = {
     val (bases, copies) = PipelineQueries.mediaDedupInputs(spark, sfDir)
     val corpus = bases.unionByName(copies)
     val dir = stageTwoBatches(spark, sfDir, bases, copies, "stream-media")
@@ -539,8 +486,7 @@ object StreamingQueries {
         graft.functions.Multimodal.imagePayloadDHash(col("content")).as("sh"))
       .where(col("sh").isNotNull)
     val pairs = Streams.hashPairsStream(hashed, maxHamming = 3)
-    val name = "graft_stream_media_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    val pairsDf = Streams.runToMemorySink(pairs.toDF(), name, OutputMode.Append())
+    val pairsDf = Streams.drain(pairs.toDF(), "media", OutputMode.Append())
       .dropDuplicates("id_a", "id_b")
     graft.functions.Dedup.keepFirstFromPairs(corpus.select("media_id"), "media_id", pairsDf)
       .select("media_id").orderBy("media_id")
@@ -551,13 +497,13 @@ object StreamingQueries {
     * hour. Watermarks on both sides bound the join state (views evict
     * once the watermark passes vts + 1h); batches arrive time-ordered, so
     * cross-batch matches are exercised while none are lost. */
-  def streamStreamJoin(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def streamStreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = stageEventDir(spark, sfDir)
     val schema = Tables.read(spark, sfDir, "events").schema
-    // 2 files per trigger = 2 micro-batches: cross-batch join state is
-    // still exercised at half the state-store snapshot cost of 4 triggers
+    // one file per trigger = 2 micro-batches: cross-batch join state is
+    // exercised
     def src() = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(dir)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
     val views = src().where(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id").as("v_user"), col("ts").as("vts"))
       .withWatermark("vts", "2 hours")
@@ -568,8 +514,7 @@ object StreamingQueries {
       col("v_user") === col("p_user") &&
         col("pts") >= col("vts") && col("pts") <= col("vts") + expr("INTERVAL 1 HOUR"))
       .select(col("view_id").cast("bigint"), col("purchase_id").cast("bigint"))
-    val name = "graft_stream_ssj_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(joined, name, OutputMode.Append())
+    Streams.drain(joined, "ssj", OutputMode.Append())
       .orderBy("view_id", "purchase_id")
   }
 
@@ -585,7 +530,7 @@ object StreamingQueries {
     * 100 TB this is the ingest path: route each arriving embedding,
     * append to the cell's shard, and the serving index stays
     * queryable without rebuilds. */
-  def annAssignStream(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, 8) {
+  def annAssignStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.Similarity
     val e = Tables.read(spark, sfDir, "embeddings").select("vec_id", "embedding")
     val (_, cids, matrix) = Similarity.kmeansFit("annAssignStream", e, "vec_id", "embedding", 16, 2, 16)
@@ -595,8 +540,7 @@ object StreamingQueries {
     val stream = spark.readStream.schema(e.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val routed = Similarity.assignCells(stream, "vec_id", "embedding", cids, matrix)
-    val name = "graft_stream_annassign_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-    Streams.runToMemorySink(routed, name, OutputMode.Append())
+    Streams.drain(routed, "annassign", OutputMode.Append())
       .select("vec_id", "cell").orderBy("vec_id")
   }
 

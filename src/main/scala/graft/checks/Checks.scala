@@ -4,11 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Data-quality checks (SURVEY §2.4 check_column / check_table), computed
-  * as **one single-pass aggregation** over the table — one job, one scan,
-  * map-side partial aggregation, no per-check queries. That is the
-  * scale-correct reshaping of the reference's per-check SQL
-  * (sql/operators/data_validations/check_column.py:13-211, pandas path
-  * 101-143; check_table.py:12-109).
+  * as aggregations over the table, with map-side partial aggregation and
+  * no per-check queries: the scale-correct reshaping of the reference's
+  * per-check SQL (sql/operators/data_validations/check_column.py:13-211,
+  * pandas path 101-143; check_table.py:12-109). check_table is one
+  * aggregation; check_column is one aggregation for its plain checks plus
+  * one per column it counts distinct values of ([[Checks.checkColumnFrame]]).
   */
 object Checks {
 
@@ -44,33 +45,20 @@ object Checks {
       "The following tests have failed: " +
         failures.map(f => s"${f.column}.${f.check}=${f.result}").mkString(", "))
 
-  /** The aggregate expression for one (column, checkName). Supported names
-    * parity: null_check, distinct_check, unique_check, min, max
-    * (check_column.py:101-143). */
-  def checkAgg(column: String, check: String): Column = check match {
-    case "null_check"     => sum(col(column).isNull.cast("long")).cast("double")
-    case "distinct_check" => count_distinct(col(column)).cast("double")
-    case "unique_check"   => (count(col(column)) - count_distinct(col(column))).cast("double")
-    case "min"            => min(col(column)).cast("double")
-    case "max"            => max(col(column)).cast("double")
-    case other => throw new IllegalArgumentException(s"unknown column check: $other")
-  }
-
   /** check_column: evaluate `columnMapping` (column → check → threshold)
-    * in a single aggregation; `partitionClause` is a SQL boolean filter
-    * applied first (check_column.py partition_clause). */
+    * through [[checkColumnFrame]]; `partitionClause` is a SQL boolean
+    * filter applied first (check_column.py partition_clause). */
   def checkColumn(
       df: DataFrame,
       columnMapping: Map[String, Map[String, Threshold]],
       partitionClause: Option[String] = None,
       failOnError: Boolean = true): Seq[CheckResult] = {
-    val filtered = partitionClause.map(df.where).getOrElse(df)
     val ordered = columnMapping.toSeq.flatMap { case (c, checks) =>
       checks.toSeq.map { case (name, th) => (c, name, th) }
     }
     if (ordered.isEmpty) return Nil
-    val aggs = ordered.map { case (c, name, _) => checkAgg(c, name).as(s"${c}__$name") }
-    val row = filtered.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val row = checkColumnFrame(df, ordered.map { case (c, name, _) => (c, name) }, partitionClause)
+      .collect()(0)
     val results = ordered.zipWithIndex.map { case ((c, name, th), i) =>
       val v = if (row.isNullAt(i)) Double.NaN else row.getDouble(i)
       CheckResult(c, name, v, th.passes(v))
@@ -80,15 +68,48 @@ object Checks {
     results
   }
 
-  /** The single-pass aggregation behind check_column as a DataFrame (one
-    * row, one column per check) — used by the verify harness. */
+  /** check_column as a one-row DataFrame: one double column
+    * `<column>_<check>` per check, in order. Supported checks (parity with
+    * check_column.py:101-143): null_check, distinct_check, unique_check
+    * (non-null count minus distinct count), min, max.
+    *
+    * The plain aggregates (null counts, non-null counts, min, max) share
+    * one aggregation, and each column whose distinct values are counted
+    * gets its own single-distinct aggregation of the filtered input, so a
+    * column checked for both distinct and unique is counted once. The
+    * one-row results are cross-joined (a broadcast nested-loop join of
+    * single rows). Several distinct counts in one aggregation would make
+    * Spark copy every input row once per distinct column through an
+    * `Expand`, all inside the task that reads the scan; as branches, each
+    * scan reads its own column and the branches run as concurrent stages.
+    * The values equal the single aggregation's bit for bit (ChecksSpec). */
   def checkColumnFrame(
       df: DataFrame,
       checks: Seq[(String, String)],
       partitionClause: Option[String] = None): DataFrame = {
+    require(checks.nonEmpty, "check_column needs at least one check")
     val filtered = partitionClause.map(df.where).getOrElse(df)
-    val aggs = checks.map { case (c, name) => checkAgg(c, name).as(s"${c}_$name") }
-    filtered.agg(aggs.head, aggs.tail: _*)
+    val counted = checks.collect { case (c, "distinct_check" | "unique_check") => c }.distinct
+    def distinctOf(c: String): Column = col(s"__d${counted.indexOf(c)}")
+    // per check: its plain aggregate, if any, and its value over the
+    // joined row (`__p<i>` names the plain aggregate's result)
+    val parts = checks.zipWithIndex.map { case ((c, check), i) =>
+      val p = col(s"__p$i")
+      check match {
+        case "null_check"     => (Some(sum(col(c).isNull.cast("long"))), p)
+        case "distinct_check" => (None, distinctOf(c))
+        case "unique_check"   => (Some(count(col(c))), p - distinctOf(c))
+        case "min"            => (Some(min(col(c))), p)
+        case "max"            => (Some(max(col(c))), p)
+        case other => throw new IllegalArgumentException(s"unknown column check: $other")
+      }
+    }
+    val plain = parts.zipWithIndex.collect { case ((Some(agg), _), i) => agg.as(s"__p$i") }
+    val branches = plain.headOption.map(h => filtered.agg(h, plain.tail: _*)).toSeq ++
+      counted.zipWithIndex.map { case (c, j) => filtered.agg(count_distinct(col(c)).as(s"__d$j")) }
+    branches.reduce(_ crossJoin _).select(parts.zip(checks).map { case ((_, value), (c, check)) =>
+      value.cast("double").as(s"${c}_$check")
+    }: _*)
   }
 
   /** check_table: named boolean SQL expressions evaluated table-wide via

@@ -45,19 +45,43 @@ object Streams {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("value_cents"))
 
-  /** Run a streaming DataFrame to completion into a memory sink and return
-    * the result table (drains all available input, then stops). */
-  def runToMemorySink(streamed: DataFrame, queryName: String,
-      outputMode: OutputMode = OutputMode.Complete()): DataFrame = {
+  /** Drain a streaming DataFrame to completion into a memory sink and
+    * return its rows as a local relation. `feeds` add input between
+    * rounds: after the first drain, each feed runs and the stream drains
+    * again (a sentinel file that advances the watermark, say).
+    *
+    * The stream runs with its own session settings, restored afterwards
+    * even when it throws:
+    *  - at most min(8, cores) shuffle partitions, so every stateful
+    *    stage holds that many state stores and runs in one wave (each
+    *    store pays a fixed cost per batch);
+    *  - no checksum files for the checkpoint: it is a temporary one that
+    *    is never read back.
+    * The drained table is collected (a local scan, no job), handed back
+    * as a `LocalRelation`, and the sink's temp view is dropped. */
+  def drain(streamed: DataFrame, label: String, outputMode: OutputMode,
+      feeds: Seq[() => Unit] = Nil): DataFrame = {
     val spark = streamed.sparkSession
-    val q = streamed.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(outputMode)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    val conf = spark.conf
+    val settings = Seq(
+      "spark.sql.shuffle.partitions" -> math.min(8, spark.sparkContext.defaultParallelism).toString,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
+    // what was set, not getOption's defaults: an unset key is restored unset
+    val prev = settings.map { case (k, _) => k -> conf.getAll.get(k) }
+    val name = s"graft_stream_${label}_" + java.util.UUID.randomUUID().toString.take(8)
+    try {
+      settings.foreach { case (k, v) => conf.set(k, v) }
+      val q = streamed.writeStream.format("memory").queryName(name).outputMode(outputMode).start()
+      try {
+        q.processAllAvailable()
+        feeds.foreach { feed => feed(); q.processAllAvailable() }
+      } finally q.stop()
+      val table = spark.table(name)
+      spark.createDataFrame(java.util.Arrays.asList(table.collect(): _*), table.schema)
+    } finally {
+      spark.catalog.dropTempView(name)
+      prev.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    }
   }
 
   // -----------------------------------------------------------------

@@ -26,7 +26,7 @@ class StreamingSpec extends GraftSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Event]
     mem.addData(batch1 ++ batch2: _*)
-    val streamed = Streams.runToMemorySink(
+    val streamed = Streams.drain(
       Streams.windowedEventCounts(mem.toDF(), "1 hour", "2 hours"),
       "win_test", OutputMode.Complete())
     val batch = Streams.windowedEventCounts((batch1 ++ batch2).toDF(), "1 hour", "2 hours")
@@ -199,7 +199,7 @@ class StreamingSpec extends GraftSuite {
       graft.functions.TextAnalysis.chunkByTokens(clean, "doc_id", "text",
         chunkTokens = 2, overlap = 0)
     }
-    val streamed = Streams.runToMemorySink(pipeline(mem.toDF()),
+    val streamed = Streams.drain(pipeline(mem.toDF()),
       "narrow_text_stream", OutputMode.Append())
       .orderBy("doc_id", "chunk_id").collect().toSeq
     val batch = pipeline(docs).orderBy("doc_id", "chunk_id").collect().toSeq
@@ -210,21 +210,19 @@ class StreamingSpec extends GraftSuite {
   test("file-source stream over parquet events runs end-to-end") {
     val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
     (batch1 ++ batch2).toDF().write.mode("overwrite").parquet(s"$dir/events")
-    val streamed = Streams.runToMemorySink(
+    val streamed = Streams.drain(
       Streams.windowedEventCounts(Streams.eventFileStream(spark, s"$dir/events")),
       "file_stream_test", OutputMode.Complete())
     assert(streamed.count() > 0)
   }
 
   /** A windowed aggregation over a parquet file stream, drained through
-    * `runToMemorySink` into a fresh memory table each call. */
-  private def windowedFileStream(dir: String): Seq[org.apache.spark.sql.Row] = {
-    val name = "win_file_" + java.util.UUID.randomUUID().toString.take(8)
-    Streams.runToMemorySink(
+    * `Streams.drain` into a fresh memory table each call. */
+  private def windowedFileStream(dir: String): Seq[org.apache.spark.sql.Row] =
+    Streams.drain(
       Streams.windowedEventCounts(Streams.eventFileStream(spark, dir), "1 hour", "2 hours"),
-      name, OutputMode.Complete())
+      "win_file", OutputMode.Complete())
       .orderBy("window_start", "event_type").collect().toSeq
-  }
 
   private def eventsDir(prefix: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(prefix).toString + "/events"
@@ -256,5 +254,54 @@ class StreamingSpec extends GraftSuite {
     // no new id, so the map (and its classloaders) does not grow, even
     // where the executor's cache evicts an old state as a new one arrives
     assert((after -- before).isEmpty, s"new isolated sessions: ${after -- before}")
+  }
+
+  test("drain runs min(8, cores) state stores, restores its settings and drops its sink view") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    implicit val sqlCtx = spark.sqlContext
+    val conf = spark.conf
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled")
+    val saved = keys.map(k => k -> conf.getOption(k))
+    val stores = scala.collection.mutable.ArrayBuffer[Long]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        stores.synchronized(stores ++= e.progress.stateOperators.map(_.numShufflePartitions))
+    }
+    def sinkViews: Seq[String] =
+      spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_stream_drain_"))
+    spark.streams.addListener(listener)
+    try {
+      conf.set(keys(0), "32")
+      conf.unset(keys(1))
+      val mem = MemoryStream[Event]
+      mem.addData(batch1 ++ batch2: _*)
+      val drained = Streams.drain(
+        Streams.windowedEventCounts(mem.toDF(), "1 hour", "2 hours"), "drain", OutputMode.Complete())
+      assert(drained.count() > 0)
+      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark.sparkContext)
+      val expected = math.min(8, spark.sparkContext.defaultParallelism).toLong
+      stores.synchronized(assert(stores.nonEmpty && stores.forall(_ == expected), stores))
+      assert(conf.get(keys(0)) == "32")
+      assert(!conf.getAll.contains(keys(1)))
+      assert(sinkViews.isEmpty, sinkViews)
+
+      // a stream that throws restores the same settings and drops its view
+      conf.set(keys(1), "true")
+      val failing = MemoryStream[Event]
+      failing.addData(batch1: _*)
+      intercept[Exception] {
+        Streams.drain(failing.toDF().select(
+          when(col("event_id") > 0, raise_error(lit("boom"))).as("event_id")), "drain", OutputMode.Append())
+      }
+      assert(conf.get(keys(0)) == "32")
+      assert(conf.get(keys(1)) == "true")
+      assert(sinkViews.isEmpty, sinkViews)
+    } finally {
+      spark.streams.removeListener(listener)
+      saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    }
   }
 }
