@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.{LOCAL_RELATION, SORT}
 
 /** Optimizer rule: a global `Sort` over a `LocalRelation` sorts the rows on
   * the driver and becomes a `LocalRelation` again. The rows are already in
@@ -16,10 +17,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * descending, NaN as the largest double), and the sort is stable. Only
   * deterministic sort keys are sorted here. */
 object LocalSort extends Rule[LogicalPlan] {
-  def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case Sort(order, true, l: LocalRelation, _) if !l.isStreaming && order.forall(_.deterministic) =>
-      l.copy(data = l.data.sorted(new InterpretedOrdering(order, l.output)))
-  }
+  def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformUpWithPruning(_.containsAllPatterns(SORT, LOCAL_RELATION)) {
+      case Sort(order, true, l: LocalRelation, _) if !l.isStreaming && order.forall(_.deterministic) =>
+        l.copy(data = l.data.sorted(new InterpretedOrdering(order, l.output)))
+    }
 }
 
 /** The session extensions graft installs (`spark.sql.extensions`, set by
