@@ -15,7 +15,7 @@ class ChecksSpec extends GraftSuite {
     (3, Some(40.0), "c"))
     .toDF("id", "v", "tag")
 
-  test("checkColumn computes null/distinct/unique/min/max with one aggregation per distinct column") {
+  test("checkColumn computes null/distinct/unique/min/max in one pass") {
     val res = Checks.checkColumn(df, Map(
       "v" -> Map(
         "null_check" -> Threshold(equalTo = Some(1)),
