@@ -727,16 +727,11 @@ object GraftSession {
     * clone's tasks carry that UUID as their `JobArtifactState`, and the
     * executor builds a new `IsolatedSessionState`, a new
     * `MutableURLClassLoader`, for it. Each dead loader then stayed pinned
-    * by the codegen cache and the executor's isolated-state cache.
-    *
-    * The extensions add [[graft.sql.LocalSort]], which sorts a global
-    * `Sort` over a `LocalRelation` on the driver (a drained stream's
-    * final `orderBy` then runs no range-partition jobs). */
+    * by the codegen cache and the executor's isolated-state cache. */
   val staticConf: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" -> classOf[LocalFs.FileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Fs].getName,
-    "spark.sql.artifact.isolation.enabled" -> "false",
-    "spark.sql.extensions" -> classOf[graft.sql.GraftExtensions].getName)
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** Local-mode builder with the settings this engine assumes (UTC, AQE,
     * shuffle partitions sized to cores — not the 200 default). */
@@ -754,6 +749,14 @@ object GraftSession {
       // re-priced the heaviest-codegen query (p_dedup_simhash_portable)
       // at 2×. Static conf: must be set before the session starts.
       .config("spark.sql.codegen.cache.maxEntries", "8000")
+      // The cache is keyed by the generated source, and a whole-stage
+      // class is named after its codegen stage id. AQE numbers stages in
+      // the order it creates them, which for concurrent branches (the
+      // distinct counts of check_column) is the order their inputs
+      // finish: the same stage got id 6 in one call and 7 in the next,
+      // and a warm call compiled again. Unnumbered names keep the source,
+      // and so the cache key, the same; plans still show the ids.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // InferFiltersFromGenerate adds `size(e) > 0 AND isnotnull(e)`
       // under every explode, and predicate pushdown then substitutes the
       // generator's WHOLE input expression into the scan-stage filter —

@@ -77,12 +77,17 @@ object Checks {
     * one aggregation, and each column whose distinct values are counted
     * gets its own single-distinct aggregation of the filtered input, so a
     * column checked for both distinct and unique is counted once. The
-    * one-row results are cross-joined (a broadcast nested-loop join of
-    * single rows). Several distinct counts in one aggregation would make
+    * one-row results are cross-joined, each later branch broadcast to the
+    * first: without the hint AQE streams whichever branch finishes last,
+    * so the final stage's generated code, and a warm call's codegen cache
+    * hit, would depend on that race. Several distinct counts in one aggregation would make
     * Spark copy every input row once per distinct column through an
     * `Expand`, all inside the task that reads the scan; as branches, each
     * scan reads its own column and the branches run as concurrent stages.
-    * The values equal the single aggregation's bit for bit (ChecksSpec). */
+    * The values equal the single aggregation's bit for bit (ChecksSpec).
+    * Each branch evaluates the filtered input anew, so when that input is
+    * not deterministic (a `rand()` sample in `partitionClause` or `df`)
+    * all checks stay in one aggregation, which reads the rows once. */
   def checkColumnFrame(
       df: DataFrame,
       checks: Seq[(String, String)],
@@ -105,9 +110,12 @@ object Checks {
       }
     }
     val plain = parts.zipWithIndex.collect { case ((Some(agg), _), i) => agg.as(s"__p$i") }
-    val branches = plain.headOption.map(h => filtered.agg(h, plain.tail: _*)).toSeq ++
-      counted.zipWithIndex.map { case (c, j) => filtered.agg(count_distinct(col(c)).as(s"__d$j")) }
-    branches.reduce(_ crossJoin _).select(parts.zip(checks).map { case ((_, value), (c, check)) =>
+    val distincts = counted.zipWithIndex.map { case (c, j) => count_distinct(col(c)).as(s"__d$j") }
+    val branches =
+      if (filtered.queryExecution.analyzed.deterministic)
+        plain.headOption.map(h => filtered.agg(h, plain.tail: _*)).toSeq ++ distincts.map(filtered.agg(_))
+      else Seq(filtered.agg((plain ++ distincts).head, (plain ++ distincts).tail: _*))
+    branches.reduce((l, r) => l.crossJoin(broadcast(r))).select(parts.zip(checks).map { case ((_, value), (c, check)) =>
       value.cast("double").as(s"${c}_$check")
     }: _*)
   }

@@ -58,7 +58,10 @@ object Streams {
     *  - no checksum files for the checkpoint: it is a temporary one that
     *    is never read back.
     * The drained table is collected (a local scan, no job), handed back
-    * as a `LocalRelation`, and the sink's temp view is dropped. */
+    * as a `LocalRelation` in one partition, and the sink's temp view is
+    * dropped. One partition is one task for what follows: a final
+    * `orderBy` sorts in place, where over several partitions Spark would
+    * range-partition the few rows (a sampling job and a shuffle). */
   def drain(streamed: DataFrame, label: String, outputMode: OutputMode,
       feeds: Seq[() => Unit] = Nil): DataFrame = {
     val spark = streamed.sparkSession
@@ -77,7 +80,7 @@ object Streams {
         feeds.foreach { feed => feed(); q.processAllAvailable() }
       } finally q.stop()
       val table = spark.table(name)
-      spark.createDataFrame(java.util.Arrays.asList(table.collect(): _*), table.schema)
+      spark.createDataFrame(java.util.Arrays.asList(table.collect(): _*), table.schema).coalesce(1)
     } finally {
       spark.catalog.dropTempView(name)
       prev.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }

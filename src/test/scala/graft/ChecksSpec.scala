@@ -128,6 +128,23 @@ class ChecksSpec extends GraftSuite {
     assert(reference.queryExecution.executedPlan.toString.contains("Expand"))
   }
 
+  test("checkColumnFrame keeps a non-deterministic input in one aggregation") {
+    val checks = checkSets.last
+    for ((table, clause) <- Seq(
+        (checked, Some("rand(7) < 0.5")),
+        (checked.where(rand(7) < 0.5), None))) {
+      val frame = Checks.checkColumnFrame(table, checks, clause)
+      val context = s"clause=$clause"
+      assert(bits(frame.collect().head) ==
+        bits(singleAggregation(table, checks, clause).collect().head), context)
+      val plan = frame.queryExecution.executedPlan.toString
+      assert(!plan.contains("NestedLoopJoin"), s"$context\n$plan")
+    }
+    // a deterministic input takes the branch plan
+    assert(Checks.checkColumnFrame(checked, checks, Some("v > 0"))
+      .queryExecution.executedPlan.toString.contains("NestedLoopJoin"))
+  }
+
   test("checkColumn reads its results from checkColumnFrame") {
     val res = Checks.checkColumn(checked, Map(
       "id" -> Map("distinct_check" -> Threshold(equalTo = Some(3)),

@@ -256,6 +256,22 @@ class StreamingSpec extends GraftSuite {
     assert((after -- before).isEmpty, s"new isolated sessions: ${after -- before}")
   }
 
+  test("a drained frame is one partition, so its orderBy sorts with no exchange") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Event]
+    mem.addData(batch1 ++ batch2: _*)
+    val drained = Streams.drain(
+      Streams.windowedEventCounts(mem.toDF(), "1 hour", "2 hours"), "sorted", OutputMode.Complete())
+    assert(drained.rdd.getNumPartitions == 1)
+    val sorted = drained.orderBy(col("window_start").desc, col("event_type"))
+    val got = sorted.collect().toSeq
+    val plan = sorted.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+    val want = drained.collect().toSeq
+      .sortBy(r => (-r.getTimestamp(0).getTime, r.getString(1)))
+    assert(got.nonEmpty && got == want)
+  }
+
   test("drain runs min(8, cores) state stores, restores its settings and drops its sink view") {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     implicit val sqlCtx = spark.sqlContext
